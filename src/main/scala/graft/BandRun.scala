@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-band driver: run a named subset of SparkEntry.queries against an
   * arbitrary fixture and force full execution with count() instead of
   * Verify's coalesce(1) parquet write — at probe scales (r13: the 1000×
@@ -20,42 +18,18 @@ object BandRun {
     // with /dev/shm spill stacked on top of the heap
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark 4.1 UnionExec can CLAIM its children's shared output
-      // partitioning while still executing as the plain concatenation
-      // (left-semi-join-shaped union children; see EXPERIMENTS.md r14
-      // "union output partitioning") — downstream operators then skip
-      // their exchanges and zip-crash (or worse, mis-aggregate). Pinned
-      // off in every session this library builds until fixed upstream.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Sorted bucketed scans (r15): bucket sort-order propagation is
-      // legacy-flagged since Spark 3.0; with Materialize.bucketedTable
-      // guaranteeing ONE file per bucket it is safe (Spark keeps the
-      // Sort for multi-file buckets even under the flag - verified) and
-      // it elides the per-task re-sort under every co-bucketed SMJ.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.minPartitionNum", "1")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     keys.foreach { k =>
       val t0 = System.nanoTime()
       val line = try {
         val n = SparkEntry.queries(k)(spark, sfDir).count()
-        f"""{"query":"$k","rows":$n,"sec":${(System.nanoTime() - t0) / 1e9}%.1f}"""
+        s"""{"query":${Json.str(k)},"rows":$n,"sec":${Json.fixed((System.nanoTime() - t0) / 1e9, 1)}}"""
       } catch {
         case e: Throwable =>
           val causes = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
             .map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}").take(2).mkString(" <- ")
-          // JSON-safe: quotes, backslashes, and control chars all become
-          // spaces (the harness parses these lines; a raw \ or newline in
-          // an exception message must not produce an invalid line)
-          s"""{"query":"$k","err":"${causes.replaceAll("[\\\\\"\\p{Cntrl}]", " ").take(300)}"}"""
+          s"""{"query":${Json.str(k)},"err":${Json.str(causes.take(300))}}"""
       }
       println(s"[band] $line")
     }

@@ -35,49 +35,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     ScratchDirs.preferTmpfs() // no-op unless GRAFT_SCRATCH=tmpfs (timed run)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark 4.1 UnionExec can CLAIM its children's shared output
-      // partitioning while still executing as the plain concatenation
-      // (left-semi-join-shaped union children; see EXPERIMENTS.md r14
-      // "union output partitioning") — downstream operators then skip
-      // their exchanges and zip-crash (or worse, mis-aggregate). Pinned
-      // off in every session this library builds until fixed upstream.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Sorted bucketed scans (r15): bucket sort-order propagation is
-      // legacy-flagged since Spark 3.0; with Materialize.bucketedTable
-      // guaranteeing ONE file per bucket it is safe (Spark keeps the
-      // Sort for multi-file buckets even under the flag - verified) and
-      // it elides the per-task re-sort under every co-bucketed SMJ.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Local-mode default inflates minPartitionNum to defaultParallelism,
-      // splitting each ~5 MB fixture file 32 ways — pure task overhead.
-      // 1 replicates cluster behavior (splits come from maxPartitionBytes,
-      // so a 100 TB table still fans out); measured 33 s → 27 s total.
-      .config("spark.sql.files.minPartitionNum", "1")
-      // The Janino compiled-class cache defaults to 100 entries; this
-      // session executes 320 queries × several codegen units × 3 passes,
-      // so the cache thrashes and passes 2-3 RE-COMPILE every plan — the
-      // best-of-3 protocol explicitly intends pass 1 to absorb
-      // compilation (see the scaladoc above). Sized to hold the whole
-      // suite's generated classes. This caches BYTECODE keyed on
-      // generated source, never data or results; a production session
-      // running a repeated query mix wants the same headroom (driver-side
-      // memory, a few KB per entry).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // 150 actions in one session accumulate status-store state whose
-      // bookkeeping slows late job submission (measured 61 s → 37 s total);
-      // cap retention — this is a metrics buffer, not execution state.
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus("4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: exercise codegen, the parquet reader and the whole query
     // machinery once, so the first timed query (Map order is arbitrary)
@@ -136,30 +94,18 @@ object Bench {
     }
     val results = (ordered.map(_._1) ++ Seq("stage_minhash", "stage_bucketed", "stage_stats", "stage_bpe"))
       .flatMap(name => best.get(name).map(name -> _)).toMap
-    // escape ALL control chars too: exception messages routinely contain
-    // newlines (ParseException prints the SQL), which would otherwise break
-    // the one-line metric JSON and lose every successful timing with it
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
     // ASCENDING (slowest LAST): the driver's bounded capture keeps the END
     // of the line (a tail), so the slowest queries — the ones a reader
     // actually needs — must sit at the line's end. (r11 shipped this
     // descending, which put the slowest at the truncated FRONT; the
     // committed BENCH_LOCAL files carried the full record.)
     val qs = results.toSeq.sortBy { case (k, v) => (v, k) }
-      .map { case (k, v) => jstr(k) + ":" + v }
+      .map { case (k, v) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     val failed = errs.keySet.diff(best.keySet)
-    val errJson = failed.toSeq.sorted.map(k => jstr(k) + ":" + jstr(errs(k)))
+    val errJson = failed.toSeq.sorted.map(k => Json.str(k) + ":" + Json.str(errs(k)))
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = results.values.sum
     // Regression visibility: diff this run against the PINNED per-SF
     // baseline BENCH_BASE-<sf>.json when present (refreshed deliberately
     // at round end, so every mid-round run diffs against the ROUND-START
@@ -189,38 +135,18 @@ object Bench {
         }.sortBy { case (_, prev, now) => -(now / prev) }
       } catch { case _: Throwable => Seq.empty }
     val regJson = regressions.map { case (k, prev, now) =>
-      jstr(k) + ":" + f"""{"prev":$prev%.3f,"now":$now%.3f,"ratio":${now / prev}%.2f}"""
+      Json.str(k) + ":" + s"""{"prev":${Json.fixed(prev, 3)},"now":${Json.fixed(now, 3)},""" +
+        s""""ratio":${Json.fixed(now / prev, 2)}}"""
     }.mkString("{", ",", "}")
     // n_queries makes a silently-omitted erroring query visible in the
     // metric line itself: a total over fewer queries than last round can't
     // masquerade as a speedup (driver ADVICE r6).
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""incomplete":${failed.nonEmpty},"scratch":${jstr(ScratchDirs.scratchRoot)},""" +
-        s""""regressions":$regJson,"errors":$errJson,"sf":"$sfDir","queries":$qs}"""
+        s""""incomplete":${failed.nonEmpty},"scratch":${Json.str(ScratchDirs.scratchRoot)},""" +
+        s""""regressions":$regJson,"errors":$errJson,"sf":${Json.str(sfDir)},"queries":$qs}"""
     println(line)
-    // Driver-parseable SUMMARY (r16): the driver captures a bounded stdout
-    // TAIL, and the full line above (~12 KB with the 320-entry per-query
-    // map inline) starts mid-JSON inside that tail — BENCH_r14/BENCH_r15
-    // both carry parsed:null for exactly this reason. This second, compact,
-    // FINAL line repeats the headline numbers and as many of the SLOWEST
-    // per-query timings (ms precision) as fit a ~1.4 KB budget, so a
-    // bounded tail always ends with one complete parseable JSON line. The
-    // full-precision record of every key stays in the full line and in the
-    // committed BENCH_LOCAL artifacts; nothing is measured differently.
-    val summaryBudget = 1400
-    val slowDesc = results.toSeq.sortBy { case (k, v) => (-v, k) }
-    def summaryLine(nKeys: Int): String = {
-      val kept = slowDesc.take(nKeys).sortBy { case (k, v) => (v, k) }
-        .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""incomplete":${failed.nonEmpty},"n_errors":${failed.size},""" +
-        s""""n_regressions":${regressions.size},"sf":"$sfDir","queries":$kept}"""
-    }
-    val summary = (results.size to 0 by -1).iterator.map(summaryLine)
-      .find(_.length <= summaryBudget).getOrElse(summaryLine(0))
-    println(summary)
+    println(summaryLine(results, failed.size, regressions.size, sfDir))
     // The driver captures stdout with a bounded tail that has truncated
     // ~17 per-query timings per round; the full line committed as a repo
     // artifact keeps every timing comparable across rounds. The per-SF
@@ -237,5 +163,32 @@ object Bench {
         java.nio.file.Paths.get(s"BENCH_LOCAL-$sfName.json"), line + "\n"): Unit
     } catch { case e: Throwable => System.err.println(s"[bench] BENCH_LOCAL write failed: $e") }
     spark.stop()
+  }
+
+  /** Driver-parseable SUMMARY (r16): the driver captures a bounded stdout
+    * TAIL, and the full line (~12 KB with the 320-entry per-query map
+    * inline) starts mid-JSON inside that tail — BENCH_r14/BENCH_r15 both
+    * carry parsed:null for exactly this reason. This second, compact,
+    * FINAL line repeats the headline numbers and as many of the SLOWEST
+    * per-query timings (ms precision) as fit a ~1.4 KB budget, so a
+    * bounded tail always ends with one complete parseable JSON line. The
+    * full-precision record of every key stays in the full line and in the
+    * committed BENCH_LOCAL artifacts; nothing is measured differently.
+    */
+  private[graft] def summaryLine(
+      results: Map[String, Double], nErrors: Int, nRegressions: Int, sfDir: String): String = {
+    val summaryBudget = 1400
+    val total = results.values.sum
+    val slowDesc = results.toSeq.sortBy { case (k, v) => (-v, k) }
+    def line(nKeys: Int): String = {
+      val kept = slowDesc.take(nKeys).sortBy { case (k, v) => (v, k) }
+        .map { case (k, v) => Json.str(k) + ":" + Json.fixed(v, 3) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
+        s""""incomplete":${nErrors > 0},"n_errors":$nErrors,""" +
+        s""""n_regressions":$nRegressions,"sf":${Json.str(sfDir)},"queries":$kept}"""
+    }
+    (results.size to 0 by -1).iterator.map(line)
+      .find(_.length <= summaryBudget).getOrElse(line(0))
   }
 }

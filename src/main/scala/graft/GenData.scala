@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scale-up: replicate the driver-generated tables
@@ -36,26 +36,7 @@ object GenData {
     // "documents,embeddings" for a doc/vector-axis-only scale probe —
     // r13's sf100 dedup/ANN band) — empty = all tables
     val only: Set[String] = args.lift(3).map(_.split(",").toSet).getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark 4.1 UnionExec can CLAIM its children's shared output
-      // partitioning while still executing as the plain concatenation
-      // (left-semi-join-shaped union children; see EXPERIMENTS.md r14
-      // "union output partitioning") — downstream operators then skip
-      // their exchanges and zip-crash (or worse, mis-aggregate). Pinned
-      // off in every session this library builds until fixed upstream.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Sorted bucketed scans (r15): bucket sort-order propagation is
-      // legacy-flagged since Spark 3.0; with Materialize.bucketedTable
-      // guaranteeing ONE file per bucket it is safe (Spark keeps the
-      // Sort for multi-file buckets even under the flag - verified) and
-      // it elides the per-task re-sort under every co-bucketed SMJ.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Before ANY events read (including the row-count): the driver fixture
     // carries a ns timestamp Spark 4 refuses without the legacy flag.

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.functions.{BloomMightContainLong, DotProductF32, HilbertIndex}
 
-/** Session extensions registering graft's native expressions, for users who
-  * configure `spark.sql.extensions=graft.GraftExtensions`. The engine's own
-  * query functions instead call [[GraftFunctions.register]] at runtime —
-  * the driver harness creates bare SparkSessions (Verify.scala), so
-  * injection-at-build is not available there.
+/** The one way graft's native expressions, optimizer rules and planner
+  * strategy enter a session: `spark.sql.extensions=graft.GraftExtensions`,
+  * which [[GraftSession.builder]] sets for every session the library
+  * builds. There is no runtime registration path; a session built without
+  * the extension fails to resolve `dot_f32` and has no plan for
+  * [[graft.plans.CoresetPlan]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -69,27 +69,4 @@ object GraftFunctions {
         "rplsh_dots: argument 2 (planes) must be a foldable array<array<float>> literal")
       graft.functions.RplshDots(children(0), children(1)): Expression
     })
-
-  /** Idempotent runtime registration into an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(dotF32, bloomMightContain, hilbertD, rplshSigs, rplshDots).foreach {
-      case (id, info, builder) =>
-        if (!registry.functionExists(id)) {
-          registry.registerFunction(id, info, builder)
-        }
-    }
-  }
-
-  /** Idempotent runtime registration of the coreset planner strategy, for
-    * sessions created without `spark.sql.extensions` (the test harness) —
-    * `experimental.extraStrategies` is the public runtime equivalent of
-    * `injectPlannerStrategy`.
-    */
-  def registerStrategy(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.CoresetStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.CoresetStrategy
-    }
-  }
 }

@@ -1,0 +1,30 @@
+package graft
+
+import java.util.Locale
+
+/** JSON text for the one-line records the mains print and write (Bench's
+  * metric lines, BandRun's per-key lines, Verify's oracle_sql.json).
+  */
+object Json {
+
+  /** A JSON string literal. Escapes backslash, quote and ALL control chars
+    * (< 0x20): exception messages routinely contain newlines (ParseException
+    * prints the SQL), and a tab or CR in builder-authored SQL would make the
+    * driver's json.load fail and silently zero the round's correctness.
+    */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case '\n'         => "\\n"
+    case '\r'         => "\\r"
+    case '\t'         => "\\t"
+    case c if c < ' ' => "\\u%04x".formatLocal(Locale.ROOT, c.toInt)
+    case c            => c.toString
+  } + "\""
+
+  /** `v` with `digits` decimals under Locale.ROOT. The default-locale
+    * `%.3f` prints `1,234` under a comma-decimal locale, which is not a
+    * JSON number and breaks the whole line.
+    */
+  def fixed(v: Double, digits: Int): String = s"%.${digits}f".formatLocal(Locale.ROOT, v)
+}

@@ -7,8 +7,8 @@ import graft.operators._
   *
   * Every key in [[queries]] is one operator from SURVEY.md §2.2; every entry
   * in [[oracleSql]] is the equivalent ANSI SQL the driver runs in DuckDB on
-  * the same parquet tables (omitted only for the non-SQL-expressible
-  * diversity ops, group W). Column names and types are aligned on both
+  * the same parquet tables (omitted only for the keys in [[noOracle]],
+  * each with its reason). Column names and types are aligned on both
   * sides per the §7.4 determinism protocol.
   */
 object SparkEntry {
@@ -124,7 +124,6 @@ object SparkEntry {
     "agg_distinct_users" -> Relational.aggDistinctUsers _,
     "rollup_orders" -> Relational.rollupOrders _,
     "cube_orders" -> Relational.cubeOrders _,
-    // rows-only: HLL estimates are engine-specific; ±5% envelope in OperatorSpec
     "agg_distinct_users_approx" -> Relational.aggDistinctUsersApprox _,
     "grouping_sets_lineitem" -> Relational.groupingSetsLineitem _,
     "pivot_events" -> Relational.pivotEvents _,
@@ -181,9 +180,7 @@ object SparkEntry {
     "stream_vector_source" -> graft.streaming.StreamingEntry.streamVectorSource _,
     "stream_file_sink_events" -> graft.streaming.StreamingEntry.streamFileSinkEvents _,
     "stream_file_source_events" -> graft.streaming.StreamingEntry.streamFileSourceEvents _,
-    // rows-only: per-key doubling coreset state (diversity op, not SQL-expressible)
     "stream_coreset_keys" -> graft.streaming.StreamingEntry.streamCoresetKeys _,
-    // rows-only: same operator on the transformWithState API (RocksDB state)
     "stream_coreset_tws" -> graft.streaming.StreamingEntry.streamCoresetTws _,
     "stream_session_tws" -> graft.streaming.StreamingEntry.streamSessionTws _,
     "tumbling_window" -> EventOps.tumblingWindow _,
@@ -192,16 +189,10 @@ object SparkEntry {
     // V: vectors & text (LLM-data-pipeline surface)
     "cos_topk" -> VectorOps.cosTopk _,
     "cos_topk_ivf" -> VectorOps.cosTopkIvf _,
-    // rows-only: quantizer is learned (GMM over the coreset), not SQL-expressible
     "cos_topk_ivf_kmeans" -> VectorOps.cosTopkIvfKmeans _,
-    // rows-only: hyperplane draws are seeded-hash, not SQL-expressible
     "cos_topk_rplsh" -> VectorOps.cosTopkRplsh _,
-    // rows-only: PQ codebook training (farthest-first kernel) not
-    // SQL-expressible; recall vs exact pinned in PipelineOpsSpec
     "cos_topk_pq" -> VectorOps.cosTopkPq _,
     "knn_label_vote" -> VectorOps.knnLabelVote _,
-    // rows-only: iterative Lloyd fixpoint (GMM-seeded) not SQL-expressible;
-    // objective-monotone + bit-stability invariants in PipelineOpsSpec
     "kmeans_lloyd" -> VectorOps.kmeansLloyd _,
     "bm25_topk" -> TextAnalysisOps.bm25Topk _,
     "hybrid_rrf_topk" -> RetrievalOps.hybridRrfTopk _,
@@ -253,8 +244,6 @@ object SparkEntry {
     "cms_token_counts" -> TextAnalysisOps.cmsTokenCounts _,
     "pack_token_bins" -> TextOps.packTokenBins _,
     "rarity_top_terms" -> TextAnalysisOps.rarityTopTerms _,
-    // rows-only: GK sketch estimates are engine-specific (SURVEY.md §7.4
-    // approximate-output carve-out, like agg_distinct_users_approx)
     "value_quantiles_sketch" -> Relational.valueQuantilesSketch _,
     "bitmap_distinct_users" -> Relational.bitmapDistinctUsers _,
     "doc_chunks" -> TextOps.docChunks _,
@@ -344,15 +333,11 @@ object SparkEntry {
     "media_byte_windows" -> MultimodalOps.mediaByteWindows _,
     "image_resize_dims" -> MultimodalOps.imageResizeDims _,
     "audio_frames_meta" -> MultimodalOps.audioFramesMeta _,
-    // W: diversity core (no oracle — property-tested, SURVEY.md §2.2-W)
     "gmm_diverse_k32" -> DiversityOps.gmmDiverseK32 _,
-    // rows-only: coreset kernel not SQL-expressible; CoresetPlanSpec
-    // asserts plan-node ≡ mapPartitions output
     "coreset_exec_k64" -> DiversityOps.coresetExecK64 _,
     "diverse_docs_k16" -> DiversityOps.diverseDocsK16 _,
     "curate_corpus_k16" -> DiversityOps.curateCorpusK16 _,
     "local_search_k32" -> DiversityOps.localSearchK32 _,
-    // rows-only: per-label streaming-coreset kernels (not SQL-expressible)
     "diverse_by_label" -> DiversityOps.diverseByLabel _,
     "matching_k32" -> DiversityOps.matchingK32 _,
     "remote_edge_div" -> DiversityOps.remoteEdgeDiv _,
@@ -361,6 +346,41 @@ object SparkEntry {
     "remote_tree_div" -> DiversityOps.remoteTreeDiv _,
     "remote_bipartition_cycle_div" -> DiversityOps.remoteBipartitionCycleDiv _,
     "coreset_stream" -> DiversityOps.coresetStream _
+  )
+
+  /** The keys of [[queries]] with no [[oracleSql]] entry, each with the
+    * reason; Verify output for these keys is checked for rows only.
+    * Every key of [[queries]] is in exactly one of the two maps
+    * (OutputTypeProtocolSpec).
+    */
+  def noOracle: Map[String, String] = Map(
+    // approximate sketches (SURVEY.md §7.4 approximate-output carve-out)
+    "agg_distinct_users_approx" -> "HLL estimates are engine-specific; ±5% envelope in OperatorSpec",
+    "table_profile_approx" -> "HLL NDV estimates are engine-specific; table_profile_lineitem is the oracled exact twin",
+    "value_quantiles_sketch" -> "GK sketch estimates are engine-specific",
+    // learned or iterative kernels
+    "bpe_train_merges" -> "the greedy left-to-right merge fold is not one DuckDB statement; BpeSpec checks it against a sequential BPE",
+    "bpe_encode_docs" -> "encodes with the engine-trained merge table, which is not SQL-expressible",
+    "cos_topk_ivf_kmeans" -> "the quantizer is learned (GMM over the coreset), not SQL-expressible",
+    "cos_topk_rplsh" -> "hyperplane draws are seeded-hash, not SQL-expressible",
+    "cos_topk_pq" -> "PQ codebook training (farthest-first kernel) is not SQL-expressible; recall vs exact pinned in PipelineOpsSpec",
+    "kmeans_lloyd" -> "the iterative Lloyd fixpoint (GMM-seeded) is not SQL-expressible; invariants in PipelineOpsSpec",
+    // diversity core (SURVEY.md §2.2-W): property-tested
+    "gmm_diverse_k32" -> "GMM selection is not SQL-expressible",
+    "local_search_k32" -> "local-search selection is not SQL-expressible",
+    "matching_k32" -> "matching selection is not SQL-expressible",
+    "remote_edge_div" -> "objectives of a GMM selection, which is not SQL-expressible",
+    "remote_clique_div" -> "objective of a heuristic selection, which is not SQL-expressible",
+    "remote_star_div" -> "objective of a GMM selection, which is not SQL-expressible",
+    "remote_tree_div" -> "objective of a GMM selection, which is not SQL-expressible",
+    "remote_bipartition_cycle_div" -> "objectives of a GMM selection, which is not SQL-expressible",
+    "coreset_exec_k64" -> "the coreset kernel is not SQL-expressible; CoresetPlanSpec asserts plan node ≡ mapPartitions output",
+    "coreset_stream" -> "the streaming-coreset kernel is not SQL-expressible",
+    "diverse_by_label" -> "per-label streaming-coreset kernels are not SQL-expressible",
+    "diverse_docs_k16" -> "Jaccard GMM document selection is not SQL-expressible",
+    "curate_corpus_k16" -> "ends in a diversity selection, which is not SQL-expressible",
+    "stream_coreset_keys" -> "per-key doubling-coreset state is not SQL-expressible",
+    "stream_coreset_tws" -> "the stream_coreset_keys operator on the transformWithState API (RocksDB state)"
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,32 +9,7 @@ object Verify {
     // for fast local iteration; the driver passes exactly two args.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark 4.1 UnionExec can CLAIM its children's shared output
-      // partitioning while still executing as the plain concatenation
-      // (left-semi-join-shaped union children; see EXPERIMENTS.md r14
-      // "union output partitioning") — downstream operators then skip
-      // their exchanges and zip-crash (or worse, mis-aggregate). Pinned
-      // off in every session this library builds until fixed upstream.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Sorted bucketed scans (r15): bucket sort-order propagation is
-      // legacy-flagged since Spark 3.0; with Materialize.bucketedTable
-      // guaranteeing ONE file per bucket it is safe (Spark keeps the
-      // Sort for multi-file buckets even under the flag - verified) and
-      // it elides the per-task re-sort under every co-bucketed SMJ.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // See Bench: avoid local-mode over-splitting of the small fixtures.
-      .config("spark.sql.files.minPartitionNum", "1")
-      // See Bench: the default 100-entry Janino cache thrashes under a
-      // 316-query session; bytecode cache only, never data.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus("4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -51,20 +25,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: $causes")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

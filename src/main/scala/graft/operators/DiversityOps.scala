@@ -105,7 +105,6 @@ object DiversityOps {
     * kernel row reproducibly: (id, weight, 6-dp center norm).
     */
   def coresetExecK64(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.registerStrategy(spark)
     val p = coresetParallelism(spark)
     val child = Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("id"), col("embedding"))

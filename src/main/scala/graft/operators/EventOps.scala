@@ -163,7 +163,6 @@ object EventOps {
     */
   def hilbertEventsBox(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val raw = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("ts_us"), cents.as("cents"))
     val (umin, umax, tmin, tmax) =
@@ -1327,7 +1326,6 @@ object EventOps {
     * pins the no-BNLJ plan.
     */
   def bandJoinAuto(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.BandJoinRewrite.ensure(spark) // bare-session robustness
     val e = Tables.events(spark, sfDir)
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("ts_us"))

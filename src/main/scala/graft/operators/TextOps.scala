@@ -676,7 +676,6 @@ object TextOps {
     * own runtime-row-level bloom join filters, made explicit and plannable.
     */
   def dedupBloomPrune(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     def fp(df: DataFrame): DataFrame = df.select(
       col("doc_id"),
       length(col("text")).as("fp_len"),

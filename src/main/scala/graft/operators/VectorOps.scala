@@ -26,7 +26,6 @@ object VectorOps {
     * but without the per-row intermediate array of `zip_with`.
     */
   private def simPairs(spark: SparkSession, sfDir: String, nQueries: Int): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -60,7 +59,6 @@ object VectorOps {
     */
   private[graft] def topkForQueries(
       spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val t = Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
@@ -147,7 +145,6 @@ object VectorOps {
     * the pair relation rather than presenting it.
     */
   private[operators] def nearDupScoredPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val bBits = nearDupBits(Tables.rowCount(spark, sfDir, "embeddings"))
     val keys = emb
@@ -248,7 +245,6 @@ object VectorOps {
     * exact-integer or 6-dp-rounded.
     */
   def cosTopkIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), expr(bucketSql).as("qb"))
@@ -301,7 +297,6 @@ object VectorOps {
     * [[cosTopk]] in PipelineOpsSpec.
     */
   def cosTopkIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     val cDf = DiversityOps.selectDiverse(spark, sfDir, 16)
       .zipWithIndex
@@ -394,7 +389,6 @@ object VectorOps {
       spark: SparkSession, sfDir: String,
       L: Int, B: Int, probeBits: Int, pairBits: Int = 0,
       nQueries: Int = 50): DataFrame = {
-    graft.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val dims = emb.select(size(col("embedding")).as("d")).first().getInt(0)
     // Hyperplane component in (-1, 1): fixed across sessions/partitions.
@@ -554,7 +548,6 @@ object VectorOps {
     * [[cosTopk]] in PipelineOpsSpec.
     */
   def cosTopkPq(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.GraftFunctions.register(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val dims = emb.select(size(col("embedding")).as("d")).first().getInt(0)

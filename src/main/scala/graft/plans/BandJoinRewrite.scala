@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -44,17 +43,6 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * both plans.
   */
 object BandJoinRewrite extends Rule[LogicalPlan] {
-
-  /** Ensure the rule is active on a session built without
-    * `spark.sql.extensions=graft.GraftExtensions` (mirrors
-    * GraftFunctions.register for expressions).
-    */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(BandJoinRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandJoinRewrite
-    }
-  }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(a, b) => conjuncts(a) ++ conjuncts(b)

@@ -20,8 +20,7 @@ import graft.functions.DotProductF32
   * length-pad, or any NULL element all poison the result), so the rewrite
   * is semantics-preserving.
   *
-  * Injection: `spark.sql.extensions=graft.GraftExtensions` (build-time) or
-  * `spark.experimental.extraOptimizations` (runtime).
+  * Injection: `spark.sql.extensions=graft.GraftExtensions`.
   */
 object DotProductRewrite extends Rule[LogicalPlan] {
 

@@ -220,16 +220,6 @@ private[graft] object GrowingCatalog {
     }
   }
 
-  /** Total parquet data files in the catalog — the experiment's
-    * file-count-stays-O(buckets) evidence. */
-  def dataFileCount(root: File): Int = {
-    def walk(f: File): Int =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else if (f.getName.endsWith(".parquet")) 1
-      else 0
-    walk(new File(root, "catalog"))
-  }
-
   private def wipe(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
     f.delete(): Unit

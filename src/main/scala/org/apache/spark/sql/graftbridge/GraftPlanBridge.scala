@@ -18,13 +18,3 @@ object GraftPlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
-
-/** Private-API seam for [[graft.SpillExperiment]]: `listenerBus` is
-  * `private[spark]`, and draining it is the only reliable way to read
-  * task spill metrics synchronously after an action (the listener posts
-  * async).
-  */
-object GraftListenerBridge {
-  def drain(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
-}

@@ -31,4 +31,13 @@ class OutputTypeProtocolSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  test("every declared key has an oracle or a recorded reason for none, never both") {
+    val keys = SparkEntry.queries.keySet
+    val (oracled, unchecked) = (SparkEntry.oracleSql.keySet, SparkEntry.noOracle.keySet)
+    assert((keys -- oracled -- unchecked).isEmpty, s"keys with neither: ${keys -- oracled -- unchecked}")
+    assert((oracled & unchecked).isEmpty, s"keys with both: ${oracled & unchecked}")
+    assert((oracled -- keys).isEmpty, s"oracleSql keys not in queries: ${oracled -- keys}")
+    assert((unchecked -- keys).isEmpty, s"noOracle keys not in queries: ${unchecked -- keys}")
+  }
 }

@@ -1,15 +1,28 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local SparkSession for specs — same shape as the driver's harness
-  * sessions (Verify.scala): local[4], 4 shuffle partitions, UTC.
+/** Shared local SparkSession for specs: the production session
+  * ([[GraftSession]]) on local[4].
   */
 trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the optimizer rule `rule` excluded: the rule-off side
+    * of a with/without comparison on a session whose extension injects the
+    * rule. A QueryExecution memoizes its optimized plan, so build the
+    * query inside `body`.
+    */
+  def withoutRule[A](rule: Rule[_])(body: => A): A = {
+    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, rule.ruleName)
+    try body
+    finally spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+  }
 
   override def afterAll(): Unit = super.afterAll()
 }
@@ -17,25 +30,8 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 object SparkTestBase {
   lazy val session: SparkSession = {
     graft.ScratchDirs.preferTmpfs(force = true) // untimed: keep tests fast
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Spark 4.1 UnionExec can CLAIM its children's shared output
-      // partitioning while still executing as the plain concatenation
-      // (left-semi-join-shaped union children; see EXPERIMENTS.md r14
-      // "union output partitioning") — downstream operators then skip
-      // their exchanges and zip-crash (or worse, mis-aggregate). Pinned
-      // off in every session this library builds until fixed upstream.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Sorted bucketed scans (r15): bucket sort-order propagation is
-      // legacy-flagged since Spark 3.0; with Materialize.bucketedTable
-      // guaranteeing ONE file per bucket it is safe (Spark keeps the
-      // Sort for multi-file buckets even under the flag - verified) and
-      // it elides the per-task re-sort under every co-bucketed SMJ.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -40,7 +40,6 @@ class HilbertIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("codegen path == interpreted eval (registered hilbert_d over a DataFrame)") {
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val rows = (0 until 1024).map(i => (i % 256, (i * 37) % 256))
     val got = rows.toDF("x", "y")
       .selectExpr("x", "y", "hilbert_d(x, y) AS h")

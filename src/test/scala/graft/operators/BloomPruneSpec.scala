@@ -17,7 +17,6 @@ class BloomPruneSpec extends AnyFunSuite with SparkTestBase {
 
   test("bloom_might_contain: no false negatives, fp rate near the configured bound") {
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     val inserted = spark.range(0, 2000).toDF("k")
     val bloom = inserted.stat.bloomFilter("k", 2000, 0.01)
     val probe = call_function("bloom_might_contain", lit(serialized(bloom)), col("k"))

@@ -55,7 +55,6 @@ class NearDupCapSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a bucket over the cap emits NO pairs; normal buckets are unaffected") {
-    graft.GraftFunctions.register(spark)
     val pairs = VectorOps.embeddingNearDup(spark, fixDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // every cluster-internal pair has sim 1.0 but ALL are fenced: the
@@ -76,7 +75,6 @@ class NearDupCapSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("semdedup over a capped bucket keeps the whole cluster; planted dup still drops") {
-    graft.GraftFunctions.register(spark)
     val dec = VectorOps.semdedupDecisions(spark, fixDir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(dec.size == ClusterN + 2 + 600)

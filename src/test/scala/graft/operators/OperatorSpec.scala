@@ -68,7 +68,6 @@ class OperatorSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("dot_f32 expression agrees with the higher-order-function form") {
-    graft.GraftFunctions.register(spark)
     val diff = graft.sources.Tables.embeddings(spark, sf0001)
       .limit(100)
       .select(

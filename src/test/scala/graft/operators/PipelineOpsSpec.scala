@@ -391,7 +391,6 @@ class PipelineOpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("embedding_near_dup: adaptive-B recall floor vs brute force; B pins occupancy") {
-    graft.GraftFunctions.register(spark)
     val got = VectorOps.embeddingNearDup(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val emb = graft.sources.Tables.embeddings(spark, sf0001)

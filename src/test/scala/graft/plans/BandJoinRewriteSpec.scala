@@ -12,13 +12,6 @@ import graft.operators.EventOps
   */
 class BandJoinRewriteSpec extends AnyFunSuite with SparkTestBase {
 
-  private def withRule[A](f: => A): A = {
-    BandJoinRewrite.ensure(spark)
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == BandJoinRewrite)
-  }
-
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   private def ab = {
@@ -33,11 +26,13 @@ class BandJoinRewriteSpec extends AnyFunSuite with SparkTestBase {
 
   private def checkShape(naive: (DataFrame, DataFrame) => DataFrame): Unit = {
     val (a, b) = ab
-    val without = sortedRows(naive(a, b))
-    val (withRes, p) = withRule {
+    val (without, pOff) = withoutRule(BandJoinRewrite) {
       val df = naive(a, b)
       (sortedRows(df), plan(df))
     }
+    assert(!pOff.contains("Generate"), pOff)
+    val df = naive(a, b)
+    val (withRes, p) = (sortedRows(df), plan(df))
     assert(withRes == without, "rewrite changed the result")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
     assert(p.contains("Generate"), p)
@@ -64,23 +59,19 @@ class BandJoinRewriteSpec extends AnyFunSuite with SparkTestBase {
 
   test("guard: a join that already has an equi key is left alone") {
     val (a, b) = ab
-    withRule {
-      val df = a.join(b,
-        col("a_id") === col("b_id") && abs(col("a_v") - col("b_v")) <= lit(50L))
-      assert(!plan(df).contains("Generate"), plan(df))
-    }
+    val df = a.join(b,
+      col("a_id") === col("b_id") && abs(col("a_v") - col("b_v")) <= lit(50L))
+    assert(!plan(df).contains("Generate"), plan(df))
   }
 
   test("guard: non-inner and fractional-typed bands are left alone") {
     val (a, b) = ab
-    withRule {
-      val left = a.join(b, abs(col("a_v") - col("b_v")) <= lit(7L), "left")
-      assert(!plan(left).contains("Generate"), plan(left))
-      val frac = a.withColumn("a_d", col("a_v").cast("double"))
-        .join(b.withColumn("b_d", col("b_v").cast("double")),
-          abs(col("a_d") - col("b_d")) <= lit(7L))
-      assert(!plan(frac).contains("Generate"), plan(frac))
-    }
+    val left = a.join(b, abs(col("a_v") - col("b_v")) <= lit(7L), "left")
+    assert(!plan(left).contains("Generate"), plan(left))
+    val frac = a.withColumn("a_d", col("a_v").cast("double"))
+      .join(b.withColumn("b_d", col("b_v").cast("double")),
+        abs(col("a_d") - col("b_d")) <= lit(7L))
+    assert(!plan(frac).contains("Generate"), plan(frac))
   }
 
   test("randomized bands: rewritten result == naive result for 12 seeded (lo, hi, data) draws") {
@@ -96,8 +87,8 @@ class BandJoinRewriteSpec extends AnyFunSuite with SparkTestBase {
       val (lo, hi) = (math.min(x, y).toLong, math.max(x, y).toLong)
       def q = a.join(b,
         col("a_v") >= col("b_v") + lit(lo) && col("a_v") <= col("b_v") + lit(hi))
-      val naive = sortedRows(q)
-      val (rewritten, p) = withRule((sortedRows(q), plan(q)))
+      val naive = withoutRule(BandJoinRewrite)(sortedRows(q))
+      val (rewritten, p) = (sortedRows(q), plan(q))
       assert(rewritten == naive, s"band [$lo, $hi] diverged")
       assert(p.contains("Generate") && !p.contains("BroadcastNestedLoopJoin"),
         s"band [$lo, $hi] not rewritten:\n$p")
@@ -108,13 +99,11 @@ class BandJoinRewriteSpec extends AnyFunSuite with SparkTestBase {
     // inner two-sided ±60 s band recomputed from the manual one-sided
     // binned shape is a different query; instead cross-check the declared
     // query against a driver-side naive recomputation
-    val declared = withRule {
-      val df = EventOps.bandJoinAuto(spark, sf0001)
-      val p = plan(df)
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-      assert(p.contains("Generate"), p)
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
+    val df = EventOps.bandJoinAuto(spark, sf0001)
+    val p = plan(df)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    assert(p.contains("Generate"), p)
+    val declared = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // naive reference: collect events once, count in memory
     val ev = graft.sources.Tables.events(spark, sf0001)
       .select(col("event_type"), col("event_id"), col("ts_us"))
