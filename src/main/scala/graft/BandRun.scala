@@ -18,18 +18,16 @@ object BandRun {
     // with /dev/shm spill stacked on top of the heap
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
+    val byKey = SparkEntry.select(keys.toSet).toMap
     val spark = GraftSession.builder(GraftSession.envCpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     keys.foreach { k =>
       val t0 = System.nanoTime()
       val line = try {
-        val n = SparkEntry.queries(k)(spark, sfDir).count()
+        val n = byKey(k).build(spark, sfDir).count()
         s"""{"query":${Json.str(k)},"rows":$n,"sec":${Json.fixed((System.nanoTime() - t0) / 1e9, 1)}}"""
       } catch {
-        case e: Throwable =>
-          val causes = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-            .map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}").take(2).mkString(" <- ")
-          s"""{"query":${Json.str(k)},"err":${Json.str(causes.take(300))}}"""
+        case e: Throwable => s"""{"query":${Json.str(k)},"err":${Json.str(Json.causes(e, 2).take(300))}}"""
       }
       println(s"[band] $line")
     }

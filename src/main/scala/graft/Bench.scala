@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.{Relational, TextOps}
 
 /** Benchmark main: times every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
@@ -35,6 +36,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     ScratchDirs.preferTmpfs() // no-op unless GRAFT_SCRATCH=tmpfs (timed run)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // args: [queryName ...] — optional subset filter for fast local
+    // iteration on one query's timing; no args runs the full suite (stages
+    // always run: staged queries need their files).
+    val only = args.toSet
+    val ordered = SparkEntry.select(only)
     val spark = GraftSession.builder(GraftSession.envCpus("4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: exercise codegen, the parquet reader and the whole query
@@ -48,21 +54,18 @@ object Bench {
     // green line. `once` returns Left(error) on exception; a pass records a
     // time only on success, and a query that failed EVERY pass is omitted
     // from `queries`/total and reported under a top-level "errors" object.
-    def errStr(e: Throwable): String =
-      s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
+    def once(body: => Any): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(errStr(e)) }
+      try { body; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
+      }
     }
-    // args: [queryName ...] — optional subset filter for fast local
-    // iteration on one query's timing; the driver passes no args and gets
-    // the full suite (stages always run: staged queries need their files).
-    val only = args.toSet
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
+    val stages: Seq[(String, (SparkSession, String) => Any)] = Seq(
+      "stage_minhash" -> TextOps.stageDedupInputs _,
+      "stage_bucketed" -> Relational.stageBucketedTables _,
+      "stage_stats" -> Relational.stageStatsTable _,
+      "stage_bpe" -> TextOps.stageBpeArtifacts _)
     val best = collection.mutable.Map.empty[String, Double]
     val errs = collection.mutable.Map.empty[String, String]
     def record(name: String, r: Either[String, Double]): Unit = r match {
@@ -71,28 +74,13 @@ object Bench {
     }
     for (_ <- 1 to 3) {
       graft.sources.Materialize.reset(spark)
-      val t0 = System.nanoTime()
-      record("stage_minhash",
-        try { graft.operators.TextOps.stageDedupInputs(spark, sfDir); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => Left(errStr(e)) })
-      val t1 = System.nanoTime()
-      record("stage_bucketed",
-        try { graft.operators.Relational.stageBucketedTables(spark, sfDir); Right((System.nanoTime() - t1) / 1e9) }
-        catch { case e: Throwable => Left(errStr(e)) })
-      val t2 = System.nanoTime()
-      record("stage_stats",
-        try { graft.operators.Relational.stageStatsTable(spark, sfDir); Right((System.nanoTime() - t2) / 1e9) }
-        catch { case e: Throwable => Left(errStr(e)) })
-      val t3 = System.nanoTime()
-      record("stage_bpe",
-        try { graft.operators.TextOps.stageBpeArtifacts(spark, sfDir); Right((System.nanoTime() - t3) / 1e9) }
-        catch { case e: Throwable => Left(errStr(e)) })
-      for ((name, fn) <- ordered) {
+      for ((name, stage) <- stages) record(name, once(stage(spark, sfDir)))
+      for ((name, q) <- ordered) {
         spark.catalog.clearCache()
-        record(name, once(fn))
+        record(name, once(q.build(spark, sfDir).write.format("noop").mode("overwrite").save()))
       }
     }
-    val results = (ordered.map(_._1) ++ Seq("stage_minhash", "stage_bucketed", "stage_stats", "stage_bpe"))
+    val results = (ordered.map(_._1) ++ stages.map(_._1))
       .flatMap(name => best.get(name).map(name -> _)).toMap
     // ASCENDING (slowest LAST): the driver's bounded capture keeps the END
     // of the line (a tail), so the slowest queries — the ones a reader

@@ -3,7 +3,8 @@ package graft
 import java.util.Locale
 
 /** JSON text for the one-line records the mains print and write (Bench's
-  * metric lines, BandRun's per-key lines, Verify's oracle_sql.json).
+  * metric lines, BandRun's per-key lines, Verify's oracle_sql.json), and
+  * the exception text Verify and BandRun report.
   */
 object Json {
 
@@ -27,4 +28,12 @@ object Json {
     * JSON number and breaks the whole line.
     */
   def fixed(v: Double, digits: Int): String = s"%.${digits}f".formatLocal(Locale.ROOT, v)
+
+  /** `e` and up to `depth - 1` of its causes, as "Class: message" joined by
+    * " <- ": analysis wrappers (EXPRESSION_DECODING_FAILED et al.) bury the
+    * actionable exception 1-2 causes down.
+    */
+  def causes(e: Throwable, depth: Int): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}").take(depth).mkString(" <- ")
 }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.streaming.StreamingEntry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The declared queries (SURVEY.md §7).
   *
-  * Every key in [[queries]] is one operator from SURVEY.md §2.2; every entry
-  * in [[oracleSql]] is the equivalent ANSI SQL the driver runs in DuckDB on
-  * the same parquet tables (omitted only for the keys in [[noOracle]],
-  * each with its reason). Column names and types are aligned on both
+  * [[queries]] is the one registry of declared keys, one operator from
+  * SURVEY.md §2.2 each. Every [[Query]] holds the DataFrame builder and how
+  * its output is checked: an [[Oracle]] with the equivalent ANSI SQL that
+  * DuckDB runs on the same parquet tables, or a [[NoOracle]] with the
+  * reason there is none. Column names and types are aligned on both
   * sides per the §7.4 determinism protocol.
   */
 object SparkEntry {
@@ -17,374 +19,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A/B: scans, projections, filters, sinks
-    "scan_project_filter" -> Relational.scanProjectFilter _,
-    "partitioned_events_purchases" -> EventOps.partitionedEventsPurchases _,
-    "compact_small_files" -> EventOps.compactSmallFiles _,
-    "dpp_events_join" -> EventOps.dppEventsJoin _,
-    "funnel_conversion" -> EventOps.funnelConversion _,
-    "fact_scd2_join" -> EventOps.factScd2Join _,
-    "group_topk_agg" -> EventOps.groupTopkAgg _,
-    "snapshot_diff" -> EventOps.snapshotDiff _,
-    "interval_coverage" -> EventOps.intervalCoverage _,
-    "null_skew_join" -> EventOps.nullSkewJoin _,
-    "stable_row_ids" -> Relational.stableRowIds _,
-    "equi_depth_buckets" -> Relational.equiDepthBuckets _,
-    "dq_constraint_report" -> Relational.dqConstraintReport _,
-    "atomic_sink_roundtrip" -> EventOps.atomicSinkRoundtrip _,
-    "schema_evolution_merge" -> EventOps.schemaEvolutionMerge _,
-    "band_join_binned" -> EventOps.bandJoinBinned _,
-    "rolling_user_features" -> EventOps.rollingUserFeatures _,
-    "token_cooccurrence" -> TextOps.tokenCooccurrence _,
-    "weighted_sample_strata" -> TextOps.weightedSampleStrata _,
-    "posting_lists" -> TextOps.postingLists _,
-    "dup_span_fraction" -> TextOps.dupSpanFraction _,
-    "pii_scrub_stats" -> TextAnalysisOps.piiScrubStats _,
-    "stream_upsert_foreachbatch" -> graft.streaming.StreamingEntry.streamUpsertForeachBatch _,
-    "stream_dedup_minhash" -> graft.streaming.StreamingEntry.streamDedupMinhash _,
-    "stream_dedup_growing" -> graft.streaming.StreamingEntry.streamDedupGrowing _,
-    "stream_ann_topk" -> graft.streaming.StreamingEntry.streamAnnTopk _,
-    "stream_topk_tws" -> graft.streaming.StreamingEntry.streamTopkTws _,
-    "stream_observe_metrics" -> graft.streaming.StreamingEntry.streamObserveMetrics _,
-    "stream_chained_agg" -> graft.streaming.StreamingEntry.streamChainedAgg _,
-    "stream_state_reader" -> graft.streaming.StreamingEntry.streamStateReader _,
-    "stream_initial_state" -> graft.streaming.StreamingEntry.streamInitialState _,
-    "stream_distinct_users_tws" -> graft.streaming.StreamingEntry.streamDistinctUsersTws _,
-    "stream_recent_events_tws" -> graft.streaming.StreamingEntry.streamRecentEventsTws _,
-    "stream_atomic_sink" -> graft.streaming.StreamingEntry.streamAtomicSink _,
-    "stream_sink_time_travel" -> graft.streaming.StreamingEntry.streamSinkTimeTravel _,
-    "stream_event_transitions" -> graft.streaming.StreamingEntry.streamEventTransitions _,
-    "stream_streaks_tws" -> graft.streaming.StreamingEntry.streamStreaksTws _,
-    "stream_cusum_tws" -> graft.streaming.StreamingEntry.streamCusumTws _,
-    "stream_attribution_tws" -> graft.streaming.StreamingEntry.streamAttributionTws _,
-    "stream_ewma_user" -> graft.streaming.StreamingEntry.streamEwmaUser _,
-    "stream_sample_users" -> graft.streaming.StreamingEntry.streamSampleUsers _,
-    "q14_promo_share" -> Relational.q14PromoShare _,
-    "zorder_events_box" -> EventOps.zorderEventsBox _,
-    "hilbert_events_box" -> EventOps.hilbertEventsBox _,
-    "jsonl_roundtrip_events" -> EventOps.jsonlRoundtripEvents _,
-    "csv_roundtrip_events" -> EventOps.csvRoundtripEvents _,
-    "orc_roundtrip_events" -> EventOps.orcRoundtripEvents _,
-    "xml_roundtrip_events" -> EventOps.xmlRoundtripEvents _,
-    // C: joins
-    "join_nation_revenue" -> Relational.joinNationRevenue _,
-    "q3_top_orders" -> Relational.q3TopOrders _,
-    "q5_local_supplier" -> Relational.q5LocalSupplier _,
-    "q4_priority_exists" -> Relational.q4PriorityExists _,
-    "q6_forecast_revenue" -> Relational.q6ForecastRevenue _,
-    "q7_volume_shipping" -> Relational.q7VolumeShipping _,
-    "q10_returned_items" -> Relational.q10ReturnedItems _,
-    "q18_large_orders" -> Relational.q18LargeOrders _,
-    "q19_disjunctive" -> Relational.q19Disjunctive _,
-    "q15_top_supplier" -> Relational.q15TopSupplier _,
-    // TPC-H completion set (TpchOps): the 11 remaining classic shapes over
-    // the derived-partsupp CTE / fixture-expressible adaptations.
-    "q2_min_cost_supplier" -> TpchOps.q2MinCostSupplier _,
-    "q8_market_share" -> TpchOps.q8MarketShare _,
-    "q9_product_profit" -> TpchOps.q9ProductProfit _,
-    "q11_important_stock" -> TpchOps.q11ImportantStock _,
-    "q12_late_priority" -> TpchOps.q12LatePriority _,
-    "q13_customer_distribution" -> TpchOps.q13CustomerDistribution _,
-    "q16_supplier_counts" -> TpchOps.q16SupplierCounts _,
-    "q17_small_qty_revenue" -> TpchOps.q17SmallQtyRevenue _,
-    "q20_excess_suppliers" -> TpchOps.q20ExcessSuppliers _,
-    "q21_waiting_supplier" -> TpchOps.q21WaitingSupplier _,
-    "q22_dormant_customers" -> TpchOps.q22DormantCustomers _,
-    "ship_latency_percentiles" -> TpchOps.shipLatencyPercentiles _,
-    "pareto_suppliers_80" -> TpchOps.paretoSuppliers80 _,
-    "open_orders_weekly" -> TpchOps.openOrdersWeekly _,
-    "table_profile_lineitem" -> Relational.tableProfileLineitem _,
-    "table_profile_approx" -> Relational.tableProfileApprox _,
-    "k_anonymity_customers" -> Relational.kAnonymityCustomers _,
-    "l_diversity_customers" -> Relational.lDiversityCustomers _,
-    "source_overlap_matrix" -> TextOps.sourceOverlapMatrix _,
-    "ivm_join_view" -> Relational.ivmJoinView _,
-    "semi_anti_customers" -> Relational.semiAntiCustomers _,
-    "merge_upsert_parts" -> Relational.mergeUpsertParts _,
-    "outer_join_orders" -> Relational.outerJoinOrders _,
-    "left_outer_customers" -> Relational.leftOuterCustomers _,
-    "bucketed_join_orders" -> Relational.bucketedJoinOrders _,
-    "stats_broadcast_join" -> Relational.statsBroadcastJoin _,
-    "skew_join_zipf" -> EventOps.skewJoinZipf _,
-    "range_join_promo" -> Relational.rangeJoinPromo _,
-    "asof_join_events" -> EventOps.asofJoinEvents _,
-    "asof_join_tolerance" -> EventOps.asofJoinTolerance _,
-    "event_transitions" -> EventOps.eventTransitions _,
-    "drift_tv_distance" -> EventOps.driftTvDistance _,
-    "ewma_user_value" -> EventOps.ewmaUserValue _,
-    "image_color_near_dup" -> MultimodalOps.imageColorNearDup _,
-    "image_ahash_near_dup" -> MultimodalOps.imageAhashNearDup _,
-    "retention_cohorts" -> EventOps.retentionCohorts _,
-    "skyline_parts" -> Relational.skylineParts _,
-    // D: aggregations
-    "q1_pricing_summary" -> Relational.q1PricingSummary _,
-    "sql_interface_q1" -> Relational.sqlInterfaceQ1 _,
-    "agg_distinct_users" -> Relational.aggDistinctUsers _,
-    "rollup_orders" -> Relational.rollupOrders _,
-    "cube_orders" -> Relational.cubeOrders _,
-    "agg_distinct_users_approx" -> Relational.aggDistinctUsersApprox _,
-    "grouping_sets_lineitem" -> Relational.groupingSetsLineitem _,
-    "pivot_events" -> Relational.pivotEvents _,
-    "percentiles_qty" -> Relational.percentilesQty _,
-    "agg_decimal_money" -> Relational.aggDecimalMoney _,
-    "stats_agg" -> Relational.statsAgg _,
-    "subquery_above_avg" -> Relational.subqueryAboveAvg _,
-    // E: window functions
-    "win_topk_parts" -> EventOps.winTopkParts _,
-    "win_running_user" -> EventOps.winRunningUser _,
-    "win_lag_delta" -> EventOps.winLagDelta _,
-    "win_zscore_events" -> EventOps.winZscoreEvents _,
-    "win_range_frame" -> EventOps.winRangeFrame _,
-    "win_rank_kinds" -> EventOps.winRankKinds _,
-    // G: set ops
-    "setop_parts" -> Relational.setopParts _,
-    "setop_all_parts" -> Relational.setopAllParts _,
-    // H: scalar / date / json / array functions
-    "scalar_funcs" -> ScalarOps.scalarFuncs _,
-    "date_funcs" -> ScalarOps.dateFuncs _,
-    "json_props" -> EventOps.jsonProps _,
-    "from_json_props" -> EventOps.fromJsonProps _,
-    "variant_props" -> EventOps.variantProps _,
-    "vocab_coverage" -> TextAnalysisOps.vocabCoverage _,
-    "corpus_mix_weights" -> TextAnalysisOps.corpusMixWeights _,
-    "array_map_funcs" -> ScalarOps.arrayMapFuncs _,
-    "map_roundtrip" -> ScalarOps.mapRoundtrip _,
-    "try_funcs" -> ScalarOps.tryFuncs _,
-    "win_ignore_nulls" -> EventOps.winIgnoreNulls _,
-    "scd2_users" -> EventOps.scd2Users _,
-    "scd2_apply_batch" -> EventOps.scd2ApplyBatch _,
-    "agg_incremental_users" -> EventOps.aggIncrementalUsers _,
-    "agg_conditional" -> Relational.aggConditional _,
-    "lateral_brand_stats" -> Relational.lateralBrandStats _,
-    "unpivot_stats" -> Relational.unpivotStats _,
-    "argmax_orders" -> Relational.argmaxOrders _,
-    "salted_heavy_hitters" -> Relational.saltedHeavyHitters _,
-    "calendar_months" -> Relational.calendarMonths _,
-    "recursive_month_spine" -> Relational.recursiveMonthSpine _,
-    "null_semantics" -> Relational.nullSemantics _,
-    // S: event-time windows (batch forms; streaming parity in graft.streaming)
-    // + the declared streaming entry: a real MemoryStream micro-batch run
-    "stream_tumbling_events" -> graft.streaming.StreamingEntry.streamTumblingEvents _,
-    "stream_session_events" -> graft.streaming.StreamingEntry.streamSessionEvents _,
-    "stream_sliding_events" -> graft.streaming.StreamingEntry.streamSlidingEvents _,
-    "stream_interval_join_events" -> graft.streaming.StreamingEntry.streamIntervalJoinEvents _,
-    "stream_outer_join_events" -> graft.streaming.StreamingEntry.streamOuterJoinEvents _,
-    "stream_static_enrich" -> graft.streaming.StreamingEntry.streamStaticEnrich _,
-    "stream_semi_join_events" -> graft.streaming.StreamingEntry.streamSemiJoinEvents _,
-    "stream_full_outer_join_events" -> graft.streaming.StreamingEntry.streamFullOuterJoinEvents _,
-    "stream_update_counts" -> graft.streaming.StreamingEntry.streamUpdateCounts _,
-    "stream_dedup_events" -> graft.streaming.StreamingEntry.streamDedupEvents _,
-    "stream_append_finalized" -> graft.streaming.StreamingEntry.streamAppendFinalized _,
-    "stream_vector_source" -> graft.streaming.StreamingEntry.streamVectorSource _,
-    "stream_file_sink_events" -> graft.streaming.StreamingEntry.streamFileSinkEvents _,
-    "stream_file_source_events" -> graft.streaming.StreamingEntry.streamFileSourceEvents _,
-    "stream_coreset_keys" -> graft.streaming.StreamingEntry.streamCoresetKeys _,
-    "stream_coreset_tws" -> graft.streaming.StreamingEntry.streamCoresetTws _,
-    "stream_session_tws" -> graft.streaming.StreamingEntry.streamSessionTws _,
-    "tumbling_window" -> EventOps.tumblingWindow _,
-    "sliding_window" -> EventOps.slidingWindow _,
-    "sessionize" -> EventOps.sessionize _,
-    // V: vectors & text (LLM-data-pipeline surface)
-    "cos_topk" -> VectorOps.cosTopk _,
-    "cos_topk_ivf" -> VectorOps.cosTopkIvf _,
-    "cos_topk_ivf_kmeans" -> VectorOps.cosTopkIvfKmeans _,
-    "cos_topk_rplsh" -> VectorOps.cosTopkRplsh _,
-    "cos_topk_pq" -> VectorOps.cosTopkPq _,
-    "knn_label_vote" -> VectorOps.knnLabelVote _,
-    "kmeans_lloyd" -> VectorOps.kmeansLloyd _,
-    "bm25_topk" -> TextAnalysisOps.bm25Topk _,
-    "hybrid_rrf_topk" -> RetrievalOps.hybridRrfTopk _,
-    "mmr_rerank_k8" -> RetrievalOps.mmrRerankK8 _,
-    "mad_outliers" -> EventOps.madOutliers _,
-    "band_join_auto" -> EventOps.bandJoinAuto _,
-    "link_predict_cn" -> GraphOps.linkPredictCn _,
-    "sink_stats_pruned_read" -> EventOps.sinkStatsPrunedRead _,
-    "seasonal_forecast_mae" -> EventOps.seasonalForecastMae _,
-    "quantile_drift_weekly" -> EventOps.quantileDriftWeekly _,
-    "cusum_changepoint" -> EventOps.cusumChangepoint _,
-    "target_encode_oof" -> EventOps.targetEncodeOof _,
-    "bootstrap_ci_daily" -> EventOps.bootstrapCiDaily _,
-    "acf_daily_events" -> EventOps.acfDailyEvents _,
-    "sliding_distinct_users" -> EventOps.slidingDistinctUsers _,
-    "vector_source_scan" -> VectorOps.vectorSourceScan _,
-    "norm2_profile_label" -> VectorOps.norm2ProfileLabel _,
-    "vector_source_agg" -> VectorOps.vectorSourceAgg _,
-    "embedding_near_dup" -> VectorOps.embeddingNearDup _,
-    "semdedup_decisions" -> VectorOps.semdedupDecisions _,
-    "ann_recall_ivf" -> VectorOps.annRecallIvf _,
-    "stream_quality_gate" -> graft.streaming.StreamingEntry.streamQualityGate _,
-    "phrase_search_pos" -> CurationOps.phraseSearchPositional _,
-    "gopher_rules_source" -> CurationOps.gopherRulesSource _,
-    "dup_token_coverage" -> CurationOps.dupTokenCoverage _,
-    "epoch_shuffle_manifest" -> CurationOps.epochShuffleManifest _,
-    "epoch_shard_balance" -> CurationOps.epochShardBalance _,
-    "dedup_docs_exact" -> TextOps.dedupDocsExact _,
-    "dedup_docs_minhash" -> TextOps.dedupDocsMinhash _,
-    "jaccard_join_exact" -> TextOps.jaccardJoinExact _,
-    "dedup_docs_simhash" -> TextAnalysisOps.dedupDocsSimhash _,
-    "ngram_jaccard" -> TextOps.ngramJaccard _,
-    "minhash_containment" -> TextOps.minhashContainment _,
-    "minhash_jaccard_audit" -> TextOps.minhashJaccardAudit _,
-    "minhash_pr_eval" -> TextOps.minhashPrEval _,
-    "minhash_pr_planted" -> TextOps.minhashPrPlanted _,
-    "dedup_clusters" -> TextOps.dedupClusters _,
-    "dedup_keep_best" -> TextOps.dedupKeepBest _,
-    "split_no_leakage" -> TextOps.splitNoLeakage _,
-    "ngram_counts" -> TextOps.ngramCounts _,
-    "modality_coverage" -> VectorOps.modalityCoverage _,
-    "label_centroids" -> VectorOps.labelCentroids _,
-    "token_count_regex" -> TextOps.tokenCountRegex _,
-    "text_tokens" -> TextOps.textTokens _,
-    "bpe_pair_stats" -> TextOps.bpePairStats _,
-    "bpe_train_merges" -> TextOps.bpeTrainMerges _,
-    "bpe_encode_docs" -> TextOps.bpeEncodeDocs _,
-    "heavy_hitters_tokens" -> TextOps.heavyHittersTokens _,
-    "cms_token_counts" -> TextAnalysisOps.cmsTokenCounts _,
-    "pack_token_bins" -> TextOps.packTokenBins _,
-    "rarity_top_terms" -> TextAnalysisOps.rarityTopTerms _,
-    "value_quantiles_sketch" -> Relational.valueQuantilesSketch _,
-    "bitmap_distinct_users" -> Relational.bitmapDistinctUsers _,
-    "doc_chunks" -> TextOps.docChunks _,
-    "doc_repetition" -> TextOps.docRepetition _,
-    "contamination_check" -> TextOps.contaminationCheck _,
-    "dedup_incremental" -> TextOps.dedupIncremental _,
-    "dedup_incremental_minhash" -> TextOps.dedupIncrementalMinhash _,
-    "dedup_bloom_prune" -> TextOps.dedupBloomPrune _,
-    "doc_commonness" -> TextOps.docCommonness _,
-    "text_stats_lang" -> TextOps.textStatsLang _,
-    "lang_id_confusion" -> TextAnalysisOps.langIdConfusion _,
-    "assoc_rules_brands" -> MiningOps.assocRulesBrands _,
-    "ols_trend_user" -> MiningOps.olsTrendUser _,
-    "cosine_tf_pairs" -> MiningOps.cosineTfPairs _,
-    "chi2_event_dow" -> MiningOps.chi2EventDow _,
-    "forget_user_cascade" -> MiningOps.forgetUserCascade _,
-    "temporal_split_embargo" -> MiningOps.temporalSplitEmbargo _,
-    "percentile_bands_value" -> MiningOps.percentileBandsValue _,
-    "width_bucket_hist" -> MiningOps.widthBucketHist _,
-    "time_weighted_avg_user" -> MiningOps.timeWeightedAvgUser _,
-    "table_checksum_diff" -> MiningOps.tableChecksumDiff _,
-    "benford_first_digit" -> MiningOps.benfordFirstDigit _,
-    "rfm_segments" -> MiningOps.rfmSegments _,
-    "pattern_profile_columns" -> MiningOps.patternProfileColumns _,
-    "attribution_first_last" -> MiningOps.attributionFirstLast _,
-    "interarrival_hist_type" -> MiningOps.interarrivalHistType _,
-    "t_closeness_customers" -> Relational.tClosenessCustomers _,
-    "key_skew_profile" -> Relational.keySkewProfile _,
-    "clustering_depth_audit" -> Relational.clusteringDepthAudit _,
-    "join_card_audit" -> Relational.joinCardAudit _,
-    "kcore_docs" -> GraphOps.kcoreDocs _,
-    "label_prop_communities" -> GraphOps.labelPropCommunities _,
-    "holt_linear_daily" -> MiningOps.holtLinearDaily _,
-    "streak_active_days" -> SeqStatOps.streakActiveDays _,
-    "second_order_transitions" -> SeqStatOps.secondOrderTransitions _,
-    "time_to_first_purchase" -> SeqStatOps.timeToFirstPurchase _,
-    "ks_purchase_click" -> SeqStatOps.ksPurchaseClick _,
-    "spearman_daily" -> SeqStatOps.spearmanDaily _,
-    "kendall_tau_daily" -> SeqStatOps.kendallTauDaily _,
-    "quality_filter_funnel" -> SeqStatOps.qualityFilterFunnel _,
-    "dedup_yield_source" -> SeqStatOps.dedupYieldSource _,
-    "dedup_cluster_sizes" -> SeqStatOps.dedupClusterSizes _,
-    "hhi_concentration" -> SeqStatOps.hhiConcentration _,
-    "curriculum_deciles" -> SeqStatOps.curriculumDeciles _,
-    "mixture_epochs_plan" -> SeqStatOps.mixtureEpochsPlan _,
-    "local_clustering_docs" -> SeqStatOps.localClusteringDocs _,
-    "session_paths_topk" -> SeqStatOps.sessionPathsTopk _,
-    "zipf_rank_profile" -> SeqStatOps.zipfRankProfile _,
-    "feed_freshness_report" -> SeqStatOps.feedFreshnessReport _,
-    "cohort_ltv_curve" -> SeqStatOps.cohortLtvCurve _,
-    "growth_accounting_weekly" -> SeqStatOps.growthAccountingWeekly _,
-    "fk_integrity_audit" -> Relational.fkIntegrityAudit _,
-    "basket_freq_pairs" -> BasketOps.basketFreqPairs _,
-    "basket_rules_lift" -> BasketOps.basketRulesLift _,
-    "cuped_adjusted_ab" -> CausalOps.cupedAdjustedAb _,
-    "diff_in_diff" -> CausalOps.diffInDiff _,
-    "theil_sen_daily" -> CausalOps.theilSenDaily _,
-    "winsorized_stats" -> CausalOps.winsorizedStats _,
-    "km_survival_purchase" -> CausalOps.kmSurvivalPurchase _,
-    "kruskal_wallis_value" -> StatTestOps.kruskalWallisValue _,
-    "odds_ratio_ab" -> StatTestOps.oddsRatioAb _,
-    "cramers_v2_lang_source" -> StatTestOps.cramersV2LangSource _,
-    "gini_split_stump" -> StatTestOps.giniSplitStump _,
-    "mann_kendall_trend" -> StatTestOps.mannKendallTrend _,
-    "runs_test_daily" -> StatTestOps.runsTestDaily _,
-    "bowley_skew_types" -> StatTestOps.bowleySkewTypes _,
-    "qq_deciles_pair" -> StatTestOps.qqDecilesPair _,
-    "auc_event_scores" -> EvalOps.aucEventScores _,
-    "calibration_bins" -> EvalOps.calibrationBins _,
-    "calibration_ece" -> EvalOps.calibrationEce _,
-    "cohens_kappa_lang" -> EvalOps.cohensKappaLang _,
-    "confusion_prf_lang" -> EvalOps.confusionPrfLang _,
-    "gini_revenue_segments" -> EvalOps.giniRevenueSegments _,
-    "rank_eval_bm25" -> EvalOps.rankEvalBm25 _,
-    "fuzzy_name_match" -> TextAnalysisOps.fuzzyNameMatch _,
-    "pagerank_docs" -> GraphOps.pagerankDocs _,
-    "doc_hop_distance" -> GraphOps.docHopDistance _,
-    "triangle_count_docs" -> GraphOps.triangleCountDocs _,
-    "graph_assortativity" -> GraphOps.graphAssortativity _,
-    "regex_clean_stats" -> TextAnalysisOps.regexCleanStats _,
-    "hash_sample_stratified" -> TextAnalysisOps.hashSampleStratified _,
-    "text_quality" -> TextAnalysisOps.textQuality _,
-    "doc_fingerprint" -> TextAnalysisOps.docFingerprint _,
-    "multimodal_meta" -> MultimodalOps.multimodalMeta _,
-    "media_decode_meta" -> MultimodalOps.mediaDecodeMeta _,
-    "binary_files_meta" -> MultimodalOps.binaryFilesMeta _,
-    "media_byte_windows" -> MultimodalOps.mediaByteWindows _,
-    "image_resize_dims" -> MultimodalOps.imageResizeDims _,
-    "audio_frames_meta" -> MultimodalOps.audioFramesMeta _,
-    "gmm_diverse_k32" -> DiversityOps.gmmDiverseK32 _,
-    "coreset_exec_k64" -> DiversityOps.coresetExecK64 _,
-    "diverse_docs_k16" -> DiversityOps.diverseDocsK16 _,
-    "curate_corpus_k16" -> DiversityOps.curateCorpusK16 _,
-    "local_search_k32" -> DiversityOps.localSearchK32 _,
-    "diverse_by_label" -> DiversityOps.diverseByLabel _,
-    "matching_k32" -> DiversityOps.matchingK32 _,
-    "remote_edge_div" -> DiversityOps.remoteEdgeDiv _,
-    "remote_clique_div" -> DiversityOps.remoteCliqueDiv _,
-    "remote_star_div" -> DiversityOps.remoteStarDiv _,
-    "remote_tree_div" -> DiversityOps.remoteTreeDiv _,
-    "remote_bipartition_cycle_div" -> DiversityOps.remoteBipartitionCycleDiv _,
-    "coreset_stream" -> DiversityOps.coresetStream _
-  )
+  /** How a key's output is checked. */
+  sealed trait Check
 
-  /** The keys of [[queries]] with no [[oracleSql]] entry, each with the
-    * reason; Verify output for these keys is checked for rows only.
-    * Every key of [[queries]] is in exactly one of the two maps
-    * (OutputTypeProtocolSpec).
-    */
-  def noOracle: Map[String, String] = Map(
-    // approximate sketches (SURVEY.md §7.4 approximate-output carve-out)
-    "agg_distinct_users_approx" -> "HLL estimates are engine-specific; ±5% envelope in OperatorSpec",
-    "table_profile_approx" -> "HLL NDV estimates are engine-specific; table_profile_lineitem is the oracled exact twin",
-    "value_quantiles_sketch" -> "GK sketch estimates are engine-specific",
-    // learned or iterative kernels
-    "bpe_train_merges" -> "the greedy left-to-right merge fold is not one DuckDB statement; BpeSpec checks it against a sequential BPE",
-    "bpe_encode_docs" -> "encodes with the engine-trained merge table, which is not SQL-expressible",
-    "cos_topk_ivf_kmeans" -> "the quantizer is learned (GMM over the coreset), not SQL-expressible",
-    "cos_topk_rplsh" -> "hyperplane draws are seeded-hash, not SQL-expressible",
-    "cos_topk_pq" -> "PQ codebook training (farthest-first kernel) is not SQL-expressible; recall vs exact pinned in PipelineOpsSpec",
-    "kmeans_lloyd" -> "the iterative Lloyd fixpoint (GMM-seeded) is not SQL-expressible; invariants in PipelineOpsSpec",
-    // diversity core (SURVEY.md §2.2-W): property-tested
-    "gmm_diverse_k32" -> "GMM selection is not SQL-expressible",
-    "local_search_k32" -> "local-search selection is not SQL-expressible",
-    "matching_k32" -> "matching selection is not SQL-expressible",
-    "remote_edge_div" -> "objectives of a GMM selection, which is not SQL-expressible",
-    "remote_clique_div" -> "objective of a heuristic selection, which is not SQL-expressible",
-    "remote_star_div" -> "objective of a GMM selection, which is not SQL-expressible",
-    "remote_tree_div" -> "objective of a GMM selection, which is not SQL-expressible",
-    "remote_bipartition_cycle_div" -> "objectives of a GMM selection, which is not SQL-expressible",
-    "coreset_exec_k64" -> "the coreset kernel is not SQL-expressible; CoresetPlanSpec asserts plan node ≡ mapPartitions output",
-    "coreset_stream" -> "the streaming-coreset kernel is not SQL-expressible",
-    "diverse_by_label" -> "per-label streaming-coreset kernels are not SQL-expressible",
-    "diverse_docs_k16" -> "Jaccard GMM document selection is not SQL-expressible",
-    "curate_corpus_k16" -> "ends in a diversity selection, which is not SQL-expressible",
-    "stream_coreset_keys" -> "per-key doubling-coreset state is not SQL-expressible",
-    "stream_coreset_tws" -> "the stream_coreset_keys operator on the transformWithState API (RocksDB state)"
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** DuckDB SQL computing the same rows from the same parquet tables.
     *
     * Output-type protocol (binding; full text in COVERAGE.md header):
     * every integer aggregate reaching an output list is wrapped
@@ -394,6 +32,37 @@ object SparkEntry {
     * incidents). tools/local_check.py rejects violations by comparing
     * oracle column types against the Spark parquet footer.
     */
+  final case class Oracle(sql: String) extends Check
+
+  /** No SQL oracle, for the `reason` given; Verify output for the key is
+    * checked for rows only.
+    */
+  final case class NoOracle(reason: String) extends Check
+
+  /** A key's DataFrame builder, called with the session and the fixture
+    * directory, and how its output is checked.
+    */
+  final case class Query(build: (SparkSession, String) => DataFrame, check: Check)
+
+  /** `entries` as a map. A key repeated in a `Map(...)` literal silently
+    * drops an entry; here it fails at startup.
+    */
+  private[graft] def registry(entries: (String, Query)*): Map[String, Query] = {
+    val repeated = entries.groupBy(_._1).collect { case (k, es) if es.size > 1 => k }
+    require(repeated.isEmpty, s"repeated query keys: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
+  /** The entries of [[queries]] named in `names` (all of them when `names`
+    * is empty), in [[queries]] order. Throws IllegalArgumentException
+    * listing every name that is not a key.
+    */
+  def select(names: Set[String]): Seq[(String, Query)] = {
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.toSeq.filter { case (k, _) => names.isEmpty || names(k) }
+  }
+
   /** DuckDB-dialect 16-char sign signature of embedding dims
     * [off+1, off+16] — the oracle twin of VectorOps.signSig.
     */
@@ -401,54 +70,147 @@ object SparkEntry {
     (1 to 16).map(j => s"(CASE WHEN embedding[${off + j}] > 0 THEN '1' ELSE '0' END)")
       .mkString(" || ")
 
-  def oracleSql: Map[String, String] = Map(
-    "scan_project_filter" ->
+  // Oracle texts shared by several keys; declared before `queries`, which
+  // reads them when the object initializes.
+
+  /** The oracle of q1_pricing_summary, sql_interface_q1. */
+  private val q1PricingSummarySql =
+    """SELECT l_returnflag, l_linestatus,
+      |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
+      |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
+      |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
+      |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_charge_cents,
+      |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty_cents,
+      |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_price_cents,
+      |  CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_disc_cents,
+      |  CAST(count(*) AS BIGINT) AS count_order
+      |FROM lineitem
+      |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
+      |GROUP BY l_returnflag, l_linestatus
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin
+
+  /** The oracle of join_nation_revenue, ivm_join_view. */
+  private val joinNationRevenueSql =
+    """SELECT n_name,
+      |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
+      |  CAST(count(*) AS BIGINT) AS n_items
+      |FROM lineitem
+      |JOIN supplier ON l_suppkey = s_suppkey
+      |JOIN nation ON s_nationkey = n_nationkey
+      |GROUP BY n_name
+      |ORDER BY n_name""".stripMargin
+
+  /** The oracle of zorder_events_box, hilbert_events_box. */
+  private val eventsBoxSql =
+    """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+      |s AS (SELECT min(user_id) AS umin, max(user_id) - min(user_id) + 1 AS uspan,
+      |    min(ts_us) AS tmn, max(ts_us) - min(ts_us) + 1 AS tspan FROM e)
+      |SELECT CAST(count(*) AS BIGINT) AS n,
+      |  CAST(sum(cents) AS BIGINT) AS sum_cents,
+      |  CAST(min(event_id) AS BIGINT) AS min_eid,
+      |  CAST(max(event_id) AS BIGINT) AS max_eid
+      |FROM e, s
+      |WHERE user_id >= umin + uspan // 4 AND user_id < umin + uspan // 2
+      |  AND ts_us >= tmn + tspan // 4 AND ts_us < tmn + tspan // 2""".stripMargin
+
+  /** The oracle of jsonl_roundtrip_events, xml_roundtrip_events, csv_roundtrip_events, orc_roundtrip_events. */
+  private val eventsRoundtripSql =
+    """WITH e AS (SELECT event_id, user_id, event_type,
+      |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
+      |SELECT event_type,
+      |  CAST(count(*) AS BIGINT) AS n,
+      |  CAST(sum(cents) AS BIGINT) AS sum_cents,
+      |  CAST(min(event_id) AS BIGINT) AS min_event,
+      |  CAST(max(event_id) AS BIGINT) AS max_event
+      |FROM e
+      |GROUP BY event_type
+      |ORDER BY event_type""".stripMargin
+
+  /** The oracle of calendar_months, recursive_month_spine. */
+  private val monthSpineSql =
+    """WITH pm AS (SELECT strftime(o_orderdate, '%Y-%m') AS ym,
+      |    CAST(count(*) AS BIGINT) AS n_orders
+      |  FROM orders GROUP BY 1),
+      |spine AS (SELECT strftime(m, '%Y-%m') AS ym FROM (
+      |  SELECT unnest(generate_series(
+      |      date_trunc('month', CAST(min(o_orderdate) AS DATE)),
+      |      date_trunc('month', CAST(max(o_orderdate) AS DATE)),
+      |      INTERVAL 1 MONTH)) AS m
+      |  FROM orders))
+      |SELECT spine.ym, coalesce(pm.n_orders, 0) AS n_orders
+      |FROM spine LEFT JOIN pm ON spine.ym = pm.ym
+      |ORDER BY spine.ym""".stripMargin
+
+  /** The oracle of stream_tumbling_events, stream_file_source_events. */
+  private val hourlyTumblingSql =
+    """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
+      |SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS ws_us, event_type,
+      |  CAST(count(*) AS BIGINT) AS n,
+      |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+      |FROM e
+      |GROUP BY 1, 2
+      |ORDER BY ws_us, event_type""".stripMargin
+
+  /** The oracle of stream_append_finalized, stream_file_sink_events. */
+  private val finalizedHourlySql =
+    """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
+      |m AS (SELECT max(ts) AS mx FROM e),
+      |a AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS wb, event_type,
+      |    CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+      |  FROM e GROUP BY 1, 2)
+      |SELECT epoch_us(wb) AS ws_us, event_type, n, sum_cents
+      |FROM a, m
+      |WHERE wb + INTERVAL 1 HOUR <= mx - INTERVAL 1 HOUR
+      |ORDER BY ws_us, event_type""".stripMargin
+
+  /** The oracle of cos_topk, stream_ann_topk. */
+  private val cosTop5Sql =
+    """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb FROM embeddings WHERE vec_id < 50),
+      |t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS t_emb FROM embeddings),
+      |s AS (SELECT q_id, t_id, round(list_dot_product(q_emb, t_emb), 6) AS sim
+      |  FROM t CROSS JOIN q WHERE t_id <> q_id),
+      |r AS (SELECT q_id, t_id, sim,
+      |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, t_id) AS rnk FROM s)
+      |SELECT q_id, CAST(rnk AS BIGINT) AS "rank", t_id, sim
+      |FROM r WHERE rnk <= 5
+      |ORDER BY q_id, "rank"""".stripMargin
+
+  /** The oracle of dedup_incremental, dedup_bloom_prune. */
+  private val incrementalDedupSql =
+    """WITH inc AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 5 = 4),
+      |ex AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id % 5 <> 4),
+      |surv AS (SELECT doc_id, fp FROM inc WHERE fp NOT IN (SELECT fp FROM ex))
+      |SELECT CAST(min(doc_id) AS BIGINT) AS doc_id
+      |FROM surv
+      |GROUP BY fp
+      |ORDER BY doc_id""".stripMargin
+
+  /** The oracle of from_json_props, variant_props. */
+  private val jsonPropsKSql =
+    """SELECT event_type,
+      |  CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n_k,
+      |  CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
+      |  CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
+      |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
+      |FROM events
+      |GROUP BY event_type
+      |ORDER BY event_type""".stripMargin
+
+  /** Every declared key, with its builder and its check. */
+  val queries: Map[String, Query] = registry(
+    "scan_project_filter" -> Query(Relational.scanProjectFilter _, Oracle(
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem
         |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""".stripMargin)),
 
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_charge_cents,
-        |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_price_cents,
-        |  CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_disc_cents,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+    "q1_pricing_summary" -> Query(Relational.q1PricingSummary _, Oracle(q1PricingSummarySql)),
+    "sql_interface_q1" -> Query(Relational.sqlInterfaceQ1 _, Oracle(q1PricingSummarySql)),
+    "join_nation_revenue" -> Query(Relational.joinNationRevenue _, Oracle(joinNationRevenueSql)),
 
-    "sql_interface_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_charge_cents,
-        |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty_cents,
-        |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_price_cents,
-        |  CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_disc_cents,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "join_nation_revenue" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    "q3_top_orders" ->
+    "q3_top_orders" -> Query(Relational.q3TopOrders _, Oracle(
       """WITH g AS (
         |  SELECT l_orderkey, o_orderdate AS od, o_orderpriority,
         |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -462,9 +224,9 @@ object SparkEntry {
         |SELECT l_orderkey, strftime(od, '%Y-%m-%d') AS o_orderdate, o_orderpriority, revenue_cents
         |FROM g
         |ORDER BY revenue_cents DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin)),
 
-    "q5_local_supplier" ->
+    "q5_local_supplier" -> Query(Relational.q5LocalSupplier _, Oracle(
       """SELECT n_name,
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  CAST(count(*) AS BIGINT) AS n_items
@@ -478,9 +240,9 @@ object SparkEntry {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY revenue_cents DESC, n_name""".stripMargin,
+        |ORDER BY revenue_cents DESC, n_name""".stripMargin)),
 
-    "k_anonymity_customers" ->
+    "k_anonymity_customers" -> Query(Relational.kAnonymityCustomers _, Oracle(
       """WITH cls AS (
         |  SELECT c_mktsegment, c_nationkey, count(*) AS n
         |  FROM customer GROUP BY 1, 2)
@@ -490,9 +252,9 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
         |  CAST(min(n) AS BIGINT) AS min_class_size
         |FROM cls GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin)),
 
-    "l_diversity_customers" ->
+    "l_diversity_customers" -> Query(Relational.lDiversityCustomers _, Oracle(
       """WITH cls AS (
         |  SELECT c_mktsegment, c_nationkey,
         |    CAST(count(DISTINCT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) // 100000)
@@ -505,9 +267,9 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN ldiv < 3 THEN n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
         |  CAST(min(ldiv) AS BIGINT) AS min_diversity
         |FROM cls GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin)),
 
-    "table_profile_lineitem" ->
+    "table_profile_lineitem" -> Query(Relational.tableProfileLineitem _, Oracle(
       """SELECT * FROM (
         |  SELECT 'l_orderkey' AS column_name, CAST(count(l_orderkey) AS BIGINT) AS n_nonnull,
         |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS ndv,
@@ -538,9 +300,9 @@ object SparkEntry {
         |  SELECT 'l_shipdate', CAST(count(l_shipdate) AS BIGINT), CAST(count(DISTINCT l_shipdate) AS BIGINT),
         |    strftime(min(l_shipdate), '%Y-%m-%d %H:%M:%S'),
         |    strftime(max(l_shipdate), '%Y-%m-%d %H:%M:%S') FROM lineitem)
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin)),
 
-    "source_overlap_matrix" ->
+    "source_overlap_matrix" -> Query(TextOps.sourceOverlapMatrix _, Oracle(
       """WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |shl AS (SELECT DISTINCT source, shingle
@@ -550,9 +312,9 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_shared_shingles
         |FROM shl a JOIN shl b ON a.shingle = b.shingle AND a.source < b.source
         |GROUP BY 1, 2
-        |ORDER BY source1, source2""".stripMargin,
+        |ORDER BY source1, source2""".stripMargin)),
 
-    "doc_hop_distance" ->
+    "doc_hop_distance" -> Query(GraphOps.docHopDistance _, Oracle(
       """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
         |e0 AS (
         |  SELECT doc_id AS src, CAST(n_chars % (SELECT n FROM nn) AS BIGINT) AS dst FROM documents
@@ -568,9 +330,9 @@ object SparkEntry {
         |  WHERE walk.depth < 6)
         |SELECT node, CAST(min(depth) AS BIGINT) AS depth
         |FROM walk GROUP BY node
-        |ORDER BY node""".stripMargin,
+        |ORDER BY node""".stripMargin)),
 
-    "stream_ewma_user" ->
+    "stream_ewma_user" -> Query(StreamingEntry.streamEwmaUser _, Oracle(
       """WITH RECURSIVE sl AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |e AS (
         |  SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
@@ -585,9 +347,9 @@ object SparkEntry {
         |  CAST(max(rn) AS BIGINT) AS n_events,
         |  CAST(arg_max(s, rn) AS BIGINT) AS ewma_cents
         |FROM r GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "q14_promo_share" ->
+    "q14_promo_share" -> Query(Relational.q14PromoShare _, Oracle(
       """SELECT
         |  CAST(sum(CASE WHEN p_type = 'PROMO'
         |    THEN CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)
@@ -600,9 +362,9 @@ object SparkEntry {
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin,
+        |  AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""".stripMargin)),
 
-    "ewma_user_value" ->
+    "ewma_user_value" -> Query(EventOps.ewmaUserValue _, Oracle(
       """WITH RECURSIVE e AS (
         |  SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
         |    row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS rn
@@ -616,9 +378,9 @@ object SparkEntry {
         |  CAST(max(rn) AS BIGINT) AS n_events,
         |  CAST(arg_max(s, rn) AS BIGINT) AS ewma_cents
         |FROM r GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "drift_tv_distance" ->
+    "drift_tv_distance" -> Query(EventOps.driftTvDistance _, Oracle(
       """WITH counts AS (
         |  SELECT CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS week,
         |    event_type, count(*) AS n
@@ -635,9 +397,9 @@ object SparkEntry {
         |SELECT week,
         |  CAST(num AS DOUBLE) / (2 * CAST(total AS DOUBLE) * CAST(total_prev AS DOUBLE)) AS tv_vs_prev,
         |  CAST(total AS BIGINT) AS n_events
-        |FROM j ORDER BY week""".stripMargin,
+        |FROM j ORDER BY week""".stripMargin)),
 
-    "image_color_near_dup" ->
+    "image_color_near_dup" -> Query(MultimodalOps.imageColorNearDup _, Oracle(
       """WITH img AS (SELECT doc_id, CAST((doc_id * 7) % 256 AS BIGINT) AS r_int,
         |    CAST(floor(((doc_id * 7) % 256) / 8) AS BIGINT) AS bucket
         |  FROM documents WHERE doc_id % 3 = 0)
@@ -645,13 +407,13 @@ object SparkEntry {
         |  a.r_int - b.r_int AS dr
         |FROM img a JOIN img b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
         |  AND abs(a.r_int - b.r_int) <= 4
-        |ORDER BY doc1, doc2""".stripMargin,
+        |ORDER BY doc1, doc2""".stripMargin)),
 
     // aHash near-dup: the oracle re-derives every PIXEL of the fixture
     // images from the md5 closed form (the engine round-trips the same
     // pixels through real PNG encode/decode) and runs the same 4×16-bit
     // band LSH + hamming ≤ 8 verification.
-    "image_ahash_near_dup" ->
+    "image_ahash_near_dup" -> Query(MultimodalOps.imageAhashNearDup _, Oracle(
       """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_img
         |           FROM documents WHERE doc_id % 3 = 0),
         |img AS (SELECT doc_id,
@@ -684,18 +446,18 @@ object SparkEntry {
         |  AND (a.b0 = b.b0 OR a.b1 = b.b1 OR a.b2 = b.b2 OR a.b3 = b.b3)
         |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1)) +
         |      bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 8
-        |ORDER BY doc1, doc2""".stripMargin,
+        |ORDER BY doc1, doc2""".stripMargin)),
 
-    "q4_priority_exists" ->
+    "q4_priority_exists" -> Query(Relational.q4PriorityExists _, Oracle(
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
         |FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 80 DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "q6_forecast_revenue" ->
+    "q6_forecast_revenue" -> Query(Relational.q6ForecastRevenue _, Oracle(
       """SELECT
         |  CAST(sum(CAST(floor(l_extendedprice * l_discount * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  CAST(count(*) AS BIGINT) AS n_items
@@ -703,9 +465,9 @@ object SparkEntry {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin)),
 
-    "q7_volume_shipping" ->
+    "q7_volume_shipping" -> Query(Relational.q7VolumeShipping _, Oracle(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
@@ -720,9 +482,9 @@ object SparkEntry {
         |  AND n2.n_name IN ('NATION_1', 'NATION_2')
         |  AND n1.n_name <> n2.n_name
         |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
 
-    "q10_returned_items" ->
+    "q10_returned_items" -> Query(Relational.q10ReturnedItems _, Oracle(
       """SELECT c_custkey, c_name, n_name,
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  CAST(count(*) AS BIGINT) AS n_items
@@ -735,9 +497,9 @@ object SparkEntry {
         |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue_cents DESC, c_custkey
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "q18_large_orders" ->
+    "q18_large_orders" -> Query(Relational.q18LargeOrders _, Oracle(
       """WITH big AS (
         |  SELECT l_orderkey,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_cents
@@ -750,9 +512,9 @@ object SparkEntry {
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |ORDER BY sum_qty_cents DESC, o_orderkey
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "q19_disjunctive" ->
+    "q19_disjunctive" -> Query(Relational.q19Disjunctive _, Oracle(
       """SELECT
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  CAST(count(*) AS BIGINT) AS n_items
@@ -760,9 +522,9 @@ object SparkEntry {
         |JOIN part ON l_partkey = p_partkey
         |WHERE (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
         |   OR (p_brand = 'Brand#7' AND p_size BETWEEN 5 AND 25 AND l_quantity BETWEEN 10 AND 30)
-        |   OR (p_brand = 'Brand#12' AND p_size BETWEEN 10 AND 40 AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
+        |   OR (p_brand = 'Brand#12' AND p_size BETWEEN 10 AND 40 AND l_quantity BETWEEN 20 AND 40)""".stripMargin)),
 
-    "q15_top_supplier" ->
+    "q15_top_supplier" -> Query(Relational.q15TopSupplier _, Oracle(
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -773,12 +535,12 @@ object SparkEntry {
         |SELECT s_suppkey, s_name, revenue_cents
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE revenue_cents = (SELECT max(revenue_cents) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin)),
 
     // TPC-H completion set: every oracle re-derives partsupp with the SAME
     // integer-arithmetic CTE the engine uses (TpchOps.partsupp), so the
     // derivation itself sits under the cross-engine hash.
-    "q2_min_cost_supplier" ->
+    "q2_min_cost_supplier" -> Query(TpchOps.q2MinCostSupplier _, Oracle(
       """WITH partsupp AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         CAST((l_partkey * 7 + l_suppkey * 3) % 90000 + 100 AS BIGINT) AS ps_supplycost_cents,
@@ -799,9 +561,9 @@ object SparkEntry {
         |  JOIN region r2 ON n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE'
         |  WHERE ps2.ps_partkey = ps.ps_partkey)
         |ORDER BY s_acctbal_cents DESC, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "q8_market_share" ->
+    "q8_market_share" -> Query(TpchOps.q8MarketShare _, Oracle(
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(sum(CASE WHEN sn.n_name = 'NATION_7' THEN vol_cents ELSE 0 END) AS DOUBLE)
         |    / CAST(sum(vol_cents) AS DOUBLE) AS mkt_share
@@ -818,9 +580,9 @@ object SparkEntry {
         |JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'ASIA'
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "q9_product_profit" ->
+    "q9_product_profit" -> Query(TpchOps.q9ProductProfit _, Oracle(
       """WITH partsupp AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         CAST((l_partkey * 7 + l_suppkey * 3) % 90000 + 100 AS BIGINT) AS ps_supplycost_cents,
@@ -835,9 +597,9 @@ object SparkEntry {
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN partsupp ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
         |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY n_name, 2 ORDER BY n_name, o_year DESC""".stripMargin,
+        |GROUP BY n_name, 2 ORDER BY n_name, o_year DESC""".stripMargin)),
 
-    "q11_important_stock" ->
+    "q11_important_stock" -> Query(TpchOps.q11ImportantStock _, Oracle(
       """WITH partsupp AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         CAST((l_partkey * 7 + l_suppkey * 3) % 90000 + 100 AS BIGINT) AS ps_supplycost_cents,
@@ -852,26 +614,26 @@ object SparkEntry {
         |SELECT ps_partkey, value_cents
         |FROM pp
         |WHERE value_cents * 1000 > (SELECT sum(value_cents) FROM pp)
-        |ORDER BY value_cents DESC, ps_partkey""".stripMargin,
+        |ORDER BY value_cents DESC, ps_partkey""".stripMargin)),
 
-    "q12_late_priority" ->
+    "q12_late_priority" -> Query(TpchOps.q12LatePriority _, Oracle(
       """SELECT
         |  CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY THEN 'LATE' ELSE 'ONTIME' END AS ship_bucket,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "q13_customer_distribution" ->
+    "q13_customer_distribution" -> Query(TpchOps.q13CustomerDistribution _, Oracle(
       """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         |FROM (
         |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
         |  GROUP BY c_custkey) co
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
 
-    "q16_supplier_counts" ->
+    "q16_supplier_counts" -> Query(TpchOps.q16SupplierCounts _, Oracle(
       """WITH partsupp AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         CAST((l_partkey * 7 + l_suppkey * 3) % 90000 + 100 AS BIGINT) AS ps_supplycost_cents,
@@ -885,9 +647,9 @@ object SparkEntry {
         |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
         |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
 
-    "q17_small_qty_revenue" ->
+    "q17_small_qty_revenue" -> Query(TpchOps.q17SmallQtyRevenue _, Oracle(
       """WITH pq AS (
         |  SELECT l_partkey AS a_partkey,
         |         sum(CAST(l_quantity AS BIGINT)) AS sum_qty,
@@ -899,9 +661,9 @@ object SparkEntry {
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#3' AND p_type = 'SMALL'
         |JOIN pq ON a_partkey = l_partkey
-        |WHERE CAST(l_quantity AS BIGINT) * 5 * n_li < sum_qty""".stripMargin,
+        |WHERE CAST(l_quantity AS BIGINT) * 5 * n_li < sum_qty""".stripMargin)),
 
-    "q20_excess_suppliers" ->
+    "q20_excess_suppliers" -> Query(TpchOps.q20ExcessSuppliers _, Oracle(
       """WITH partsupp AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         CAST((l_partkey * 7 + l_suppkey * 3) % 90000 + 100 AS BIGINT) AS ps_supplycost_cents,
@@ -922,9 +684,9 @@ object SparkEntry {
         |  JOIN part ON p_partkey = ps_partkey AND p_name LIKE 'small%'
         |  JOIN shipped ON sh_partkey = ps_partkey AND sh_suppkey = ps_suppkey
         |  WHERE ps_availqty * 2 > sh_qty)
-        |ORDER BY s_name, s_suppkey""".stripMargin,
+        |ORDER BY s_name, s_suppkey""".stripMargin)),
 
-    "q21_waiting_supplier" ->
+    "q21_waiting_supplier" -> Query(TpchOps.q21WaitingSupplier _, Oracle(
       """WITH lo AS (
         |  SELECT l_orderkey, l_suppkey,
         |         (l_shipdate > o_orderdate + INTERVAL 90 DAY) AS late
@@ -939,9 +701,9 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM lo l3
         |                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.late)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)),
 
-    "q22_dormant_customers" ->
+    "q22_dormant_customers" -> Query(TpchOps.q22DormantCustomers _, Oracle(
       """SELECT CAST(c_nationkey AS BIGINT) AS cntry, CAST(count(*) AS BIGINT) AS numcust,
         |       CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS BIGINT) AS totacctbal_cents
         |FROM customer
@@ -952,45 +714,37 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate >= TIMESTAMP '2000-08-01 00:00:00')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "ivm_join_view" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
+    "ivm_join_view" -> Query(Relational.ivmJoinView _, Oracle(joinNationRevenueSql)),
 
-    "semi_anti_customers" ->
+    "semi_anti_customers" -> Query(Relational.semiAntiCustomers _, Oracle(
       """SELECT
         |  (SELECT CAST(count(*) AS BIGINT) FROM customer
         |   WHERE c_custkey IN (SELECT o_custkey FROM orders)) AS n_with,
         |  (SELECT CAST(count(*) AS BIGINT) FROM customer
-        |   WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)) AS n_without""".stripMargin,
+        |   WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)) AS n_without""".stripMargin)),
 
-    "partitioned_events_purchases" ->
+    "partitioned_events_purchases" -> Query(EventOps.partitionedEventsPurchases _, Oracle(
       """SELECT user_id,
         |  CAST(count(*) AS BIGINT) AS n_purchases,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS spend_cents
         |FROM events
         |WHERE event_type = 'purchase'
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // DPP changes partitions OPENED, never answers: the oracle inlines the
     // dim's category rule over the raw table.
-    "dpp_events_join" ->
+    "dpp_events_join" -> Query(EventOps.dppEventsJoin _, Oracle(
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM events
         |WHERE event_type IN ('signup', 'purchase')
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "funnel_conversion" ->
+    "funnel_conversion" -> Query(EventOps.funnelConversion _, Oracle(
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
         |s AS (SELECT user_id, min(ts_us) AS s_ts FROM e WHERE event_type = 'signup' GROUP BY user_id),
         |v AS (SELECT e.user_id, min(e.ts_us) AS v_ts FROM e JOIN s ON e.user_id = s.user_id
@@ -1000,11 +754,11 @@ object SparkEntry {
         |SELECT '1_signup' AS step, CAST(count(*) AS BIGINT) AS n_users FROM s
         |UNION ALL SELECT '2_view_after_signup', CAST(count(*) AS BIGINT) FROM v
         |UNION ALL SELECT '3_purchase_after_view', CAST(count(*) AS BIGINT) FROM p
-        |ORDER BY step""".stripMargin,
+        |ORDER BY step""".stripMargin)),
 
     // The split plan is definitionally equal to the plain left join —
     // the oracle IS the plain left join.
-    "null_skew_join" ->
+    "null_skew_join" -> Query(EventOps.nullSkewJoin _, Oracle(
       """WITH e AS (SELECT CASE WHEN event_type = 'error' THEN NULL ELSE user_id END AS k,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
         |  FROM events)
@@ -1013,29 +767,29 @@ object SparkEntry {
         |  CAST(sum(c) AS BIGINT) AS sum_cents
         |FROM e LEFT JOIN customer ON e.k = customer.c_custkey
         |GROUP BY 1
-        |ORDER BY nationkey""".stripMargin,
+        |ORDER BY nationkey""".stripMargin)),
 
-    "stable_row_ids" ->
+    "stable_row_ids" -> Query(Relational.stableRowIds _, Oracle(
       """SELECT doc_id,
         |  CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS row_id
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // Ties at a bucket boundary carry equal l_quantity, so the per-bucket
     // aggregate is invariant to which side the engines put them on.
-    "equi_depth_buckets" ->
+    "equi_depth_buckets" -> Query(Relational.equiDepthBuckets _, Oracle(
       """WITH r AS (SELECT l_quantity,
         |    ntile(4) OVER (ORDER BY l_quantity, l_orderkey, l_linenumber) AS b
         |  FROM lineitem)
         |SELECT CAST(b AS BIGINT) AS bucket, CAST(count(*) AS BIGINT) AS n,
         |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty
         |FROM r GROUP BY 1
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin)),
 
     // Same whitespace tokenization as text_tokens; DF band [2, 80% of
     // docs] on both sides; pairs are ordered (t1 < t2) over per-doc
     // DISTINCT tokens.
-    "token_cooccurrence" ->
+    "token_cooccurrence" -> Query(TextOps.tokenCooccurrence _, Oracle(
       """WITH tk0 AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |tk AS (SELECT DISTINCT doc_id, tok FROM tk0 WHERE length(tok) > 0),
         |df AS (SELECT tok, count(*) AS df FROM tk GROUP BY 1),
@@ -1047,9 +801,9 @@ object SparkEntry {
         |SELECT t1, t2, CAST(count(*) AS BIGINT) AS n_docs
         |FROM p GROUP BY 1, 2 HAVING count(*) >= 2
         |ORDER BY n_docs DESC, t1, t2
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "fact_scd2_join" ->
+    "fact_scd2_join" -> Query(EventOps.factScd2Join _, Oracle(
       """WITH x AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us, event_id FROM events),
         |c AS (SELECT *, lag(state) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM x),
         |iv AS (SELECT user_id AS i_user, state, ts_us AS valid_from_us,
@@ -1061,11 +815,11 @@ object SparkEntry {
         |  AND x.ts_us >= iv.valid_from_us
         |  AND (iv.valid_to_us = -1 OR x.ts_us < iv.valid_to_us)
         |GROUP BY iv.state
-        |ORDER BY iv.state""".stripMargin,
+        |ORDER BY iv.state""".stripMargin)),
 
     // Gram HASH on the engine side vs gram TEXT here: same counts modulo
     // 64-bit collisions (the contamination_check convention).
-    "dup_span_fraction" ->
+    "dup_span_fraction" -> Query(TextOps.dupSpanFraction _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 8),
         |g AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 7),
@@ -1078,9 +832,9 @@ object SparkEntry {
         |    / CAST(count(*) AS DOUBLE) AS dup_fraction
         |FROM g LEFT JOIN dup d ON g.gram = d.gram
         |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "dq_constraint_report" ->
+    "dq_constraint_report" -> Query(Relational.dqConstraintReport _, Oracle(
       """SELECT 'discount_policy_le_007' AS check_name,
         |  CAST((SELECT count(*) FROM lineitem) AS BIGINT) AS n_checked,
         |  CAST((SELECT count(*) FROM lineitem WHERE l_discount > 0.07) AS BIGINT) AS n_violations
@@ -1100,10 +854,10 @@ object SparkEntry {
         |  (SELECT count(*) FROM lineitem),
         |  (SELECT count(*) FROM lineitem l JOIN orders o
         |    ON l.l_orderkey = o.o_orderkey WHERE l.l_shipdate < o.o_orderdate)
-        |ORDER BY check_name""".stripMargin,
+        |ORDER BY check_name""".stripMargin)),
 
     // RANGE frame on the integer day — calendar gaps handled exactly.
-    "rolling_user_features" ->
+    "rolling_user_features" -> Query(EventOps.rollingUserFeatures _, Oracle(
       """WITH d AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    CAST(count(*) AS BIGINT) AS n_day,
         |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents_day
@@ -1114,14 +868,14 @@ object SparkEntry {
         |  CAST(sum(cents_day) OVER (PARTITION BY user_id ORDER BY day
         |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS cents_7d
         |FROM d
-        |ORDER BY user_id, day""".stripMargin,
+        |ORDER BY user_id, day""".stripMargin)),
 
     // The binned plan is provably the plain band join — the oracle IS the
     // plain band (theta) join.
     // Week-over-week p50/p90 drift per type: exact interpolated
     // percentiles over cents (quantile_cont ≡ percentile), deltas one
     // IEEE subtraction each.
-    "quantile_drift_weekly" ->
+    "quantile_drift_weekly" -> Query(EventOps.quantileDriftWeekly _, Oracle(
       """WITH e AS (
         |  SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
         |         epoch_us(ts) // 86400000000 AS d
@@ -1136,11 +890,11 @@ object SparkEntry {
         |       a.p90, a.p90 - b.p90 AS d_p90
         |FROM wk a JOIN wk b
         |  ON a.event_type = b.event_type AND a.week = b.week + 1
-        |ORDER BY a.event_type, a.week""".stripMargin,
+        |ORDER BY a.event_type, a.week""".stripMargin)),
 
     // Out-of-fold target encoding: complement identity (S_cat − S_fold) /
     // (N_cat − N_fold) — one aggregate + window, one class-2 division.
-    "target_encode_oof" ->
+    "target_encode_oof" -> Query(EventOps.targetEncodeOof _, Oracle(
       """WITH per AS (
         |  SELECT event_type, event_id % 5 AS fold,
         |    CAST(count(*) AS BIGINT) AS n_fold,
@@ -1153,12 +907,12 @@ object SparkEntry {
         |       / CAST(CAST(sum(n_fold) OVER (PARTITION BY event_type) AS BIGINT) - n_fold
         |           AS DOUBLE) END AS enc_cents
         |FROM per
-        |ORDER BY event_type, fold""".stripMargin,
+        |ORDER BY event_type, fold""".stripMargin)),
 
     // Poisson bootstrap: md5-derived integer inverse-CDF weights against
     // precomputed thresholds (no exp() at query time); replica means are
     // class-2 divisions; CI percentiles round(·,6) on both sides.
-    "bootstrap_ci_daily" ->
+    "bootstrap_ci_daily" -> Query(EventOps.bootstrapCiDaily _, Oracle(
       """WITH daily AS (
         |  SELECT event_type, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
         |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS x
@@ -1186,11 +940,11 @@ object SparkEntry {
         |  round(quantile_cont(mean_b, 0.975), 6) AS ci_hi
         |FROM rm JOIN base USING (event_type)
         |GROUP BY 1, 2, 3
-        |ORDER BY rm.event_type""".stripMargin,
+        |ORDER BY rm.event_type""".stripMargin)),
 
     // Fraction-free CUSUM: n·S_d = n·prefix − d·T stays in exact BIGINTs;
     // the surfaced statistic is its one class-2 division by n.
-    "cusum_changepoint" ->
+    "cusum_changepoint" -> Query(EventOps.cusumChangepoint _, Oracle(
       """WITH daily AS (
         |  SELECT event_type, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
         |         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS day_cents
@@ -1209,11 +963,11 @@ object SparkEntry {
         |  s_scaled AS peak_cusum_scaled,
         |  CAST(s_scaled AS DOUBLE) / CAST(n_days AS DOUBLE) AS peak_cusum_cents
         |FROM pick WHERE rk = 1
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
     // Fraction-free ACF: X_t = n·x_t − T clears the mean, the n² factors
     // cancel in r_k = num_k/den — exact BIGINTs, one division per lag.
-    "acf_daily_events" ->
+    "acf_daily_events" -> Query(EventOps.acfDailyEvents _, Oracle(
       """WITH daily AS (
         |  SELECT event_type, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
         |         CAST(count(*) AS BIGINT) AS x
@@ -1245,11 +999,11 @@ object SparkEntry {
         |  SELECT event_type, n_days, den, 2 AS lag, num2 AS num_scaled FROM agg
         |  UNION ALL
         |  SELECT event_type, n_days, den, 3 AS lag, num3 AS num_scaled FROM agg)
-        |ORDER BY event_type, lag""".stripMargin,
+        |ORDER BY event_type, lag""".stripMargin)),
 
     // Dedupe-first, then ≤7× fan-out against the distinct-day spine; the
     // trailing window COUNT(DISTINCT) no window function expresses.
-    "sliding_distinct_users" ->
+    "sliding_distinct_users" -> Query(EventOps.slidingDistinctUsers _, Oracle(
       """WITH du AS (
         |  SELECT DISTINCT event_type,
         |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d, user_id
@@ -1258,12 +1012,12 @@ object SparkEntry {
         |SELECT event_type, wday, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_7d
         |FROM du JOIN sp ON wday >= d AND wday <= d + 6
         |GROUP BY 1, 2
-        |ORDER BY event_type, wday""".stripMargin,
+        |ORDER BY event_type, wday""".stripMargin)),
 
     // Seasonal-mean backtest: profile = class-2 quotient; per-event abs
     // error quantized to micro BIGINT before summing, so MAE sits on the
     // hash with no summation-order exposure.
-    "seasonal_forecast_mae" ->
+    "seasonal_forecast_mae" -> Query(EventOps.seasonalForecastMae _, Oracle(
       """WITH e AS (
         |  SELECT event_type, epoch_us(ts) AS ts_us,
         |         CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
@@ -1284,24 +1038,24 @@ object SparkEntry {
         |SELECT event_type, CAST(count(*) AS BIGINT) AS n_test,
         |  CAST(sum(err_micro) AS BIGINT) AS sum_abs_err_micro,
         |  CAST(sum(err_micro) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mae_micro
-        |FROM test GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM test GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // The engine writes through the stats-collecting atomic sink, prunes
     // files on manifest min/max, then filters; the oracle aggregates the
     // SOURCE with the same predicate — pruning must drop no qualifying row.
-    "sink_stats_pruned_read" ->
+    "sink_stats_pruned_read" -> Query(EventOps.sinkStatsPrunedRead _, Oracle(
       """WITH b AS (SELECT count(*) // 4 AS lo, count(*) // 2 - 1 AS hi FROM events)
         |SELECT CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM events
-        |WHERE event_id BETWEEN (SELECT lo FROM b) AND (SELECT hi FROM b)""".stripMargin,
+        |WHERE event_id BETWEEN (SELECT lo FROM b) AND (SELECT hi FROM b)""".stripMargin)),
 
     // The NAIVE band join (no manual binning) — the engine side relies on
     // the BandJoinRewrite optimizer rule for the scalable plan; the hash
     // proves the rewritten plan computes the naive semantics.
-    "band_join_auto" ->
+    "band_join_auto" -> Query(EventOps.bandJoinAuto _, Oracle(
       """WITH p AS (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase'),
         |err AS (SELECT epoch_us(ts) AS err_ts FROM events WHERE event_type = 'error'),
         |per AS (SELECT p.event_id, CAST(count(*) AS BIGINT) AS n_errors
@@ -1309,9 +1063,9 @@ object SparkEntry {
         |  GROUP BY p.event_id)
         |SELECT n_errors, CAST(count(*) AS BIGINT) AS n_purchases
         |FROM per GROUP BY 1
-        |ORDER BY n_errors""".stripMargin,
+        |ORDER BY n_errors""".stripMargin)),
 
-    "band_join_binned" ->
+    "band_join_binned" -> Query(EventOps.bandJoinBinned _, Oracle(
       """WITH p AS (SELECT event_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase'),
         |err AS (SELECT epoch_us(ts) AS err_ts FROM events WHERE event_type = 'error'),
         |per AS (SELECT p.event_id, count(err.err_ts) AS n_errors
@@ -1321,37 +1075,37 @@ object SparkEntry {
         |SELECT CAST(n_errors AS BIGINT) AS n_errors,
         |  CAST(count(*) AS BIGINT) AS n_purchases
         |FROM per GROUP BY 1
-        |ORDER BY n_errors""".stripMargin,
+        |ORDER BY n_errors""".stripMargin)),
 
     // The merged read must NULL-fill v1 rows and lose nothing: the oracle
     // recomputes both slices from the source table.
-    "schema_evolution_merge" ->
+    "schema_evolution_merge" -> Query(EventOps.schemaEvolutionMerge _, Oracle(
       """SELECT CASE WHEN event_id % 2 = 0 THEN 'v1' ELSE 'v2' END AS schema_version,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN event_id % 2 = 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_channel
         |FROM events
         |GROUP BY 1
-        |ORDER BY schema_version""".stripMargin,
+        |ORDER BY schema_version""".stripMargin)),
 
     // Round-trip through the DSv2 atomic sink must deliver exactly the
     // source rows — the oracle reads the SOURCE, the engine the sink.
-    "atomic_sink_roundtrip" ->
+    "atomic_sink_roundtrip" -> Query(EventOps.atomicSinkRoundtrip _, Oracle(
       """SELECT CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
     // Streaming epochs through the DSv2 sink must deliver exactly the
     // slice — the oracle recomputes from the source.
-    "stream_atomic_sink" ->
+    "stream_atomic_sink" -> Query(StreamingEntry.streamAtomicSink _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin)),
 
-    "stream_sink_time_travel" ->
+    "stream_sink_time_travel" -> Query(StreamingEntry.streamSinkTimeTravel _, Oracle(
       """WITH e AS (SELECT event_id, value,
         |    row_number() OVER (ORDER BY event_id) AS rn
         |  FROM (SELECT * FROM events ORDER BY event_id LIMIT 5000)),
@@ -1364,9 +1118,9 @@ object SparkEntry {
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM b JOIN e ON e.rn <= b.lim
         |GROUP BY epoch_bound
-        |ORDER BY epoch_bound""".stripMargin,
+        |ORDER BY epoch_bound""".stripMargin)),
 
-    "stream_event_transitions" ->
+    "stream_event_transitions" -> Query(StreamingEntry.streamEventTransitions _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |l AS (SELECT user_id, event_type,
         |    lag(event_type) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_type
@@ -1376,11 +1130,11 @@ object SparkEntry {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM l WHERE prev_type IS NOT NULL
         |GROUP BY prev_type, event_type
-        |ORDER BY prev_type, event_type""".stripMargin,
+        |ORDER BY prev_type, event_type""".stripMargin)),
 
     // Continuous attribution == the batch window form over the slice in
     // event_id (ingestion) order; a dropped cross-batch touch mismatches.
-    "stream_attribution_tws" ->
+    "stream_attribution_tws" -> Query(StreamingEntry.streamAttributionTws _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |t AS (
         |  SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
@@ -1399,11 +1153,11 @@ object SparkEntry {
         |SELECT 'last_touch', coalesce(last_touch, 'none'),
         |  CAST(count(*) AS BIGINT), CAST(sum(c) AS BIGINT)
         |FROM p GROUP BY 2
-        |ORDER BY model, channel""".stripMargin,
+        |ORDER BY model, channel""".stripMargin)),
 
     // Continuous gaps-and-islands == the batch island grouping over the
     // slice; a lost cross-batch run carry would under-count longest_streak.
-    "stream_streaks_tws" ->
+    "stream_streaks_tws" -> Query(StreamingEntry.streamStreaksTws _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |d AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
         |      FROM e),
@@ -1417,13 +1171,13 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_islands,
         |  CAST(max(len) AS BIGINT) AS longest_streak
         |FROM s GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // Live one-sided CUSUM == the closed form of the max(0, ·) recurrence:
     // S_t = P_t − min(0, running-min of prefix sums P) — identical integer
     // arithmetic to the processor's fold, so the batch replay pins the
     // cross-batch S carry exactly.
-    "stream_cusum_tws" ->
+    "stream_cusum_tws" -> Query(StreamingEntry.streamCusumTws _, Oracle(
       """WITH e AS (
         |  SELECT user_id, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) - 2500 AS a
@@ -1449,12 +1203,12 @@ object SparkEntry {
         |  CAST(CASE WHEN s_t = 0 THEN 0 ELSE event_id END AS BIGINT)
         |    AS peak_event_id
         |FROM r WHERE rk = 1
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // Continuous top-k == the batch rank-limit window over the slice.
     // Deterministic streamed reservoir: bottom-8 by md5-hex priority per
     // user; the batch window over the slice must reproduce it exactly.
-    "stream_sample_users" ->
+    "stream_sample_users" -> Query(StreamingEntry.streamSampleUsers _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |p AS (SELECT user_id, event_id,
         |        substr(md5(CAST(event_id AS VARCHAR)), 1, 16) AS pri FROM e),
@@ -1467,9 +1221,9 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_sample,
         |  CAST(min(n) AS BIGINT) AS n_seen
         |FROM r WHERE rk <= 8
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    "stream_topk_tws" ->
+    "stream_topk_tws" -> Query(StreamingEntry.streamTopkTws _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |r AS (SELECT event_type, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents,
@@ -1478,12 +1232,12 @@ object SparkEntry {
         |  FROM e)
         |SELECT event_type, CAST(rn AS BIGINT) AS rnk, event_id, value_cents
         |FROM r WHERE rn <= 5
-        |ORDER BY event_type, rnk""".stripMargin,
+        |ORDER BY event_type, rnk""".stripMargin)),
 
     // observe() metrics per micro-batch: the harness chunks the 5000-event
     // slice into ⌈n/3⌉-sized batches, so the per-batch counts/sums are a
     // deterministic partition of the slice — recomputed here in plain SQL.
-    "stream_observe_metrics" ->
+    "stream_observe_metrics" -> Query(StreamingEntry.streamObserveMetrics _, Oracle(
       """WITH sl AS (SELECT event_id, value, event_type
         |            FROM events ORDER BY event_id LIMIT 5000),
         |cz AS (SELECT greatest((count(*) + 2) // 3, 1) AS sz FROM sl),
@@ -1494,12 +1248,12 @@ object SparkEntry {
         |  CAST(sum(c) AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase
         |FROM s GROUP BY 1
-        |ORDER BY batch_seq""".stripMargin,
+        |ORDER BY batch_seq""".stripMargin)),
 
     // Inverted index over the same tokenization + DF band as
     // token_cooccurrence; postings surfaced as a ','-joined sorted string
     // (a naked array sort-key crashes the driver's pandas lexsort, r9).
-    "posting_lists" ->
+    "posting_lists" -> Query(TextOps.postingLists _, Oracle(
       """WITH tk0 AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |tk AS (SELECT DISTINCT doc_id, tok FROM tk0 WHERE length(tok) > 0),
         |df AS (SELECT tok, count(*) AS df FROM tk GROUP BY 1),
@@ -1509,11 +1263,11 @@ object SparkEntry {
         |SELECT tok, CAST(count(*) AS BIGINT) AS df,
         |  string_agg(doc_id, ',' ORDER BY doc_id) AS postings_csv
         |FROM kept GROUP BY tok
-        |ORDER BY tok""".stripMargin,
+        |ORDER BY tok""".stripMargin)),
 
     // Deterministic πps sample: u is pure integer arithmetic, the
     // priority one exact-integer IEEE division — no rand(), no libm.
-    "weighted_sample_strata" ->
+    "weighted_sample_strata" -> Query(TextOps.weightedSampleStrata _, Oracle(
       """WITH w AS (SELECT lang, doc_id, n_chars,
         |    CAST((doc_id * 2654435761) % 1000003 + 1 AS DOUBLE)
         |      / CAST(n_chars AS DOUBLE) AS priority
@@ -1523,11 +1277,11 @@ object SparkEntry {
         |  FROM w)
         |SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id, n_chars
         |FROM r WHERE rk <= 20
-        |ORDER BY lang, rk""".stripMargin,
+        |ORDER BY lang, rk""".stripMargin)),
 
     // Planted PII mirrored exactly; DuckDB regexp_replace needs 'g' to
     // match Spark's replace-all default.
-    "pii_scrub_stats" ->
+    "pii_scrub_stats" -> Query(TextAnalysisOps.piiScrubStats _, Oracle(
       """WITH d AS (SELECT lang, text ||
         |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id || '@example.com' ELSE '' END ||
         |    CASE WHEN doc_id % 2 = 0 THEN ' call +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END AS aug
@@ -1545,11 +1299,11 @@ object SparkEntry {
         |  CAST(sum(len(aug) - len(clean)) AS BIGINT) AS chars_redacted
         |FROM s
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
     // Oracle = the rank-limit window form; the engine runs the mergeable
     // TopKAgg and must produce identical rows.
-    "group_topk_agg" ->
+    "group_topk_agg" -> Query(EventOps.groupTopkAgg _, Oracle(
       """WITH r AS (SELECT event_type, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents,
         |    row_number() OVER (PARTITION BY event_type
@@ -1557,9 +1311,9 @@ object SparkEntry {
         |  FROM events)
         |SELECT event_type, CAST(rn AS BIGINT) AS rnk, event_id, value_cents
         |FROM r WHERE rn <= 5
-        |ORDER BY event_type, rnk""".stripMargin,
+        |ORDER BY event_type, rnk""".stripMargin)),
 
-    "snapshot_diff" ->
+    "snapshot_diff" -> Query(EventOps.snapshotDiff _, Oracle(
       """WITH mx AS (SELECT max(epoch_us(ts)) AS m FROM events),
         |a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS old_n,
         |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS old_cents
@@ -1578,9 +1332,9 @@ object SparkEntry {
         |       ELSE 'update' END AS action,
         |  old_n, old_cents, new_n, new_cents
         |FROM a FULL OUTER JOIN b ON a.user_id = b.user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "interval_coverage" ->
+    "interval_coverage" -> Query(EventOps.intervalCoverage _, Oracle(
       """WITH e AS (SELECT user_id, epoch_us(ts) AS s,
         |    epoch_us(ts) + 1800000000 AS f, event_id FROM events),
         |w AS (SELECT *, max(f) OVER (PARTITION BY user_id ORDER BY s, event_id
@@ -1592,9 +1346,9 @@ object SparkEntry {
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands,
         |  CAST(sum(fin - st) AS BIGINT) AS covered_us
         |FROM g GROUP BY 1
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "stream_upsert_foreachbatch" ->
+    "stream_upsert_foreachbatch" -> Query(StreamingEntry.streamUpsertForeachBatch _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |x AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM e),
@@ -1604,76 +1358,31 @@ object SparkEntry {
         |SELECT user_id, CAST(n AS BIGINT) AS n_events, ts_us AS last_ts_us,
         |  event_id AS last_event_id, cents AS last_value_cents
         |FROM r WHERE rk = 1
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // Compaction changes bytes-per-file, never answers: the oracle is the
     // same exact-cents aggregate over the raw slice the fragments held.
-    "compact_small_files" ->
+    "compact_small_files" -> Query(EventOps.compactSmallFiles _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM e
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
     // Z-order layout: the staged clustering changes bytes READ, never the
     // answer — the oracle computes the identical middle-quarter box over
     // the raw table, deriving the same integer bounds from min/max.
-    "zorder_events_box" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-        |s AS (SELECT min(user_id) AS umin, max(user_id) - min(user_id) + 1 AS uspan,
-        |    min(ts_us) AS tmn, max(ts_us) - min(ts_us) + 1 AS tspan FROM e)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_eid,
-        |  CAST(max(event_id) AS BIGINT) AS max_eid
-        |FROM e, s
-        |WHERE user_id >= umin + uspan // 4 AND user_id < umin + uspan // 2
-        |  AND ts_us >= tmn + tspan // 4 AND ts_us < tmn + tspan // 2""".stripMargin,
-
-    "hilbert_events_box" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-        |s AS (SELECT min(user_id) AS umin, max(user_id) - min(user_id) + 1 AS uspan,
-        |    min(ts_us) AS tmn, max(ts_us) - min(ts_us) + 1 AS tspan FROM e)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_eid,
-        |  CAST(max(event_id) AS BIGINT) AS max_eid
-        |FROM e, s
-        |WHERE user_id >= umin + uspan // 4 AND user_id < umin + uspan // 2
-        |  AND ts_us >= tmn + tspan // 4 AND ts_us < tmn + tspan // 2""".stripMargin,
-
-    "jsonl_roundtrip_events" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_event,
-        |  CAST(max(event_id) AS BIGINT) AS max_event
-        |FROM e
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "xml_roundtrip_events" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_event,
-        |  CAST(max(event_id) AS BIGINT) AS max_event
-        |FROM e
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+    "zorder_events_box" -> Query(EventOps.zorderEventsBox _, Oracle(eventsBoxSql)),
+    "hilbert_events_box" -> Query(EventOps.hilbertEventsBox _, Oracle(eventsBoxSql)),
+    "jsonl_roundtrip_events" -> Query(EventOps.jsonlRoundtripEvents _, Oracle(eventsRoundtripSql)),
+    "xml_roundtrip_events" -> Query(EventOps.xmlRoundtripEvents _, Oracle(eventsRoundtripSql)),
 
     // Frame-sample plumbing for the codec-less modality: 4 evenly-spaced
     // byte windows per video doc; fixture content is ASCII text bytes, so
     // substr reproduces each window and md5 pins the exact boundaries.
-    "media_byte_windows" ->
+    "media_byte_windows" -> Query(MultimodalOps.mediaByteWindows _, Oracle(
       """WITH v AS (SELECT doc_id, text, length(text) AS len,
         |    greatest(length(text) // 4, 1) AS win
         |  FROM documents WHERE doc_id % 3 = 2),
@@ -1685,44 +1394,23 @@ object SparkEntry {
         |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
         |  CAST(length(piece) AS BIGINT) AS n_bytes, md5(piece) AS frame_md5
         |FROM s WHERE length(piece) > 0
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // binaryFile ingestion: file names carry the doc id, content decodes
     // through the real JDK codec — the oracle is the generator closed form.
-    "binary_files_meta" ->
+    "binary_files_meta" -> Query(MultimodalOps.binaryFilesMeta _, Oracle(
       """SELECT doc_id,
         |  CAST(8 + doc_id % 16 AS BIGINT) AS width,
         |  CAST(8 + doc_id % 12 AS BIGINT) AS height,
         |  CAST((doc_id * 7) % 256 AS DOUBLE) AS r_mean
         |FROM documents
         |WHERE doc_id % 3 = 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "csv_roundtrip_events" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_event,
-        |  CAST(max(event_id) AS BIGINT) AS max_event
-        |FROM e
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+    "csv_roundtrip_events" -> Query(EventOps.csvRoundtripEvents _, Oracle(eventsRoundtripSql)),
+    "orc_roundtrip_events" -> Query(EventOps.orcRoundtripEvents _, Oracle(eventsRoundtripSql)),
 
-    "orc_roundtrip_events" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(min(event_id) AS BIGINT) AS min_event,
-        |  CAST(max(event_id) AS BIGINT) AS max_event
-        |FROM e
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "outer_join_orders" ->
+    "outer_join_orders" -> Query(Relational.outerJoinOrders _, Oracle(
       """WITH c AS (SELECT c_custkey FROM customer WHERE c_acctbal >= 0),
         |o AS (SELECT o_custkey, count(*) AS n_orders,
         |    sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS spend_cents
@@ -1742,9 +1430,9 @@ object SparkEntry {
         |  CAST(sum(spend_cents) AS BIGINT) AS spend_cents
         |FROM j
         |GROUP BY category
-        |ORDER BY category""".stripMargin,
+        |ORDER BY category""".stripMargin)),
 
-    "left_outer_customers" ->
+    "left_outer_customers" -> Query(Relational.leftOuterCustomers _, Oracle(
       """WITH o AS (SELECT o_custkey, count(*) AS n_orders FROM orders
         |  WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey)
         |SELECT c_mktsegment,
@@ -1755,18 +1443,18 @@ object SparkEntry {
         |FROM customer c
         |LEFT OUTER JOIN o ON c.c_custkey = o.o_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin)),
 
-    "bucketed_join_orders" ->
+    "bucketed_join_orders" -> Query(Relational.bucketedJoinOrders _, Oracle(
       """SELECT o_orderpriority,
         |  CAST(count(*) AS BIGINT) AS n_items,
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "stats_broadcast_join" ->
+    "stats_broadcast_join" -> Query(Relational.statsBroadcastJoin _, Oracle(
       """SELECT p_brand,
         |  CAST(count(*) AS BIGINT) AS n_items,
         |  round(sum(l_quantity), 6) AS sum_qty
@@ -1774,9 +1462,9 @@ object SparkEntry {
         |JOIN lineitem ON p_partkey = l_partkey
         |WHERE p_size = 1
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
+        |ORDER BY p_brand""".stripMargin)),
 
-    "skew_join_zipf" ->
+    "skew_join_zipf" -> Query(EventOps.skewJoinZipf _, Oracle(
       """WITH e AS (SELECT event_type,
         |    CASE WHEN event_id % 10 < 9 THEN 0 ELSE event_id % 997 END AS k
         |  FROM events),
@@ -1786,9 +1474,9 @@ object SparkEntry {
         |  CAST(sum(k) AS BIGINT) AS sum_k
         |FROM e JOIN o USING (k)
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "cube_orders" ->
+    "cube_orders" -> Query(Relational.cubeOrders _, Oracle(
       """WITH r AS (
         |  SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
@@ -1798,9 +1486,9 @@ object SparkEntry {
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  CAST(n AS BIGINT) AS n, total_cents
         |FROM r
-        |ORDER BY status, priority""".stripMargin,
+        |ORDER BY status, priority""".stripMargin)),
 
-    "range_join_promo" ->
+    "range_join_promo" -> Query(Relational.rangeJoinPromo _, Oracle(
       """SELECT o_orderpriority,
         |  CAST(count(*) AS BIGINT) AS n_items,
         |  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -1809,9 +1497,9 @@ object SparkEntry {
         |  AND l_shipdate >= o_orderdate
         |  AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "asof_join_events" ->
+    "asof_join_events" -> Query(EventOps.asofJoinEvents _, Oracle(
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase'),
         |s AS (SELECT event_id AS s_event_id, user_id, epoch_us(ts) AS s_ts_us FROM events WHERE event_type = 'signup'),
         |j AS (SELECT p.event_id, p.ts_us, s.s_event_id, s.s_ts_us,
@@ -1820,9 +1508,9 @@ object SparkEntry {
         |  FROM p LEFT JOIN s ON p.user_id = s.user_id AND s.s_ts_us <= p.ts_us)
         |SELECT event_id, ts_us, s_event_id, s_ts_us
         |FROM j WHERE rn = 1
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "asof_join_tolerance" ->
+    "asof_join_tolerance" -> Query(EventOps.asofJoinTolerance _, Oracle(
       """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT event_id AS c_event_id, user_id, epoch_us(ts) AS c_ts_us FROM events WHERE event_type = 'click'),
         |j AS (SELECT p.event_id, p.ts_us, c.c_event_id, c.c_ts_us,
@@ -1832,9 +1520,9 @@ object SparkEntry {
         |    AND c.c_ts_us > p.ts_us AND c.c_ts_us <= p.ts_us + 3600000000)
         |SELECT event_id, ts_us, c_event_id, c_ts_us, c_ts_us - ts_us AS gap_us
         |FROM j WHERE rn = 1
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "event_transitions" ->
+    "event_transitions" -> Query(EventOps.eventTransitions _, Oracle(
       """WITH l AS (
         |  SELECT user_id, event_type,
         |    lag(event_type) OVER (PARTITION BY user_id
@@ -1845,9 +1533,9 @@ object SparkEntry {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM l WHERE prev_type IS NOT NULL
         |GROUP BY prev_type, event_type
-        |ORDER BY prev_type, event_type""".stripMargin,
+        |ORDER BY prev_type, event_type""".stripMargin)),
 
-    "retention_cohorts" ->
+    "retention_cohorts" -> Query(EventOps.retentionCohorts _, Oracle(
       """WITH cohort AS (
         |  SELECT user_id, min(CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)) AS cohort_day
         |  FROM events WHERE event_type = 'signup' GROUP BY user_id),
@@ -1859,9 +1547,9 @@ object SparkEntry {
         |  CAST(count(DISTINCT c.user_id) AS BIGINT) AS n_active_users
         |FROM cohort c JOIN active a ON c.user_id = a.user_id AND a.active_day >= c.cohort_day
         |GROUP BY 1, 2
-        |ORDER BY cohort_day, week_offset""".stripMargin,
+        |ORDER BY cohort_day, week_offset""".stripMargin)),
 
-    "skyline_parts" ->
+    "skyline_parts" -> Query(Relational.skylineParts _, Oracle(
       """WITH d AS (
         |  SELECT min(p_partkey) AS p_partkey, p_retailprice, p_size
         |  FROM part GROUP BY p_retailprice, p_size)
@@ -1871,26 +1559,26 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM d q
         |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
         |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        |ORDER BY p_retailprice, p_partkey""".stripMargin,
+        |ORDER BY p_retailprice, p_partkey""".stripMargin)),
 
-    "agg_distinct_users" ->
+    "agg_distinct_users" -> Query(Relational.aggDistinctUsers _, Oracle(
       """SELECT event_type,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
     // Bitmap exact distinct: the bitmap pipeline must reproduce the plain
     // COUNT(DISTINCT) exactly — that equivalence IS the check.
-    "bitmap_distinct_users" ->
+    "bitmap_distinct_users" -> Query(Relational.bitmapDistinctUsers _, Oracle(
       """SELECT event_type,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "rollup_orders" ->
+    "rollup_orders" -> Query(Relational.rollupOrders _, Oracle(
       """WITH r AS (
         |  SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
@@ -1900,9 +1588,9 @@ object SparkEntry {
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  CAST(n AS BIGINT) AS n, total_cents
         |FROM r
-        |ORDER BY status, priority""".stripMargin,
+        |ORDER BY status, priority""".stripMargin)),
 
-    "grouping_sets_lineitem" ->
+    "grouping_sets_lineitem" -> Query(Relational.groupingSetsLineitem _, Oracle(
       """WITH r AS (
         |  SELECT l_returnflag, l_linestatus, count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
         |  FROM lineitem
@@ -1911,9 +1599,9 @@ object SparkEntry {
         |  coalesce(l_linestatus, 'ALL') AS status,
         |  CAST(n AS BIGINT) AS n, sum_qty
         |FROM r
-        |ORDER BY flag, status""".stripMargin,
+        |ORDER BY flag, status""".stripMargin)),
 
-    "pivot_events" ->
+    "pivot_events" -> Query(Relational.pivotEvents _, Oracle(
       """SELECT CAST(extract(dow FROM ts) AS BIGINT) AS dow,
         |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
@@ -1922,9 +1610,9 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
         |FROM events
         |GROUP BY 1
-        |ORDER BY dow""".stripMargin,
+        |ORDER BY dow""".stripMargin)),
 
-    "percentiles_qty" ->
+    "percentiles_qty" -> Query(Relational.percentilesQty _, Oracle(
       """SELECT l_returnflag,
         |  round(quantile_cont(l_quantity, 0.5), 6) AS p50,
         |  round(quantile_cont(l_quantity, 0.9), 6) AS p90,
@@ -1932,9 +1620,9 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "stats_agg" ->
+    "stats_agg" -> Query(Relational.statsAgg _, Oracle(
       """SELECT l_returnflag,
         |  round(stddev_samp(l_quantity), 6) AS sd_qty,
         |  round(var_samp(l_quantity), 6) AS var_qty,
@@ -1942,9 +1630,9 @@ object SparkEntry {
         |  round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "subquery_above_avg" ->
+    "subquery_above_avg" -> Query(Relational.subqueryAboveAvg _, Oracle(
       """SELECT p_brand,
         |  CAST(count(*) AS BIGINT) AS n_above,
         |  CAST(max(p_size) AS BIGINT) AS max_size
@@ -1952,64 +1640,64 @@ object SparkEntry {
         |WHERE p_size > (SELECT avg(CAST(p2.p_size AS DOUBLE)) FROM part p2
         |                WHERE p2.p_brand = p.p_brand)
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
+        |ORDER BY p_brand""".stripMargin)),
 
     // Money: exact integer cents summed and surfaced as BIGINT — the r8/r9
     // driver runs proved any DECIMAL output column hashes differently
     // across the parquet/DuckDB boundary even when values agree, so the
     // declared surface stays integral; the DECIMAL widening lives in a
     // scalatest golden test instead.
-    "agg_decimal_money" ->
+    "agg_decimal_money" -> Query(Relational.aggDecimalMoney _, Oracle(
       """SELECT l_returnflag,
         |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  CAST(count(*) AS BIGINT) AS n_items
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "win_topk_parts" ->
+    "win_topk_parts" -> Query(EventOps.winTopkParts _, Oracle(
       """WITH r AS (
         |  SELECT p_brand, p_partkey, p_retailprice,
         |    row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rnk
         |  FROM part)
         |SELECT p_brand, CAST(rnk AS BIGINT) AS "rank", p_partkey, round(p_retailprice, 2) AS p_retailprice
         |FROM r WHERE rnk <= 3
-        |ORDER BY p_brand, "rank"""".stripMargin,
+        |ORDER BY p_brand, "rank"""".stripMargin)),
 
-    "win_running_user" ->
+    "win_running_user" -> Query(EventOps.winRunningUser _, Oracle(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
         |SELECT user_id, event_id, ts_us,
         |  CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_cents
         |FROM e
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
+        |ORDER BY user_id, ts_us, event_id""".stripMargin)),
 
     // z-score: μ exact int/int quotient, σ stddev_samp (class 3 → 6 dp).
-    "win_zscore_events" ->
+    "win_zscore_events" -> Query(EventOps.winZscoreEvents _, Oracle(
       """WITH e AS (SELECT event_id, event_type,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents FROM events)
         |SELECT event_id, event_type, value_cents,
         |  round((value_cents - avg(value_cents) OVER (PARTITION BY event_type))
         |    / stddev_samp(value_cents) OVER (PARTITION BY event_type), 6) AS z
         |FROM e
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "win_lag_delta" ->
+    "win_lag_delta" -> Query(EventOps.winLagDelta _, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events)
         |SELECT event_id, user_id, ts_us,
         |  ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS delta_us
         |FROM e
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "win_range_frame" ->
+    "win_range_frame" -> Query(EventOps.winRangeFrame _, Oracle(
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
         |SELECT event_id, user_id, ts_us,
         |  CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts_us
         |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_hour_cents
         |FROM e
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
     // SCD2: change-detect → interval build → as-of snapshot. The snapshot
     // instant is (min+max) DIV 2 of ts_us — exact BIGINT floor division on
@@ -2017,7 +1705,7 @@ object SparkEntry {
     // The oracle is the FULL REBUILD over the whole stream — the Spark
     // side applies the batch incrementally onto the prefix-built standing
     // table, so the hash-compare proves incremental == rebuild.
-    "scd2_apply_batch" ->
+    "scd2_apply_batch" -> Query(EventOps.scd2ApplyBatch _, Oracle(
       """WITH e AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us, event_id FROM events),
         |c AS (SELECT *, lag(state) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
         |v AS (SELECT user_id, state, ts_us, event_id FROM c WHERE prev IS NULL OR prev <> state)
@@ -2026,9 +1714,9 @@ object SparkEntry {
         |  ts_us AS valid_from_us,
         |  coalesce(lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id), -1) AS valid_to_us
         |FROM v
-        |ORDER BY user_id, version""".stripMargin,
+        |ORDER BY user_id, version""".stripMargin)),
 
-    "scd2_users" ->
+    "scd2_users" -> Query(EventOps.scd2Users _, Oracle(
       """WITH e AS (SELECT user_id, event_type AS state, epoch_us(ts) AS ts_us, event_id FROM events),
         |c AS (SELECT *, lag(state) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
         |ch AS (SELECT user_id, state, ts_us, event_id FROM c WHERE prev IS NULL OR prev <> state),
@@ -2041,19 +1729,19 @@ object SparkEntry {
         |SELECT user_id, state, version, valid_from_us
         |FROM iv, b
         |WHERE valid_from_us <= t AND (valid_to_us = -1 OR valid_to_us > t)
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // Incremental refresh: the engine merges materialized base partials
     // with the delta slice; the oracle recomputes from scratch — merged
     // state must be indistinguishable from a full rescan.
-    "agg_incremental_users" ->
+    "agg_incremental_users" -> Query(EventOps.aggIncrementalUsers _, Oracle(
       """WITH e AS (SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_cents
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    "win_rank_kinds" ->
+    "win_rank_kinds" -> Query(EventOps.winRankKinds _, Oracle(
       """WITH r AS (
         |  SELECT p_brand, p_partkey,
         |    row_number() OVER w AS rnk,
@@ -2071,9 +1759,9 @@ object SparkEntry {
         |  CAST(drnk AS BIGINT) AS drnk, prnk, cdist,
         |  CAST(quartile AS BIGINT) AS quartile, top_part, bottom_part
         |FROM r WHERE rnk <= 5
-        |ORDER BY p_brand, rnk""".stripMargin,
+        |ORDER BY p_brand, rnk""".stripMargin)),
 
-    "setop_parts" ->
+    "setop_parts" -> Query(Relational.setopParts _, Oracle(
       """SELECT
         |  (SELECT CAST(count(*) AS BIGINT) FROM (
         |    SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'R'
@@ -2086,9 +1774,9 @@ object SparkEntry {
         |  (SELECT CAST(count(*) AS BIGINT) FROM (
         |    SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'R'
         |    UNION
-        |    SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'A') t3) AS n_union""".stripMargin,
+        |    SELECT DISTINCT l_partkey FROM lineitem WHERE l_returnflag = 'A') t3) AS n_union""".stripMargin)),
 
-    "argmax_orders" ->
+    "argmax_orders" -> Query(Relational.argmaxOrders _, Oracle(
       """WITH r AS (SELECT o_orderpriority, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rmax,
@@ -2102,17 +1790,17 @@ object SparkEntry {
         |  round(min(o_totalprice), 2) AS min_price
         |FROM r
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "salted_heavy_hitters" ->
+    "salted_heavy_hitters" -> Query(Relational.saltedHeavyHitters _, Oracle(
       """SELECT event_type,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "unpivot_stats" ->
+    "unpivot_stats" -> Query(Relational.unpivotStats _, Oracle(
       """WITH w AS (SELECT l_returnflag,
         |    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) AS qty_cents,
         |    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) AS price_cents,
@@ -2122,40 +1810,28 @@ object SparkEntry {
         |  SELECT l_returnflag, 'n' AS metric, n AS value FROM w
         |  UNION ALL SELECT l_returnflag, 'price_cents', price_cents FROM w
         |  UNION ALL SELECT l_returnflag, 'qty_cents', qty_cents FROM w)
-        |ORDER BY l_returnflag, metric""".stripMargin,
+        |ORDER BY l_returnflag, metric""".stripMargin)),
 
-    "calendar_months" ->
-      """WITH pm AS (SELECT strftime(o_orderdate, '%Y-%m') AS ym,
-        |    CAST(count(*) AS BIGINT) AS n_orders
-        |  FROM orders GROUP BY 1),
-        |spine AS (SELECT strftime(m, '%Y-%m') AS ym FROM (
-        |  SELECT unnest(generate_series(
-        |      date_trunc('month', CAST(min(o_orderdate) AS DATE)),
-        |      date_trunc('month', CAST(max(o_orderdate) AS DATE)),
-        |      INTERVAL 1 MONTH)) AS m
-        |  FROM orders))
-        |SELECT spine.ym, coalesce(pm.n_orders, 0) AS n_orders
-        |FROM spine LEFT JOIN pm ON spine.ym = pm.ym
-        |ORDER BY spine.ym""".stripMargin,
+    "calendar_months" -> Query(Relational.calendarMonths _, Oracle(monthSpineSql)),
 
-    "null_semantics" ->
+    "null_semantics" -> Query(Relational.nullSemantics _, Oracle(
       """WITH g AS (SELECT nullif(event_type, 'click') AS k,
         |    CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1)
         |SELECT a.k, a.n AS n_a, b.n AS n_b
         |FROM g a JOIN g b ON a.k IS NOT DISTINCT FROM b.k
-        |ORDER BY a.k NULLS FIRST""".stripMargin,
+        |ORDER BY a.k NULLS FIRST""".stripMargin)),
 
-    "try_funcs" ->
+    "try_funcs" -> Query(ScalarOps.tryFuncs _, Oracle(
       """SELECT doc_id,
         |  TRY_CAST(substr(text, 1, 3) AS BIGINT) AS head_int,
         |  TRY_CAST(CAST(n_chars AS VARCHAR) AS BIGINT) AS chars_int,
         |  round(CASE WHEN doc_id % 3 = 0 THEN NULL
         |             ELSE CAST(n_chars AS DOUBLE) / CAST(doc_id % 3 AS DOUBLE) END, 6) AS div3
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "win_ignore_nulls" ->
+    "win_ignore_nulls" -> Query(EventOps.winIgnoreNulls _, Oracle(
       """WITH e AS (SELECT event_id, user_id,
         |    epoch_us(ts) AS ts_us,
         |    CASE WHEN value >= 400 THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS big_cents
@@ -2167,9 +1843,9 @@ object SparkEntry {
         |  lag(big_cents, 1 IGNORE NULLS) OVER (
         |    PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_big_cents
         |FROM e
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "agg_conditional" ->
+    "agg_conditional" -> Query(Relational.aggConditional _, Oracle(
       """SELECT l_returnflag,
         |  CAST(count(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_big,
         |  bool_and(l_quantity > 0) AS all_pos,
@@ -2177,24 +1853,24 @@ object SparkEntry {
         |  array_to_string(list_sort(list(DISTINCT l_linestatus)), ',') AS statuses
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "map_roundtrip" ->
+    "map_roundtrip" -> Query(ScalarOps.mapRoundtrip _, Oracle(
       """SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         |FROM events
         |WHERE user_id < 20
         |GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin)),
 
-    "lateral_brand_stats" ->
+    "lateral_brand_stats" -> Query(Relational.lateralBrandStats _, Oracle(
       """SELECT p.p_brand, l.max_price, l.n
         |FROM (SELECT DISTINCT p_brand FROM part) p,
         |LATERAL (SELECT round(max(p2.p_retailprice), 2) AS max_price,
         |                CAST(count(*) AS BIGINT) AS n
         |         FROM part p2 WHERE p2.p_brand = p.p_brand) l
-        |ORDER BY p.p_brand""".stripMargin,
+        |ORDER BY p.p_brand""".stripMargin)),
 
-    "setop_all_parts" ->
+    "setop_all_parts" -> Query(Relational.setopAllParts _, Oracle(
       """SELECT
         |  (SELECT CAST(count(*) AS BIGINT) FROM (
         |    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R'
@@ -2211,9 +1887,9 @@ object SparkEntry {
         |  (SELECT CAST(sum(l_partkey) AS BIGINT) FROM (
         |    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R'
         |    INTERSECT ALL
-        |    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A') t4) AS sum_intersect_all""".stripMargin,
+        |    SELECT l_partkey FROM lineitem WHERE l_returnflag = 'A') t4) AS sum_intersect_all""".stripMargin)),
 
-    "scalar_funcs" ->
+    "scalar_funcs" -> Query(ScalarOps.scalarFuncs _, Oracle(
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
         |  upper(n_name) AS upper_name,
         |  CAST(length(n_name) AS BIGINT) AS name_len,
@@ -2223,9 +1899,9 @@ object SparkEntry {
         |  round(sqrt(CAST(n_nationkey AS DOUBLE)), 6) AS sqrt_key,
         |  CASE WHEN n_nationkey % 2 = 0 THEN 'even' ELSE 'odd' END AS parity
         |FROM nation
-        |ORDER BY n_nationkey""".stripMargin,
+        |ORDER BY n_nationkey""".stripMargin)),
 
-    "date_funcs" ->
+    "date_funcs" -> Query(ScalarOps.dateFuncs _, Oracle(
       """SELECT CAST(extract(year FROM o_orderdate) AS BIGINT) AS y,
         |  CAST(extract(month FROM o_orderdate) AS BIGINT) AS m,
         |  CAST(count(*) AS BIGINT) AS n,
@@ -2237,9 +1913,9 @@ object SparkEntry {
         |  strftime(CAST(max(o_orderdate) AS DATE) + INTERVAL 30 DAY, '%Y-%m-%d') AS plus30
         |FROM orders
         |GROUP BY 1, 2
-        |ORDER BY y, m""".stripMargin,
+        |ORDER BY y, m""".stripMargin)),
 
-    "json_props" ->
+    "json_props" -> Query(EventOps.jsonProps _, Oracle(
       """WITH t AS (SELECT event_type,
         |    TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
         |SELECT event_type,
@@ -2248,27 +1924,20 @@ object SparkEntry {
         |  CAST(sum(k) AS BIGINT) AS sum_k
         |FROM t
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "array_map_funcs" ->
+    "array_map_funcs" -> Query(ScalarOps.arrayMapFuncs _, Oracle(
       """SELECT vec_id,
         |  CAST(len(embedding) AS BIGINT) AS dim,
         |  round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6) AS ssq,
         |  round(list_sum(list_transform(embedding[1:4], x -> CAST(x AS DOUBLE))), 6) AS head4_sum,
         |  round(list_sum(list_transform(embedding, x -> CAST(abs(x) AS DOUBLE))), 6) AS l1_norm
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
-    "stream_tumbling_events" ->
-      """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
-        |SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS ws_us, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM e
-        |GROUP BY 1, 2
-        |ORDER BY ws_us, event_type""".stripMargin,
+    "stream_tumbling_events" -> Query(StreamingEntry.streamTumblingEvents _, Oracle(hourlyTumblingSql)),
 
-    "stream_sliding_events" ->
+    "stream_sliding_events" -> Query(StreamingEntry.streamSlidingEvents _, Oracle(
       """WITH e AS (SELECT event_id, ts, event_type,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
         |  FROM events ORDER BY event_id LIMIT 5000)
@@ -2278,9 +1947,9 @@ object SparkEntry {
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM e CROSS JOIN (VALUES (0), (1), (2), (3)) AS offs(k)
         |GROUP BY 1, 2
-        |ORDER BY ws_us, event_type""".stripMargin,
+        |ORDER BY ws_us, event_type""".stripMargin)),
 
-    "stream_session_events" ->
+    "stream_session_events" -> Query(StreamingEntry.streamSessionEvents _, Oracle(
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events ORDER BY event_id LIMIT 5000),
         |x AS (SELECT user_id, ts_us,
         |    lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) AS prev_ts FROM e),
@@ -2294,14 +1963,14 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM z
         |GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start_us""".stripMargin,
+        |ORDER BY user_id, session_start_us""".stripMargin)),
 
     // Timer-driven sessionization (transformWithState, event-time timers):
     // the lag+cumsum sessions restricted to EMITTED ones — every non-final
     // session per user (closed by data), plus final sessions whose timer
     // (last//1000 + 30min, the processor's ms arithmetic) the final
     // watermark (max//1000 - 1h) passed.
-    "stream_session_tws" ->
+    "stream_session_tws" -> Query(StreamingEntry.streamSessionTws _, Oracle(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events ORDER BY event_id LIMIT 5000),
         |m AS (SELECT max(ts_us) AS mx FROM e),
         |x AS (SELECT user_id, ts_us,
@@ -2321,20 +1990,20 @@ object SparkEntry {
         |FROM s JOIN f ON s.user_id = f.user_id, m
         |WHERE s.sid < f.max_sid
         |   OR (s.last_us // 1000 + 1800000) <= (m.mx // 1000 - 3600000)
-        |ORDER BY s.user_id, s.session_start_us""".stripMargin,
+        |ORDER BY s.user_id, s.session_start_us""".stripMargin)),
 
-    "stream_dedup_events" ->
+    "stream_dedup_events" -> Query(StreamingEntry.streamDedupEvents _, Oracle(
       """WITH e AS (SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
         |  FROM events ORDER BY event_id LIMIT 5000)
         |SELECT event_id, ts_us, user_id, event_type, value
         |FROM e
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
     // The live DSv2 micro-batch read of the graft-vectors source: same
     // splitmix64 label kernel as vector_source_scan (see that oracle's
     // comment), aggregated over the full 20,000-id stream — an offset
     // bookkeeping error (skipped/re-emitted id span) breaks n_vecs/id_sum.
-    "stream_vector_source" ->
+    "stream_vector_source" -> Query(StreamingEntry.streamVectorSource _, Oracle(
       """WITH ids AS (SELECT unnest(generate_series(0, 19999)) AS id),
         |s0 AS (SELECT id, CAST(xor(CAST(42 AS BIGINT), id) AS UBIGINT) AS x FROM ids),
         |s1 AS (SELECT id, CAST((CAST(x AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS z FROM s0),
@@ -2350,36 +2019,26 @@ object SparkEntry {
         |  CAST(sum(id) AS BIGINT) AS id_sum
         |FROM lab
         |GROUP BY label
-        |ORDER BY label""".stripMargin,
+        |ORDER BY label""".stripMargin)),
 
     // Append-mode finalization: only windows whose end the final watermark
     // (max event time − 1 h) has passed are ever emitted — the oracle is
     // the batch tumbling aggregate restricted to that finalized set.
-    "stream_append_finalized" ->
-      """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
-        |m AS (SELECT max(ts) AS mx FROM e),
-        |a AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS wb, event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |  FROM e GROUP BY 1, 2)
-        |SELECT epoch_us(wb) AS ws_us, event_type, n, sum_cents
-        |FROM a, m
-        |WHERE wb + INTERVAL 1 HOUR <= mx - INTERVAL 1 HOUR
-        |ORDER BY ws_us, event_type""".stripMargin,
+    "stream_append_finalized" -> Query(StreamingEntry.streamAppendFinalized _, Oracle(finalizedHourlySql)),
 
     // MapState exact distinct: running per-type distinct users across
     // batches must equal the batch COUNT(DISTINCT) over the slice.
-    "stream_distinct_users_tws" ->
+    "stream_distinct_users_tws" -> Query(StreamingEntry.streamDistinctUsersTws _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM e GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
     // ListState last-3 buffer: arrival = event_id order (the feed is
     // event_id-chunked), so the oracle is the rank <= 3 window, ascending
     // ids comma-joined.
-    "stream_recent_events_tws" ->
+    "stream_recent_events_tws" -> Query(StreamingEntry.streamRecentEventsTws _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |r AS (SELECT user_id, event_id,
         |    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
@@ -2387,23 +2046,23 @@ object SparkEntry {
         |SELECT user_id,
         |  string_agg(CAST(event_id AS VARCHAR), ',' ORDER BY event_id) AS recent_ids
         |FROM r WHERE rn <= 3 GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
     // Warm start: batch backfill + streamed remainder must equal ONE
     // batch aggregate over the whole slice — the seam is the check.
-    "stream_initial_state" ->
+    "stream_initial_state" -> Query(StreamingEntry.streamInitialState _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM e GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
     // State-store read-back: state after the feed = windows NOT yet
     // evicted. Eviction in micro-batch k uses the watermark CAPTURED AT
     // BATCH START (computed from batches 1..k−1) — with no-data batches
     // off, the final commit's eviction threshold is max ts of the first
     // TWO chunks minus the 1 h delay, which this oracle re-derives.
-    "stream_state_reader" ->
+    "stream_state_reader" -> Query(StreamingEntry.streamStateReader _, Oracle(
       """WITH e0 AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |cz AS (SELECT greatest((count(*) + 2) // 3, 1) AS sz FROM e0),
         |e AS (SELECT *, row_number() OVER (ORDER BY event_id) AS rn FROM e0),
@@ -2415,12 +2074,12 @@ object SparkEntry {
         |SELECT epoch_us(wb) AS ws_us, event_type, n, sum_cents
         |FROM a, m
         |WHERE wb + INTERVAL 1 HOUR > mx - INTERVAL 1 HOUR
-        |ORDER BY ws_us, event_type""".stripMargin,
+        |ORDER BY ws_us, event_type""".stripMargin)),
 
     // Chained hour→day cascade: finalized daily rows are complete (every
     // hour of a closed day is itself closed), so the batch two-level
     // rollup over days ending before the final watermark is the oracle.
-    "stream_chained_agg" ->
+    "stream_chained_agg" -> Query(StreamingEntry.streamChainedAgg _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |m AS (SELECT max(ts) AS mx FROM e),
         |h AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hb, event_type,
@@ -2433,46 +2092,29 @@ object SparkEntry {
         |  FROM h GROUP BY 1, 2)
         |SELECT epoch_us(db) AS day_us, event_type, n_hours, max_hourly_n, n_events, sum_cents
         |FROM d, m WHERE db + INTERVAL 1 DAY <= mx - INTERVAL 1 HOUR
-        |ORDER BY day_us, event_type""".stripMargin,
+        |ORDER BY day_us, event_type""".stripMargin)),
 
     // FileStreamSource over the staged slice: same full-slice tumbling
     // aggregate as stream_tumbling_events (complete mode, order-free).
-    "stream_file_source_events" ->
-      """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
-        |SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS ws_us, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM e
-        |GROUP BY 1, 2
-        |ORDER BY ws_us, event_type""".stripMargin,
+    "stream_file_source_events" -> Query(StreamingEntry.streamFileSourceEvents _, Oracle(hourlyTumblingSql)),
 
     // Exactly-once parquet file sink read back through _spark_metadata:
     // same finalized-window set as stream_append_finalized — a dropped or
     // double-committed micro-batch file changes n/sum_cents and the hash.
-    "stream_file_sink_events" ->
-      """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
-        |m AS (SELECT max(ts) AS mx FROM e),
-        |a AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS wb, event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |  FROM e GROUP BY 1, 2)
-        |SELECT epoch_us(wb) AS ws_us, event_type, n, sum_cents
-        |FROM a, m
-        |WHERE wb + INTERVAL 1 HOUR <= mx - INTERVAL 1 HOUR
-        |ORDER BY ws_us, event_type""".stripMargin,
+    "stream_file_sink_events" -> Query(StreamingEntry.streamFileSinkEvents _, Oracle(finalizedHourlySql)),
 
-    "stream_interval_join_events" ->
+    "stream_interval_join_events" -> Query(StreamingEntry.streamIntervalJoinEvents _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |p AS (SELECT event_id AS p_id, user_id AS p_user, ts AS p_ts FROM e WHERE event_type = 'purchase'),
         |s AS (SELECT event_id AS s_id, user_id AS s_user, ts AS s_ts FROM e WHERE event_type = 'signup')
         |SELECT p_id, s_id, p_user AS user_id
         |FROM p JOIN s ON p_user = s_user
         |  AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS
-        |ORDER BY p_id, s_id""".stripMargin,
+        |ORDER BY p_id, s_id""".stripMargin)),
 
     // Stream-stream LEFT SEMI: exactly-once existence — each purchase with
     // at least one qualifying signup appears once, fan-out collapsed.
-    "stream_semi_join_events" ->
+    "stream_semi_join_events" -> Query(StreamingEntry.streamSemiJoinEvents _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |p AS (SELECT event_id AS p_id, user_id AS p_user, ts AS p_ts FROM e WHERE event_type = 'purchase'),
         |s AS (SELECT user_id AS s_user, ts AS s_ts FROM e WHERE event_type = 'signup')
@@ -2480,32 +2122,32 @@ object SparkEntry {
         |FROM p
         |WHERE EXISTS (SELECT 1 FROM s
         |  WHERE s_user = p_user AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS)
-        |ORDER BY p_id""".stripMargin,
+        |ORDER BY p_id""".stripMargin)),
 
     // Stream-static enrichment: the static dim adds no state and no
     // watermark — the result equals the batch join+aggregate exactly.
-    "stream_static_enrich" ->
+    "stream_static_enrich" -> Query(StreamingEntry.streamStaticEnrich _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT CAST(c.c_nationkey AS BIGINT) AS nationkey,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(e.value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM e JOIN customer c ON e.user_id = c.c_custkey
         |GROUP BY 1
-        |ORDER BY nationkey""".stripMargin,
+        |ORDER BY nationkey""".stripMargin)),
 
     // LEFT OUTER stream-stream join: every purchase appears exactly once
     // per qualifying signup, or once with the −1 sentinel when the
     // watermark proved no signup can still arrive.
-    "stream_outer_join_events" ->
+    "stream_outer_join_events" -> Query(StreamingEntry.streamOuterJoinEvents _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |p AS (SELECT event_id AS p_id, user_id AS p_user, ts AS p_ts FROM e WHERE event_type = 'purchase'),
         |s AS (SELECT event_id AS s_id, user_id AS s_user, ts AS s_ts FROM e WHERE event_type = 'signup')
         |SELECT p_id, CAST(COALESCE(s_id, -1) AS BIGINT) AS s_id, p_user AS user_id
         |FROM p LEFT JOIN s ON p_user = s_user
         |  AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS
-        |ORDER BY p_id, s_id""".stripMargin,
+        |ORDER BY p_id, s_id""".stripMargin)),
 
-    "stream_full_outer_join_events" ->
+    "stream_full_outer_join_events" -> Query(StreamingEntry.streamFullOuterJoinEvents _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000),
         |p AS (SELECT event_id AS p_id, user_id AS p_user, ts AS p_ts FROM e WHERE event_type = 'purchase'),
         |s AS (SELECT event_id AS s_id, user_id AS s_user, ts AS s_ts FROM e WHERE event_type = 'signup')
@@ -2514,37 +2156,37 @@ object SparkEntry {
         |  COALESCE(p_user, s_user) AS user_id
         |FROM p FULL JOIN s ON p_user = s_user
         |  AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS
-        |ORDER BY p_id, s_id""".stripMargin,
+        |ORDER BY p_id, s_id""".stripMargin)),
 
-    "tumbling_window" ->
+    "tumbling_window" -> Query(EventOps.tumblingWindow _, Oracle(
       """SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS ws_us, event_type,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY ws_us, event_type""".stripMargin,
+        |ORDER BY ws_us, event_type""".stripMargin)),
 
     // Update-mode emissions accumulate in the sink; max(n) per key == the
     // final count because counts only grow — the oracle is the plain
     // batch tumbling count over the slice.
-    "stream_update_counts" ->
+    "stream_update_counts" -> Query(StreamingEntry.streamUpdateCounts _, Oracle(
       """WITH e AS (SELECT * FROM events ORDER BY event_id LIMIT 5000)
         |SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS ws_us, event_type,
         |  CAST(count(*) AS BIGINT) AS n
         |FROM e
         |GROUP BY 1, 2
-        |ORDER BY ws_us, event_type""".stripMargin,
+        |ORDER BY ws_us, event_type""".stripMargin)),
 
-    "sliding_window" ->
+    "sliding_window" -> Query(EventOps.slidingWindow _, Oracle(
       """WITH e AS (SELECT ts, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
         |SELECT epoch_us(time_bucket(INTERVAL 15 MINUTE, ts) - INTERVAL (k * 15) MINUTE) AS ws_us,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM e CROSS JOIN (VALUES (0), (1), (2), (3)) AS offs(k)
         |GROUP BY 1
-        |ORDER BY ws_us""".stripMargin,
+        |ORDER BY ws_us""".stripMargin)),
 
-    "sessionize" ->
+    "sessionize" -> Query(EventOps.sessionize _, Oracle(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
         |x AS (SELECT user_id, event_id, ts_us,
         |    lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_ts FROM e),
@@ -2562,35 +2204,17 @@ object SparkEntry {
         |  CAST(sum(n_events) AS BIGINT) AS n_events_total
         |FROM sess
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "cos_topk" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb FROM embeddings WHERE vec_id < 50),
-        |t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS t_emb FROM embeddings),
-        |s AS (SELECT q_id, t_id, round(list_dot_product(q_emb, t_emb), 6) AS sim
-        |  FROM t CROSS JOIN q WHERE t_id <> q_id),
-        |r AS (SELECT q_id, t_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, t_id) AS rnk FROM s)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS "rank", t_id, sim
-        |FROM r WHERE rnk <= 5
-        |ORDER BY q_id, "rank"""".stripMargin,
+    "cos_topk" -> Query(VectorOps.cosTopk _, Oracle(cosTop5Sql)),
 
     // Streaming ANN ingest: per-micro-batch exact top-5 over the corpus —
     // answers depend only on (query, corpus), never on co-arrivals, so the
     // union of batch answers equals the one-shot cos_topk and shares its
     // oracle verbatim.
-    "stream_ann_topk" ->
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb FROM embeddings WHERE vec_id < 50),
-        |t AS (SELECT vec_id AS t_id, CAST(embedding AS DOUBLE[]) AS t_emb FROM embeddings),
-        |s AS (SELECT q_id, t_id, round(list_dot_product(q_emb, t_emb), 6) AS sim
-        |  FROM t CROSS JOIN q WHERE t_id <> q_id),
-        |r AS (SELECT q_id, t_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, t_id) AS rnk FROM s)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS "rank", t_id, sim
-        |FROM r WHERE rnk <= 5
-        |ORDER BY q_id, "rank"""".stripMargin,
+    "stream_ann_topk" -> Query(StreamingEntry.streamAnnTopk _, Oracle(cosTop5Sql)),
 
-    "knn_label_vote" ->
+    "knn_label_vote" -> Query(VectorOps.knnLabelVote _, Oracle(
       """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q_emb FROM embeddings WHERE vec_id < 50),
         |t AS (SELECT vec_id AS t_id, label AS t_label, CAST(embedding AS DOUBLE[]) AS t_emb FROM embeddings),
         |s AS (SELECT q_id, t_id, t_label, round(list_dot_product(q_emb, t_emb), 6) AS sim
@@ -2602,20 +2226,20 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY q_id ORDER BY n_votes DESC, t_label) AS vr FROM votes)
         |SELECT q_id, CAST(t_label AS BIGINT) AS pred_label, CAST(n_votes AS BIGINT) AS n_votes
         |FROM best WHERE vr = 1
-        |ORDER BY q_id""".stripMargin,
+        |ORDER BY q_id""".stripMargin)),
 
-    "dedup_docs_exact" ->
+    "dedup_docs_exact" -> Query(TextOps.dedupDocsExact _, Oracle(
       """WITH g AS (SELECT min(doc_id) AS survivor, count(*) AS n FROM documents GROUP BY text)
         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_total,
         |  CAST(count(*) AS BIGINT) AS n_distinct,
         |  CAST(sum(survivor) AS BIGINT) AS survivor_id_sum,
         |  CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin)),
 
     // PPJoin-style exact similarity join: prefix lemma makes the rare-token
     // candidate join lossless; the J >= 0.5 gate is the integer compare
     // 3·inter >= n1+n2, the surfaced jaccard one class-2 division.
-    "jaccard_join_exact" ->
+    "jaccard_join_exact" -> Query(TextOps.jaccardJoinExact _, Oracle(
       """WITH tk AS (SELECT DISTINCT doc_id, tok FROM (
         |    SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS tok
         |    FROM documents WHERE lang = 'en' AND doc_id % 10 = 0)),
@@ -2634,9 +2258,9 @@ object SparkEntry {
         |SELECT d1 AS doc1, d2 AS doc2, inter, n1, n2,
         |  CAST(inter AS DOUBLE) / CAST(n1 + n2 - inter AS DOUBLE) AS jaccard
         |FROM itr WHERE 3 * inter >= n1 + n2
-        |ORDER BY doc1, doc2""".stripMargin,
+        |ORDER BY doc1, doc2""".stripMargin)),
 
-    "dedup_docs_minhash" ->
+    "dedup_docs_minhash" -> Query(TextOps.dedupDocsMinhash _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh AS (SELECT doc_id, shingle
@@ -2659,9 +2283,9 @@ object SparkEntry {
         |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM g)
         |SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
         |FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |ORDER BY doc1, doc2""".stripMargin,
+        |ORDER BY doc1, doc2""".stripMargin)),
 
-    "dedup_clusters" ->
+    "dedup_clusters" -> Query(TextOps.dedupClusters _, Oracle(
       """WITH RECURSIVE tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh AS (SELECT doc_id, shingle
@@ -2692,11 +2316,11 @@ object SparkEntry {
         |SELECT m AS cluster_rep, CAST(count(*) AS BIGINT) AS n_docs
         |FROM (SELECT a, min(b) AS m FROM reach GROUP BY a)
         |GROUP BY m
-        |ORDER BY cluster_rep""".stripMargin,
+        |ORDER BY cluster_rep""".stripMargin)),
 
     // Same component machinery as dedup_clusters, then the keep-best
     // arg-max (max tokens, min doc_id) instead of the min-id report.
-    "dedup_keep_best" ->
+    "dedup_keep_best" -> Query(TextOps.dedupKeepBest _, Oracle(
       """WITH RECURSIVE tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh AS (SELECT doc_id, shingle
@@ -2735,11 +2359,11 @@ object SparkEntry {
         |SELECT cluster_rep, CAST(n_docs AS BIGINT) AS n_docs,
         |  doc_id AS keep_id, n_tokens AS keep_tokens
         |FROM r WHERE rk = 1
-        |ORDER BY cluster_rep""".stripMargin,
+        |ORDER BY cluster_rep""".stripMargin)),
 
     // Same component machinery as dedup_clusters, then split by
     // md5(cluster rep): near-dups can never straddle train/test.
-    "split_no_leakage" ->
+    "split_no_leakage" -> Query(TextOps.splitNoLeakage _, Oracle(
       """WITH RECURSIVE tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh AS (SELECT doc_id, shingle
@@ -2780,9 +2404,9 @@ object SparkEntry {
         |  CAST(count(DISTINCT rep) AS BIGINT) AS n_clusters
         |FROM sp
         |GROUP BY split, lang
-        |ORDER BY split, lang""".stripMargin,
+        |ORDER BY split, lang""".stripMargin)),
 
-    "ngram_counts" ->
+    "ngram_counts" -> Query(TextOps.ngramCounts _, Oracle(
       """WITH t AS (SELECT list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         |  FROM documents WHERE lang = 'en'),
         |g AS (
@@ -2798,14 +2422,14 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY n ORDER BY cnt DESC, gram) AS rk FROM c)
         |SELECT CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk, gram, CAST(cnt AS BIGINT) AS cnt
         |FROM r WHERE rk <= 10
-        |ORDER BY n, rk""".stripMargin,
+        |ORDER BY n, rk""".stripMargin)),
 
     // Streaming ingest form of the incremental near-dup gate: identical
     // decisions to dedup_incremental_minhash (arrivals only ever compare
     // against the CATALOG, so micro-batching cannot change the answer),
     // restricted to the harness' bounded arrival slice (first 2000 batch
     // docs by doc_id — covers the whole doc_id%5=4 slice at driver SFs).
-    "stream_dedup_minhash" ->
+    "stream_dedup_minhash" -> Query(StreamingEntry.streamDedupMinhash _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |batch AS (SELECT doc_id FROM documents
@@ -2850,7 +2474,7 @@ object SparkEntry {
         |  CAST(coalesce(m.n_near_dups, 0) AS BIGINT) AS n_near_dups,
         |  CAST(coalesce(m.best_match, -1) AS BIGINT) AS best_match
         |FROM batch d LEFT JOIN m ON d.doc_id = m.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // GROWING-catalog streaming ingest replayed as sequential batch CTEs:
     // the arrival slice splits into the harness' 3 chunks (chunk size
@@ -2860,7 +2484,7 @@ object SparkEntry {
     // d0 → adm0 → d1 → adm1 → d2. Verified pairs are computed ONCE over
     // the union of possible (arrival, catalog-or-earlier-arrival) pairs;
     // admission then just filters which pairs QUALIFY at each step.
-    "stream_dedup_growing" ->
+    "stream_dedup_growing" -> Query(StreamingEntry.streamDedupGrowing _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |arr0 AS (SELECT doc_id FROM documents
@@ -2937,11 +2561,11 @@ object SparkEntry {
         |  CAST(nd AS BIGINT) AS n_near_dups,
         |  CAST(coalesce(bm, -1) AS BIGINT) AS best_match
         |FROM alls
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // Batch (doc_id%5=4) admitted against the catalog's minhash bands,
     // exact-Jaccard verified at >= 0.5 — the incremental near-dup gate.
-    "dedup_incremental_minhash" ->
+    "dedup_incremental_minhash" -> Query(TextOps.dedupIncrementalMinhash _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh0 AS (SELECT doc_id, shingle
@@ -2985,9 +2609,9 @@ object SparkEntry {
         |  CAST(coalesce(m.best_match, -1) AS BIGINT) AS best_match
         |FROM documents d LEFT JOIN m ON d.doc_id = m.doc_id
         |WHERE d.doc_id % 5 = 4
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "modality_coverage" ->
+    "modality_coverage" -> Query(VectorOps.modalityCoverage _, Oracle(
       """SELECT d.lang,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(count(e.vec_id) AS BIGINT) AS n_with_embedding,
@@ -2995,11 +2619,11 @@ object SparkEntry {
         |FROM documents d
         |LEFT JOIN embeddings e ON d.doc_id = e.vec_id
         |GROUP BY d.lang
-        |ORDER BY d.lang""".stripMargin,
+        |ORDER BY d.lang""".stripMargin)),
 
     // The Aggregator's micro-unit quantizer floor(x*1e6 + 0.5) recomputed
     // per element; centroid = class-2 raw quotient of exact integers.
-    "label_centroids" ->
+    "label_centroids" -> Query(VectorOps.labelCentroids _, Oracle(
       """WITH x AS (SELECT label, i AS dim,
         |    CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
         |  FROM embeddings, UNNEST(generate_series(0, len(embedding) - 1)) AS u(i)),
@@ -3009,9 +2633,9 @@ object SparkEntry {
         |SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim, n_rows, sum_q,
         |  CAST(sum_q AS DOUBLE) / CAST(n_rows * 1000000 AS DOUBLE) AS centroid
         |FROM g
-        |ORDER BY label, dim""".stripMargin,
+        |ORDER BY label, dim""".stripMargin)),
 
-    "doc_chunks" ->
+    "doc_chunks" -> Query(TextOps.docChunks _, Oracle(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |c AS (SELECT doc_id,
         |    unnest(list_transform(range(0, greatest((len(tk) - 1) // 24, 0) + 1),
@@ -3021,9 +2645,9 @@ object SparkEntry {
         |  CAST(len(s.ch) AS BIGINT) AS n_tokens,
         |  array_to_string(s.ch, ' ') AS chunk_text
         |FROM c
-        |ORDER BY doc_id, chunk_no""".stripMargin,
+        |ORDER BY doc_id, chunk_no""".stripMargin)),
 
-    "contamination_check" ->
+    "contamination_check" -> Query(TextOps.contaminationCheck _, Oracle(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents
         |    WHERE len(string_split(text, ' ')) >= 8),
         |g AS (SELECT DISTINCT doc_id,
@@ -3037,33 +2661,19 @@ object SparkEntry {
         |  CAST(count(DISTINCT train_doc) AS BIGINT) AS n_train_docs
         |FROM e JOIN tr USING (gram)
         |GROUP BY eval_doc
-        |ORDER BY eval_doc""".stripMargin,
+        |ORDER BY eval_doc""".stripMargin)),
 
-    "dedup_incremental" ->
-      """WITH inc AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 5 = 4),
-        |ex AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id % 5 <> 4),
-        |surv AS (SELECT doc_id, fp FROM inc WHERE fp NOT IN (SELECT fp FROM ex))
-        |SELECT CAST(min(doc_id) AS BIGINT) AS doc_id
-        |FROM surv
-        |GROUP BY fp
-        |ORDER BY doc_id""".stripMargin,
+    "dedup_incremental" -> Query(TextOps.dedupIncremental _, Oracle(incrementalDedupSql)),
 
     // Bloom-pruned incremental dedup: the runtime filter only PRUNES the
     // catalog side of the exact anti-join, so the answer — and the oracle —
     // is identical to dedup_incremental's.
-    "dedup_bloom_prune" ->
-      """WITH inc AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 5 = 4),
-        |ex AS (SELECT DISTINCT md5(text) AS fp FROM documents WHERE doc_id % 5 <> 4),
-        |surv AS (SELECT doc_id, fp FROM inc WHERE fp NOT IN (SELECT fp FROM ex))
-        |SELECT CAST(min(doc_id) AS BIGINT) AS doc_id
-        |FROM surv
-        |GROUP BY fp
-        |ORDER BY doc_id""".stripMargin,
+    "dedup_bloom_prune" -> Query(TextOps.dedupBloomPrune _, Oracle(incrementalDedupSql)),
 
     // Repetition is computed per doc with list functions on both engines —
     // identical shingle construction to the MinHash oracle, then
     // distinct-vs-total inside the row.
-    "doc_repetition" ->
+    "doc_repetition" -> Query(TextOps.docRepetition _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |sh AS (SELECT doc_id, list_transform(generate_series(1, len(t) - 2),
@@ -3073,9 +2683,9 @@ object SparkEntry {
         |  CAST(len(list_distinct(shs)) AS BIGINT) AS n_distinct,
         |  1.0 - CAST(len(list_distinct(shs)) AS DOUBLE) / CAST(len(shs) AS DOUBLE) AS dup_ratio
         |FROM sh
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "doc_commonness" ->
+    "doc_commonness" -> Query(TextOps.docCommonness _, Oracle(
       """WITH toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |t AS (SELECT doc_id, tok FROM toks WHERE len(tok) > 0),
         |counts AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok)
@@ -3085,12 +2695,12 @@ object SparkEntry {
         |  CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_freq
         |FROM t JOIN counts USING (tok)
         |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // BM25 with the log-free rational idf (house no-libm rule); per-term
     // scores quantized to BIGINT micro-units BEFORE the per-doc sum, so the
     // ranking key is an exact integer in both engines.
-    "bm25_topk" ->
+    "bm25_topk" -> Query(TextAnalysisOps.bm25Topk _, Oracle(
       s"""WITH ${TextAnalysisOps.queryWorkloadValuesSql},
         |d AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         |      FROM documents WHERE lang = 'en'),
@@ -3113,12 +2723,12 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score_micro DESC, doc_id)
         |        AS rnk FROM qd)
         |SELECT qid, CAST(rnk AS BIGINT) AS "rank", doc_id, score_micro, n_terms_hit
-        |FROM r WHERE rnk <= 10 ORDER BY qid, "rank"""".stripMargin,
+        |FROM r WHERE rnk <= 10 ORDER BY qid, "rank"""".stripMargin)),
 
     // Reciprocal-rank fusion of the BM25 top-10 and a query-term-set
     // Jaccard top-10: rrf = Σ_r 1000000 DIV (60 + rank_r), an exact
     // integer; a doc absent from a ranker's list contributes 0.
-    "hybrid_rrf_topk" ->
+    "hybrid_rrf_topk" -> Query(RetrievalOps.hybridRrfTopk _, Oracle(
       s"""WITH ${TextAnalysisOps.queryWorkloadValuesSql},
         |d AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         |      FROM documents WHERE lang = 'en'),
@@ -3164,14 +2774,14 @@ object SparkEntry {
         |       doc_id, rrf_micro, bm25_rank, jacc_rank
         |FROM fused
         |QUALIFY "rank" <= 10
-        |ORDER BY qid, "rank"""".stripMargin,
+        |ORDER BY qid, "rank"""".stripMargin)),
 
     // MMR greedy replayed EXACTLY in SQL: a recursive CTE carries the
     // selected set as an array and a LATERAL argmax picks each next
     // candidate by (rel_micro − max selected-Jaccard, low doc_id) — the
     // same integer lattice the Spark mapGroups walks, so the selection
     // is hash-exact.
-    "mmr_rerank_k8" ->
+    "mmr_rerank_k8" -> Query(RetrievalOps.mmrRerankK8 _, Oracle(
       s"""WITH RECURSIVE ${TextAnalysisOps.queryWorkloadValuesSql},
         |d AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         |      FROM documents WHERE lang = 'en'),
@@ -3221,12 +2831,12 @@ object SparkEntry {
         |  WHERE s.step < 8
         |)
         |SELECT qid, step AS "rank", picked AS doc_id, CAST(mmr_micro AS BIGINT) AS mmr_micro
-        |FROM sel ORDER BY qid, "rank"""".stripMargin,
+        |FROM sel ORDER BY qid, "rank"""".stripMargin)),
 
     // Exact medians over integer cents (quantile_cont ≡ Spark percentile):
     // interpolated midpoints are exact .5-step doubles, so med/MAD/compare
     // are engine-portable with no rounding anywhere.
-    "mad_outliers" ->
+    "mad_outliers" -> Query(EventOps.madOutliers _, Oracle(
       """WITH e AS (SELECT event_type, CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
         |           FROM events),
         |m AS (SELECT event_type, quantile_cont(cents, 0.5) AS med_cents FROM e GROUP BY 1),
@@ -3237,32 +2847,32 @@ object SparkEntry {
         |       min(med_cents) AS med_cents, min(mad_cents) AS mad_cents,
         |       CAST(sum(CASE WHEN dev > 3.0 * mad_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM d JOIN md USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin)),
 
-    "text_tokens" ->
+    "text_tokens" -> Query(TextOps.textTokens _, Oracle(
       """WITH tk AS (SELECT UNNEST(string_split(text, ' ')) AS tok FROM documents WHERE lang = 'en')
         |SELECT tok, CAST(count(*) AS BIGINT) AS n
         |FROM tk WHERE length(tok) > 0
         |GROUP BY tok
         |ORDER BY n DESC, tok
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
     // Adjacent pairs over the SAME whitespace tokens as text_tokens: the
     // engine builds pairs map-side with a positional transform; the oracle
     // with lead() over unnest positions. Empty tokens are dropped BEFORE
     // pairing on both sides, so adjacency means adjacent non-empty tokens.
-    "bpe_pair_stats" ->
+    "bpe_pair_stats" -> Query(TextOps.bpePairStats _, Oracle(
       """WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
         |           FROM documents WHERE lang = 'en'),
         |t AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos FROM d),
         |pr AS (SELECT tok || ' ' || lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS pair FROM t)
         |SELECT pair, CAST(count(*) AS BIGINT) AS n
         |FROM pr WHERE pair IS NOT NULL
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin,
+        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin)),
 
     // MERGE/upsert as full-outer join + CASE (how table formats execute
     // MERGE INTO); per-action audit of the merged table, integer cents.
-    "merge_upsert_parts" ->
+    "merge_upsert_parts" -> Query(Relational.mergeUpsertParts _, Oracle(
       """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM part),
         |tgt AS (SELECT p_partkey AS k, CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS cents FROM part),
         |upd AS (SELECT k, cents + 500 AS cents FROM tgt WHERE k % 7 = 0),
@@ -3276,7 +2886,7 @@ object SparkEntry {
         |      FROM tgt t FULL JOIN src s ON t.k = s.k)
         |SELECT action, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents,
         |       CAST(min(k) AS BIGINT) AS min_key, CAST(max(k) AS BIGINT) AS max_key
-        |FROM m GROUP BY action ORDER BY action""".stripMargin,
+        |FROM m GROUP BY action ORDER BY action""".stripMargin)),
 
     // Integer fixed-point PageRank: every step exact BIGINT arithmetic so
     // aggregation order can't move a single bit — the recursion replays
@@ -3286,7 +2896,7 @@ object SparkEntry {
     // two-join); clustering = one exact-int IEEE quotient (class 2).
     // Link prediction over the same closed-form graph; Jaccard is one
     // int/int IEEE division (class 2).
-    "link_predict_cn" ->
+    "link_predict_cn" -> Query(GraphOps.linkPredictCn _, Oracle(
       """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |directed AS (
         |  SELECT doc_id AS src, n_chars % (SELECT n FROM nn) AS dst FROM documents
@@ -3310,9 +2920,9 @@ object SparkEntry {
         |JOIN deg du ON du.node = u
         |JOIN deg dv ON dv.node = v
         |ORDER BY cn DESC, u, v
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "triangle_count_docs" ->
+    "triangle_count_docs" -> Query(GraphOps.triangleCountDocs _, Oracle(
       """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |directed AS (
         |  SELECT doc_id AS src, n_chars % (SELECT n FROM nn) AS dst FROM documents
@@ -3329,11 +2939,11 @@ object SparkEntry {
         |  (SELECT CAST(count(*) AS BIGINT) FROM wedges) AS n_wedges,
         |  (SELECT CAST(count(*) AS BIGINT) FROM tri) AS n_triangles,
         |  CAST(3 * (SELECT count(*) FROM tri) AS DOUBLE)
-        |    / CAST((SELECT count(*) FROM wedges) AS DOUBLE) AS clustering""".stripMargin,
+        |    / CAST((SELECT count(*) FROM wedges) AS DOUBLE) AS clustering""".stripMargin)),
 
     // Stub symmetry (Σx = Σy, Σx² = Σy²) collapses Pearson to a sqrt-free
     // rational — exact BIGINTs, one class-2 division.
-    "graph_assortativity" ->
+    "graph_assortativity" -> Query(GraphOps.graphAssortativity _, Oracle(
       """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |directed AS (
         |  SELECT doc_id AS src, n_chars % (SELECT n FROM nn) AS dst FROM documents
@@ -3353,9 +2963,9 @@ object SparkEntry {
         |  m_stubs, sum_deg, sum_xy, sum_x2,
         |  CAST(m_stubs * sum_xy - sum_deg * sum_deg AS DOUBLE)
         |    / CAST(m_stubs * sum_x2 - sum_deg * sum_deg AS DOUBLE) AS assortativity
-        |FROM ag""".stripMargin,
+        |FROM ag""".stripMargin)),
 
-    "pagerank_docs" ->
+    "pagerank_docs" -> Query(GraphOps.pagerankDocs _, Oracle(
       """WITH RECURSIVE
         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |nodes AS (SELECT doc_id AS node FROM documents),
@@ -3375,7 +2985,7 @@ object SparkEntry {
         |              GROUP BY nd.node)) c
         |  WHERE c.iter < 10
         |)
-        |SELECT node, rank FROM pr WHERE iter = 10 ORDER BY rank DESC, node LIMIT 20""".stripMargin,
+        |SELECT node, rank FROM pr WHERE iter = 10 ORDER BY rank DESC, node LIMIT 20""".stripMargin)),
 
     // Blocked fuzzy match over the DISTINCT name domain: candidates share
     // a token, survivors within Levenshtein <= 3 (exact DP metric, same on
@@ -3383,7 +2993,7 @@ object SparkEntry {
     // Blocking tokens are frequency-capped at DF <= 256 on BOTH sides
     // (TextAnalysisOps.FuzzyBlockCap): semantics are "a pair must share a
     // RARE token", identical at every scale.
-    "fuzzy_name_match" ->
+    "fuzzy_name_match" -> Query(TextAnalysisOps.fuzzyNameMatch _, Oracle(
       """WITH names AS (SELECT p_name AS nm, CAST(count(*) AS BIGINT) AS n_rows FROM part GROUP BY p_name),
         |tok AS (SELECT nm, unnest(string_split(nm, ' ')) AS tk FROM names),
         |blockable AS (SELECT tk FROM tok GROUP BY tk HAVING count(DISTINCT nm) <= 256),
@@ -3394,11 +3004,11 @@ object SparkEntry {
         |      FROM cand WHERE levenshtein(nm1, nm2) <= 3)
         |SELECT m.nm1, m.nm2, m.dist, x.n_rows AS n1, y.n_rows AS n2
         |FROM m JOIN names x ON m.nm1 = x.nm JOIN names y ON m.nm2 = y.nm
-        |ORDER BY m.dist, m.nm1, m.nm2""".stripMargin,
+        |ORDER BY m.dist, m.nm1, m.nm2""".stripMargin)),
 
     // Sequence packing: all-integer contiguous fill per shard — the bin
     // manifest is a pure window computation on both engines.
-    "pack_token_bins" ->
+    "pack_token_bins" -> Query(TextOps.packTokenBins _, Oracle(
       """WITH d AS (SELECT doc_id, doc_id % 16 AS shard,
         |    CAST(len(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -3407,11 +3017,11 @@ object SparkEntry {
         |  CAST(strt // 2048 AS BIGINT) AS bin_id,
         |  CAST(strt % 2048 AS BIGINT) AS bin_offset
         |FROM c
-        |ORDER BY shard, doc_id""".stripMargin,
+        |ORDER BY shard, doc_id""".stripMargin)),
 
     // Rarity-weighted top terms: score = tf × N / df — multiply/divide
     // only (IEEE-exact, engine-identical), never ln.
-    "rarity_top_terms" ->
+    "rarity_top_terms" -> Query(TextAnalysisOps.rarityTopTerms _, Oracle(
       """WITH tk AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |t AS (SELECT doc_id, tok FROM tk WHERE len(tok) > 0),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY doc_id, tok),
@@ -3423,11 +3033,11 @@ object SparkEntry {
         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, tok) AS rk FROM s)
         |SELECT doc_id, CAST(rk AS BIGINT) AS rk, tok, CAST(tf AS BIGINT) AS tf, score
         |FROM r WHERE rk <= 3
-        |ORDER BY doc_id, rk""".stripMargin,
+        |ORDER BY doc_id, rk""".stripMargin)),
 
     // Heavy hitters: the sketch pass only nominates candidates; the final
     // counts are exact, so the oracle is the plain exact φ=1/512 query.
-    "heavy_hitters_tokens" ->
+    "heavy_hitters_tokens" -> Query(TextOps.heavyHittersTokens _, Oracle(
       """WITH tk AS (SELECT UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |t AS (SELECT tok FROM tk WHERE length(tok) > 0),
         |tot AS (SELECT count(*) AS n FROM t)
@@ -3435,24 +3045,24 @@ object SparkEntry {
         |FROM t
         |GROUP BY tok
         |HAVING count(*) * 512 > (SELECT n FROM tot)
-        |ORDER BY n DESC, tok""".stripMargin,
+        |ORDER BY n DESC, tok""".stripMargin)),
 
     // CMS: both engines build the IDENTICAL d×w sketch (md5-hex-prefix row
     // hashes), so estimate, exact, and overcount all sit on the hash.
-    "cms_token_counts" -> TextAnalysisOps.Oracle.cmsTokenCounts,
+    "cms_token_counts" -> Query(TextAnalysisOps.cmsTokenCounts _, Oracle(TextAnalysisOps.Oracle.cmsTokenCounts)),
 
-    "text_stats_lang" ->
+    "text_stats_lang" -> Query(TextOps.textStatsLang _, Oracle(
       """SELECT lang,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_chars,
         |  CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_tokens
         |FROM documents
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
     // LSH quality gate: same banded-candidate CTE as the dedup oracle,
     // truth = integer-exact J >= 1/2 over the shared-shingle universe.
-    "minhash_pr_eval" ->
+    "minhash_pr_eval" -> Query(TextOps.minhashPrEval _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |shl AS (SELECT doc_id, shingle
@@ -3494,12 +3104,12 @@ object SparkEntry {
         |  CAST((SELECT count(*) FROM hit) AS DOUBLE)
         |    / CAST((SELECT count(*) FROM cand) AS DOUBLE) AS precision,
         |  CAST((SELECT count(*) FROM hit) AS DOUBLE)
-        |    / CAST((SELECT count(*) FROM truth) AS DOUBLE) AS recall""".stripMargin,
+        |    / CAST((SELECT count(*) FROM truth) AS DOUBLE) AS recall""".stripMargin)),
 
     // Planted-truth P/R: probes = 1% sample with md5-coin token drops in
     // three severity bands; truth = the planted (probe, source) list,
     // exact-verified pair-by-pair (linear at any SF — no all-pairs join).
-    "minhash_pr_planted" ->
+    "minhash_pr_planted" -> Query(TextOps.minhashPrPlanted _, Oracle(
       """WITH pr0 AS (SELECT doc_id AS src_id, (doc_id // 100) % 3 AS band,
         |    string_split(text, ' ') AS t
         |  FROM documents WHERE doc_id % 100 = 7),
@@ -3602,9 +3212,9 @@ object SparkEntry {
         |FROM pla
         |LEFT JOIN reca ON pla.band = reca.band
         |LEFT JOIN ca ON pla.band = ca.band
-        |ORDER BY band""".stripMargin,
+        |ORDER BY band""".stripMargin)),
 
-    "ngram_jaccard" ->
+    "ngram_jaccard" -> Query(TextOps.ngramJaccard _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |shl AS (SELECT doc_id, shingle
@@ -3642,9 +3252,9 @@ object SparkEntry {
         |LEFT JOIN inter i ON c.doc1 = i.doc1 AND c.doc2 = i.doc2
         |JOIN cnt c1 ON c.doc1 = c1.doc_id
         |JOIN cnt c2 ON c.doc2 = c2.doc_id
-        |ORDER BY c.doc1, c.doc2""".stripMargin,
+        |ORDER BY c.doc1, c.doc2""".stripMargin)),
 
-    "minhash_containment" ->
+    "minhash_containment" -> Query(TextOps.minhashContainment _, Oracle(
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |shl AS (SELECT doc_id, shingle
@@ -3686,12 +3296,12 @@ object SparkEntry {
         |LEFT JOIN inter i ON c.doc1 = i.doc1 AND c.doc2 = i.doc2
         |JOIN cnt c1 ON c.doc1 = c1.doc_id
         |JOIN cnt c2 ON c.doc2 = c2.doc_id
-        |ORDER BY c.doc1, c.doc2""".stripMargin,
+        |ORDER BY c.doc1, c.doc2""".stripMargin)),
 
     // Sketch-accuracy audit: the ngram_jaccard chain extended with the
     // per-pair MinHash match count read from the same g CTE; n_match/8 and
     // the error are exact IEEE values (class 2 — no rounding).
-    "minhash_jaccard_audit" -> {
+    "minhash_jaccard_audit" -> Query(TextOps.minhashJaccardAudit _, Oracle {
       val matches = (0 until 8)
         .map(i => s"(CASE WHEN ga.s$i = gb.s$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
@@ -3740,9 +3350,9 @@ object SparkEntry {
          |JOIN g ga ON e.doc1 = ga.doc_id
          |JOIN g gb ON e.doc2 = gb.doc_id
          |ORDER BY e.doc1, e.doc2""".stripMargin
-    },
+    }),
 
-    "token_count_regex" ->
+    "token_count_regex" -> Query(TextOps.tokenCountRegex _, Oracle(
       """SELECT lang,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS ws_tokens,
@@ -3750,29 +3360,29 @@ object SparkEntry {
         |  CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
-    "lang_id_confusion" -> TextAnalysisOps.Oracle.langIdConfusion,
-    "assoc_rules_brands" -> MiningOps.Oracle.assocRulesBrands,
-    "ols_trend_user" -> MiningOps.Oracle.olsTrendUser,
-    "cosine_tf_pairs" -> MiningOps.Oracle.cosineTfPairs,
-    "chi2_event_dow" -> MiningOps.Oracle.chi2EventDow,
-    "forget_user_cascade" -> MiningOps.Oracle.forgetUserCascade,
-    "temporal_split_embargo" -> MiningOps.Oracle.temporalSplitEmbargo,
-    "percentile_bands_value" -> MiningOps.Oracle.percentileBandsValue,
-    "width_bucket_hist" -> MiningOps.Oracle.widthBucketHist,
-    "time_weighted_avg_user" -> MiningOps.Oracle.timeWeightedAvgUser,
-    "table_checksum_diff" -> MiningOps.Oracle.tableChecksumDiff,
-    "benford_first_digit" -> MiningOps.Oracle.benfordFirstDigit,
-    "rfm_segments" -> MiningOps.Oracle.rfmSegments,
-    "pattern_profile_columns" -> MiningOps.Oracle.patternProfileColumns,
-    "attribution_first_last" -> MiningOps.Oracle.attributionFirstLast,
-    "interarrival_hist_type" -> MiningOps.Oracle.interarrivalHistType,
-    "holt_linear_daily" -> MiningOps.Oracle.holtLinearDaily,
+    "lang_id_confusion" -> Query(TextAnalysisOps.langIdConfusion _, Oracle(TextAnalysisOps.Oracle.langIdConfusion)),
+    "assoc_rules_brands" -> Query(MiningOps.assocRulesBrands _, Oracle(MiningOps.Oracle.assocRulesBrands)),
+    "ols_trend_user" -> Query(MiningOps.olsTrendUser _, Oracle(MiningOps.Oracle.olsTrendUser)),
+    "cosine_tf_pairs" -> Query(MiningOps.cosineTfPairs _, Oracle(MiningOps.Oracle.cosineTfPairs)),
+    "chi2_event_dow" -> Query(MiningOps.chi2EventDow _, Oracle(MiningOps.Oracle.chi2EventDow)),
+    "forget_user_cascade" -> Query(MiningOps.forgetUserCascade _, Oracle(MiningOps.Oracle.forgetUserCascade)),
+    "temporal_split_embargo" -> Query(MiningOps.temporalSplitEmbargo _, Oracle(MiningOps.Oracle.temporalSplitEmbargo)),
+    "percentile_bands_value" -> Query(MiningOps.percentileBandsValue _, Oracle(MiningOps.Oracle.percentileBandsValue)),
+    "width_bucket_hist" -> Query(MiningOps.widthBucketHist _, Oracle(MiningOps.Oracle.widthBucketHist)),
+    "time_weighted_avg_user" -> Query(MiningOps.timeWeightedAvgUser _, Oracle(MiningOps.Oracle.timeWeightedAvgUser)),
+    "table_checksum_diff" -> Query(MiningOps.tableChecksumDiff _, Oracle(MiningOps.Oracle.tableChecksumDiff)),
+    "benford_first_digit" -> Query(MiningOps.benfordFirstDigit _, Oracle(MiningOps.Oracle.benfordFirstDigit)),
+    "rfm_segments" -> Query(MiningOps.rfmSegments _, Oracle(MiningOps.Oracle.rfmSegments)),
+    "pattern_profile_columns" -> Query(MiningOps.patternProfileColumns _, Oracle(MiningOps.Oracle.patternProfileColumns)),
+    "attribution_first_last" -> Query(MiningOps.attributionFirstLast _, Oracle(MiningOps.Oracle.attributionFirstLast)),
+    "interarrival_hist_type" -> Query(MiningOps.interarrivalHistType _, Oracle(MiningOps.Oracle.interarrivalHistType)),
+    "holt_linear_daily" -> Query(MiningOps.holtLinearDaily _, Oracle(MiningOps.Oracle.holtLinearDaily)),
 
     // Join-key skew profile: per candidate shuffle key, max·keys/rows
     // and the top-1 share — both one int/int division.
-    "key_skew_profile" ->
+    "key_skew_profile" -> Query(Relational.keySkewProfile _, Oracle(
       """WITH oc AS (SELECT CAST(count(*) AS BIGINT) AS c FROM orders
         |            GROUP BY o_custkey),
         |lp AS (SELECT CAST(count(*) AS BIGINT) AS c FROM lineitem
@@ -3799,11 +3409,11 @@ object SparkEntry {
         |    AS skew_factor,
         |  CAST(max_cnt AS DOUBLE) / CAST(n_rows AS DOUBLE) AS top1_share
         |FROM u
-        |ORDER BY key_col""".stripMargin,
+        |ORDER BY key_col""".stripMargin)),
 
     // Join cardinality audit: |A|·|B| / max(ndv) estimate vs the actual
     // join count; estimate exact integer, error ratio one division.
-    "join_card_audit" ->
+    "join_card_audit" -> Query(Relational.joinCardAudit _, Oracle(
       """WITH a1 AS (SELECT CAST(count(*) AS BIGINT) AS n_a,
         |    CAST(count(DISTINCT o_custkey) AS BIGINT) AS ndv_a FROM orders),
         |b1 AS (SELECT CAST(count(*) AS BIGINT) AS n_b,
@@ -3838,11 +3448,11 @@ object SparkEntry {
         |    / CAST((n_a * n_b) // greatest(ndv_a, ndv_b) AS DOUBLE)
         |    AS err_ratio
         |FROM u
-        |ORDER BY join_pair""".stripMargin,
+        |ORDER BY join_pair""".stripMargin)),
 
     // t-closeness: EMD between each QI class's ordered sensitive-band
     // CDF and the global CDF, integer-exact (see Relational scaladoc).
-    "t_closeness_customers" ->
+    "t_closeness_customers" -> Query(Relational.tClosenessCustomers _, Oracle(
       """WITH c AS (
         |  SELECT c_mktsegment, CAST(c_nationkey AS BIGINT) AS c_nationkey,
         |    (CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) + 100000) // 100000
@@ -3875,11 +3485,11 @@ object SparkEntry {
         |    / CAST(max(n_c) * t.n * (t.m - 1) AS DOUBLE) AS t_dist
         |FROM cum, t
         |GROUP BY 1, 2, t.n, t.m
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin)),
 
     // k-core: six unrolled peel rounds at k=3 over the closed-form doc
     // graph — same fixed-iteration contract as the engine loop.
-    "kcore_docs" ->
+    "kcore_docs" -> Query(GraphOps.kcoreDocs _, Oracle(
       """WITH nn AS (SELECT count(*) AS n FROM documents),
         |directed AS MATERIALIZED (
         |  SELECT doc_id AS src, n_chars % nn.n AS dst FROM documents, nn
@@ -3929,9 +3539,9 @@ object SparkEntry {
         |UNION ALL SELECT CAST(6 AS BIGINT),
         |  (SELECT CAST(count(*) AS BIGINT) FROM k6),
         |  (SELECT CAST(count(*) AS BIGINT) FROM e6)
-        |ORDER BY round""".stripMargin,
+        |ORDER BY round""".stripMargin)),
 
-    "ship_latency_percentiles" ->
+    "ship_latency_percentiles" -> Query(TpchOps.shipLatencyPercentiles _, Oracle(
       """WITH gaps AS (
         |  SELECT o_orderpriority,
         |    epoch_us(l_shipdate) // 86400000000
@@ -3961,9 +3571,9 @@ object SparkEntry {
         |SELECT o_orderpriority, n, p50_days, p90_days, p99_days,
         |  CAST(sum_gap AS DOUBLE) / CAST(n AS DOUBLE) AS mean_days
         |FROM p50 JOIN p90 USING (o_orderpriority) JOIN p99 USING (o_orderpriority)
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "pareto_suppliers_80" ->
+    "pareto_suppliers_80" -> Query(TpchOps.paretoSuppliers80 _, Oracle(
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
@@ -3986,9 +3596,9 @@ object SparkEntry {
         |  CAST(t.top1_cents AS DOUBLE) / CAST(t.total_cents AS DOUBLE)
         |    AS top1_revenue_share
         |FROM c, t
-        |GROUP BY t.n_suppliers, t.total_cents, t.top1_cents""".stripMargin,
+        |GROUP BY t.n_suppliers, t.total_cents, t.top1_cents""".stripMargin)),
 
-    "open_orders_weekly" ->
+    "open_orders_weekly" -> Query(TpchOps.openOrdersWeekly _, Oracle(
       """WITH close AS (
         |  SELECT l_orderkey,
         |    max(epoch_us(l_shipdate) // 86400000000) AS close_day
@@ -4008,9 +3618,9 @@ object SparkEntry {
         |SELECT day // 7 AS week, CAST(max(open) AS BIGINT) AS peak_open,
         |  CAST(arg_max(open, day) AS BIGINT) AS week_end_open
         |FROM c GROUP BY 1
-        |ORDER BY week""".stripMargin,
+        |ORDER BY week""".stripMargin)),
 
-    "clustering_depth_audit" ->
+    "clustering_depth_audit" -> Query(Relational.clusteringDepthAudit _, Oracle(
       """WITH li AS (
         |  SELECT epoch_us(l_shipdate) // 86400000000 AS day,
         |         l_orderkey, l_linenumber
@@ -4034,12 +3644,12 @@ object SparkEntry {
         |SELECT 'shipdate', CAST(32 AS BIGINT), overlap_pairs,
         |  CAST(overlap_pairs * 2 AS DOUBLE) / CAST(32 AS DOUBLE)
         |FROM cs
-        |ORDER BY layout""".stripMargin,
+        |ORDER BY layout""".stripMargin)),
 
     // Four unrolled min-label rounds — the kcore_docs oracle pattern
     // (AS MATERIALIZED is oracle hygiene: DuckDB re-evaluates plain CTEs
     // per reference and exhausts file handles on the chain).
-    "label_prop_communities" ->
+    "label_prop_communities" -> Query(GraphOps.labelPropCommunities _, Oracle(
       """WITH nn AS (SELECT count(*) AS n FROM documents),
         |directed AS MATERIALIZED (
         |  SELECT doc_id AS src, n_chars % nn.n AS dst FROM documents, nn
@@ -4069,28 +3679,28 @@ object SparkEntry {
         |SELECT CAST(lbl AS BIGINT) AS community, CAST(count(*) AS BIGINT) AS size
         |FROM l4 GROUP BY lbl
         |ORDER BY size DESC, community
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "streak_active_days" -> SeqStatOps.Oracle.streakActiveDays,
-    "second_order_transitions" -> SeqStatOps.Oracle.secondOrderTransitions,
-    "time_to_first_purchase" -> SeqStatOps.Oracle.timeToFirstPurchase,
-    "ks_purchase_click" -> SeqStatOps.Oracle.ksPurchaseClick,
-    "spearman_daily" -> SeqStatOps.Oracle.spearmanDaily,
-    "kendall_tau_daily" -> SeqStatOps.Oracle.kendallTauDaily,
-    "quality_filter_funnel" -> SeqStatOps.Oracle.qualityFilterFunnel,
-    "dedup_yield_source" -> SeqStatOps.Oracle.dedupYieldSource,
-    "dedup_cluster_sizes" -> SeqStatOps.Oracle.dedupClusterSizes,
-    "hhi_concentration" -> SeqStatOps.Oracle.hhiConcentration,
-    "curriculum_deciles" -> SeqStatOps.Oracle.curriculumDeciles,
-    "mixture_epochs_plan" -> SeqStatOps.Oracle.mixtureEpochsPlan,
-    "local_clustering_docs" -> SeqStatOps.Oracle.localClusteringDocs,
-    "session_paths_topk" -> SeqStatOps.Oracle.sessionPathsTopk,
-    "zipf_rank_profile" -> SeqStatOps.Oracle.zipfRankProfile,
-    "feed_freshness_report" -> SeqStatOps.Oracle.feedFreshnessReport,
-    "cohort_ltv_curve" -> SeqStatOps.Oracle.cohortLtvCurve,
-    "growth_accounting_weekly" -> SeqStatOps.Oracle.growthAccountingWeekly,
+    "streak_active_days" -> Query(SeqStatOps.streakActiveDays _, Oracle(SeqStatOps.Oracle.streakActiveDays)),
+    "second_order_transitions" -> Query(SeqStatOps.secondOrderTransitions _, Oracle(SeqStatOps.Oracle.secondOrderTransitions)),
+    "time_to_first_purchase" -> Query(SeqStatOps.timeToFirstPurchase _, Oracle(SeqStatOps.Oracle.timeToFirstPurchase)),
+    "ks_purchase_click" -> Query(SeqStatOps.ksPurchaseClick _, Oracle(SeqStatOps.Oracle.ksPurchaseClick)),
+    "spearman_daily" -> Query(SeqStatOps.spearmanDaily _, Oracle(SeqStatOps.Oracle.spearmanDaily)),
+    "kendall_tau_daily" -> Query(SeqStatOps.kendallTauDaily _, Oracle(SeqStatOps.Oracle.kendallTauDaily)),
+    "quality_filter_funnel" -> Query(SeqStatOps.qualityFilterFunnel _, Oracle(SeqStatOps.Oracle.qualityFilterFunnel)),
+    "dedup_yield_source" -> Query(SeqStatOps.dedupYieldSource _, Oracle(SeqStatOps.Oracle.dedupYieldSource)),
+    "dedup_cluster_sizes" -> Query(SeqStatOps.dedupClusterSizes _, Oracle(SeqStatOps.Oracle.dedupClusterSizes)),
+    "hhi_concentration" -> Query(SeqStatOps.hhiConcentration _, Oracle(SeqStatOps.Oracle.hhiConcentration)),
+    "curriculum_deciles" -> Query(SeqStatOps.curriculumDeciles _, Oracle(SeqStatOps.Oracle.curriculumDeciles)),
+    "mixture_epochs_plan" -> Query(SeqStatOps.mixtureEpochsPlan _, Oracle(SeqStatOps.Oracle.mixtureEpochsPlan)),
+    "local_clustering_docs" -> Query(SeqStatOps.localClusteringDocs _, Oracle(SeqStatOps.Oracle.localClusteringDocs)),
+    "session_paths_topk" -> Query(SeqStatOps.sessionPathsTopk _, Oracle(SeqStatOps.Oracle.sessionPathsTopk)),
+    "zipf_rank_profile" -> Query(SeqStatOps.zipfRankProfile _, Oracle(SeqStatOps.Oracle.zipfRankProfile)),
+    "feed_freshness_report" -> Query(SeqStatOps.feedFreshnessReport _, Oracle(SeqStatOps.Oracle.feedFreshnessReport)),
+    "cohort_ltv_curve" -> Query(SeqStatOps.cohortLtvCurve _, Oracle(SeqStatOps.Oracle.cohortLtvCurve)),
+    "growth_accounting_weekly" -> Query(SeqStatOps.growthAccountingWeekly _, Oracle(SeqStatOps.Oracle.growthAccountingWeekly)),
 
-    "fk_integrity_audit" ->
+    "fk_integrity_audit" -> Query(Relational.fkIntegrityAudit _, Oracle(
       """SELECT 'customer->nation' AS fk_edge,
         |  (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_child,
         |  (SELECT CAST(count(*) AS BIGINT) FROM customer
@@ -4120,71 +3730,43 @@ object SparkEntry {
         |  (SELECT CAST(count(*) AS BIGINT) FROM supplier),
         |  (SELECT CAST(count(*) AS BIGINT) FROM supplier
         |   WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation))
-        |ORDER BY fk_edge""".stripMargin,
+        |ORDER BY fk_edge""".stripMargin)),
 
-    "basket_freq_pairs" -> BasketOps.Oracle.basketFreqPairs,
-    "basket_rules_lift" -> BasketOps.Oracle.basketRulesLift,
-    "cuped_adjusted_ab" -> CausalOps.Oracle.cupedAdjustedAb,
-    "diff_in_diff" -> CausalOps.Oracle.diffInDiff,
-    "theil_sen_daily" -> CausalOps.Oracle.theilSenDaily,
-    "winsorized_stats" -> CausalOps.Oracle.winsorizedStats,
-    "km_survival_purchase" -> CausalOps.Oracle.kmSurvivalPurchase,
-    "kruskal_wallis_value" -> StatTestOps.Oracle.kruskalWallisValue,
-    "odds_ratio_ab" -> StatTestOps.Oracle.oddsRatioAb,
-    "cramers_v2_lang_source" -> StatTestOps.Oracle.cramersV2LangSource,
-    "gini_split_stump" -> StatTestOps.Oracle.giniSplitStump,
-    "mann_kendall_trend" -> StatTestOps.Oracle.mannKendallTrend,
-    "runs_test_daily" -> StatTestOps.Oracle.runsTestDaily,
-    "bowley_skew_types" -> StatTestOps.Oracle.bowleySkewTypes,
-    "qq_deciles_pair" -> StatTestOps.Oracle.qqDecilesPair,
-    "auc_event_scores" -> EvalOps.Oracle.aucEventScores,
-    "calibration_bins" -> EvalOps.Oracle.calibrationBins,
-    "calibration_ece" -> EvalOps.Oracle.calibrationEce,
-    "cohens_kappa_lang" -> EvalOps.Oracle.cohensKappaLang,
-    "confusion_prf_lang" -> EvalOps.Oracle.confusionPrfLang,
-    "gini_revenue_segments" -> EvalOps.Oracle.giniRevenueSegments,
-    "rank_eval_bm25" -> EvalOps.Oracle.rankEvalBm25,
-    "from_json_props" ->
-      """SELECT event_type,
-        |  CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n_k,
-        |  CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-        |  CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+    "basket_freq_pairs" -> Query(BasketOps.basketFreqPairs _, Oracle(BasketOps.Oracle.basketFreqPairs)),
+    "basket_rules_lift" -> Query(BasketOps.basketRulesLift _, Oracle(BasketOps.Oracle.basketRulesLift)),
+    "cuped_adjusted_ab" -> Query(CausalOps.cupedAdjustedAb _, Oracle(CausalOps.Oracle.cupedAdjustedAb)),
+    "diff_in_diff" -> Query(CausalOps.diffInDiff _, Oracle(CausalOps.Oracle.diffInDiff)),
+    "theil_sen_daily" -> Query(CausalOps.theilSenDaily _, Oracle(CausalOps.Oracle.theilSenDaily)),
+    "winsorized_stats" -> Query(CausalOps.winsorizedStats _, Oracle(CausalOps.Oracle.winsorizedStats)),
+    "km_survival_purchase" -> Query(CausalOps.kmSurvivalPurchase _, Oracle(CausalOps.Oracle.kmSurvivalPurchase)),
+    "kruskal_wallis_value" -> Query(StatTestOps.kruskalWallisValue _, Oracle(StatTestOps.Oracle.kruskalWallisValue)),
+    "odds_ratio_ab" -> Query(StatTestOps.oddsRatioAb _, Oracle(StatTestOps.Oracle.oddsRatioAb)),
+    "cramers_v2_lang_source" -> Query(StatTestOps.cramersV2LangSource _, Oracle(StatTestOps.Oracle.cramersV2LangSource)),
+    "gini_split_stump" -> Query(StatTestOps.giniSplitStump _, Oracle(StatTestOps.Oracle.giniSplitStump)),
+    "mann_kendall_trend" -> Query(StatTestOps.mannKendallTrend _, Oracle(StatTestOps.Oracle.mannKendallTrend)),
+    "runs_test_daily" -> Query(StatTestOps.runsTestDaily _, Oracle(StatTestOps.Oracle.runsTestDaily)),
+    "bowley_skew_types" -> Query(StatTestOps.bowleySkewTypes _, Oracle(StatTestOps.Oracle.bowleySkewTypes)),
+    "qq_deciles_pair" -> Query(StatTestOps.qqDecilesPair _, Oracle(StatTestOps.Oracle.qqDecilesPair)),
+    "auc_event_scores" -> Query(EvalOps.aucEventScores _, Oracle(EvalOps.Oracle.aucEventScores)),
+    "calibration_bins" -> Query(EvalOps.calibrationBins _, Oracle(EvalOps.Oracle.calibrationBins)),
+    "calibration_ece" -> Query(EvalOps.calibrationEce _, Oracle(EvalOps.Oracle.calibrationEce)),
+    "cohens_kappa_lang" -> Query(EvalOps.cohensKappaLang _, Oracle(EvalOps.Oracle.cohensKappaLang)),
+    "confusion_prf_lang" -> Query(EvalOps.confusionPrfLang _, Oracle(EvalOps.Oracle.confusionPrfLang)),
+    "gini_revenue_segments" -> Query(EvalOps.giniRevenueSegments _, Oracle(EvalOps.Oracle.giniRevenueSegments)),
+    "rank_eval_bm25" -> Query(EvalOps.rankEvalBm25 _, Oracle(EvalOps.Oracle.rankEvalBm25)),
+    "from_json_props" -> Query(EventOps.fromJsonProps _, Oracle(jsonPropsKSql)),
 
     // VARIANT engine path (parse once → binary typed probes); the oracle is
     // the same JSON extraction as from_json_props — result parity across
     // the string-parse and VARIANT paths is the point.
-    "variant_props" ->
-      """SELECT event_type,
-        |  CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n_k,
-        |  CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-        |  CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+    "variant_props" -> Query(EventOps.variantProps _, Oracle(jsonPropsKSql)),
 
     // Spark-side recursion (WITH RECURSIVE month spine) against the same
     // generate_series oracle as calendar_months: the recursion engine's
     // seed, step, and termination all sit on the hash.
-    "recursive_month_spine" ->
-      """WITH pm AS (SELECT strftime(o_orderdate, '%Y-%m') AS ym,
-        |    CAST(count(*) AS BIGINT) AS n_orders
-        |  FROM orders GROUP BY 1),
-        |spine AS (SELECT strftime(m, '%Y-%m') AS ym FROM (
-        |  SELECT unnest(generate_series(
-        |      date_trunc('month', CAST(min(o_orderdate) AS DATE)),
-        |      date_trunc('month', CAST(max(o_orderdate) AS DATE)),
-        |      INTERVAL 1 MONTH)) AS m
-        |  FROM orders))
-        |SELECT spine.ym, coalesce(pm.n_orders, 0) AS n_orders
-        |FROM spine LEFT JOIN pm ON spine.ym = pm.ym
-        |ORDER BY spine.ym""".stripMargin,
+    "recursive_month_spine" -> Query(Relational.recursiveMonthSpine _, Oracle(monthSpineSql)),
 
-    "vocab_coverage" ->
+    "vocab_coverage" -> Query(TextAnalysisOps.vocabCoverage _, Oracle(
       """WITH toks AS (SELECT lang, UNNEST(string_split(text, ' ')) AS tok FROM documents),
         |t AS (SELECT lang, tok FROM toks WHERE length(tok) > 0),
         |vocab AS (SELECT tok AS v_tok FROM (
@@ -4197,9 +3779,9 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN v_tok IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS oov_rate
         |FROM j
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
-    "corpus_mix_weights" ->
+    "corpus_mix_weights" -> Query(TextAnalysisOps.corpusMixWeights _, Oracle(
       """WITH d AS (SELECT lang,
         |    CAST(len(list_filter(string_split(text, ' '), x -> len(x) > 0)) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -4212,18 +3794,18 @@ object SparkEntry {
         |  CAST(g.n_tokens AS DOUBLE) / CAST(t.total_tokens AS DOUBLE) AS share,
         |  CAST(t.max_tokens AS DOUBLE) / CAST(g.n_tokens AS DOUBLE) AS repeat_factor
         |FROM g, t
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin)),
 
-    "hash_sample_stratified" ->
+    "hash_sample_stratified" -> Query(TextAnalysisOps.hashSampleStratified _, Oracle(
       """WITH r AS (SELECT lang, doc_id,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
         |  FROM documents)
         |SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id
         |FROM r WHERE rk <= 10
-        |ORDER BY lang, rk""".stripMargin,
+        |ORDER BY lang, rk""".stripMargin)),
 
-    "regex_clean_stats" ->
+    "regex_clean_stats" -> Query(TextAnalysisOps.regexCleanStats _, Oracle(
       """WITH c AS (SELECT lang, text,
         |    trim(regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS clean
         |  FROM documents)
@@ -4234,10 +3816,10 @@ object SparkEntry {
         |  CAST(sum(length(clean)) AS BIGINT) AS chars_clean
         |FROM c
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "text_quality" -> TextAnalysisOps.Oracle.textQuality,
-    "doc_fingerprint" -> TextAnalysisOps.Oracle.docFingerprint,
-    "dedup_docs_simhash" -> TextAnalysisOps.Oracle.dedupDocsSimhash,
+        |ORDER BY lang""".stripMargin)),
+    "text_quality" -> Query(TextAnalysisOps.textQuality _, Oracle(TextAnalysisOps.Oracle.textQuality)),
+    "doc_fingerprint" -> Query(TextAnalysisOps.docFingerprint _, Oracle(TextAnalysisOps.Oracle.docFingerprint)),
+    "dedup_docs_simhash" -> Query(TextAnalysisOps.dedupDocsSimhash _, Oracle(TextAnalysisOps.Oracle.dedupDocsSimhash)),
 
     // Banded adaptive sign-LSH (see VectorOps.embeddingNearDup): B =
     // clamp(floor(log2 n) - 6, 4, 14) computed integer-exactly as
@@ -4248,7 +3830,7 @@ object SparkEntry {
     // engine agree BY CONSTRUCTION even on inputs with a mass-identical
     // cluster that overflows a bucket (r14 advice: the uncapped oracle
     // diverged on such inputs while fixtures never triggered it).
-    "embedding_near_dup" ->
+    "embedding_near_dup" -> Query(VectorOps.embeddingNearDup _, Oracle(
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |n AS (SELECT GREATEST(4, LEAST(16, length(bin(count(*))) - 1 - 6)) AS b FROM e),
          |s AS (SELECT vec_id, ${duckSig(0)} AS g0, ${duckSig(16)} AS g1,
@@ -4267,13 +3849,13 @@ object SparkEntry {
          |    round(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])), 6) AS sim
          |  FROM cand c JOIN e ea ON c.v1 = ea.vec_id JOIN e eb ON c.v2 = eb.vec_id)
          |SELECT v1, v2, sim FROM r WHERE sim >= 0.3
-         |ORDER BY v1, v2""".stripMargin,
+         |ORDER BY v1, v2""".stripMargin)),
 
     // Same banded-candidate + rescore CTE as embedding_near_dup (incl. the
     // kc bucket-cap fence mirroring NearDupBucketCap), then the
     // min-id-survivor decision: v2 is dominated by its max-sim (min-id
     // tie-break) earlier near-dup, everything undominated is kept.
-    "semdedup_decisions" ->
+    "semdedup_decisions" -> Query(VectorOps.semdedupDecisions _, Oracle(
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |n AS (SELECT GREATEST(4, LEAST(16, length(bin(count(*))) - 1 - 6)) AS b FROM e),
          |s AS (SELECT vec_id, ${duckSig(0)} AS g0, ${duckSig(16)} AS g1,
@@ -4298,17 +3880,17 @@ object SparkEntry {
          |SELECT e.vec_id, dom.dominated_by IS NULL AS kept,
          |  dom.dominated_by, dom.dom_sim
          |FROM e LEFT JOIN dom ON e.vec_id = dom.vec_id
-         |ORDER BY e.vec_id""".stripMargin,
+         |ORDER BY e.vec_id""".stripMargin)),
 
-    "phrase_search_pos" -> CurationOps.Oracle.phraseSearchPositional,
-    "gopher_rules_source" -> CurationOps.Oracle.gopherRulesSource,
-    "dup_token_coverage" -> CurationOps.Oracle.dupTokenCoverage,
+    "phrase_search_pos" -> Query(CurationOps.phraseSearchPositional _, Oracle(CurationOps.Oracle.phraseSearchPositional)),
+    "gopher_rules_source" -> Query(CurationOps.gopherRulesSource _, Oracle(CurationOps.Oracle.gopherRulesSource)),
+    "dup_token_coverage" -> Query(CurationOps.dupTokenCoverage _, Oracle(CurationOps.Oracle.dupTokenCoverage)),
 
     // Seeded deterministic epoch shuffle: md5(epoch ':' doc_id) is the
     // engine-portable shuffle key; the shard is its first hex DIGIT mod 8
     // (16 uniform values fold evenly onto 8); position is per-(epoch,
     // shard) — no global order anywhere.
-    "epoch_shuffle_manifest" ->
+    "epoch_shuffle_manifest" -> Query(CurationOps.epochShuffleManifest _, Oracle(
       """WITH e(epoch) AS (VALUES (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT))),
         |k AS (SELECT epoch, doc_id,
         |    md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS h
@@ -4322,9 +3904,9 @@ object SparkEntry {
         |  FROM s)
         |SELECT epoch, shard, CAST(position AS BIGINT) AS position, doc_id
         |FROM r WHERE position <= 25
-        |ORDER BY epoch, shard, position""".stripMargin,
+        |ORDER BY epoch, shard, position""".stripMargin)),
 
-    "epoch_shard_balance" ->
+    "epoch_shard_balance" -> Query(CurationOps.epochShardBalance _, Oracle(
       """WITH e(epoch) AS (VALUES (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT))),
         |k AS (SELECT epoch, doc_id,
         |    md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS h
@@ -4339,13 +3921,13 @@ object SparkEntry {
         |  CAST(floor((CAST(n_docs AS DOUBLE) * 8.0 / n_total - 1.0) * 1000 + 0.5) AS BIGINT)
         |    AS dev_permille
         |FROM c JOIN t ON c.epoch = t.epoch
-        |ORDER BY c.epoch, c.shard""".stripMargin,
-    "stream_quality_gate" -> CurationOps.Oracle.streamQualityGate,
+        |ORDER BY c.epoch, c.shard""".stripMargin)),
+    "stream_quality_gate" -> Query(StreamingEntry.streamQualityGate _, Oracle(CurationOps.Oracle.streamQualityGate)),
 
     // Exact and 5-probe IVF rankings composed in one statement; recall@5
     // is a LEFT JOIN hit count per query — both rankings deterministic,
     // so the eval itself is exact.
-    "ann_recall_ivf" ->
+    "ann_recall_ivf" -> Query(VectorOps.annRecallIvf _, Oracle(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
         |    (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
         |    + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END) + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS bucket
@@ -4366,9 +3948,9 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN apr.t_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS recall
         |FROM exr LEFT JOIN apr ON exr.q_id = apr.q_id AND exr.t_id = apr.t_id
         |GROUP BY exr.q_id
-        |ORDER BY exr.q_id""".stripMargin,
+        |ORDER BY exr.q_id""".stripMargin)),
 
-    "cos_topk_ivf" ->
+    "cos_topk_ivf" -> Query(VectorOps.cosTopkIvf _, Oracle(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
         |    (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) + (CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END)
         |    + (CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END) + (CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END) AS bucket
@@ -4382,13 +3964,13 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, t_id) AS rnk FROM s)
         |SELECT q_id, CAST(rnk AS BIGINT) AS "rank", t_id, sim
         |FROM r WHERE rnk <= 5
-        |ORDER BY q_id, "rank"""".stripMargin,
+        |ORDER BY q_id, "rank"""".stripMargin)),
 
     // ||v||² folds left-to-right over the 64 dims on both engines (Spark
     // aggregate() from 0.0, DuckDB list_reduce over the transformed list —
     // 0+t1 = t1 exactly, so the IEEE chains coincide), then quantizes to
     // integer micro-units BEFORE the cross-row sums.
-    "norm2_profile_label" ->
+    "norm2_profile_label" -> Query(VectorOps.norm2ProfileLabel _, Oracle(
       """WITH v AS (
         |  SELECT CAST(label AS BIGINT) AS label,
         |    CAST(floor(list_reduce(list_transform(embedding,
@@ -4401,7 +3983,7 @@ object SparkEntry {
         |  CAST(sum(n2_micro) AS DOUBLE) / CAST(count(*) AS DOUBLE)
         |    AS mean_n2_micro
         |FROM v GROUP BY label
-        |ORDER BY label""".stripMargin,
+        |ORDER BY label""".stripMargin)),
 
     // The `graft-vectors` DSv2 source derives labels from
     // splitmix64(seed ^ vec_id) (VectorSource.labelFor); the oracle
@@ -4410,7 +3992,7 @@ object SparkEntry {
     // xor-shift mixing on UBIGINT, and Java's floorMod via the signed
     // reinterpretation. No table input — the source is synthetic, so the
     // oracle is pure generate_series over the same pushed-down id range.
-    "vector_source_scan" ->
+    "vector_source_scan" -> Query(VectorOps.vectorSourceScan _, Oracle(
       """WITH ids AS (SELECT unnest(generate_series(1000, 1499)) AS id),
         |s0 AS (SELECT id, CAST(xor(CAST(42 AS BIGINT), id) AS UBIGINT) AS x FROM ids),
         |s1 AS (SELECT id, CAST((CAST(x AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS z FROM s0),
@@ -4422,17 +4004,17 @@ object SparkEntry {
         |s5 AS (SELECT id, CASE WHEN h >= 9223372036854775808 THEN CAST(h AS HUGEINT) - 18446744073709551616 ELSE CAST(h AS HUGEINT) END AS sgn FROM s4)
         |SELECT id AS vec_id, CAST(((sgn % 10) + 10) % 10 AS BIGINT) AS label
         |FROM s5
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
     // Closed form of the pushed-down count/min/max over the clamped id
     // range [100, 40000100) of a 50M-row synthetic table: the Spark side
     // must answer from partition bounds alone (plan-asserted O(1) rows).
-    "vector_source_agg" ->
+    "vector_source_agg" -> Query(VectorOps.vectorSourceAgg _, Oracle(
       """SELECT CAST(40000000 AS BIGINT) AS n_vecs,
         |  CAST(100 AS BIGINT) AS min_id,
-        |  CAST(40000099 AS BIGINT) AS max_id""".stripMargin,
+        |  CAST(40000099 AS BIGINT) AS max_id""".stripMargin)),
 
-    "multimodal_meta" ->
+    "multimodal_meta" -> Query(MultimodalOps.multimodalMeta _, Oracle(
       """WITH m AS (SELECT doc_id,
         |    CASE WHEN doc_id % 3 = 0 THEN 'image/png'
         |         WHEN doc_id % 3 = 1 THEN 'audio/wav' ELSE 'video/mp4' END AS mime,
@@ -4442,14 +4024,14 @@ object SparkEntry {
         |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
         |  CAST(count(DISTINCT content_hash) AS BIGINT) AS n_distinct_content,
         |  min(content_hash) AS min_hash
-        |FROM m GROUP BY mime ORDER BY mime""".stripMargin,
+        |FROM m GROUP BY mime ORDER BY mime""".stripMargin)),
 
     // Closed-form scaled dims: the Spark side really encodes, resizes, and
     // re-decodes PNGs (MultimodalOps.imageResizeDims); the oracle
     // recomputes scale = min(1, 12/w, 12/h) and floor(dim * scale) with
     // the same IEEE double operations, and r_mean is exact because
     // bilinear interpolation of a constant-fill image is the constant.
-    "image_resize_dims" ->
+    "image_resize_dims" -> Query(MultimodalOps.imageResizeDims _, Oracle(
       """WITH m AS (SELECT doc_id,
         |    CAST(8 + doc_id % 16 AS DOUBLE) AS w,
         |    CAST(8 + doc_id % 12 AS DOUBLE) AS h
@@ -4462,23 +4044,23 @@ object SparkEntry {
         |  CAST(GREATEST(1.0, floor(h * sc)) AS BIGINT) AS out_h,
         |  CAST((doc_id * 7) % 256 AS DOUBLE) AS r_mean
         |FROM s
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // n_frames and PCM byte totals are exact functions of the WAV
     // generator's frame count; the Spark side re-derives them through the
     // real container parse + frame-aligned sampling.
-    "audio_frames_meta" ->
+    "audio_frames_meta" -> Query(MultimodalOps.audioFramesMeta _, Oracle(
       """SELECT doc_id,
         |  CAST(4 AS BIGINT) AS n_frames,
         |  CAST(16 * (100 + doc_id % 200) AS BIGINT) AS pcm_bytes
         |FROM documents
         |WHERE doc_id % 3 = 1
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // The oracle re-derives the closed-form generator parameters
     // (MultimodalOps.pngDims/pngRed/wavFrames); the Spark side reads them
     // back through REAL JDK codec decodes of really-encoded PNG/WAV bytes.
-    "media_decode_meta" ->
+    "media_decode_meta" -> Query(MultimodalOps.mediaDecodeMeta _, Oracle(
       """SELECT doc_id,
         |  CASE WHEN doc_id % 3 = 0 THEN 'image/png' ELSE 'audio/wav' END AS mime,
         |  CAST(CASE WHEN doc_id % 3 = 0 THEN 8 + doc_id % 16 ELSE 0 END AS BIGINT) AS width,
@@ -4489,6 +4071,59 @@ object SparkEntry {
         |  CAST(CASE WHEN doc_id % 3 = 1 THEN 100 + doc_id % 200 ELSE 0 END AS BIGINT) AS duration_ms
         |FROM documents
         |WHERE doc_id % 3 < 2
-        |ORDER BY doc_id""".stripMargin
+        |ORDER BY doc_id""".stripMargin)),
+
+    // Keys with no SQL oracle: Verify output is checked for rows only.
+    // approximate sketches (SURVEY.md §7.4 approximate-output carve-out)
+    "agg_distinct_users_approx" -> Query(Relational.aggDistinctUsersApprox _, NoOracle(
+      "HLL estimates are engine-specific; ±5% envelope in OperatorSpec")),
+    "table_profile_approx" -> Query(Relational.tableProfileApprox _, NoOracle(
+      "HLL NDV estimates are engine-specific; table_profile_lineitem is the oracled exact twin")),
+    "value_quantiles_sketch" -> Query(Relational.valueQuantilesSketch _, NoOracle(
+      "GK sketch estimates are engine-specific")),
+    // learned or iterative kernels
+    "bpe_train_merges" -> Query(TextOps.bpeTrainMerges _, NoOracle(
+      "the greedy left-to-right merge fold is not one DuckDB statement; BpeSpec checks it against a sequential BPE")),
+    "bpe_encode_docs" -> Query(TextOps.bpeEncodeDocs _, NoOracle(
+      "encodes with the engine-trained merge table, which is not SQL-expressible")),
+    "cos_topk_ivf_kmeans" -> Query(VectorOps.cosTopkIvfKmeans _, NoOracle(
+      "the quantizer is learned (GMM over the coreset), not SQL-expressible")),
+    "cos_topk_rplsh" -> Query(VectorOps.cosTopkRplsh _, NoOracle(
+      "hyperplane draws are seeded-hash, not SQL-expressible")),
+    "cos_topk_pq" -> Query(VectorOps.cosTopkPq _, NoOracle(
+      "PQ codebook training (farthest-first kernel) is not SQL-expressible; recall vs exact pinned in PipelineOpsSpec")),
+    "kmeans_lloyd" -> Query(VectorOps.kmeansLloyd _, NoOracle(
+      "the iterative Lloyd fixpoint (GMM-seeded) is not SQL-expressible; invariants in PipelineOpsSpec")),
+    // diversity core (SURVEY.md §2.2-W): property-tested
+    "gmm_diverse_k32" -> Query(DiversityOps.gmmDiverseK32 _, NoOracle(
+      "GMM selection is not SQL-expressible")),
+    "local_search_k32" -> Query(DiversityOps.localSearchK32 _, NoOracle(
+      "local-search selection is not SQL-expressible")),
+    "matching_k32" -> Query(DiversityOps.matchingK32 _, NoOracle(
+      "matching selection is not SQL-expressible")),
+    "remote_edge_div" -> Query(DiversityOps.remoteEdgeDiv _, NoOracle(
+      "objectives of a GMM selection, which is not SQL-expressible")),
+    "remote_clique_div" -> Query(DiversityOps.remoteCliqueDiv _, NoOracle(
+      "objective of a heuristic selection, which is not SQL-expressible")),
+    "remote_star_div" -> Query(DiversityOps.remoteStarDiv _, NoOracle(
+      "objective of a GMM selection, which is not SQL-expressible")),
+    "remote_tree_div" -> Query(DiversityOps.remoteTreeDiv _, NoOracle(
+      "objective of a GMM selection, which is not SQL-expressible")),
+    "remote_bipartition_cycle_div" -> Query(DiversityOps.remoteBipartitionCycleDiv _, NoOracle(
+      "objectives of a GMM selection, which is not SQL-expressible")),
+    "coreset_exec_k64" -> Query(DiversityOps.coresetExecK64 _, NoOracle(
+      "the coreset kernel is not SQL-expressible; CoresetPlanSpec asserts plan node ≡ mapPartitions output")),
+    "coreset_stream" -> Query(DiversityOps.coresetStream _, NoOracle(
+      "the streaming-coreset kernel is not SQL-expressible")),
+    "diverse_by_label" -> Query(DiversityOps.diverseByLabel _, NoOracle(
+      "per-label streaming-coreset kernels are not SQL-expressible")),
+    "diverse_docs_k16" -> Query(DiversityOps.diverseDocsK16 _, NoOracle(
+      "Jaccard GMM document selection is not SQL-expressible")),
+    "curate_corpus_k16" -> Query(DiversityOps.curateCorpusK16 _, NoOracle(
+      "ends in a diversity selection, which is not SQL-expressible")),
+    "stream_coreset_keys" -> Query(StreamingEntry.streamCoresetKeys _, NoOracle(
+      "per-key doubling-coreset state is not SQL-expressible")),
+    "stream_coreset_tws" -> Query(StreamingEntry.streamCoresetTws _, NoOracle(
+      "the stream_coreset_keys operator on the transformWithState API (RocksDB state)"))
   )
 }

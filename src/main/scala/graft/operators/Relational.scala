@@ -10,7 +10,7 @@ import graft.sources.{Materialize, Tables}
   * Determinism protocol (SURVEY.md §7.4): every query output is totally
   * ordered with a unique-key tie-break; double aggregates are rounded (2 dp
   * money, 6 dp ratios) identically to the oracle SQL in
-  * [[graft.SparkEntry.oracleSql]]; integer-typed outputs are widened to
+  * each [[graft.SparkEntry.Oracle]]; integer-typed outputs are widened to
   * BIGINT on both sides.
   *
   * Scale posture: dimension tables (region/nation/supplier/customer-filter)

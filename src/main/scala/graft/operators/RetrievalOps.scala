@@ -127,9 +127,9 @@ object RetrievalOps {
     * `mapGroups` on the executor holding that query. At 10⁶ queries
     * that is 10⁶ independent 10-candidate groups; no driver state, no
     * global sort. Oracle parity: DuckDB replays the identical greedy
-    * via a recursive CTE + LATERAL argmax (see SparkEntry.oracleSql) —
-    * both engines walk the same integer lattice, so the selection is
-    * hash-exact, not approximately similar.
+    * via a recursive CTE + LATERAL argmax (see its Oracle in
+    * SparkEntry.queries) — both engines walk the same integer lattice,
+    * so the selection is hash-exact, not approximately similar.
     */
   def mmrRerankK8(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

@@ -7,7 +7,8 @@ Reads each <out_dir>/<name> parquet (written by `graft.Verify`), runs the
 matching oracle SQL from <out_dir>/oracle_sql.json in DuckDB against views
 over <sf_dir>/*.parquet, and compares: row count, column names (sorted),
 and every value (exact for ints/strings, == for doubles since both sides
-round identically). Exit 0 iff all match.
+round identically). An oracled key with no output directory fails as
+NO_SPARK_OUTPUT. Exit 0 iff all match.
 
 Since r11 it ALSO compares column TYPES (DuckDB rel.types for the oracle
 vs the types DuckDB reads from the Spark parquet footer). The driver's
@@ -103,6 +104,11 @@ def main():
             results[name] = f"VALUE_MISMATCH row={ri}\n    spark : {sv}\n    oracle: {ov}"
         else:
             results[name] = f"OK rows={len(srows)}"
+    # Verify writes no directory for a key whose build threw; an oracled
+    # key with no output is a failure, not a key to skip.
+    for name in oracles:
+        if name not in results and (not only or name in only):
+            results[name] = "NO_SPARK_OUTPUT"
     n_ok = sum(1 for v in results.values() if v.startswith("OK") or v.startswith("NO_ORACLE"))
     for name, v in sorted(results.items()):
         mark = "PASS" if v.startswith("OK") else ("INFO" if v.startswith("NO_ORACLE") else "FAIL")
