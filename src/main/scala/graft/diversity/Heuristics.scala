@@ -42,8 +42,7 @@ object Heuristics {
     if (n == 0 || k <= 0) return Vector.empty
     val totalMass = pts.map(_.weight).sum
     val kk = math.min(k.toLong, totalMass).toInt
-    val dist = Array.tabulate(n, n)((i, j) =>
-      if (i == j) 0.0 else Metric.dist(pts(i).vec, pts(j).vec))
+    val dist = distMatrix(pts.map(_.vec))
     val count = Array.fill(n)(0L)
     // seed: GMM over distinct points; `slots` holds the chosen copies in
     // SELECTION order — the same slot-replacement scan [[localSearch]] uses,
@@ -157,41 +156,61 @@ object Heuristics {
 
   /** Local search (R2): start from GMM's k-set, repeatedly swap a chosen
     * point for an unchosen one if it improves remote-clique by more than
-    * eps; deterministic scan order (ascending ids), first-improvement.
+    * eps; deterministic scan order (ascending ids), first-improvement. A
+    * slot's contribution is summed over the other slots in slot order from
+    * one pairwise distance matrix, computed once.
     */
   def localSearch(points: Seq[Pt], k: Int, eps: Double = 1e-9, maxIter: Int = 100): IndexedSeq[Pt] = {
     val pts = points.toArray.sortBy(_.id)
     if (pts.isEmpty || k <= 0) return Vector.empty
-    var current = Gmm.select(pts.toIndexedSeq, k).toArray
-    val currentIds = scala.collection.mutable.Set(current.map(_.id): _*)
+    val block = PointBlock(pts) // already sorted: block index i is pts(i)
+    val slots = Gmm.traverse(block.size, k)(block.sqDistsTo).centers.toArray
+    val dist = distMatrix(pts.map(_.vec))
+    val chosenIds = scala.collection.mutable.Set(slots.map(pts(_).id): _*)
+    // Σ over the slots other than s of dist(i, ·), in slot order
+    def sumToOthers(i: Int, s: Int): Double = {
+      var sum = 0.0
+      var j = 0
+      while (j < slots.length) {
+        if (j != s) sum += dist(i)(slots(j))
+        j += 1
+      }
+      sum
+    }
     var improved = true
     var iter = 0
     while (improved && iter < maxIter) {
       improved = false
       iter += 1
-      var ci = 0
-      while (!improved && ci < current.length) {
-        // clique contribution of current(ci) to the rest
-        val contrib = current.indices.filter(_ != ci)
-          .map(j => Metric.dist(current(ci).vec, current(j).vec)).sum
+      var s = 0
+      while (!improved && s < slots.length) {
+        val contrib = sumToOthers(slots(s), s)
         var pi = 0
         while (!improved && pi < pts.length) {
-          val cand = pts(pi)
-          if (!currentIds.contains(cand.id)) {
-            val candContrib = current.indices.filter(_ != ci)
-              .map(j => Metric.dist(cand.vec, current(j).vec)).sum
-            if (candContrib > contrib + eps) {
-              currentIds -= current(ci).id
-              currentIds += cand.id
-              current(ci) = cand
-              improved = true
-            }
+          if (!chosenIds.contains(pts(pi).id) && sumToOthers(pi, s) > contrib + eps) {
+            chosenIds -= pts(slots(s)).id
+            chosenIds += pts(pi).id
+            slots(s) = pi
+            improved = true
           }
           pi += 1
         }
-        ci += 1
+        s += 1
       }
     }
-    current.toIndexedSeq.sortBy(_.id)
+    slots.toIndexedSeq.map(pts(_)).sortBy(_.id)
+  }
+
+  /** Pairwise [[Metric.dist]] of `vecs`, 0 on the diagonal. Computed for
+    * i < j and mirrored: `Metric.sqDist` is exactly symmetric.
+    */
+  private def distMatrix(vecs: Array[Array[Float]]): Array[Array[Double]] = {
+    val n = vecs.length
+    val d = Array.ofDim[Double](n, n)
+    for (i <- 0 until n; j <- i + 1 until n) {
+      d(i)(j) = Metric.dist(vecs(i), vecs(j))
+      d(j)(i) = d(i)(j)
+    }
+    d
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Materialize, Tables}
 import graft.diversity._
@@ -9,17 +9,19 @@ import graft.diversity._
   * reference's own surface, re-expressed Spark-first).
   *
   * Execution shape ([VLDB17] §4, SURVEY.md §3.1): exactly one deliberate
-  * shuffle (`repartition(p)` on a deterministic key) + one executor→driver
-  * crossing (`collect()` of the p·k′-point coreset). The driver-side
-  * heuristics then run on ≤ a few hundred points. Raw embeddings are never
-  * collected — the coreset IS the scalability argument, at 100 TB exactly as
-  * at sf0.001.
+  * shuffle ([[byResidue]]: partition r holds exactly residue class
+  * vec_id % p = r) into the [[graft.plans.CoresetPlan]] node + one
+  * executor→driver crossing (`collect()` of the p·k′-point coreset). The
+  * driver-side heuristics then run on ≤ a few hundred points. Raw
+  * embeddings are never collected — the coreset IS the scalability
+  * argument, at 100 TB exactly as at sf0.001.
   *
   * Determinism (SURVEY.md §7.3.4): partition = vec_id % p (not round-robin),
   * local GMM seeded at partition-min id, global GMM seeded at coreset-min
-  * id, all tie-breaks by lowest id, distance comparisons on 12-dp-rounded
-  * squared values. p scales with the session's executor parallelism (the
-  * 100 TB posture: more executors → more, smaller local GMM problems); the
+  * id, argmax ties to the lowest id, a delegate equidistant from two
+  * centers to the earlier-selected one, distance comparisons on
+  * 12-dp-rounded squared values. p scales with the session's executor
+  * parallelism (the 100 TB posture: more executors → more, smaller local GMM problems); the
   * pmod key keeps the assignment deterministic GIVEN p, and the composable
   * coreset bound holds for every p ([VLDB17] §4), so results are
   * reproducible per cluster size — invariance ACROSS p is only exact when
@@ -59,8 +61,8 @@ object DiversityOps {
       .map { case (id, v) => Pt(id, v) }
   }
 
-  /** The distributed coreset: repartition(p) → per-partition GMM(k′) with
-    * delegate weights → coreset-only collect, sorted by id.
+  /** The distributed coreset: one exact `id % p` exchange → per-partition
+    * GMM(k′) with delegate weights → coreset-only collect, sorted by id.
     */
   def coreset(spark: SparkSession, sfDir: String): IndexedSeq[WeightedPt] =
     coresetAt(spark, sfDir, coresetParallelism(spark))
@@ -71,52 +73,58 @@ object DiversityOps {
     * boundary, because local coresets COVER their ≤ n/p-sized partitions).
     */
   private[graft] def coresetAt(spark: SparkSession, sfDir: String, p: Int): IndexedSeq[WeightedPt] = {
-    points(spark, sfDir)
-      .rdd
-      .map(pt => (pt.id, pt))
-      // Exact `id % p` partitioning (graft.plans.ModPartitioner): a
-      // DataFrame repartition(p, pmod(id, p)) HASHES the residue, lumping
-      // groups and breaking the covering condition p-invariance rests on
-      // (the r8 defect class, caught by the p-invariance spec).
-      .partitionBy(new graft.plans.ModPartitioner(p))
-      .values
-      .mapPartitions(it => MapReduceCoreset.localCoreset(it, KPrime))
+    import spark.implicits._
+    kernelRows(spark, sfDir, p)
+      .as[(Long, Array[Float], Long)]
       .collect()
+      .map { case (id, center, weight) => WeightedPt(id, center, weight) }
       .sortBy(_.id)
       .toIndexedSeq
+  }
+
+  /** Spark's own exact residue exchange, a `ShuffleExchangeExec` that
+    * EXPLAIN shows: partition r holds exactly the rows with key % p = r. A
+    * `repartition(p, pmod(key, p))` instead HASHES the residue and lumps
+    * classes (the r8 defect), which breaks the covering condition the
+    * coreset's p-invariance rests on.
+    */
+  private def byResidue[T](ds: Dataset[T], key: Column, p: Int): Dataset[T] =
+    ds.repartitionById(p, pmod(key, lit(p.toLong)).cast("int"))
+
+  /** The coreset's kernel rows `(id, center, weight)`: the embeddings go
+    * through [[byResidue]] into [[graft.plans.CoresetPlan]] →
+    * `CoresetStrategy` → `CoresetExec`, which folds each residue class with
+    * [[MapReduceCoreset.localCoreset]].
+    */
+  private def kernelRows(spark: SparkSession, sfDir: String, p: Int): DataFrame = {
+    val child = byResidue(
+      Tables.embeddings(spark, sfDir).select(col("vec_id").as("id"), col("embedding")),
+      col("id"), p)
+    org.apache.spark.sql.graftbridge.GraftPlanBridge.ofRows(
+      spark, graft.plans.CoresetPlan(child.queryExecution.analyzed, KPrime, p))
   }
 
   /** GMM selection of k from the composable coreset. */
   def selectDiverse(spark: SparkSession, sfDir: String, k: Int): IndexedSeq[Pt] =
     Gmm.select(coreset(spark, sfDir).map(w => Pt(w.id, w.vec)), k)
 
-  /** W+: the coreset map stage as a FIRST-CLASS PLAN NODE — same kernel
-    * AND same exact `id % p` partitioning as [[coreset]] (the exec node
-    * owns the distribution via [[graft.plans.ModPartitioner]] — r9 fix;
-    * the previous child-side `repartition(p, pmod(id, p))` hashed the
-    * residue and lumped groups, so the two "same kernel" paths selected
-    * from different partition contents), entering
-    * the query through [[graft.plans.CoresetPlan]] → `CoresetStrategy` →
-    * `CoresetExec` (the custom LogicalPlan/Strategy/SparkPlan extension
-    * path), so the operator is visible to EXPLAIN and the planner instead
-    * of hiding in a mapPartitions closure. Declared rows-only (the kernel
-    * is not SQL-expressible); CoresetPlanSpec asserts exec ≡ the collect
-    * path's fold and weight-mass conservation. Output here summarizes each
-    * kernel row reproducibly: (id, weight, 6-dp center norm).
+  /** W+: the coreset's kernel rows as a query — the same
+    * [[graft.plans.CoresetPlan]] rows [[coreset]] collects, so the operator
+    * is visible to EXPLAIN and the planner instead of hiding in a
+    * mapPartitions closure. Declared rows-only (the kernel is not
+    * SQL-expressible); CoresetPlanSpec asserts it against an RDD replica of
+    * the exact residue partitioning, and weight-mass conservation. Output
+    * summarizes each kernel row reproducibly: (id, weight, 6-dp center
+    * norm).
     */
-  def coresetExecK64(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = coresetParallelism(spark)
-    val child = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").as("id"), col("embedding"))
-    val kernels = org.apache.spark.sql.graftbridge.GraftPlanBridge.ofRows(
-      spark, graft.plans.CoresetPlan(child.queryExecution.analyzed, KPrime, p))
-    kernels.select(
+  def coresetExecK64(spark: SparkSession, sfDir: String): DataFrame =
+    kernelRows(spark, sfDir, coresetParallelism(spark))
+      .select(
         col("id"), col("weight"),
         round(sqrt(expr(
           "aggregate(center, 0D, (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")), 6)
           .as("c_norm"))
       .orderBy(col("id"))
-  }
 
   /** W: deterministic GMM k=32 → (rank, vec_id). No oracle (not
     * SQL-expressible); invariants are property-tested in scalatest.
@@ -256,8 +264,9 @@ object DiversityOps {
   }
 
   /** Composable bag-of-words coreset (the doc-path analogue of
-    * [[coreset]]): repartition(p) on pmod(doc_id) → per-partition GMM(32)
-    * under generalized Jaccard → coreset-only collect, sorted by id.
+    * [[coreset]]): the exact `doc_id % p` exchange ([[byResidue]]) →
+    * per-partition GMM(32) under generalized Jaccard → coreset-only
+    * collect, sorted by id.
     * p from [[coresetParallelism]] — same scale posture as the embedding
     * path; raw text/bags beyond the coreset never reach the driver.
     */
@@ -266,8 +275,7 @@ object DiversityOps {
       docs: org.apache.spark.sql.Dataset[(Long, Map[String, Int])])
       : Seq[(Long, Map[String, Int])] = {
     val p = coresetParallelism(spark)
-    docs
-      .repartition(p, pmod(col("_1"), lit(p)))
+    byResidue(docs, col("_1"), p)
       .mapPartitions { it =>
         val pts = it.toVector
         if (pts.isEmpty) Iterator.empty

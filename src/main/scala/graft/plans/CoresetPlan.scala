@@ -2,37 +2,33 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
-import graft.diversity.{MapReduceCoreset, Pt}
+import graft.diversity.{MapReduceCoreset, PointBlock}
 
 /** The whole-operator Catalyst extension path (SURVEY.md §2.2 preference
   * order (c)): the composable-coreset map task (reference operator R5) as
   * a first-class plan node — custom `LogicalPlan` → planner `Strategy` →
-  * physical `SparkPlan` — instead of an opaque `mapPartitions` lambda.
-  * Semantically identical to [[graft.operators.DiversityOps.coreset]]'s
-  * map stage (same [[MapReduceCoreset.localCoreset]] kernel, asserted
-  * equal in CoresetPlanSpec); what the plan-node form adds is planner
-  * visibility: the operator prints in `explain` as `CoresetExec k'=…`,
-  * Catalyst can prune/push below it (the child is an ordinary resolved
-  * plan), and EXPLAIN-based tooling (graft.Plans, PlanAuditSpec) can
-  * audit it like any built-in operator.
+  * physical `SparkPlan` — instead of an opaque `mapPartitions` lambda. It
+  * is the one coreset path: [[graft.operators.DiversityOps.coreset]]
+  * collects its rows and `coreset_exec_k64` summarizes them. The operator
+  * prints in `explain` as `CoresetExec k'=…`, Catalyst can prune/push below
+  * it (the child is an ordinary resolved plan), and EXPLAIN-based tooling
+  * (graft.Plans, PlanAuditSpec) can audit it like any built-in operator.
   *
   * Child contract: exactly two columns, `(id bigint, embedding
-  * array<float>)`, in any distribution: the exec node OWNS its
-  * partitioning. Catalyst's `Distribution` lattice cannot express "exact
-  * residue partition = id % p" (HashClusteredDistribution hashes the
-  * residue, lumping groups — the r8 defect), so the exec enforces R7's
-  * deterministic contract itself with an RDD-level [[ModPartitioner]],
-  * the SAME partitioner as the collect path — both paths now select
-  * kernels from identical partition contents, which is what the
-  * composable-coreset covering condition (and its p-invariance) rests
-  * on. Output: `(id, center, weight)` — ≤ k′ kernel rows per residue
-  * class, each carrying its delegate count.
+  * array<float>)`, in `p` partitions where partition r holds exactly the
+  * residue class `id % p == r` — what `Dataset.repartitionById(p,
+  * pmod(id, p))` delivers through an ordinary `ShuffleExchangeExec`. (A
+  * `repartition(p, pmod(id, p))` instead HASHES the residue and lumps
+  * classes — the r8 defect — which breaks the covering condition the
+  * composable coreset's p-invariance rests on.) The exec checks the
+  * contract on every row. Output: `(id, center, weight)` — ≤ k′ kernel
+  * rows per residue class, each carrying its delegate count.
   */
 case class CoresetPlan(child: LogicalPlan, kPrime: Int, p: Int, output: Seq[Attribute])
     extends UnaryNode {
@@ -51,22 +47,6 @@ case class CoresetPlan(child: LogicalPlan, kPrime: Int, p: Int, output: Seq[Attr
     copy(child = newChild)
 }
 
-/** Exact mod partitioner: partition index IS `id % p` (ids are non-
-  * negative by the source contract). A DataFrame `repartition(p,
-  * pmod(id, p))` instead HASHES the residue, so groups land like balls
-  * in bins; this is the honest implementation of R7's deterministic
-  * partitioning, shared by the exec node and the collect path.
-  */
-private[graft] class ModPartitioner(val p: Int) extends org.apache.spark.Partitioner {
-  override def numPartitions: Int = p
-  override def getPartition(key: Any): Int = (key.asInstanceOf[Long] % p).toInt
-  override def equals(o: Any): Boolean = o match {
-    case m: ModPartitioner => m.p == p
-    case _ => false
-  }
-  override def hashCode: Int = p
-}
-
 object CoresetPlan {
   def apply(child: LogicalPlan, kPrime: Int, p: Int): CoresetPlan =
     CoresetPlan(child, kPrime, p, Seq(
@@ -83,13 +63,12 @@ object CoresetStrategy extends SparkStrategy {
   }
 }
 
-/** Physical operator: ONE deterministic `id % p` exchange (the exec-owned
-  * distribution — see [[CoresetPlan]]) followed by per-residue-class
-  * GMM(k′) + delegate weighting. No driver involvement; the
-  * composable-coreset theorem is exactly the license to fold each
-  * residue class independently. Memory per task is O(partition) input
-  * (the GMM kernel needs its partition resident, like any mapPartitions
-  * fold) + O(k′) output.
+/** Physical operator: per-residue-class GMM(k′) + delegate weighting over
+  * the child's `id % p` partitions (see [[CoresetPlan]]). No driver
+  * involvement; the composable-coreset theorem is exactly the license to
+  * fold each residue class independently. Each row's floats are copied
+  * into one float block ([[PointBlock]], sorted by id once all rows are
+  * in), so a task holds its partition once, as floats, plus O(k′) output.
   */
 case class CoresetExec(child: SparkPlan, kPrime: Int, p: Int, output: Seq[Attribute])
     extends UnaryExecNode {
@@ -106,26 +85,21 @@ case class CoresetExec(child: SparkPlan, kPrime: Int, p: Int, output: Seq[Attrib
     // (a zero-column child here once meant memory-unsafe getLong reads).
     require(child.output.length == 2,
       s"CoresetExec child must deliver (id, embedding); got ${child.output}")
-    val k = kPrime
-    val schema = output
-    // Exec-owned distribution: key by id, exact-mod partition (rows are
-    // reused buffers — copy BEFORE they cross the shuffle serializer).
-    child.execute()
-      .mapPartitions(rows => rows.map(r => (r.getLong(0), r.copy())))
-      .partitionBy(new ModPartitioner(p))
-      .values
-      .mapPartitions { rows =>
-      // Materialize the residue class as Pts, fold with the shared
-      // kernel, then emit UNSAFE rows — the inter-operator row contract
-      // (exchanges and several consumers cast to UnsafeRow).
-      val pts = Vector.newBuilder[Pt]
+    val (k, parts, schema) = (kPrime, p, output)
+    child.execute().mapPartitionsWithIndex { (part, rows) =>
+      val block = new PointBlock.Builder
       while (rows.hasNext) {
         val r = rows.next()
-        pts += Pt(r.getLong(0), r.getArray(1).toFloatArray())
+        val id = r.getLong(0)
+        // A coalesced or split exchange would silently mix residue classes.
+        require(Math.floorMod(id, parts.toLong) == part,
+          s"CoresetExec: vec_id $id is in partition $part, not in its id % $parts class")
+        block.add(id, if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
       }
-      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(schema, schema)
-      MapReduceCoreset.localCoreset(pts.result().iterator, k).map { wp =>
+      // Emit UNSAFE rows — the inter-operator row contract (exchanges and
+      // several consumers cast to UnsafeRow).
+      val toUnsafe = UnsafeProjection.create(schema, schema)
+      MapReduceCoreset.localCoreset(block.result(), k).iterator.map { wp =>
         toUnsafe(new GenericInternalRow(Array[Any](
           wp.id, new GenericArrayData(wp.vec), wp.weight))).copy(): InternalRow
       }

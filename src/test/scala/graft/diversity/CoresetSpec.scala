@@ -36,7 +36,7 @@ class CoresetSpec extends AnyFunSuite {
   test("MapReduce coreset: local coresets conserve mass and include the partition-min id") {
     val pts = TestPoints.randomPoints(200, 8, 11)
     val parts = pts.groupBy(_.id % 4).values.toVector
-    val coresets = parts.map(p => MapReduceCoreset.localCoreset(p.iterator, 16).toVector)
+    val coresets = parts.map(p => MapReduceCoreset.localCoreset(PointBlock(p), 16))
     coresets.zip(parts).foreach { case (cs, part) =>
       assert(cs.map(_.weight).sum == part.length.toLong)
       assert(cs.exists(_.id == part.map(_.id).min), "local GMM seed (partition-min id) must survive")
@@ -55,7 +55,7 @@ class CoresetSpec extends AnyFunSuite {
     def selectWithP(p: Int): Seq[Long] = {
       val parts = pts.groupBy(x => x.id % p).values.toVector
       val union = parts.flatMap(part =>
-        MapReduceCoreset.localCoreset(part.iterator, 60).toVector)
+        MapReduceCoreset.localCoreset(PointBlock(part), 60))
       Gmm.select(union.map(w => Pt(w.id, w.vec)), 8).map(_.id)
     }
     assert(selectWithP(1) == selectWithP(2))
@@ -72,7 +72,7 @@ class CoresetSpec extends AnyFunSuite {
     def boundedWithP(p: Int): (Seq[Long], Seq[Long]) = {
       val parts = pts.groupBy(x => x.id % p).values.toVector
       val union = parts.flatMap(part =>
-        MapReduceCoreset.localCoreset(part.iterator, 80).toVector)
+        MapReduceCoreset.localCoreset(PointBlock(part), 80))
         .map(w => Pt(w.id, w.vec)).sortBy(_.id)
       val bounded = Gmm.select(union, 24)
       (bounded.map(_.id), Heuristics.matching(bounded, 8).map(_.id))

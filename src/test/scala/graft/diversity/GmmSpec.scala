@@ -78,9 +78,35 @@ class GmmSpec extends AnyFunSuite {
     for (seed <- 0 until 20) {
       val n = 20 + (seed * 31) % 100
       val pts = TestPoints.randomPoints(n, 8, seed)
-      val centers = Gmm.select(pts, 1 + seed % 12)
-      val w = Gmm.weighted(pts, centers)
+      val k = 1 + seed % 12
+      val w = MapReduceCoreset.localCoreset(PointBlock(pts), k)
+      assert(w.map(_.id) == Gmm.select(pts, k).map(_.id))
       assert(w.map(_.weight).sum == n.toLong)
+    }
+  }
+
+  test("a delegate equidistant from two centers counts toward the earlier-selected one") {
+    // Selection order is 0, 2, 1: id 2 is farthest from the seed, then
+    // id 1. Point 3 is at squared distance 13 from both id 2 and id 1, so
+    // it goes to id 2 (selected second), not to the lower id 1.
+    val pts = Vector(
+      Pt(0, Array(0f, 0f)), Pt(1, Array(6f, 6f)),
+      Pt(2, Array(10f, 0f)), Pt(3, Array(8f, 3f)))
+    val w = MapReduceCoreset.localCoreset(PointBlock(pts), 3)
+    assert(w.map(c => (c.id, c.weight)) == Vector((0L, 1L), (2L, 2L), (1L, 1L)))
+    assert(w.map(_.id) == Reference.select(pts, 3).map(_.id))
+    assert(w.map(_.weight) == Reference.weighted(pts, Reference.select(pts, 3)).map(_.weight))
+  }
+
+  test("the point block rejects a null embedding and a length mismatch, naming the vec_id") {
+    val nul = intercept[IllegalArgumentException](
+      PointBlock(Vector(Pt(1, Array(0f, 0f)), Pt(7, null))))
+    assert(nul.getMessage.contains("vec_id 7 has a null embedding"), nul.getMessage)
+    for (bad <- Seq(Array(1f), Array(1f, 2f, 3f))) {
+      val e = intercept[IllegalArgumentException](
+        Gmm.select(Vector(Pt(1, Array(0f, 0f)), Pt(7, bad)), 2))
+      assert(e.getMessage.contains(
+        s"vec_id 7 has an embedding of length ${bad.length}, but vec_id 1 has length 2"), e.getMessage)
     }
   }
 }

@@ -54,6 +54,6 @@ class HeuristicsWeightSpec extends AnyFunSuite {
     assert(re.map(_.weight).sum == weighted.map(_.weight).sum)
     assert(re.length == 10)
     // count-based weighting would have reset the mass to the point count
-    assert(Gmm.weighted(pts, centers).map(_.weight).sum == 50L)
+    assert(MapReduceCoreset.localCoreset(PointBlock(pts), 10).map(_.weight).sum == 50L)
   }
 }
