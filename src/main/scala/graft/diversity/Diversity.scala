@@ -38,23 +38,34 @@ object Diversity {
     a.indices.map(i => a.indices.filter(_ != i).map(j => d(a(i), a(j))).sum).min
   }
 
-  /** MST weight (Prim's, O(k²)). */
-  def remoteTree(s: Seq[Pt]): Double = {
-    val a = s.toIndexedSeq
-    if (a.length < 2) return 0.0
+  /** Prim's MST over `a` from point 0, O(k²): each point's tree parent
+    * (−1 at the root) and the tree weight, summed in the order points join.
+    * The next point is the lowest index among the nearest to the tree.
+    */
+  private def prim(a: IndexedSeq[Pt]): (Array[Int], Double) = {
+    val parent = Array.fill(a.length)(-1)
     val inTree = Array.fill(a.length)(false)
     val best = Array.fill(a.length)(Double.PositiveInfinity)
     inTree(0) = true
-    for (j <- a.indices if j != 0) best(j) = d(a(0), a(j))
+    for (j <- a.indices if j != 0) { best(j) = d(a(0), a(j)); parent(j) = 0 }
     var total = 0.0
     for (_ <- 1 until a.length) {
       var pick = -1
       for (j <- a.indices if !inTree(j) && (pick == -1 || best(j) < best(pick))) pick = j
       inTree(pick) = true
       total += best(pick)
-      for (j <- a.indices if !inTree(j)) best(j) = math.min(best(j), d(a(pick), a(j)))
+      for (j <- a.indices if !inTree(j)) {
+        val dj = d(a(pick), a(j))
+        if (dj < best(j)) { best(j) = dj; parent(j) = pick }
+      }
     }
-    total
+    (parent, total)
+  }
+
+  /** MST weight (Prim's, O(k²)), over the points in their given order. */
+  def remoteTree(s: Seq[Pt]): Double = {
+    val a = s.toIndexedSeq
+    if (a.length < 2) 0.0 else prim(a)._2
   }
 
   /** Greedy balanced bipartition maximizing the cross-cut sum (the exact
@@ -78,25 +89,14 @@ object Diversity {
     (for (l <- left; r <- right) yield d(l, r)).sum
   }
 
-  /** TSP tour length via MST preorder walk (2-approx for metric TSP). */
+  /** TSP tour length via MST preorder walk (2-approx for metric TSP), over
+    * the points in id order.
+    */
   def remoteCycleApprox(s: Seq[Pt]): Double = {
     val a = s.toIndexedSeq.sortBy(_.id)
     if (a.length < 2) return 0.0
     if (a.length == 2) return 2 * d(a(0), a(1))
-    // Prim's with parent tracking
-    val parent = Array.fill(a.length)(-1)
-    val inTree = Array.fill(a.length)(false)
-    val best = Array.fill(a.length)(Double.PositiveInfinity)
-    inTree(0) = true
-    for (j <- a.indices if j != 0) { best(j) = d(a(0), a(j)); parent(j) = 0 }
-    for (_ <- 1 until a.length) {
-      var pick = -1
-      for (j <- a.indices if !inTree(j) && (pick == -1 || best(j) < best(pick))) pick = j
-      inTree(pick) = true
-      for (j <- a.indices if !inTree(j) && d(a(pick), a(j)) < best(j)) {
-        best(j) = d(a(pick), a(j)); parent(j) = pick
-      }
-    }
+    val (parent, _) = prim(a)
     val children = Array.fill(a.length)(List.empty[Int])
     for (j <- a.indices if parent(j) >= 0)
       children(parent(j)) = j :: children(parent(j))

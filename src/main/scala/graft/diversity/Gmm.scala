@@ -97,17 +97,8 @@ object Gmm {
     */
   def weightedMass(points: Seq[WeightedPt], centers: IndexedSeq[Pt]): IndexedSeq[WeightedPt] = {
     val mass = Array.fill(centers.length)(0L)
-    points.foreach { p =>
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var j = 0
-      while (j < centers.length) {
-        val d = Metric.r12(Metric.sqDist(p.vec, centers(j).vec))
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
-      }
-      mass(best) += p.weight
-    }
+    val kernels = centers.map(_.vec)
+    points.foreach(p => mass(Metric.nearest(p.vec, kernels)._1) += p.weight)
     centers.zipWithIndex.map { case (c, j) => WeightedPt(c.id, c.vec, mass(j)) }
   }
 }

@@ -36,6 +36,22 @@ object Metric {
     * rounding is exact.
     */
   def r12(x: Double): Double = math.rint(x * 1e12) / 1e12
+
+  /** The kernel nearest to `v`: its index in `kernels` and its r12-rounded
+    * squared distance. Strict `<` over the kernels in order, so the earliest
+    * of equally near kernels wins; (−1, +∞) when there are none.
+    */
+  def nearest(v: Array[Float], kernels: collection.IndexedSeq[Array[Float]]): (Int, Double) = {
+    var best = -1
+    var bestD = Double.PositiveInfinity
+    var j = 0
+    while (j < kernels.length) {
+      val d = r12(sqDist(v, kernels(j)))
+      if (d < bestD) { bestD = d; best = j }
+      j += 1
+    }
+    (best, bestD)
+  }
 }
 
 /** Points of one dimension packed row-major into one contiguous float

@@ -22,7 +22,7 @@ import scala.collection.mutable.ArrayBuffer
   * preserves the same anticover invariants; the cost is O(m²) per phase,
   * which is fine for the small per-partition budgets this engine uses.
   *
-  * Invariants (property-tested in GmmSpec/CoresetSpec):
+  * Invariants (property-tested in GmmProps and CoresetSpec):
   *  - kernel count ≤ m at all times after an update completes;
   *  - surviving kernels are pairwise > δ/2 apart (distances on r12-rounded
   *    squared values);
@@ -44,18 +44,6 @@ final class StreamingCoreset(m: Int) {
   def thresholdSq: Double = deltaSq
   def pointsConsumed: Long = consumed
 
-  private def minSqTo(v: Array[Float]): (Int, Double) = {
-    var best = -1
-    var bestD = Double.PositiveInfinity
-    var i = 0
-    while (i < ids.length) {
-      val d = Metric.r12(Metric.sqDist(v, vecs(i)))
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    (best, bestD)
-  }
-
   def update(p: Pt): Unit = updateWeighted(p, 1L)
 
   /** Insert a point that already represents `w` delegates (used when
@@ -64,11 +52,7 @@ final class StreamingCoreset(m: Int) {
     */
   def updateWeighted(p: Pt, w: Long): Unit = {
     consumed += w
-    if (ids.isEmpty) {
-      ids += p.id; vecs += p.vec; weights += w
-      return
-    }
-    val (nearest, dSq) = minSqTo(p.vec)
+    val (nearest, dSq) = Metric.nearest(p.vec, vecs)
     if (dSq > deltaSq) {
       ids += p.id; vecs += p.vec; weights += w
       if (ids.length > m) overflow()
@@ -102,15 +86,7 @@ final class StreamingCoreset(m: Int) {
       val keptW = Array.fill(keep.length)(0L)
       i = 0
       while (i < ids.length) {
-        var best = 0
-        var bestD = Double.PositiveInfinity
-        var j = 0
-        while (j < keep.length) {
-          val d = Metric.r12(Metric.sqDist(vecs(i), keptVecs(j)))
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        keptW(best) += weights(i)
+        keptW(Metric.nearest(vecs(i), keptVecs)._1) += weights(i)
         i += 1
       }
       ids.clear(); ids ++= keptIds
@@ -156,6 +132,26 @@ object StreamingCoreset {
       weights: Array[Long],
       deltaSq: Double,
       consumed: Long)
+
+  /** The grouped fold: one coreset of budget `m` per run of equal keys in
+    * `rows`, each point re-entering with its weight, in input order. A run
+    * is emitted as `(key, kernel)` rows when its key changes, so only one
+    * coreset is live and the kernels depend only on the run's own rows.
+    * Feed it key-sorted rows; a key that appears in two runs gets two
+    * coresets.
+    */
+  def foldGroups[K](rows: Iterator[(K, Pt, Long)], m: Int): Iterator[(K, WeightedPt)] = {
+    val it = rows.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+      val key = it.head._1
+      val sc = new StreamingCoreset(m)
+      while (it.hasNext && it.head._1 == key) {
+        val (_, p, w) = it.next()
+        sc.updateWeighted(p, w)
+      }
+      sc.result().iterator.map(k => (key, k))
+    }
+  }
 
   def fromState(m: Int, s: State): StreamingCoreset = {
     val sc = new StreamingCoreset(m)

@@ -53,6 +53,20 @@ object DiversityOps {
     */
   val HeuristicBudget = 8 * 32
 
+  private def r6(x: Double) = math.rint(x * 1e6) / 1e6
+
+  /** The heuristics' pool: the coreset points bounded to
+    * [[HeuristicBudget]] by one more GMM pass when they exceed it.
+    */
+  private def heuristicPool(cs: IndexedSeq[Pt]): IndexedSeq[Pt] =
+    if (cs.size <= HeuristicBudget) cs else Gmm.select(cs, HeuristicBudget)
+
+  /** A selection as (rank, id) rows, rank 1 first. */
+  private def ranked(spark: SparkSession, ids: Seq[Long], idCol: String): DataFrame = {
+    import spark.implicits._
+    ids.zipWithIndex.map { case (id, i) => ((i + 1).toLong, id) }.toDF("rank", idCol)
+  }
+
   private def points(spark: SparkSession, sfDir: String) = {
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
@@ -104,9 +118,20 @@ object DiversityOps {
       spark, graft.plans.CoresetPlan(child.queryExecution.analyzed, KPrime, p))
   }
 
+  private def coresetPoints(spark: SparkSession, sfDir: String): IndexedSeq[Pt] =
+    coreset(spark, sfDir).map(w => Pt(w.id, w.vec))
+
   /** GMM selection of k from the composable coreset. */
   def selectDiverse(spark: SparkSession, sfDir: String, k: Int): IndexedSeq[Pt] =
-    Gmm.select(coreset(spark, sfDir).map(w => Pt(w.id, w.vec)), k)
+    Gmm.select(coresetPoints(spark, sfDir), k)
+
+  /** The k ∈ {8, 16, 32} sweep: GMM is prefix-greedy, so the k=8/16 sets
+    * are prefixes of the k=32 run.
+    */
+  private def prefixSweep(spark: SparkSession, sfDir: String): Seq[(Long, IndexedSeq[Pt])] = {
+    val sel32 = selectDiverse(spark, sfDir, 32)
+    Seq(8, 16, 32).map(k => (k.toLong, sel32.take(k)))
+  }
 
   /** W+: the coreset's kernel rows as a query — the same
     * [[graft.plans.CoresetPlan]] rows [[coreset]] collects, so the operator
@@ -129,13 +154,8 @@ object DiversityOps {
   /** W: deterministic GMM k=32 → (rank, vec_id). No oracle (not
     * SQL-expressible); invariants are property-tested in scalatest.
     */
-  def gmmDiverseK32(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val sel = selectDiverse(spark, sfDir, 32)
-    sel.zipWithIndex
-      .map { case (p, i) => ((i + 1).toLong, p.id) }
-      .toDF("rank", "vec_id")
-  }
+  def gmmDiverseK32(spark: SparkSession, sfDir: String): DataFrame =
+    ranked(spark, selectDiverse(spark, sfDir, 32).map(_.id), "vec_id")
 
   /** W: the R2 LOCAL-SEARCH heuristic declared directly (previously only
     * reachable through [[remoteCliqueDiv]]'s objective comparison): same
@@ -143,26 +163,16 @@ object DiversityOps {
     * swap-improvement selection of k=32. Rows-only (not SQL-expressible);
     * determinism is spec-pinned.
     */
-  def localSearchK32(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val cs = coreset(spark, sfDir).map(w => Pt(w.id, w.vec))
-    val bounded = if (cs.size <= HeuristicBudget) cs else Gmm.select(cs, HeuristicBudget)
-    Heuristics.localSearch(bounded, 32).zipWithIndex
-      .map { case (p, i) => ((i + 1).toLong, p.id) }
-      .toDF("rank", "vec_id")
-  }
+  def localSearchK32(spark: SparkSession, sfDir: String): DataFrame =
+    ranked(spark, Heuristics.localSearch(heuristicPool(coresetPoints(spark, sfDir)), 32).map(_.id),
+      "vec_id")
 
   /** W: the R3 MATCHING heuristic (greedy farthest pairs) declared
     * directly — same pool as [[localSearchK32]].
     */
-  def matchingK32(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val cs = coreset(spark, sfDir).map(w => Pt(w.id, w.vec))
-    val bounded = if (cs.size <= HeuristicBudget) cs else Gmm.select(cs, HeuristicBudget)
-    Heuristics.matching(bounded, 32).zipWithIndex
-      .map { case (p, i) => ((i + 1).toLong, p.id) }
-      .toDF("rank", "vec_id")
-  }
+  def matchingK32(spark: SparkSession, sfDir: String): DataFrame =
+    ranked(spark, Heuristics.matching(heuristicPool(coresetPoints(spark, sfDir)), 32).map(_.id),
+      "vec_id")
 
   /** W: remote-edge (plus star/tree) objective values of the chosen k=32. */
   def remoteEdgeDiv(spark: SparkSession, sfDir: String): DataFrame = {
@@ -170,9 +180,9 @@ object DiversityOps {
     val sel = selectDiverse(spark, sfDir, 32)
     Seq((
       sel.size.toLong,
-      math.rint(Diversity.remoteEdge(sel) * 1e6) / 1e6,
-      math.rint(Diversity.remoteStar(sel) * 1e6) / 1e6,
-      math.rint(Diversity.remoteTree(sel) * 1e6) / 1e6
+      r6(Diversity.remoteEdge(sel)),
+      r6(Diversity.remoteStar(sel)),
+      r6(Diversity.remoteTree(sel))
     )).toDF("k", "remote_edge", "remote_star", "remote_tree")
   }
 
@@ -185,13 +195,9 @@ object DiversityOps {
     */
   def remoteStarDiv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sel32 = selectDiverse(spark, sfDir, 32)
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
-    // GMM is prefix-greedy: the k=8/16 sets are prefixes of the k=32 run.
-    Seq(8, 16, 32).map { k =>
-      val sel = sel32.take(k)
-      (k.toLong, r6(Diversity.remoteStar(sel)))
-    }.toDF("k", "remote_star")
+    prefixSweep(spark, sfDir)
+      .map { case (k, sel) => (k, r6(Diversity.remoteStar(sel))) }
+      .toDF("k", "remote_star")
   }
 
   /** W: the R4 remote-tree (MST weight) evaluator declared directly —
@@ -201,12 +207,9 @@ object DiversityOps {
     */
   def remoteTreeDiv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sel32 = selectDiverse(spark, sfDir, 32)
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
-    Seq(8, 16, 32).map { k =>
-      val sel = sel32.take(k)
-      (k.toLong, r6(Diversity.remoteTree(sel)))
-    }.toDF("k", "remote_tree")
+    prefixSweep(spark, sfDir)
+      .map { case (k, sel) => (k, r6(Diversity.remoteTree(sel))) }
+      .toDF("k", "remote_tree")
   }
 
   /** W: the R4 bipartition (greedy max-cut heuristic) and cycle
@@ -219,12 +222,11 @@ object DiversityOps {
     */
   def remoteBipartitionCycleDiv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val sel32 = selectDiverse(spark, sfDir, 32)
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
-    Seq(8, 16, 32).map { k =>
-      val sel = sel32.take(k)
-      (k.toLong, r6(Diversity.remoteBipartitionGreedy(sel)), r6(Diversity.remoteCycleApprox(sel)))
-    }.toDF("k", "remote_bipartition", "remote_cycle")
+    prefixSweep(spark, sfDir)
+      .map { case (k, sel) =>
+        (k, r6(Diversity.remoteBipartitionGreedy(sel)), r6(Diversity.remoteCycleApprox(sel)))
+      }
+      .toDF("k", "remote_bipartition", "remote_cycle")
   }
 
   /** W: remote-clique objectives — GMM set vs matching-heuristic set vs
@@ -239,18 +241,14 @@ object DiversityOps {
   def remoteCliqueDiv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val wcs = coreset(spark, sfDir)
-    val cs = wcs.map(w => Pt(w.id, w.vec))
-    val bounded = if (cs.size <= HeuristicBudget) cs else Gmm.select(cs, HeuristicBudget)
+    val bounded = heuristicPool(wcs.map(w => Pt(w.id, w.vec)))
     // weight-carrying bound for the weighted search: re-coreset with mass
     // conservation (Gmm.weightedMass), not count-reset delegate weighting
-    val boundedW =
-      if (wcs.size <= HeuristicBudget) wcs
-      else Gmm.weightedMass(wcs, Gmm.select(cs, HeuristicBudget))
+    val boundedW = if (wcs.size <= HeuristicBudget) wcs else Gmm.weightedMass(wcs, bounded)
     val gmmSet = Gmm.select(bounded, 32)
     val matchSet = Heuristics.matching(bounded, 32)
     val lsSet = Heuristics.localSearch(bounded, 32)
     val lsWSet = Heuristics.localSearchWeighted(boundedW, 32)
-    def r6(x: Double) = math.rint(x * 1e6) / 1e6
     Seq((
       32L,
       r6(Diversity.remoteClique(gmmSet)),
@@ -263,27 +261,29 @@ object DiversityOps {
       "clique_localsearch_weighted", "bipartition_greedy", "cycle_mst2approx")
   }
 
-  /** Composable bag-of-words coreset (the doc-path analogue of
-    * [[coreset]]): the exact `doc_id % p` exchange ([[byResidue]]) →
-    * per-partition GMM(32) under generalized Jaccard → coreset-only
-    * collect, sorted by id.
-    * p from [[coresetParallelism]] — same scale posture as the embedding
-    * path; raw text/bags beyond the coreset never reach the driver.
+  /** Diverse bag-of-words selection over `(doc_id, text)` rows (the
+    * doc-path analogue of [[coreset]]): bag-of-words per doc, the exact
+    * `doc_id % p` exchange ([[byResidue]]) → per-partition GMM(32) under
+    * generalized Jaccard → coreset-only collect, sorted by id → GMM k=16,
+    * as (rank, doc_id). p from [[coresetParallelism]] — same scale posture
+    * as the embedding path; raw text/bags beyond the coreset never reach
+    * the driver.
     */
-  private def docCoreset(
-      spark: SparkSession,
-      docs: org.apache.spark.sql.Dataset[(Long, Map[String, Int])])
-      : Seq[(Long, Map[String, Int])] = {
-    val p = coresetParallelism(spark)
-    byResidue(docs, col("_1"), p)
+  private def diverseDocs(spark: SparkSession, docs: Dataset[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    val bags = docs.map { case (id, text) =>
+      (id, Distance.bagOfWords(text.split(' ').toSeq.filter(_.nonEmpty)))
+    }
+    val cs = byResidue(bags, col("_1"), coresetParallelism(spark))
       .mapPartitions { it =>
         val pts = it.toVector
         if (pts.isEmpty) Iterator.empty
         else Gmm.selectBy(pts, 32)(Distance.generalizedJaccardDist).iterator
-      }(docs.encoder)
+      }(bags.encoder)
       .collect()
       .sortBy(_._1)
       .toSeq
+    ranked(spark, Gmm.selectBy(cs, 16)(Distance.generalizedJaccardDist).map(_._1), "doc_id")
   }
 
   /** W+: diverse DOCUMENT selection — the reference's algorithm applied to
@@ -296,16 +296,8 @@ object DiversityOps {
     */
   def diverseDocsK16(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        (id, Distance.bagOfWords(text.split(' ').toSeq.filter(_.nonEmpty)))
-      }
-    val sel = Gmm.selectBy(docCoreset(spark, docs), 16)(Distance.generalizedJaccardDist)
-    sel.zipWithIndex
-      .map { case ((id, _), i) => ((i + 1).toLong, id) }
-      .toDF("rank", "doc_id")
+    diverseDocs(spark,
+      Tables.documents(spark, sfDir).select(col("doc_id"), col("text")).as[(Long, String)])
   }
 
   /** Quality-gated docs (doc_id, text): the map-side-only stage of the
@@ -366,15 +358,7 @@ object DiversityOps {
     */
   def curateCorpusK16(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = curateSurvivorDocs(spark, sfDir)
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        (id, Distance.bagOfWords(text.split(' ').toSeq.filter(_.nonEmpty)))
-      }
-    val sel = Gmm.selectBy(docCoreset(spark, docs), 16)(Distance.generalizedJaccardDist)
-    sel.zipWithIndex
-      .map { case ((id, _), i) => ((i + 1).toLong, id) }
-      .toDF("rank", "doc_id")
+    diverseDocs(spark, curateSurvivorDocs(spark, sfDir).as[(Long, String)])
   }
 
   /** W: one-pass streaming coreset (kernel budget 64) over the embeddings in
@@ -444,19 +428,8 @@ object DiversityOps {
       .sortWithinPartitions(col("label"), col("rng"), col("vec_id"))
       .as[(Long, Long, Long, Array[Float])]
       .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Array[Float], Long)]()
-        var curL = 0L; var curR = 0L
-        var cs: StreamingCoreset = null
-        def flush(): Unit =
-          if (cs != null) cs.result().foreach(k => out += ((curL, curR, k.id, k.vec, k.weight)))
-        it.foreach { case (l, r, id, emb) =>
-          if (cs == null || l != curL || r != curR) {
-            flush(); curL = l; curR = r; cs = new StreamingCoreset(m)
-          }
-          cs.update(Pt(id, emb))
-        }
-        flush()
-        out.iterator
+        StreamingCoreset.foldGroups(it.map { case (l, r, id, emb) => ((l, r), Pt(id, emb), 1L) }, m)
+          .map { case ((l, r), k) => (l, r, k.id, k.vec, k.weight) }
       }
     partials
       .toDF("label", "rng", "vec_id", "embedding", "weight")
@@ -464,17 +437,8 @@ object DiversityOps {
       .sortWithinPartitions(col("label"), col("rng"), col("vec_id"))
       .as[(Long, Long, Long, Array[Float], Long)]
       .mapPartitions { it =>
-        val res = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-        var cur = 0L
-        var cs: StreamingCoreset = null
-        def flush(): Unit =
-          if (cs != null) cs.result().foreach(k => res += ((cur, k.id, k.weight)))
-        it.foreach { case (l, _, id, emb, kw) =>
-          if (cs == null || l != cur) { flush(); cur = l; cs = new StreamingCoreset(m) }
-          cs.updateWeighted(Pt(id, emb), kw)
-        }
-        flush()
-        res.iterator
+        StreamingCoreset.foldGroups(it.map { case (l, _, id, emb, kw) => (l, Pt(id, emb), kw) }, m)
+          .map { case (l, k) => (l, k.id, k.weight) }
       }
       .toDF("label", "vec_id", "weight")
       .orderBy(col("label"), col("vec_id"))

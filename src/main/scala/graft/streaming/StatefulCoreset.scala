@@ -23,19 +23,30 @@ object StatefulCoreset {
   final case class VecEvent(key: Int, vec_id: Long, vec: Array[Float])
   final case class KernelOut(key: Int, vec_id: Long, weight: Long, consumed: Long)
 
+  /** The one R6 batch step both state APIs run: restore the key's coreset
+    * from its state (or start one), fold the batch in ascending vec_id —
+    * micro-batch iterator order is not guaranteed, and [[batchFold]] uses
+    * the same order — and return the new snapshot with the kernels to
+    * emit, each tagged with the points consumed so far.
+    */
+  def step(
+      m: Int,
+      key: Int,
+      events: Iterator[VecEvent],
+      state: Option[StreamingCoreset.State]): (StreamingCoreset.State, Iterator[KernelOut]) = {
+    val sc = state.fold(new StreamingCoreset(m))(StreamingCoreset.fromState(m, _))
+    events.toArray.sortBy(_.vec_id).foreach(e => sc.update(Pt(e.vec_id, e.vec)))
+    val consumed = sc.pointsConsumed
+    (sc.snapshot, sc.result().iterator.map(w => KernelOut(key, w.id, w.weight, consumed)))
+  }
+
   def updateGroup(m: Int)(
       key: Int,
       events: Iterator[VecEvent],
       state: GroupState[StreamingCoreset.State]): Iterator[KernelOut] = {
-    val sc = state.getOption
-      .map(s => StreamingCoreset.fromState(m, s))
-      .getOrElse(new StreamingCoreset(m))
-    // deterministic intra-batch order (micro-batch iterator order is not
-    // guaranteed): ascending vec_id, matching the batch fold protocol
-    events.toArray.sortBy(_.vec_id).foreach(e => sc.update(Pt(e.vec_id, e.vec)))
-    state.update(sc.snapshot)
-    val consumed = sc.pointsConsumed
-    sc.result().iterator.map(w => KernelOut(key, w.id, w.weight, consumed))
+    val (next, out) = step(m, key, events, state.getOption)
+    state.update(next)
+    out
   }
 
   /** Wire the operator onto a stream of [[VecEvent]]. */
@@ -61,9 +72,9 @@ object StatefulCoreset {
     * `init`, RocksDB-backed (the API requires the RocksDB provider —
     * see [[graft.streaming.StreamingEntry.streamCoresetTws]] for the
     * session pin), with TTL and timers available per state. One
-    * ValueState holds the O(m) coreset snapshot per key; update logic
-    * and emissions are byte-identical to [[updateGroup]], and
-    * StatefulCoresetSpec asserts the two APIs' final kernels are equal.
+    * ValueState holds the O(m) coreset snapshot per key; both forms run
+    * [[step]], and StatefulCoresetSpec asserts the two APIs' final kernels
+    * are equal.
     */
   class CoresetProcessor(m: Int) extends StatefulProcessor[Int, VecEvent, KernelOut] {
     @transient private var kernels: ValueState[StreamingCoreset.State] = _
@@ -76,13 +87,9 @@ object StatefulCoreset {
         key: Int,
         rows: Iterator[VecEvent],
         timerValues: TimerValues): Iterator[KernelOut] = {
-      val sc =
-        if (kernels.exists()) StreamingCoreset.fromState(m, kernels.get())
-        else new StreamingCoreset(m)
-      rows.toArray.sortBy(_.vec_id).foreach(e => sc.update(Pt(e.vec_id, e.vec)))
-      kernels.update(sc.snapshot)
-      val consumed = sc.pointsConsumed
-      sc.result().iterator.map(w => KernelOut(key, w.id, w.weight, consumed))
+      val (next, out) = step(m, key, rows, Option.when(kernels.exists())(kernels.get()))
+      kernels.update(next)
+      out
     }
   }
 

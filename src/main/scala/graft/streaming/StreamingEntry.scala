@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode, ValueState}
 import graft.sources.Tables
 
 /** Row shape fed through the driver-visible streaming entry. */
@@ -67,10 +68,7 @@ object StreamingEntry {
     * each (state must carry across batches — the thing a single batch
     * can't prove).
     */
-  private def feedChunks[A](
-      stream: MemoryStream[A],
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      xs: Seq[A]): Unit =
+  private def feedChunks[A](stream: MemoryStream[A], q: StreamingQuery, xs: Seq[A]): Unit =
     xs.grouped(math.max(1, (xs.size + 2) / 3)).foreach { chunk =>
       stream.addData(chunk)
       q.processAllAvailable()
@@ -79,6 +77,18 @@ object StreamingEntry {
   private def wipeDir(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(wipeDir)
     f.delete(): Unit
+  }
+
+  /** Set session confs around `body` and restore each afterwards (unset
+    * when it had no value). A streaming query reads them when it STARTS.
+    */
+  private def withConf[A](spark: SparkSession, pins: (String, String)*)(body: => A): A = {
+    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   /** Pin a small streaming-state partition count for the harness entries.
@@ -94,44 +104,59 @@ object StreamingEntry {
     * so setting it around `start()` and restoring afterwards is safe —
     * and scale-neutral: a production job over real volume starts under
     * the cluster-sized default and gets wide state automatically.
+    *
+    * No-data micro-batches only advance the watermark for state GC /
+    * watermark-only emission; every declared entry emits from DATA
+    * batches (append joins/dedup emit on arrival, complete/update modes
+    * rewrite per batch, and the append-finalization entries force their
+    * emission pass with an explicit replay batch) — so skipping them is
+    * output-equivalent and removes 1-2 full state-store commit rounds per
+    * entry (measured 2.9 s → 2.1 s on the stream-stream join). Production
+    * jobs run under the default (true): a live stream WANTS windows to
+    * finalize during input lulls; a bounded harness feed has no lull to
+    * cover.
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val partKey = "spark.sql.shuffle.partitions"
-    val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevPart = spark.conf.get(partKey)
-    val prevNdb = spark.conf.get(ndbKey, "true")
-    spark.conf.set(partKey, n.toString)
-    // No-data micro-batches only advance the watermark for state GC /
-    // watermark-only emission; every declared entry emits from DATA
-    // batches (append joins/dedup emit on arrival, complete/update modes
-    // rewrite per batch, and the append-finalization entry forces its
-    // emission pass with an explicit replay batch) — so skipping them is
-    // output-equivalent and removes 1-2 full state-store commit rounds
-    // per entry (measured 2.9 s → 2.1 s on the stream-stream join).
-    // Production jobs run under the default (true): a live stream WANTS
-    // windows to finalize during input lulls; a bounded harness feed has
-    // no lull to cover.
-    spark.conf.set(ndbKey, "false")
-    try body finally {
-      spark.conf.set(partKey, prevPart)
-      spark.conf.set(ndbKey, prevNdb)
+  private def withStatePartitions[A](spark: SparkSession)(body: => A): A =
+    withConf(spark, StatePins: _*)(body)
+
+  private val StatePins = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** The RocksDB state store, which `transformWithState` requires. */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The memory-sink harness: inside [[withStatePartitions]] (and on the
+    * RocksDB state store with `rocksDb`), start `query` into the memory
+    * sink `name` in output mode `mode`, run `feed`, always stop the query,
+    * and return the sink's table. `query` is by-name, so it is built inside
+    * the pin.
+    */
+  private def memorySink(spark: SparkSession, name: String, mode: String, rocksDb: Boolean = false)(
+      query: => Dataset[_])(feed: StreamingQuery => Unit): DataFrame = {
+    withConf(spark, StatePins ++ (if (rocksDb) Seq(RocksDbProvider) else Nil): _*) {
+      val q = query.writeStream.format("memory").queryName(name).outputMode(mode).start()
+      try feed(q) finally q.stop()
     }
+    spark.table(name)
   }
+
+  /** The rows of each `key`'s final emission in an update-mode sink: those
+    * with the key's max `counter`, a count that grows with every emission.
+    * A window, not a self-join: the memory-sink view cannot be self-joined
+    * without conflicting attribute references.
+    */
+  private def latestPerKey(key: String, counter: String)(df: DataFrame): DataFrame =
+    df.withColumn("max_c", max(col(counter)).over(Window.partitionBy(col(key))))
+      .filter(col(counter) === col("max_c"))
 
   def streamTumblingEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_entry")
-        .outputMode("complete").start()
-      try {
-        feedChunks(stream, q, slice)
-      } finally q.stop()
-    }
-
-    spark.table("graft_stream_entry")
+    memorySink(spark, "graft_stream_entry", "complete")(
+      StreamingQueries.tumblingStream(withTs(stream.toDF())))(feedChunks(stream, _, slice))
       .select(col("ws_us"), col("event_type"), col("n"), col("sum_cents"))
       .orderBy(col("ws_us"), col("event_type"))
   }
@@ -157,15 +182,9 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
-        .select(col("ws_us"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName("graft_stream_update")
-        .outputMode("update").start()
-      try feedChunks(stream, q, slice) finally q.stop()
-    }
-
-    spark.table("graft_stream_update")
+    memorySink(spark, "graft_stream_update", "update")(
+      StreamingQueries.tumblingStream(withTs(stream.toDF()))
+        .select(col("ws_us"), col("event_type"), col("n")))(feedChunks(stream, _, slice))
       .groupBy(col("ws_us"), col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("ws_us"), col("event_type"))
@@ -182,16 +201,8 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.slidingStream(withTs(stream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_sliding")
-        .outputMode("complete").start()
-      try {
-        feedChunks(stream, q, slice)
-      } finally q.stop()
-    }
-
-    spark.table("graft_stream_sliding")
+    memorySink(spark, "graft_stream_sliding", "complete")(
+      StreamingQueries.slidingStream(withTs(stream.toDF())))(feedChunks(stream, _, slice))
       .select(col("ws_us"), col("event_type"), col("n"), col("sum_cents"))
       .orderBy(col("ws_us"), col("event_type"))
   }
@@ -209,16 +220,8 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.sessionStream(withTs(stream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_session")
-        .outputMode("complete").start()
-      try {
-        feedChunks(stream, q, slice)
-      } finally q.stop()
-    }
-
-    spark.table("graft_stream_session")
+    memorySink(spark, "graft_stream_session", "complete")(
+      StreamingQueries.sessionStream(withTs(stream.toDF())))(feedChunks(stream, _, slice))
       .select(col("user_id"), col("session_start_us"), col("n_events"))
       .orderBy(col("user_id"), col("session_start_us"))
   }
@@ -240,27 +243,21 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.dedupStream(withTs(stream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_dedup")
-        .outputMode("append").start()
-      try {
-        val hourUs = 3600L * 1000000L
-        val chunks = slice.grouped(math.max(1, (slice.size + 2) / 3)).toSeq
-        chunks.zipWithIndex.foreach { case (chunk, i) =>
-          val replay = if (i == 0) Seq.empty
-          else {
-            val prev = chunks(i - 1)
-            val front = prev.map(_.ts_us).max - hourUs
-            prev.filter(_.ts_us >= front).take(500) ++ prev.take(50)
-          }
-          stream.addData(replay ++ chunk)
-          q.processAllAvailable()
+    memorySink(spark, "graft_stream_dedup", "append")(
+      StreamingQueries.dedupStream(withTs(stream.toDF()))) { q =>
+      val hourUs = 3600L * 1000000L
+      val chunks = slice.grouped(math.max(1, (slice.size + 2) / 3)).toSeq
+      chunks.zipWithIndex.foreach { case (chunk, i) =>
+        val replay = if (i == 0) Seq.empty
+        else {
+          val prev = chunks(i - 1)
+          val front = prev.map(_.ts_us).max - hourUs
+          prev.filter(_.ts_us >= front).take(500) ++ prev.take(50)
         }
-      } finally q.stop()
+        stream.addData(replay ++ chunk)
+        q.processAllAvailable()
+      }
     }
-
-    spark.table("graft_stream_dedup")
       .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -279,23 +276,17 @@ object StreamingEntry {
     * (latestOffset never saturates) with the sink swapped for an
     * append/update store.
     */
-  def streamVectorSource(spark: SparkSession, sfDir: String): DataFrame = {
-    withStatePartitions(spark, 4) {
-      val q = spark.readStream.format("graft-vectors")
+  def streamVectorSource(spark: SparkSession, sfDir: String): DataFrame =
+    memorySink(spark, "graft_stream_vecsource", "complete")(
+      spark.readStream.format("graft-vectors")
         .option("n", 20000).option("dim", 8).option("seed", 42)
         .option("partitions", 4).option("rowsPerBatch", 6000)
         .load()
         .select(col("vec_id"), col("label"))
         .groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum"))
-        .writeStream.format("memory").queryName("graft_stream_vecsource")
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table("graft_stream_vecsource")
+        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_sum")))(_.processAllAvailable())
       .select(col("label").cast("long").as("label"), col("n_vecs"), col("id_sum"))
       .orderBy(col("label"))
-  }
 
   /** DECLARED append-mode watermark-finalization entry: the PRODUCTION
     * emission semantics for windowed aggregates — each tumbling window is
@@ -314,26 +305,20 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_append")
-        .outputMode("append").start()
-      try {
-        feedChunks(stream, q, slice)
-        // One more DATA batch re-sending the already-seen max-ts event: it
-        // runs under the watermark computed after chunk 3, deterministically
-        // forcing the final emission pass (processAllAvailable alone can
-        // return before the watermark-advance no-data batch commits). The
-        // replayed row only increments the slice's LAST window — which ends
-        // after the final watermark and is never emitted — so the appended
-        // result is unaffected, and the watermark cannot move (the max is
-        // unchanged).
-        stream.addData(Seq(slice.last))
-        q.processAllAvailable()
-      } finally q.stop()
+    memorySink(spark, "graft_stream_append", "append")(
+      StreamingQueries.tumblingStream(withTs(stream.toDF()))) { q =>
+      feedChunks(stream, q, slice)
+      // One more DATA batch re-sending the already-seen max-ts event: it
+      // runs under the watermark computed after chunk 3, deterministically
+      // forcing the final emission pass (processAllAvailable alone can
+      // return before the watermark-advance no-data batch commits). The
+      // replayed row only increments the slice's LAST window — which ends
+      // after the final watermark and is never emitted — so the appended
+      // result is unaffected, and the watermark cannot move (the max is
+      // unchanged).
+      stream.addData(Seq(slice.last))
+      q.processAllAvailable()
     }
-
-    spark.table("graft_stream_append")
       .select(col("ws_us"), col("event_type"), col("n"), col("sum_cents"))
       .orderBy(col("ws_us"), col("event_type"))
   }
@@ -369,14 +354,10 @@ object StreamingEntry {
       staged.createNewFile(): Unit
     }
     val schema = org.apache.spark.sql.Encoders.product[StreamEvent].schema
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.tumblingAgg(withTs(
-          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)))
-        .writeStream.format("memory").queryName("graft_stream_filesrc")
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table("graft_stream_filesrc")
+    memorySink(spark, "graft_stream_filesrc", "complete")(
+      StreamingQueries.tumblingAgg(withTs(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir))))(
+      _.processAllAvailable())
       .select(col("ws_us"), col("event_type"), col("n"), col("sum_cents"))
       .orderBy(col("ws_us"), col("event_type"))
   }
@@ -405,7 +386,7 @@ object StreamingEntry {
     val ckDir = new java.io.File(base, "ck").getPath
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
         .writeStream.format("parquet")
         .option("path", outDir)
@@ -447,7 +428,7 @@ object StreamingEntry {
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
     @volatile var current: Option[String] = None
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDF()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -514,7 +495,7 @@ object StreamingEntry {
       .orderBy(col("doc_id")).limit(2000)
       .as[DocEvent].collect().toSeq
     val stream = MemoryStream[DocEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDF()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -575,7 +556,7 @@ object StreamingEntry {
       .orderBy(col("doc_id")).limit(2000)
       .as[DocEvent].collect().toSeq
     val stream = MemoryStream[DocEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDF()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -617,7 +598,7 @@ object StreamingEntry {
       .orderBy(col("vec_id"))
       .as[VecQuery].collect().toSeq
     val stream = MemoryStream[VecQuery](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDF()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -659,7 +640,7 @@ object StreamingEntry {
       .orderBy(col("doc_id")).limit(2000)
       .as[DocSrcEvent].collect().toSeq
     val stream = MemoryStream[DocSrcEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDF()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -684,47 +665,9 @@ object StreamingEntry {
     * kernels per key at any stream length. Rows-only (diversity op, not
     * SQL-expressible), deterministic by the §7.3.4 protocol.
     */
-  def streamCoresetKeys(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pts = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(1024)
-      .as[(Long, Array[Float])]
-      .collect().toSeq
-      .map { case (id, v) => StatefulCoreset.VecEvent((id % 4).toInt, id, v) }
-
-    val stream = MemoryStream[StatefulCoreset.VecEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StatefulCoreset.kernels(stream.toDS(), m = 16)
-        .writeStream.format("memory").queryName("graft_stream_coreset")
-        .outputMode("update").start()
-      try {
-        feedChunks(stream, q, pts)
-      } finally q.stop()
-    }
-
-    // final snapshot per key = the emission with that key's max `consumed`
-    // (window, not a self-join: the memory-sink view cannot be self-joined
-    // without conflicting attribute references)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
-    spark.table("graft_stream_coreset")
-      .withColumn("max_c", max(col("consumed")).over(w))
-      .filter(col("consumed") === col("max_c"))
-      .select(col("key"), col("vec_id"), col("weight"))
-      .orderBy(col("key"), col("vec_id"))
-  }
-
-  /** Pin one session conf around a streaming start (captured at query
-    * start, like the state partition count).
-    */
-  private def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def streamCoresetKeys(spark: SparkSession, sfDir: String): DataFrame =
+    streamCoreset(spark, sfDir, "graft_stream_coreset", rocksDb = false)(
+      StatefulCoreset.kernels(_, m = 16))
 
   /** DECLARED `transformWithState` coreset entry: the SAME per-key
     * doubling-coreset operator as [[streamCoresetKeys]], on Spark 4's
@@ -737,7 +680,17 @@ object StreamingEntry {
     * state APIs are interchangeable carriers of operator R6. Rows-only
     * like every diversity op.
     */
-  def streamCoresetTws(spark: SparkSession, sfDir: String): DataFrame = {
+  def streamCoresetTws(spark: SparkSession, sfDir: String): DataFrame =
+    streamCoreset(spark, sfDir, "graft_stream_coreset_tws", rocksDb = true)(
+      StatefulCoreset.kernelsTws(_, m = 16))
+
+  /** The stateful-coreset harness both coreset entries share: the first
+    * 1024 embeddings by vec_id, keyed by vec_id % 4, fed to `operator` in
+    * three micro-batches; each key's final kernels.
+    */
+  private def streamCoreset(spark: SparkSession, sfDir: String, name: String, rocksDb: Boolean)(
+      operator: Dataset[StatefulCoreset.VecEvent] => Dataset[StatefulCoreset.KernelOut])
+      : DataFrame = {
     import spark.implicits._
     val pts = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
@@ -745,27 +698,9 @@ object StreamingEntry {
       .as[(Long, Array[Float])]
       .collect().toSeq
       .map { case (id, v) => StatefulCoreset.VecEvent((id % 4).toInt, id, v) }
-
     val stream = MemoryStream[StatefulCoreset.VecEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = StatefulCoreset.kernelsTws(stream.toDS(), m = 16)
-          .writeStream.format("memory").queryName("graft_stream_coreset_tws")
-          .outputMode("update").start()
-        try {
-          pts.grouped(math.max(1, (pts.size + 2) / 3)).foreach { chunk =>
-            stream.addData(chunk)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
-    }
-
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
-    spark.table("graft_stream_coreset_tws")
-      .withColumn("max_c", max(col("consumed")).over(w))
-      .filter(col("consumed") === col("max_c"))
+    memorySink(spark, name, "update", rocksDb)(operator(stream.toDS()))(feedChunks(stream, _, pts))
+      .transform(latestPerKey("key", "consumed"))
       .select(col("key"), col("vec_id"), col("weight"))
       .orderBy(col("key"), col("vec_id"))
   }
@@ -789,26 +724,18 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = withTs(stream.toDF())
-          .withWatermark("ts_utc", "1 hour")
-          .as[StreamEvent]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new SessionProcessor(gapUs = 30L * 60L * 1000000L),
-            TimeMode.EventTime(), OutputMode.Append())
-          .writeStream.format("memory").queryName("graft_stream_sess_tws")
-          .outputMode("append").start()
-        try {
-          feedChunks(stream, q, slice)
-          stream.addData(Seq(slice.last)) // deterministic timer-firing pass
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+    memorySink(spark, "graft_stream_sess_tws", "append", rocksDb = true)(
+      withTs(stream.toDF())
+        .withWatermark("ts_utc", "1 hour")
+        .as[StreamEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new SessionProcessor(gapUs = 30L * 60L * 1000000L),
+          TimeMode.EventTime(), OutputMode.Append())) { q =>
+      feedChunks(stream, q, slice)
+      stream.addData(Seq(slice.last)) // deterministic timer-firing pass
+      q.processAllAvailable()
     }
-    spark.table("graft_stream_sess_tws")
       .select(col("user_id"), col("session_start_us"), col("n_events"))
       .orderBy(col("user_id"), col("session_start_us"))
   }
@@ -829,20 +756,13 @@ object StreamingEntry {
     val slice = eventSlice(spark, sfDir)
     val pStream = MemoryStream[StreamEvent](spark)
     val sStream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.purchaseSignupStream(
-          withTs(pStream.toDF()), withTs(sStream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_ssj")
-        .outputMode("append").start()
-      try {
-        sStream.addData(slice.filter(_.event_type == "signup"))
-        q.processAllAvailable()
-        pStream.addData(slice.filter(_.event_type == "purchase"))
-        q.processAllAvailable()
-      } finally q.stop()
+    memorySink(spark, "graft_stream_ssj", "append")(
+      StreamingQueries.purchaseSignupStream(withTs(pStream.toDF()), withTs(sStream.toDF()))) { q =>
+      sStream.addData(slice.filter(_.event_type == "signup"))
+      q.processAllAvailable()
+      pStream.addData(slice.filter(_.event_type == "purchase"))
+      q.processAllAvailable()
     }
-
-    spark.table("graft_stream_ssj")
       .select(col("p_id"), col("s_id"), col("user_id"))
       .orderBy(col("p_id"), col("s_id"))
   }
@@ -878,23 +798,17 @@ object StreamingEntry {
     val flushTs = slice.map(_.ts_us).max + 30L * 24 * 3600 * 1000000L
     val pStream = MemoryStream[StreamEvent](spark)
     val sStream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.purchaseSignupLeftStream(
-          withTs(pStream.toDF()), withTs(sStream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_ssj_outer")
-        .outputMode("append").start()
-      try {
-        sStream.addData(slice.filter(_.event_type == "signup") :+
-          StreamEvent(-2L, flushTs, -2L, "signup", 0.0))
-        pStream.addData(slice.filter(_.event_type == "purchase") :+
-          StreamEvent(-1L, flushTs, -1L, "purchase", 0.0))
-        q.processAllAvailable()
-        pStream.addData(Seq(StreamEvent(-3L, flushTs, -1L, "purchase", 0.0)))
-        q.processAllAvailable()
-      } finally q.stop()
+    memorySink(spark, "graft_stream_ssj_outer", "append")(
+      StreamingQueries.purchaseSignupLeftStream(
+        withTs(pStream.toDF()), withTs(sStream.toDF()))) { q =>
+      sStream.addData(slice.filter(_.event_type == "signup") :+
+        StreamEvent(-2L, flushTs, -2L, "signup", 0.0))
+      pStream.addData(slice.filter(_.event_type == "purchase") :+
+        StreamEvent(-1L, flushTs, -1L, "purchase", 0.0))
+      q.processAllAvailable()
+      pStream.addData(Seq(StreamEvent(-3L, flushTs, -1L, "purchase", 0.0)))
+      q.processAllAvailable()
     }
-
-    spark.table("graft_stream_ssj_outer")
       .filter(col("user_id") >= 0)
       .select(col("p_id"), col("s_id"), col("user_id"))
       .orderBy(col("p_id"), col("s_id"))
@@ -919,23 +833,17 @@ object StreamingEntry {
     val flushTs = slice.map(_.ts_us).max + 30L * 24 * 3600 * 1000000L
     val pStream = MemoryStream[StreamEvent](spark)
     val sStream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.purchaseSignupFullStream(
-          withTs(pStream.toDF()), withTs(sStream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_ssj_full")
-        .outputMode("append").start()
-      try {
-        sStream.addData(slice.filter(_.event_type == "signup") :+
-          StreamEvent(-2L, flushTs, -2L, "signup", 0.0))
-        pStream.addData(slice.filter(_.event_type == "purchase") :+
-          StreamEvent(-1L, flushTs, -1L, "purchase", 0.0))
-        q.processAllAvailable()
-        pStream.addData(Seq(StreamEvent(-3L, flushTs, -1L, "purchase", 0.0)))
-        q.processAllAvailable()
-      } finally q.stop()
+    memorySink(spark, "graft_stream_ssj_full", "append")(
+      StreamingQueries.purchaseSignupFullStream(
+        withTs(pStream.toDF()), withTs(sStream.toDF()))) { q =>
+      sStream.addData(slice.filter(_.event_type == "signup") :+
+        StreamEvent(-2L, flushTs, -2L, "signup", 0.0))
+      pStream.addData(slice.filter(_.event_type == "purchase") :+
+        StreamEvent(-1L, flushTs, -1L, "purchase", 0.0))
+      q.processAllAvailable()
+      pStream.addData(Seq(StreamEvent(-3L, flushTs, -1L, "purchase", 0.0)))
+      q.processAllAvailable()
     }
-
-    spark.table("graft_stream_ssj_full")
       .filter(col("user_id") >= 0)
       .select(col("p_id"), col("s_id"), col("user_id"))
       .orderBy(col("p_id"), col("s_id"))
@@ -954,20 +862,14 @@ object StreamingEntry {
     val slice = eventSlice(spark, sfDir)
     val pStream = MemoryStream[StreamEvent](spark)
     val sStream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.purchaseSignupSemiStream(
-          withTs(pStream.toDF()), withTs(sStream.toDF()))
-        .writeStream.format("memory").queryName("graft_stream_ssj_semi")
-        .outputMode("append").start()
-      try {
-        sStream.addData(slice.filter(_.event_type == "signup"))
-        q.processAllAvailable()
-        pStream.addData(slice.filter(_.event_type == "purchase"))
-        q.processAllAvailable()
-      } finally q.stop()
+    memorySink(spark, "graft_stream_ssj_semi", "append")(
+      StreamingQueries.purchaseSignupSemiStream(
+        withTs(pStream.toDF()), withTs(sStream.toDF()))) { q =>
+      sStream.addData(slice.filter(_.event_type == "signup"))
+      q.processAllAvailable()
+      pStream.addData(slice.filter(_.event_type == "purchase"))
+      q.processAllAvailable()
     }
-
-    spark.table("graft_stream_ssj_semi")
       .select(col("p_id"), col("user_id"))
       .orderBy(col("p_id"))
   }
@@ -986,15 +888,9 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      val q = StreamingQueries.enrichAgg(
-          stream.toDF(), Tables.customer(spark, sfDir))
-        .writeStream.format("memory").queryName("graft_stream_enrich")
-        .outputMode("complete").start()
-      try feedChunks(stream, q, slice) finally q.stop()
-    }
-
-    spark.table("graft_stream_enrich")
+    memorySink(spark, "graft_stream_enrich", "complete")(
+      StreamingQueries.enrichAgg(stream.toDF(), Tables.customer(spark, sfDir)))(
+      feedChunks(stream, _, slice))
       .select(col("nationkey"), col("n"), col("sum_cents"))
       .orderBy(col("nationkey"))
   }
@@ -1018,7 +914,7 @@ object StreamingEntry {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_tt").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_tt_ckpt").toString
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDS()
         .select(col("event_id"), expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"))
         .writeStream.format("graft-atomic-dir")
@@ -1053,7 +949,7 @@ object StreamingEntry {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_sink_ckpt").toString
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = stream.toDS()
         .select(col("event_id"), expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("c"))
         .writeStream.format("graft-atomic-dir")
@@ -1240,22 +1136,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.event_type)
-          .transformWithState(new DistinctUsersProcessor, TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_distinct")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("n_events").desc)
-    spark.table("graft_stream_distinct")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    memorySink(spark, "graft_stream_distinct", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.event_type)
+        .transformWithState(new DistinctUsersProcessor, TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("event_type", "n_events"))
       .select(col("event_type"), col("n_users"), col("n_events"))
       .orderBy(col("event_type"))
   }
@@ -1301,24 +1187,17 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new RecentEventsProcessor, TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_recent")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
     // final emission per user = longest recent_ids string wins is wrong —
     // take the emission from the LAST batch the user appeared in: the max
     // last id inside the string is monotone with arrival, so rank on it
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(col("user_id"))
       .orderBy(expr("CAST(element_at(split(recent_ids, ','), -1) AS BIGINT)").desc)
-    spark.table("graft_stream_recent")
+    memorySink(spark, "graft_stream_recent", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new RecentEventsProcessor, TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("recent_ids"))
@@ -1382,32 +1261,20 @@ object StreamingEntry {
     val slice = eventSlice(spark, sfDir)
     val (warm, live) = slice.splitAt(slice.length / 2)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val initial = spark.createDataset(warm)
-          .groupByKey(_.event_type)
-          .mapGroups { (t, es) =>
-            var n = 0L; var s = 0L
-            es.foreach { e => n += 1; s += math.floor(e.value * 100 + 0.5).toLong }
-            (t, n, s)
-          }
-          .groupByKey(_._1).mapValues(t => (t._2, t._3))
-        val q = stream.toDS()
-          .groupByKey(_.event_type)
-          .transformWithState(new WarmStartProcessor, TimeMode.None(),
-            OutputMode.Update(), initial)
-          .writeStream.format("memory").queryName("graft_stream_warm")
-          .outputMode("update").start()
-        try feedChunks(stream, q, live) finally q.stop()
-      }
-    }
-    // final emission per type = the row with the max running n (monotonic)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("n").desc)
-    spark.table("graft_stream_warm")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    memorySink(spark, "graft_stream_warm", "update", rocksDb = true) {
+      val initial = spark.createDataset(warm)
+        .groupByKey(_.event_type)
+        .mapGroups { (t, es) =>
+          var n = 0L; var s = 0L
+          es.foreach { e => n += 1; s += math.floor(e.value * 100 + 0.5).toLong }
+          (t, n, s)
+        }
+        .groupByKey(_._1).mapValues(t => (t._2, t._3))
+      stream.toDS()
+        .groupByKey(_.event_type)
+        .transformWithState(new WarmStartProcessor, TimeMode.None(), OutputMode.Update(), initial)
+    }(feedChunks(stream, _, live))
+      .transform(latestPerKey("event_type", "n"))
       .select(col("event_type"), col("n"), col("sum_cents"))
       .orderBy(col("event_type"))
   }
@@ -1423,23 +1290,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new EwmaProcessor, TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_ewma")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    // final emission per user = the row with the max n_events
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.table("graft_stream_ewma")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    memorySink(spark, "graft_stream_ewma", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new EwmaProcessor, TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("user_id", "n_events"))
       .select(col("user_id"), col("n_events"), col("ewma_cents"))
       .orderBy(col("user_id"))
   }
@@ -1455,18 +1311,11 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append())
-          .writeStream.format("memory").queryName("graft_stream_trans")
-          .outputMode("append").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    spark.table("graft_stream_trans")
+    memorySink(spark, "graft_stream_trans", "append", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append()))(
+      feedChunks(stream, _, slice))
       .groupBy(col("prev_type"), col("event_type"))
       .agg(
         count(lit(1)).as("n_transitions"),
@@ -1532,18 +1381,11 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new AttributionProcessor, TimeMode.None(), OutputMode.Append())
-          .writeStream.format("memory").queryName("graft_stream_attr")
-          .outputMode("append").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    val emitted = spark.table("graft_stream_attr")
+    val emitted = memorySink(spark, "graft_stream_attr", "append", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new AttributionProcessor, TimeMode.None(), OutputMode.Append()))(
+      feedChunks(stream, _, slice))
     val firstAgg = emitted.groupBy(col("first_touch").as("channel"))
       .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("cents"))
       .select(lit("first_touch").as("model"), col("channel"),
@@ -1623,22 +1465,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new StreakProcessor, TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_streaks")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_seen").desc)
-    spark.table("graft_stream_streaks")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    memorySink(spark, "graft_stream_streaks", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new StreakProcessor, TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("user_id", "n_seen"))
       .select(col("user_id"), col("n_active_days"), col("n_islands"),
         col("longest_streak"))
       .orderBy(col("user_id"))
@@ -1699,22 +1531,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new CusumProcessor(2500L), TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_cusum")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_seen").desc)
-    spark.table("graft_stream_cusum")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    memorySink(spark, "graft_stream_cusum", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new CusumProcessor(2500L), TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("user_id", "n_seen"))
       .select(col("user_id"), col("n_seen"), col("peak_cusum_cents"),
         col("peak_event_id"))
       .orderBy(col("user_id"))
@@ -1786,21 +1608,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.user_id)
-          .transformWithState(new SampleProcessor(8), TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_sample")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-    spark.table("graft_stream_sample")
-      .withColumn("max_c", max(col("n_seen")).over(w))
-      .filter(col("n_seen") === col("max_c"))
+    memorySink(spark, "graft_stream_sample", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new SampleProcessor(8), TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("user_id", "n_seen"))
       .select(col("user_id"), col("sample_csv"), col("n_sample"), col("n_seen"))
       .orderBy(col("user_id"))
   }
@@ -1838,7 +1651,7 @@ object StreamingEntry {
     val ckpt = new java.io.File(
       sys.props("java.io.tmpdir"), "graft_state_reader_ckpt")
     wipeDir(ckpt)
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark) {
       val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
         .writeStream.format("noop").outputMode("append")
         .option("checkpointLocation", ckpt.getAbsolutePath).start()
@@ -1874,28 +1687,24 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
+    memorySink(spark, "graft_stream_chained", "append") {
       val src = withTs(stream.toDF()).withWatermark("ts_utc", "1 hour")
       val hourly = src
         .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("sum_cents"))
-      val daily = hourly
+      hourly
         .groupBy(window(window_time(col("window")), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n_hours"), max(col("n")).as("max_hourly_n"),
           sum(col("n")).as("n_events"), sum(col("sum_cents")).as("sum_cents"))
         .select(
           unix_micros(col("window.start")).as("day_us"), col("event_type"),
           col("n_hours"), col("max_hourly_n"), col("n_events"), col("sum_cents"))
-      val q = daily.writeStream.format("memory").queryName("graft_stream_chained")
-        .outputMode("append").start()
-      try {
-        feedChunks(stream, q, slice)
-        stream.addData(Seq(slice.last))
-        q.processAllAvailable()
-      } finally q.stop()
+    } { q =>
+      feedChunks(stream, q, slice)
+      stream.addData(Seq(slice.last))
+      q.processAllAvailable()
     }
-    spark.table("graft_stream_chained")
       .orderBy(col("day_us"), col("event_type"))
   }
 
@@ -1918,7 +1727,7 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    val observed = withStatePartitions(spark, 4) {
+    val observed = withStatePartitions(spark) {
       val src = withTs(stream.toDF())
         .observe("graft_obs",
           count(lit(1)).as("n_rows"),
@@ -1943,22 +1752,12 @@ object StreamingEntry {
     import spark.implicits._
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
-    withStatePartitions(spark, 4) {
-      withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val q = stream.toDS()
-          .groupByKey(_.event_type)
-          .transformWithState(new TopKProcessor(5), TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("graft_stream_topk")
-          .outputMode("update").start()
-        try feedChunks(stream, q, slice) finally q.stop()
-      }
-    }
-
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-    spark.table("graft_stream_topk")
-      .withColumn("max_c", max(col("consumed")).over(w))
-      .filter(col("consumed") === col("max_c"))
+    memorySink(spark, "graft_stream_topk", "update", rocksDb = true)(
+      stream.toDS()
+        .groupByKey(_.event_type)
+        .transformWithState(new TopKProcessor(5), TimeMode.None(), OutputMode.Update()))(
+      feedChunks(stream, _, slice))
+      .transform(latestPerKey("event_type", "consumed"))
       .select(col("event_type"), col("rnk"), col("event_id"), col("value_cents"))
       .orderBy(col("event_type"), col("rnk"))
   }

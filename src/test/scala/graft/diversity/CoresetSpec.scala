@@ -33,6 +33,32 @@ class CoresetSpec extends AnyFunSuite {
     assert(run() == run())
   }
 
+  test("grouped fold: summarizing partials replay their weights into one bounded coreset per group") {
+    // diverseByLabel's two stages on groups larger than the budget: stage 1
+    // folds each (label, id range) group, which here holds ~11 points for
+    // m = 4, so the partials summarize; stage 2 replays their kernels per
+    // label with the accumulated weights.
+    val m = 4
+    val pts = TestPoints.randomPoints(600, 8, 17)
+    def label(id: Long) = id % 3
+    val stage1 = pts.sortBy(p => (label(p.id), p.id / 32, p.id))
+      .iterator.map(p => ((label(p.id), p.id / 32), p, 1L))
+    val partials = StreamingCoreset.foldGroups(stage1, m).toVector
+    assert(partials.exists(_._2.weight > 1), "no stage-1 partial summarized its group")
+    val stage2 = partials.sortBy { case ((l, r), k) => (l, r, k.id) }
+      .iterator.map { case ((l, _), k) => (l, Pt(k.id, k.vec), k.weight) }
+    val byLabel = StreamingCoreset.foldGroups(stage2, m).toVector.groupBy(_._1)
+    val groups = pts.groupBy(p => label(p.id))
+    assert(byLabel.keySet == groups.keySet, "every group gets a coreset")
+    byLabel.foreach { case (l, out) =>
+      val ks = out.map(_._2)
+      assert(ks.length <= m, s"group $l kernel budget exceeded: ${ks.length}")
+      assert(ks.map(_.weight).sum == groups(l).length.toLong, s"group $l mass not conserved")
+      assert(ks.forall(k => label(k.id) == l), s"group $l holds a kernel from another group")
+      assert(ks.map(_.id).distinct.length == ks.length, s"group $l repeats a kernel")
+    }
+  }
+
   test("MapReduce coreset: local coresets conserve mass and include the partition-min id") {
     val pts = TestPoints.randomPoints(200, 8, 11)
     val parts = pts.groupBy(_.id % 4).values.toVector
