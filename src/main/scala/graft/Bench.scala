@@ -49,7 +49,10 @@ object Bench {
     // best-of-3 and carry no such cost.
     spark.range(1 << 20).selectExpr("sum(id) AS s").collect()
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println("[bench] warm-up failed; timing continues without it:")
+      e.printStackTrace()
+    }
     // Failure honesty: a query that throws must never appear as a (fast)
     // green line. `once` returns Left(error) on exception; a pass records a
     // time only on success, and a query that failed EVERY pass is omitted
@@ -102,39 +105,31 @@ object Bench {
     // BENCH_LOCAL artifact (read BEFORE it is overwritten below). Keys
     // >1.5x their baseline time surface in the metric line itself, so
     // ambient-vs-real is inspectable every run without cross-round
-    // archaeology. Sub-0.5 s keys are skipped — at that scale the fixed
-    // per-action scheduler cost dominates and 1.5x is pure jitter.
+    // archaeology.
     val sfName = new java.io.File(sfDir).getName
     val baseFile = java.nio.file.Paths.get(s"BENCH_BASE-$sfName.json")
     val prevFile =
       if (java.nio.file.Files.exists(baseFile)) baseFile
       else java.nio.file.Paths.get(s"BENCH_LOCAL-$sfName.json")
-    val regressions: Seq[(String, Double, Double)] =
-      if (!java.nio.file.Files.exists(prevFile)) Seq.empty
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(prevFile.toFile).get("queries")
-        results.toSeq.flatMap { case (k, now) =>
-          Option(node.get(k)).map(_.asDouble()) match {
-            case Some(prev) if now > 0.5 && prev > 0 && now / prev > 1.5 =>
-              Some((k, prev, now))
-            case _ => None
-          }
-        }.sortBy { case (_, prev, now) => -(now / prev) }
-      } catch { case _: Throwable => Seq.empty }
-    val regJson = regressions.map { case (k, prev, now) =>
-      Json.str(k) + ":" + s"""{"prev":${Json.fixed(prev, 3)},"now":${Json.fixed(now, 3)},""" +
-        s""""ratio":${Json.fixed(now / prev, 2)}}"""
-    }.mkString("{", ",", "}")
+    val regressionCheck = regressions(results, prevFile)
+    val regField = regressionCheck match {
+      case Left(why) =>
+        System.err.println(s"[bench] regression check skipped: $why")
+        s""""regressions":null,"regressions_skipped":${Json.str(why)}"""
+      case Right(regs) => "\"regressions\":" + regs.map { case (k, prev, now) =>
+        Json.str(k) + ":" + s"""{"prev":${Json.fixed(prev, 3)},"now":${Json.fixed(now, 3)},""" +
+          s""""ratio":${Json.fixed(now / prev, 2)}}"""
+      }.mkString("{", ",", "}")
+    }
     // n_queries makes a silently-omitted erroring query visible in the
     // metric line itself: a total over fewer queries than last round can't
     // masquerade as a speedup (driver ADVICE r6).
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
         s""""incomplete":${failed.nonEmpty},"scratch":${Json.str(ScratchDirs.scratchRoot)},""" +
-        s""""regressions":$regJson,"errors":$errJson,"sf":${Json.str(sfDir)},"queries":$qs}"""
+        s"""$regField,"errors":$errJson,"sf":${Json.str(sfDir)},"queries":$qs}"""
     println(line)
-    println(summaryLine(results, failed.size, regressions.size, sfDir))
+    println(summaryLine(results, failed.size, regressionCheck.toOption.map(_.size), sfDir))
     // The driver captures stdout with a bounded tail that has truncated
     // ~17 per-query timings per round; the full line committed as a repo
     // artifact keeps every timing comparable across rounds. The per-SF
@@ -153,6 +148,34 @@ object Bench {
     spark.stop()
   }
 
+  /** The keys that took more than 1.5× their time in the `baseline` Bench
+    * line, as (key, baseline s, now s), largest ratio first; Left with the
+    * reason when there is no check to make: no baseline file, or one that
+    * does not parse to a line with a `queries` object. Keys under 0.5 s
+    * are not compared: at that scale the fixed per-action scheduler cost
+    * dominates and 1.5× is jitter.
+    */
+  private[graft] def regressions(
+      results: Map[String, Double],
+      baseline: java.nio.file.Path): Either[String, Seq[(String, Double, Double)]] = {
+    val queries =
+      if (!java.nio.file.Files.exists(baseline)) Left(s"no baseline file $baseline")
+      else
+        try {
+          Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(baseline.toFile).get("queries"))
+            .filter(_.isObject)
+            .toRight(s"baseline $baseline has no queries object")
+        } catch { case e: Exception => Left(s"baseline $baseline is unreadable: $e") }
+    queries.map { node =>
+      results.toSeq.flatMap { case (k, now) =>
+        Option(node.get(k)).map(_.asDouble()) match {
+          case Some(prev) if now > 0.5 && prev > 0 && now / prev > 1.5 => Some((k, prev, now))
+          case _ => None
+        }
+      }.sortBy { case (_, prev, now) => -(now / prev) }
+    }
+  }
+
   /** Driver-parseable SUMMARY (r16): the driver captures a bounded stdout
     * TAIL, and the full line (~12 KB with the 320-entry per-query map
     * inline) starts mid-JSON inside that tail — BENCH_r14/BENCH_r15 both
@@ -162,9 +185,10 @@ object Bench {
     * bounded tail always ends with one complete parseable JSON line. The
     * full-precision record of every key stays in the full line and in the
     * committed BENCH_LOCAL artifacts; nothing is measured differently.
+    * `n_regressions` is null when the regression check was skipped.
     */
   private[graft] def summaryLine(
-      results: Map[String, Double], nErrors: Int, nRegressions: Int, sfDir: String): String = {
+      results: Map[String, Double], nErrors: Int, nRegressions: Option[Int], sfDir: String): String = {
     val summaryBudget = 1400
     val total = results.values.sum
     val slowDesc = results.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -174,7 +198,7 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
         s""""incomplete":${nErrors > 0},"n_errors":$nErrors,""" +
-        s""""n_regressions":$nRegressions,"sf":${Json.str(sfDir)},"queries":$kept}"""
+        s""""n_regressions":${nRegressions.fold("null")(_.toString)},"sf":${Json.str(sfDir)},"queries":$kept}"""
     }
     (results.size to 0 by -1).iterator.map(line)
       .find(_.length <= summaryBudget).getOrElse(line(0))

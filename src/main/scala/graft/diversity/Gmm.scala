@@ -97,8 +97,8 @@ object Gmm {
     */
   def weightedMass(points: Seq[WeightedPt], centers: IndexedSeq[Pt]): IndexedSeq[WeightedPt] = {
     val mass = Array.fill(centers.length)(0L)
-    val kernels = centers.map(_.vec)
-    points.foreach(p => mass(Metric.nearest(p.vec, kernels)._1) += p.weight)
+    val kernels = KernelSet(centers.map(_.vec))
+    points.foreach(p => mass(kernels.nearest(p.vec)._1) += p.weight)
     centers.zipWithIndex.map { case (c, j) => WeightedPt(c.id, c.vec, mass(j)) }
   }
 }

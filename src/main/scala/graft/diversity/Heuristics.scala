@@ -108,8 +108,15 @@ object Heuristics {
   }
 
   /** Matching heuristic (R3): greedily add the farthest remaining *pair*
-    * until k points are chosen; ½-approx for remote-clique. Deterministic:
-    * pair ties resolved by (lower id, lower id).
+    * until k points are chosen. Deterministic: pair ties resolved by
+    * (lower id, lower id).
+    *
+    * Approximation: Hassin, Rubinstein & Tamir (1997) prove factor 2 for
+    * remote-clique when the pairs form a MAXIMUM-weight matching. This
+    * greedy variant is a 2-approximation only where the triangle
+    * inequality argument covers it, k ∈ {2, 4} (asserted against brute
+    * force in ApproxBoundsSpec); no factor is claimed at other k,
+    * `matching_k32` included.
     *
     * Weights (see the object doc): unweighted-on-delegates is exactly
     * equivalent here, same argument as remote-edge — a weight-w point's

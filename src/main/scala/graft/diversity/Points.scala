@@ -14,7 +14,9 @@ final case class WeightedPt(id: Long, vec: Array[Float], weight: Long)
 
 /** Euclidean metric kernels. Distances are computed in double and — when
   * used for comparisons that must be reproducible across partitionings and
-  * engines — rounded to 12 dp first (SURVEY.md §7.3.4).
+  * engines — rounded to 12 dp first (SURVEY.md §7.3.4). [[sqDist]] defines
+  * the sum; the scans [[PointBlock.sqDistsTo]] and [[KernelSet.nearest]]
+  * run four of them at a time and return the same values, bit for bit.
   */
 object Metric {
   def sqDist(a: Array[Float], b: Array[Float]): Double = {
@@ -36,21 +38,88 @@ object Metric {
     * rounding is exact.
     */
   def r12(x: Double): Double = math.rint(x * 1e12) / 1e12
+}
 
-  /** The kernel nearest to `v`: its index in `kernels` and its r12-rounded
-    * squared distance. Strict `<` over the kernels in order, so the earliest
-    * of equally near kernels wins; (−1, +∞) when there are none.
+/** The kernels a streaming coreset compares each new point with, in
+  * insertion order: each kernel's float coordinates as given, and a double
+  * copy made once when it is added, so a scan converts only the point.
+  * [[nearest]] is the one nearest-kernel loop. Scans share one buffer for
+  * the point, so a set serves one thread.
+  */
+final class KernelSet {
+  private var floats = new Array[Array[Float]](8)
+  private var doubles = new Array[Array[Double]](8)
+  private var n = 0
+  private var x = Array.emptyDoubleArray // the point being scanned, in doubles
+
+  def size: Int = n
+  def apply(j: Int): Array[Float] = floats(j)
+
+  def add(v: Array[Float]): Unit = {
+    if (n == floats.length) {
+      floats = java.util.Arrays.copyOf(floats, 2 * n)
+      doubles = java.util.Arrays.copyOf(doubles, 2 * n)
+    }
+    floats(n) = v
+    doubles(n) = v.map(_.toDouble)
+    n += 1
+  }
+
+  /** The kernel nearest to `v` among kernels `from until size`: its index
+    * and its r12-rounded squared distance. Strict `<` over the kernels in
+    * order, so the earliest of equally near kernels wins; (−1, +∞) when
+    * there are none. Each distance is [[Metric.sqDist]]'s sum, term for
+    * term in the same order, so index and distance are bit-identical to
+    * a kernel-by-kernel loop over it. Four kernels run interleaved, as
+    * four independent sums, so their additions overlap.
     */
-  def nearest(v: Array[Float], kernels: collection.IndexedSeq[Array[Float]]): (Int, Double) = {
+  def nearest(v: Array[Float], from: Int = 0): (Int, Double) = {
+    val dim = v.length
+    if (x.length != dim) x = new Array[Double](dim)
+    var t = 0
+    while (t < dim) { x(t) = v(t).toDouble; t += 1 }
     var best = -1
     var bestD = Double.PositiveInfinity
-    var j = 0
-    while (j < kernels.length) {
-      val d = r12(sqDist(v, kernels(j)))
-      if (d < bestD) { bestD = d; best = j }
+    var j = from
+    while (j + 3 < n) {
+      val k0 = doubles(j); val k1 = doubles(j + 1); val k2 = doubles(j + 2); val k3 = doubles(j + 3)
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      t = 0
+      while (t < dim) {
+        val xt = x(t)
+        val d0 = xt - k0(t); s0 += d0 * d0
+        val d1 = xt - k1(t); s1 += d1 * d1
+        val d2 = xt - k2(t); s2 += d2 * d2
+        val d3 = xt - k3(t); s3 += d3 * d3
+        t += 1
+      }
+      val r0 = Metric.r12(s0); if (r0 < bestD) { bestD = r0; best = j }
+      val r1 = Metric.r12(s1); if (r1 < bestD) { bestD = r1; best = j + 1 }
+      val r2 = Metric.r12(s2); if (r2 < bestD) { bestD = r2; best = j + 2 }
+      val r3 = Metric.r12(s3); if (r3 < bestD) { bestD = r3; best = j + 3 }
+      j += 4
+    }
+    while (j < n) {
+      val k = doubles(j)
+      var s = 0.0
+      t = 0
+      while (t < dim) {
+        val d = x(t) - k(t)
+        s += d * d
+        t += 1
+      }
+      val r = Metric.r12(s); if (r < bestD) { bestD = r; best = j }
       j += 1
     }
     (best, bestD)
+  }
+}
+
+object KernelSet {
+  def apply(vecs: Iterable[Array[Float]]): KernelSet = {
+    val ks = new KernelSet
+    vecs.foreach(ks.add)
+    ks
   }
 }
 

@@ -22,7 +22,15 @@ import scala.collection.mutable.ArrayBuffer
   * preserves the same anticover invariants; the cost is O(m²) per phase,
   * which is fine for the small per-partition budgets this engine uses.
   *
-  * Invariants (property-tested in GmmProps and CoresetSpec):
+  * Every comparison — insertion, re-thinning, reassignment of dropped
+  * delegates and the minimum pairwise distance — is one
+  * [[KernelSet.nearest]] scan, so a point is read once per update and
+  * compared with four kernels at a time. The kernels keep a double copy
+  * beside their floats; a [[StreamingCoreset.State]] holds only the
+  * floats, and [[StreamingCoreset.fromState]] rebuilds the copies.
+  *
+  * Invariants (property-tested in GmmProps and CoresetSpec; equality with
+  * the kernel-by-kernel fold it replaced in StreamingCoresetProps):
   *  - kernel count ≤ m at all times after an update completes;
   *  - surviving kernels are pairwise > δ/2 apart (distances on r12-rounded
   *    squared values);
@@ -35,7 +43,7 @@ final class StreamingCoreset(m: Int) {
   require(m >= 2, "kernel budget must be >= 2")
 
   private[diversity] val ids = new ArrayBuffer[Long]
-  private[diversity] val vecs = new ArrayBuffer[Array[Float]]
+  private[diversity] var kernels = new KernelSet
   private[diversity] val weights = new ArrayBuffer[Long]
   private[diversity] var deltaSq = 0.0 // squared threshold; 0 until first overflow
   private[diversity] var consumed = 0L
@@ -52,9 +60,9 @@ final class StreamingCoreset(m: Int) {
     */
   def updateWeighted(p: Pt, w: Long): Unit = {
     consumed += w
-    val (nearest, dSq) = Metric.nearest(p.vec, vecs)
+    val (nearest, dSq) = kernels.nearest(p.vec)
     if (dSq > deltaSq) {
-      ids += p.id; vecs += p.vec; weights += w
+      ids += p.id; kernels.add(p.vec); weights += w
       if (ids.length > m) overflow()
     } else {
       weights(nearest) += w
@@ -62,66 +70,57 @@ final class StreamingCoreset(m: Int) {
   }
 
   /** Grow δ and greedily thin: scan kernels in insertion order, keep those
-    * farther than the new δ from every kept kernel; fold dropped delegate
-    * counts into the nearest kept kernel. Each phase merges at least the
-    * closest pair, so the loop terminates in ≤ m phases per overflow.
+    * farther than the new δ from every kept kernel (their nearest kept
+    * kernel is beyond δ); fold dropped delegate counts into the nearest
+    * kept kernel. Each phase merges at least the closest pair, so the loop
+    * terminates in ≤ m phases per overflow.
     */
   private def overflow(): Unit = {
     do {
       deltaSq = math.max(deltaSq, minPairwiseSq())
-      val keep = new ArrayBuffer[Int]
+      val kept = new KernelSet
+      val keptIds = new ArrayBuffer[Long]
       var i = 0
       while (i < ids.length) {
-        var far = true
-        var j = 0
-        while (far && j < keep.length) {
-          if (Metric.r12(Metric.sqDist(vecs(i), vecs(keep(j)))) <= deltaSq) far = false
-          j += 1
-        }
-        if (far) keep += i
+        if (kept.nearest(kernels(i))._2 > deltaSq) { kept.add(kernels(i)); keptIds += ids(i) }
         i += 1
       }
-      val keptIds = keep.map(ids)
-      val keptVecs = keep.map(vecs)
-      val keptW = Array.fill(keep.length)(0L)
+      val keptW = new Array[Long](kept.size)
       i = 0
       while (i < ids.length) {
-        keptW(Metric.nearest(vecs(i), keptVecs)._1) += weights(i)
+        keptW(kept.nearest(kernels(i))._1) += weights(i)
         i += 1
       }
       ids.clear(); ids ++= keptIds
-      vecs.clear(); vecs ++= keptVecs
+      kernels = kept
       weights.clear(); weights ++= keptW
     } while (ids.length > m)
   }
 
   /** Minimum pairwise squared distance among current kernels (the smallest
-    * threshold that merges at least one pair).
+    * threshold that merges at least one pair): each kernel's nearest among
+    * the kernels after it.
     */
   private def minPairwiseSq(): Double = {
     var mn = Double.PositiveInfinity
     var i = 0
     while (i < ids.length) {
-      var j = i + 1
-      while (j < ids.length) {
-        val d = Metric.r12(Metric.sqDist(vecs(i), vecs(j)))
-        if (d < mn) mn = d
-        j += 1
-      }
+      val d = kernels.nearest(kernels(i), i + 1)._2
+      if (d < mn) mn = d
       i += 1
     }
     mn
   }
 
   def result(): IndexedSeq[WeightedPt] = {
-    (0 until ids.length).map(i => WeightedPt(ids(i), vecs(i), weights(i)))
+    (0 until ids.length).map(i => WeightedPt(ids(i), kernels(i), weights(i)))
   }
 
   /** Serializable snapshot for checkpointed streaming state
-    * ([[graft.streaming.StatefulCoreset]]).
+    * ([[graft.streaming.StatefulCoreset]]): the float kernels only.
     */
   def snapshot: StreamingCoreset.State = StreamingCoreset.State(
-    ids.toArray, vecs.toArray, weights.toArray, deltaSq, consumed)
+    ids.toArray, Array.tabulate(kernels.size)(kernels(_)), weights.toArray, deltaSq, consumed)
 }
 
 object StreamingCoreset {
@@ -156,7 +155,7 @@ object StreamingCoreset {
   def fromState(m: Int, s: State): StreamingCoreset = {
     val sc = new StreamingCoreset(m)
     sc.ids ++= s.ids
-    sc.vecs ++= s.vecs
+    s.vecs.foreach(sc.kernels.add) // rebuilds the double copies
     sc.weights ++= s.weights
     sc.deltaSq = s.deltaSq
     sc.consumed = s.consumed

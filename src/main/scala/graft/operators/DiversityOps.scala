@@ -67,14 +67,6 @@ object DiversityOps {
     ids.zipWithIndex.map { case (id, i) => ((i + 1).toLong, id) }.toDF("rank", idCol)
   }
 
-  private def points(spark: SparkSession, sfDir: String) = {
-    import spark.implicits._
-    Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => Pt(id, v) }
-  }
-
   /** The distributed coreset: one exact `id % p` exchange → per-partition
     * GMM(k′) with delegate weights → coreset-only collect, sorted by id.
     */
@@ -362,15 +354,19 @@ object DiversityOps {
   }
 
   /** W: one-pass streaming coreset (kernel budget 64) over the embeddings in
-    * ascending vec_id order → (vec_id, weight) kernels. Single-partition
-    * fold — the streaming model is sequential by definition ([VLDB17] §5);
-    * the scale path is per-partition streaming coresets composed by
-    * [[coreset]].
+    * ascending vec_id order → (vec_id, weight) kernels. The streaming model
+    * is sequential by definition ([VLDB17] §5), so the fold is one task;
+    * `coalesce(1)` makes it the scan task itself: the points are read,
+    * sorted by id and folded where they are read, with no exchange and no
+    * serialization round trip in between. The scale path is per-partition
+    * coresets composed by [[coreset]].
     */
   def coresetStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    points(spark, sfDir)
-      .repartition(1)
+    Tables.embeddings(spark, sfDir)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      .as[Pt]
+      .coalesce(1)
       .sortWithinPartitions(col("id"))
       .mapPartitions { it =>
         val sc = new StreamingCoreset(64)
@@ -381,66 +377,42 @@ object DiversityOps {
       .orderBy(col("vec_id"))
   }
 
-  /** Contiguous id-range width for [[diverseByLabel]]'s map-side partial
-    * coresets. Sized so a per-(label, range) group stays ≤ the kernel
-    * budget m=16 on every fixture (measured max 10 at sf0.001…sf1) — then
-    * a partial COVERS its group (no summarization, δ=0, unit weights) and
-    * replaying partials in range order is EXACTLY the sequential per-label
-    * fold (the same covering argument the p-invariance spec rests on).
-    * Where a group exceeds m (a pathological id-label correlation), the
-    * partial summarizes and the merge degrades gracefully to the
-    * composable-coreset approximation — deterministic either way, since
-    * range boundaries are data-independent.
-    */
-  private[graft] val DiverseByLabelRangeWidth = 32L
-
   /** W+: GROUPED diversity — one bounded streaming coreset PER LABEL: the
     * class-balanced diverse-sampling op (pick ≤ m spread-out
     * representatives from every class, with delegate weights), i.e. the
     * R6 doubling coreset applied per group instead of per partition.
     *
-    * Two-stage partial merge (r9 — removes the r8 layout's parallelism
-    * bound of ONE task per label): stage 1 folds a partial coreset per
-    * (label, contiguous ⌊id/W⌋ range) — |labels| · n/W independent tasks
-    * own the O(n·m) scan work; stage 2 re-shuffles only the ≤ m kernel
-    * rows per partial and folds them per label in (range, id) order —
-    * O(kernels·m) on the label task, not O(n·m). Determinism without a
-    * driver loop at BOTH stages: hash routing of the group key is
-    * deterministic, `sortWithinPartitions` is the spill-safe secondary
-    * sort, and each fold emits on group-key change, so kernel sets depend
-    * only on their own sorted inputs, never on p or scheduling. With the
-    * [[DiverseByLabelRangeWidth]] cover condition the output is
-    * bit-identical to the single-pass per-label fold (spec-pinned
-    * merge == fold). At 100 TB: few-label corpora no longer serialize —
-    * the scan stage fans out with n; per-task state is ONE live coreset
-    * (O(m)). Rows-only (kernel selection is not SQL-expressible);
+    * One label shuffle: `repartition(label)`, a spill-safe secondary sort
+    * by (label, vec_id), and one [[StreamingCoreset.foldGroups]] per
+    * partition, which folds each label's points in ascending id and emits
+    * on label change. So each label's kernels are exactly the sequential
+    * per-label fold, whatever p or the scheduling, with no precondition.
+    * No partial coresets per (label, id range) come first: a partial
+    * smaller than m keeps every point, so the merge would refold every
+    * point on one task per label (this plan's parallelism) after a second
+    * shuffle and sort of the whole table; a partial larger than m
+    * summarizes, and then the output is only an approximation of the
+    * per-label fold. The ≤ m kernel rows per label are sorted on one
+    * partition, because a range `orderBy` samples its input in a job of
+    * its own, which would read the label shuffle and run the fold twice.
+    * Rows-only (kernel selection is not SQL-expressible);
     * determinism/mass/budget are spec-pinned.
     */
   def diverseByLabel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val m = 16
-    val w = DiverseByLabelRangeWidth
-    val partials = Tables.embeddings(spark, sfDir)
+    Tables.embeddings(spark, sfDir)
       .select(col("label").cast("long").as("label"),
-        floor(col("vec_id") / w).cast("long").as("rng"),
         col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .repartition(col("label"), col("rng"))
-      .sortWithinPartitions(col("label"), col("rng"), col("vec_id"))
-      .as[(Long, Long, Long, Array[Float])]
-      .mapPartitions { it =>
-        StreamingCoreset.foldGroups(it.map { case (l, r, id, emb) => ((l, r), Pt(id, emb), 1L) }, m)
-          .map { case ((l, r), k) => (l, r, k.id, k.vec, k.weight) }
-      }
-    partials
-      .toDF("label", "rng", "vec_id", "embedding", "weight")
       .repartition(col("label"))
-      .sortWithinPartitions(col("label"), col("rng"), col("vec_id"))
-      .as[(Long, Long, Long, Array[Float], Long)]
+      .sortWithinPartitions(col("label"), col("vec_id"))
+      .as[(Long, Long, Array[Float])]
       .mapPartitions { it =>
-        StreamingCoreset.foldGroups(it.map { case (l, _, id, emb, kw) => (l, Pt(id, emb), kw) }, m)
+        StreamingCoreset.foldGroups(it.map { case (l, id, emb) => (l, Pt(id, emb), 1L) }, m)
           .map { case (l, k) => (l, k.id, k.weight) }
       }
       .toDF("label", "vec_id", "weight")
-      .orderBy(col("label"), col("vec_id"))
+      .repartition(1)
+      .sortWithinPartitions(col("label"), col("vec_id"))
   }
 }

@@ -79,6 +79,21 @@ object StreamingEntry {
     f.delete(): Unit
   }
 
+  /** The `b<batchId>` directories a foreachBatch body wrote under `dir`,
+    * read as one DataFrame. Naming them instead of reading a `b*` glob
+    * keeps Spark's file-stream-sink metadata probe, which stats the one
+    * path it is given, from logging a warning and a stack trace for a
+    * glob that is not a file.
+    */
+  private def readBatches(spark: SparkSession, dir: java.io.File): DataFrame = {
+    val batches = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
+      .sortBy(_.getName.drop(1).toLong)
+      .map(_.getPath)
+    require(batches.nonEmpty, s"no b<batchId> output under $dir")
+    spark.read.parquet(batches.toIndexedSeq: _*)
+  }
+
   /** Set session confs around `body` and restore each afterwards (unset
     * when it had no value). A streaming query reads them when it STARTS.
     */
@@ -508,7 +523,7 @@ object StreamingEntry {
         .start()
       try feedChunks(stream, q, slice) finally q.stop()
     }
-    spark.read.parquet(new java.io.File(base, "b*").getPath)
+    readBatches(spark, base)
       .orderBy(col("doc_id"))
   }
 
@@ -567,7 +582,7 @@ object StreamingEntry {
         .start()
       try feedChunks(stream, q, slice) finally q.stop()
     }
-    spark.read.parquet(new java.io.File(base, "decisions/b*").getPath)
+    readBatches(spark, new java.io.File(base, "decisions"))
       .orderBy(col("doc_id"))
   }
 
@@ -609,7 +624,7 @@ object StreamingEntry {
         .start()
       try feedChunks(stream, q, slice) finally q.stop()
     }
-    spark.read.parquet(new java.io.File(base, "b*").getPath)
+    readBatches(spark, base)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -651,7 +666,7 @@ object StreamingEntry {
         .start()
       try feedChunks(stream, q, slice) finally q.stop()
     }
-    spark.read.parquet(new java.io.File(base, "b*").getPath)
+    readBatches(spark, base)
       .orderBy(col("doc_id"))
   }
 

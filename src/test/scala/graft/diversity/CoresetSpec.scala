@@ -34,10 +34,11 @@ class CoresetSpec extends AnyFunSuite {
   }
 
   test("grouped fold: summarizing partials replay their weights into one bounded coreset per group") {
-    // diverseByLabel's two stages on groups larger than the budget: stage 1
-    // folds each (label, id range) group, which here holds ~11 points for
-    // m = 4, so the partials summarize; stage 2 replays their kernels per
-    // label with the accumulated weights.
+    // Two grouped folds on groups larger than the budget: stage 1 folds
+    // each (label, id range) group, which here holds ~11 points for m = 4,
+    // so the partials summarize; stage 2 replays their kernels per label
+    // with the accumulated weights, the composable merge of summarizing
+    // partials.
     val m = 4
     val pts = TestPoints.randomPoints(600, 8, 17)
     def label(id: Long) = id % 3

@@ -8,6 +8,8 @@ import scala.collection.mutable.ArrayBuffer
   * ([[select]]/[[selectBy]]), a separate nearest-center weighting pass
   * ([[weighted]]), and a local search that recomputes every distance
   * ([[localSearch]], whose GMM start calls this object's [[select]]).
+  * Below them, the kernel-by-kernel [[nearest]] and [[StreamingCoreset]]
+  * are the reference for [[KernelSet]].
   * Only the tie-rule comments of [[weighted]] are corrected: its centers
   * arrive in selection order, so a tie goes to the earliest-selected
   * center, not to the lowest center id.
@@ -118,5 +120,148 @@ object Reference {
       }
     }
     current.toIndexedSeq.sortBy(_.id)
+  }
+
+  // The nearest-kernel loop and the streaming coreset as they were before
+  // the four-kernel scan ([[KernelSet.nearest]]) replaced them, verbatim
+  // except that `Metric.` qualifies `r12`/`sqDist` and the class calls
+  // `Reference.nearest` where it called `Metric.nearest`.
+
+  /** The kernel nearest to `v`: its index in `kernels` and its r12-rounded
+    * squared distance. Strict `<` over the kernels in order, so the earliest
+    * of equally near kernels wins; (−1, +∞) when there are none.
+    */
+  def nearest(v: Array[Float], kernels: collection.IndexedSeq[Array[Float]]): (Int, Double) = {
+    var best = -1
+    var bestD = Double.PositiveInfinity
+    var j = 0
+    while (j < kernels.length) {
+      val d = Metric.r12(Metric.sqDist(v, kernels(j)))
+      if (d < bestD) { bestD = d; best = j }
+      j += 1
+    }
+    (best, bestD)
+  }
+
+  /** One-pass bounded-memory streaming coreset via the doubling technique
+    * ([VLDB17] §5; reference operator R6, SURVEY.md §2.1
+    * [P core/.../StreamingCoreset.scala]).
+    *
+    * Maintains at most `m` kernels that are pairwise farther than a threshold
+    * δ. A new point farther than δ from every kernel becomes a kernel; when
+    * the budget overflows, δ grows to the current minimum pairwise kernel
+    * distance and the kernel set is greedily re-thinned (insertion order,
+    * keep-if-far), with dropped kernels' delegate counts folded into their
+    * nearest survivor.
+    *
+    * Threshold growth note: the textbook doubling rule (δ ← 2δ) gives
+    * O(log Δ) merge phases but can overshoot badly on concentrated data —
+    * 64-d random unit vectors have all pairwise distances within a ~1.4×
+    * band, so one doubling can collapse m kernels to 1. Growing δ to the
+    * min pairwise kernel distance instead merges at least one pair per
+    * phase (guaranteed progress), keeps the kernel budget fully used, and
+    * preserves the same anticover invariants; the cost is O(m²) per phase,
+    * which is fine for the small per-partition budgets this engine uses.
+    *
+    * Invariants (property-tested in GmmProps and CoresetSpec):
+    *  - kernel count ≤ m at all times after an update completes;
+    *  - surviving kernels are pairwise > δ/2 apart (distances on r12-rounded
+    *    squared values);
+    *  - Σ weights = number of points consumed.
+    *
+    * Deterministic for a fixed input order (the engine feeds points in
+    * ascending id order — SURVEY.md §7.3.4).
+    */
+  final class StreamingCoreset(m: Int) {
+    require(m >= 2, "kernel budget must be >= 2")
+
+    private[diversity] val ids = new ArrayBuffer[Long]
+    private[diversity] val vecs = new ArrayBuffer[Array[Float]]
+    private[diversity] val weights = new ArrayBuffer[Long]
+    private[diversity] var deltaSq = 0.0 // squared threshold; 0 until first overflow
+    private[diversity] var consumed = 0L
+
+    def size: Int = ids.length
+    def thresholdSq: Double = deltaSq
+    def pointsConsumed: Long = consumed
+
+    def update(p: Pt): Unit = updateWeighted(p, 1L)
+
+    /** Insert a point that already represents `w` delegates (used when
+      * merging coresets: a foreign kernel re-enters with its accumulated
+      * weight).
+      */
+    def updateWeighted(p: Pt, w: Long): Unit = {
+      consumed += w
+      val (nearest, dSq) = Reference.nearest(p.vec, vecs)
+      if (dSq > deltaSq) {
+        ids += p.id; vecs += p.vec; weights += w
+        if (ids.length > m) overflow()
+      } else {
+        weights(nearest) += w
+      }
+    }
+
+    /** Grow δ and greedily thin: scan kernels in insertion order, keep those
+      * farther than the new δ from every kept kernel; fold dropped delegate
+      * counts into the nearest kept kernel. Each phase merges at least the
+      * closest pair, so the loop terminates in ≤ m phases per overflow.
+      */
+    private def overflow(): Unit = {
+      do {
+        deltaSq = math.max(deltaSq, minPairwiseSq())
+        val keep = new ArrayBuffer[Int]
+        var i = 0
+        while (i < ids.length) {
+          var far = true
+          var j = 0
+          while (far && j < keep.length) {
+            if (Metric.r12(Metric.sqDist(vecs(i), vecs(keep(j)))) <= deltaSq) far = false
+            j += 1
+          }
+          if (far) keep += i
+          i += 1
+        }
+        val keptIds = keep.map(ids)
+        val keptVecs = keep.map(vecs)
+        val keptW = Array.fill(keep.length)(0L)
+        i = 0
+        while (i < ids.length) {
+          keptW(Reference.nearest(vecs(i), keptVecs)._1) += weights(i)
+          i += 1
+        }
+        ids.clear(); ids ++= keptIds
+        vecs.clear(); vecs ++= keptVecs
+        weights.clear(); weights ++= keptW
+      } while (ids.length > m)
+    }
+
+    /** Minimum pairwise squared distance among current kernels (the smallest
+      * threshold that merges at least one pair).
+      */
+    private def minPairwiseSq(): Double = {
+      var mn = Double.PositiveInfinity
+      var i = 0
+      while (i < ids.length) {
+        var j = i + 1
+        while (j < ids.length) {
+          val d = Metric.r12(Metric.sqDist(vecs(i), vecs(j)))
+          if (d < mn) mn = d
+          j += 1
+        }
+        i += 1
+      }
+      mn
+    }
+
+    def result(): IndexedSeq[WeightedPt] = {
+      (0 until ids.length).map(i => WeightedPt(ids(i), vecs(i), weights(i)))
+    }
+
+    /** Serializable snapshot for checkpointed streaming state
+      * ([[graft.streaming.StatefulCoreset]]).
+      */
+    def snapshot: StreamingCoreset.State = StreamingCoreset.State(
+      ids.toArray, vecs.toArray, weights.toArray, deltaSq, consumed)
   }
 }
