@@ -319,10 +319,11 @@ class PipelineOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("diverse_by_label: one label shuffle == single-pass per-label fold") {
+  test("diverse_by_label: two-stage partial merge == single-pass per-label fold") {
     import graft.diversity.{Pt, StreamingCoreset}
-    // Each label's points reach one fold in ascending vec_id, so the
-    // output must be bit-identical to the flat ascending-id fold per label.
+    // The label shuffle is the degenerate two-stage merge: one partial per
+    // label, holding all its points in ascending vec_id, so the output must
+    // be bit-identical to the flat ascending-id fold per label.
     val pts = graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("label").cast("long"), col("vec_id").cast("long"), col("embedding"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray))
