@@ -31,7 +31,7 @@ object Gmm {
     * finishes the assignment. That is n·min(k, n) distance evaluations:
     * selection and delegate weighting in one scan, where a separate
     * weighting pass would cost another n·(k−1). A pass hands the kernel a
-    * whole row of distances, so a dense kernel can interleave points.
+    * whole row of distances, so a dense kernel can run points in SIMD lanes.
     */
   def traverse(n: Int, k: Int)(distancesTo: (Int, Array[Double]) => Unit): Traversal = {
     if (n == 0 || k <= 0) return Traversal(Vector.empty, Array.emptyIntArray)

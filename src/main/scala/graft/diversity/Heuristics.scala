@@ -127,12 +127,17 @@ object Heuristics {
     * identical pairs. Weights matter only in the degenerate k > #distinct
     * case, which the coreset construction (k′ ≥ k distinct kernels)
     * rules out.
+    *
+    * The r12-rounded squared distance of every pair is computed once, row
+    * `i` of the flat matrix holding pairs (i, j > i); each round scans it.
     */
   def matching(points: Seq[Pt], k: Int): IndexedSeq[Pt] = {
     val pts = points.toArray.sortBy(_.id)
     val n = pts.length
     if (n == 0 || k <= 0) return Vector.empty
     val kk = math.min(k, n)
+    val sq = new Array[Double](n * n)
+    for (i <- 0 until n; j <- i + 1 until n) sq(i * n + j) = Metric.r12(Metric.sqDist(pts(i).vec, pts(j).vec))
     val used = Array.fill(n)(false)
     val out = new ArrayBuffer[Pt](kk)
     while (out.size + 1 < kk) {
@@ -143,7 +148,7 @@ object Heuristics {
           var j = i + 1
           while (j < n) {
             if (!used(j)) {
-              val d = Metric.r12(Metric.sqDist(pts(i).vec, pts(j).vec))
+              val d = sq(i * n + j)
               if (d > bd) { bd = d; bi = i; bj = j } // strict > + ascending scan = lowest-id ties
             }
             j += 1

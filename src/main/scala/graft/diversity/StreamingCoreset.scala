@@ -25,9 +25,10 @@ import scala.collection.mutable.ArrayBuffer
   * Every comparison — insertion, re-thinning, reassignment of dropped
   * delegates and the minimum pairwise distance — is one
   * [[KernelSet.nearest]] scan, so a point is read once per update and
-  * compared with four kernels at a time. The kernels keep a double copy
-  * beside their floats; a [[StreamingCoreset.State]] holds only the
-  * floats, and [[StreamingCoreset.fromState]] rebuilds the copies.
+  * compared with L kernels per vector operation. The kernels keep a
+  * double copy beside their floats; a [[StreamingCoreset.State]] holds
+  * only the floats, and [[StreamingCoreset.fromState]] rebuilds the
+  * copies.
   *
   * Invariants (property-tested in GmmProps and CoresetSpec; equality with
   * the kernel-by-kernel fold it replaced in StreamingCoresetProps):
@@ -43,7 +44,7 @@ final class StreamingCoreset(m: Int) {
   require(m >= 2, "kernel budget must be >= 2")
 
   private[diversity] val ids = new ArrayBuffer[Long]
-  private[diversity] var kernels = new KernelSet
+  private[diversity] var kernels = KernelSet()
   private[diversity] val weights = new ArrayBuffer[Long]
   private[diversity] var deltaSq = 0.0 // squared threshold; 0 until first overflow
   private[diversity] var consumed = 0L
@@ -78,7 +79,7 @@ final class StreamingCoreset(m: Int) {
   private def overflow(): Unit = {
     do {
       deltaSq = math.max(deltaSq, minPairwiseSq())
-      val kept = new KernelSet
+      val kept = KernelSet()
       val keptIds = new ArrayBuffer[Long]
       var i = 0
       while (i < ids.length) {

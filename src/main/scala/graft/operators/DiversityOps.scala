@@ -132,7 +132,10 @@ object DiversityOps {
     * SQL-expressible); CoresetPlanSpec asserts it against an RDD replica of
     * the exact residue partitioning, and weight-mass conservation. Output
     * summarizes each kernel row reproducibly: (id, weight, 6-dp center
-    * norm).
+    * norm). The p·k′ rows are sorted on one partition, as
+    * [[diverseByLabel]]'s are: a range `orderBy` samples its input in a
+    * job of its own, which would run every local GMM(k′) twice, and
+    * `coalesce(1)` would put every residue class in one task.
     */
   def coresetExecK64(spark: SparkSession, sfDir: String): DataFrame =
     kernelRows(spark, sfDir, coresetParallelism(spark))
@@ -141,7 +144,8 @@ object DiversityOps {
         round(sqrt(expr(
           "aggregate(center, 0D, (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")), 6)
           .as("c_norm"))
-      .orderBy(col("id"))
+      .repartition(1)
+      .sortWithinPartitions(col("id"))
 
   /** W: deterministic GMM k=32 → (rank, vec_id). No oracle (not
     * SQL-expressible); invariants are property-tested in scalatest.

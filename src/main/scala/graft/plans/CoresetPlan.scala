@@ -68,7 +68,8 @@ object CoresetStrategy extends SparkStrategy {
   * involvement; the composable-coreset theorem is exactly the license to
   * fold each residue class independently. Each row's floats are copied
   * into one float block ([[PointBlock]], sorted by id once all rows are
-  * in), so a task holds its partition once, as floats, plus O(k′) output.
+  * in, then laid out in tiles of L points for the SIMD distance scan), so
+  * a task holds its partition once, as floats, plus O(k′) output.
   */
 case class CoresetExec(child: SparkPlan, kPrime: Int, p: Int, output: Seq[Attribute])
     extends UnaryExecNode {

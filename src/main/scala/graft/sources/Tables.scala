@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Readers for the driver-generated parquet fixtures (TESTDATA.md /
   * FIXTURES.md). One method per table so every query goes through a single
@@ -47,30 +49,50 @@ object Tables {
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     val pathStr = s"$sfDir/$name.parquet"
     rowCountCache.computeIfAbsent(pathStr, { _ =>
-      val conf = spark.sessionState.newHadoopConf()
-      val path = new org.apache.hadoop.fs.Path(pathStr)
-      val fs = path.getFileSystem(conf)
-      def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-        if (st.isDirectory)
-          fs.listStatus(st.getPath)
-            .filterNot { s =>
-              val n = s.getPath.getName
-              n.startsWith("_") || n.startsWith(".")
-            }
-            .toSeq.flatMap(walk)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Seq.empty
-      val files = walk(fs.getFileStatus(path))
-      require(files.nonEmpty,
-        s"rowCount($pathStr): no *.parquet data files found — refusing to report 0 " +
-          "for an unreadable or unexpectedly-laid-out table")
-      files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getRecordCount finally reader.close()
-      }.sum
+      footers(spark, pathStr)(_.getRecordCount).map(_._2).sum
     }): Long
   }
+
+  /** `f` of each data file's parquet footer under `pathStr`, with the
+    * file's path. The listing is [[rowCount]]'s: recursive, hidden and
+    * metadata entries skipped, and no data file at all is an error.
+    */
+  private def footers[A](spark: SparkSession, pathStr: String)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[(String, A)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(pathStr)
+    val fs = path.getFileSystem(conf)
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath)
+          .filterNot { s =>
+            val n = s.getPath.getName
+            n.startsWith("_") || n.startsWith(".")
+          }
+          .toSeq.flatMap(walk)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Seq.empty
+    val files = walk(fs.getFileStatus(path))
+    require(files.nonEmpty,
+      s"$pathStr: no *.parquet data files found — refusing to report 0 rows or pass a " +
+        "schema for an unreadable or unexpectedly-laid-out table")
+    files.map { st =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try (st.getPath.toString, f(reader)) finally reader.close()
+    }
+  }
+
+  /** The embeddings table as parquet schema inference reports it for the
+    * fixtures: every column nullable, array elements too.
+    */
+  private val EmbeddingsSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType, containsNull = true)),
+    StructField("label", IntegerType)))
+
+  private val embeddingsChecked =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = read(spark, sfDir, "nation")
@@ -80,7 +102,32 @@ object Tables {
   def orders(spark: SparkSession, sfDir: String): DataFrame   = read(spark, sfDir, "orders")
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "lineitem")
   def documents(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "documents")
-  def embeddings(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "embeddings")
+
+  /** embeddings, read with a declared schema, so analysis runs no schema
+    * inference job. The declaration is checked once per path (memoized
+    * like [[rowCount]]) against every data file's footer: a column that is
+    * missing, or whose type differs, fails the read naming the file and
+    * the column, where the declared read would return nulls or fail in a
+    * task. Nullability is not compared: a declared nullable column reads a
+    * required one.
+    */
+  def embeddings(spark: SparkSession, sfDir: String): DataFrame = {
+    val pathStr = s"$sfDir/embeddings.parquet"
+    embeddingsChecked.computeIfAbsent(pathStr, { _ =>
+      val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      footers(spark, pathStr)(r => converter.convert(r.getFooter.getFileMetaData.getSchema))
+        .foreach { case (file, found) =>
+          EmbeddingsSchema.foreach { declared =>
+            val actual = found.find(_.name == declared.name).map(_.dataType.catalogString)
+            require(actual.contains(declared.dataType.catalogString),
+              s"$file: column ${declared.name} is ${actual.getOrElse("missing")}, but embeddings " +
+                s"is declared with ${declared.name} ${declared.dataType.catalogString}")
+          }
+        }
+      true
+    })
+    spark.read.schema(EmbeddingsSchema).parquet(pathStr)
+  }
 
   /** events with `ts_us` (bigint, µs since epoch, = floor(ns/1000)) and
     * `ts_utc` (timestamp, µs precision). Raw `ts` is retained but queries

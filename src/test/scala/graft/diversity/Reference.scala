@@ -123,7 +123,7 @@ object Reference {
   }
 
   // The nearest-kernel loop and the streaming coreset as they were before
-  // the four-kernel scan ([[KernelSet.nearest]]) replaced them, verbatim
+  // the batched scan ([[KernelSet.nearest]]) replaced them, verbatim
   // except that `Metric.` qualifies `r12`/`sqDist` and the class calls
   // `Reference.nearest` where it called `Metric.nearest`.
 

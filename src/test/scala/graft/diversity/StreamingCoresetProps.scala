@@ -1,12 +1,13 @@
 package graft.diversity
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
-/** The four-kernel scan ([[KernelSet.nearest]]) and the streaming coreset
-  * built on it against [[Reference]], the kernel-by-kernel loop they
-  * replaced: the same index and the same r12 distance bit for bit, and
-  * the same fold.
+/** The lane scans ([[KernelSet.nearest]], [[PointBlock.sqDistsTo]]) and
+  * what is built on them against [[Reference]], the scalar loops they
+  * replaced: the same index and the same distance bit for bit, the same
+  * fold and the same traversal. The lane cases cover every tile remainder
+  * of the platform's lane count L, two tiles and one more.
   */
 object StreamingCoresetProps extends Properties("StreamingCoreset") {
 
@@ -23,7 +24,7 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
     else Vector.tabulate(n)(i => TestPoints.unitVec(dim, seed * 7919 + i))
   }
 
-  /** A point, 0–9 kernels (every remainder of the four-wide loop) and a
+  /** A point, 0–9 kernels (every remainder of a four-kernel loop) and a
     * first kernel to scan from.
     */
   private val genScan: Gen[(Array[Float], Vector[Array[Float]], Int)] = for {
@@ -43,7 +44,70 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
     split <- Gen.choose(0, n)
   } yield (vs.zip(ws).zipWithIndex.map { case ((v, w), i) => (Pt(i.toLong * 3, v), w) }, m, split)
 
+  private val L = VectorLanes.width
+
+  /** `n` vectors of a dimension in {1, 3, 64, 67} (one lane's worth of
+    * terms, a few, a multiple of 8 and not), on the {0,1,2}^dim grid or
+    * random unit vectors.
+    */
+  private def genLaneVecs(n: Int): Gen[Vector[Array[Float]]] = for {
+    grid <- Gen.oneOf(true, false)
+    dim <- Gen.oneOf(1, 3, 64, 67)
+    seed <- Gen.choose(0L, 100000L)
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    if (grid) Vector.fill(n)(Array.fill(dim)(rnd.nextInt(3).toFloat))
+    else Vector.tabulate(n)(i => TestPoints.unitVec(dim, seed * 7919 + i))
+  }
+
+  /** 0 to 2L+1 points with distinct ids in a shuffled order. */
+  private val genBlock: Gen[Vector[Pt]] = for {
+    n <- Gen.choose(0, 2 * L + 1)
+    vs <- genLaneVecs(n)
+    seed <- Gen.choose(0L, 100000L)
+  } yield vs.zip(new scala.util.Random(seed).shuffle(Vector.tabulate(n)(_ * 3L))).map {
+    case (v, id) => Pt(id, v)
+  }
+
   private def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+
+  property("lane block holds the points in id order and measures Metric.sqDist's bits") =
+    forAllNoShrink(genBlock) { pts =>
+      val sorted = pts.sortBy(_.id)
+      val b = PointBlock(pts)
+      val out = new Array[Double](b.size)
+      b.ids.toSeq == sorted.map(_.id) &&
+        sorted.indices.forall(i => b.vec(i).sameElements(sorted(i).vec)) &&
+        sorted.indices.forall { c =>
+          b.sqDistsTo(c, out)
+          sorted.indices.forall(i => bits(out(i)) == bits(Metric.sqDist(sorted(i).vec, sorted(c).vec)))
+        }
+    }
+
+  property("lane scan from any kernel returns the reference index and r12 distance") =
+    forAllNoShrink(for {
+      nk <- Gen.choose(0, 2 * L + 1)
+      vs <- genLaneVecs(nk + 1)
+      from <- Gen.choose(0, nk)
+    } yield (vs.head, vs.tail, from)) { case (x, ks, from) =>
+      val (i, d) = KernelSet(ks).nearest(x, from)
+      val (ri, rd) = Reference.nearest(x, ks.drop(from))
+      i == (if (ri < 0) -1 else ri + from) && bits(d) == bits(rd)
+    }
+
+  property("Gmm.traverse over a lane block equals Reference.select and weighted") =
+    forAllNoShrink(for {
+      pts <- genBlock
+      k <- Gen.choose(1, pts.size + 2)
+    } yield (pts, k)) { case (pts, k) =>
+      val b = PointBlock(pts)
+      val t = Gmm.traverse(b.size, k)(b.sqDistsTo)
+      val centers = t.centers.map(i => Pt(b.ids(i), b.vec(i)))
+      val counts = t.centers.indices.map(c => t.owner.count(_ == c).toLong)
+      val ref = Reference.select(pts, k)
+      centers.map(_.id) == ref.map(_.id) &&
+        counts == Reference.weighted(pts, ref).map(_.weight)
+    }
 
   private def kernels(r: IndexedSeq[WeightedPt]) = r.map(w => (w.id, w.weight, w.vec.toSeq))
 

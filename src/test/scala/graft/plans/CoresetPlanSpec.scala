@@ -53,6 +53,9 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("CoresetExec"), p)
     assert(p.contains("Exchange") && p.contains("shufflepartitionidpassthrough"), p)
+    // A range exchange would sample the kernels in a job of its own and so
+    // run every local GMM(k') twice; the rows are sorted on one partition.
+    assert(!p.contains("rangepartitioning") && p.contains("SinglePartition"), p)
   }
 
   test("plan-node coreset ≡ mapPartitions coreset (same kernel, same partitioning)") {
