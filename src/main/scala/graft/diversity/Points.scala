@@ -227,10 +227,10 @@ object PointBlock {
     b.result()
   }
 
-  /** Collects points in any order. Every point must have the dimension of
-    * the first one: a null or ragged embedding fails here, naming its
-    * vec_id, instead of surfacing later as an NPE, an index error or a
-    * silently truncated distance.
+  /** Collects points in any order, one at a time or a block at a time.
+    * Every point must have the dimension of the first one: a null or
+    * ragged embedding fails here, naming its vec_id, instead of surfacing
+    * later as an NPE, an index error or a silently truncated distance.
     */
   final class Builder {
     private var ids = new Array[Long](64)
@@ -241,27 +241,52 @@ object PointBlock {
 
     def add(id: Long, vec: Array[Float]): Unit = {
       require(vec != null, s"vec_id $id has a null embedding")
-      if (dim < 0) {
-        dim = vec.length
-        firstId = id
-        data = new Array[Float](64 * dim)
-      }
-      require(vec.length == dim,
-        s"vec_id $id has an embedding of length ${vec.length}, but vec_id $firstId has length $dim")
-      if (n == ids.length) {
-        ids = java.util.Arrays.copyOf(ids, 2 * n)
-        data = java.util.Arrays.copyOf(data, 2 * n * dim)
-      }
+      checkDim(id, vec.length)
+      reserve(1)
       ids(n) = id
       System.arraycopy(vec, 0, data, n * dim, dim)
       n += 1
+    }
+
+    /** Adds a block of points with two bulk copies: `vecs` holds their
+      * coordinates row-major, `vecs.length / ids.length` floats per point.
+      * A block of another dimension fails naming its first vec_id.
+      */
+    def add(ids: Array[Long], vecs: Array[Float]): Unit = if (ids.nonEmpty) {
+      val d = vecs.length / ids.length
+      require(d * ids.length == vecs.length,
+        s"a block of ${ids.length} points from vec_id ${ids(0)} holds ${vecs.length} floats")
+      checkDim(ids(0), d)
+      reserve(ids.length)
+      System.arraycopy(ids, 0, this.ids, n, ids.length)
+      System.arraycopy(vecs, 0, data, n * dim, vecs.length)
+      n += ids.length
+    }
+
+    private def checkDim(id: Long, d: Int): Unit = {
+      if (dim < 0) {
+        dim = d
+        firstId = id
+        data = new Array[Float](ids.length * dim)
+      }
+      require(d == dim,
+        s"vec_id $id has an embedding of length $d, but vec_id $firstId has length $dim")
+    }
+
+    private def reserve(more: Int): Unit = if (n + more > ids.length) {
+      val capacity = math.max(2 * ids.length, n + more)
+      ids = java.util.Arrays.copyOf(ids, capacity)
+      data = java.util.Arrays.copyOf(data, capacity * dim)
     }
 
     /** The block: the points sorted by id, in tiles of L. */
     def result(): PointBlock = {
       val L = VectorLanes.width
       val d = math.max(dim, 0)
-      val order = (0 until n).sortBy(i => ids(i)).toArray
+      // Blocks from a scan in id order arrive sorted: skip the boxed sort.
+      val order =
+        if ((1 until n).forall(i => ids(i - 1) <= ids(i))) Array.range(0, n)
+        else (0 until n).sortBy(i => ids(i)).toArray
       val tiled = new Array[Float]((n + L - 1) / L * L * d)
       var i = 0
       while (i < n) {

@@ -9,9 +9,12 @@ import graft.diversity._
   * reference's own surface, re-expressed Spark-first).
   *
   * Execution shape ([VLDB17] §4, SURVEY.md §3.1): exactly one deliberate
-  * shuffle ([[byResidue]]: partition r holds exactly residue class
-  * vec_id % p = r) into the [[graft.plans.CoresetPlan]] node + one
-  * executor→driver crossing (`collect()` of the p·k′-point coreset). The
+  * shuffle, Spark's own `repartitionById(p, r)`, into the
+  * [[graft.plans.CoresetPlan]] node + one executor→driver crossing
+  * (`collect()` of the p·k′-point coreset). The map side packs each of the
+  * scan's column batches into one block per residue class r = vec_id % p
+  * ([[graft.plans.CoresetPack]]), so the shuffle moves about p rows per
+  * input batch, and partition r holds exactly class r's blocks. The
   * driver-side heuristics then run on ≤ a few hundred points. Raw
   * embeddings are never collected — the coreset IS the scalability
   * argument, at 100 TB exactly as at sf0.001.
@@ -22,7 +25,7 @@ import graft.diversity._
   * centers to the earlier-selected one, distance comparisons on
   * 12-dp-rounded squared values. p scales with the session's executor
   * parallelism (the 100 TB posture: more executors → more, smaller local GMM problems); the
-  * pmod key keeps the assignment deterministic GIVEN p, and the composable
+  * residue key keeps the assignment deterministic GIVEN p, and the composable
   * coreset bound holds for every p ([VLDB17] §4), so results are
   * reproducible per cluster size — invariance ACROSS p is only exact when
   * the local coresets cover their partitions (CoresetSpec anchor prop).
@@ -97,17 +100,20 @@ object DiversityOps {
   private def byResidue[T](ds: Dataset[T], key: Column, p: Int): Dataset[T] =
     ds.repartitionById(p, pmod(key, lit(p.toLong)).cast("int"))
 
-  /** The coreset's kernel rows `(id, center, weight)`: the embeddings go
-    * through [[byResidue]] into [[graft.plans.CoresetPlan]] →
-    * `CoresetStrategy` → `CoresetExec`, which folds each residue class with
-    * [[MapReduceCoreset.localCoreset]].
+  /** The coreset's kernel rows `(id, center, weight)`: the scan's column
+    * batches are packed into one block per residue class
+    * ([[graft.plans.CoresetPack]]), the blocks go through Spark's own
+    * `repartitionById(p, r)` exchange, and [[graft.plans.CoresetPlan]] →
+    * `CoresetStrategy` → `CoresetExec` folds each residue class with
+    * [[MapReduceCoreset.localCoreset]]. The columns are selected without an
+    * alias, so no projection sits between the scan and the pack.
     */
   private def kernelRows(spark: SparkSession, sfDir: String, p: Int): DataFrame = {
-    val child = byResidue(
-      Tables.embeddings(spark, sfDir).select(col("vec_id").as("id"), col("embedding")),
-      col("id"), p)
-    org.apache.spark.sql.graftbridge.GraftPlanBridge.ofRows(
-      spark, graft.plans.CoresetPlan(child.queryExecution.analyzed, KPrime, p))
+    import org.apache.spark.sql.graftbridge.GraftPlanBridge.ofRows
+    val points = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
+    val blocks = ofRows(spark, graft.plans.CoresetPack(points.queryExecution.analyzed, p))
+      .repartitionById(p, col("r"))
+    ofRows(spark, graft.plans.CoresetPlan(blocks.queryExecution.analyzed, KPrime, p))
   }
 
   private def coresetPoints(spark: SparkSession, sfDir: String): IndexedSeq[Pt] =

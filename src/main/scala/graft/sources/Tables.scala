@@ -26,6 +26,11 @@ object Tables {
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** How deep [[footers]] lists below a table's path: far beyond any
+    * partitioned layout the engine reads.
+    */
+  private val MaxListingDepth = 32
+
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -55,24 +60,38 @@ object Tables {
 
   /** `f` of each data file's parquet footer under `pathStr`, with the
     * file's path. The listing is [[rowCount]]'s: recursive, hidden and
-    * metadata entries skipped, and no data file at all is an error.
+    * metadata entries skipped, and no data file at all is an error. So is
+    * a directory the walk reaches twice (by canonical path on the local
+    * file system, where a symlink can close a cycle) or one nested deeper
+    * than [[MaxListingDepth]]: both fail naming the directory, where the
+    * walk would otherwise recurse until the stack or the path length gave
+    * out.
     */
   private def footers[A](spark: SparkSession, pathStr: String)(
       f: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[(String, A)] = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new org.apache.hadoop.fs.Path(pathStr)
     val fs = path.getFileSystem(conf)
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath)
+    def canonical(dir: org.apache.hadoop.fs.Path): String =
+      if (fs.getScheme == "file") new java.io.File(dir.toUri).getCanonicalPath else dir.toString
+    val seen = scala.collection.mutable.Set.empty[String]
+    def walk(st: org.apache.hadoop.fs.FileStatus, depth: Int): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) {
+        val dir = st.getPath
+        require(depth <= MaxListingDepth,
+          s"$pathStr: the listing passes depth $MaxListingDepth at $dir")
+        require(seen.add(canonical(dir)),
+          s"$pathStr: the listing reaches directory $dir twice (a symlink cycle?)")
+        fs.listStatus(dir)
           .filterNot { s =>
             val n = s.getPath.getName
             n.startsWith("_") || n.startsWith(".")
           }
-          .toSeq.flatMap(walk)
+          .toSeq.flatMap(walk(_, depth + 1))
+      }
       else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
       else Seq.empty
-    val files = walk(fs.getFileStatus(path))
+    val files = walk(fs.getFileStatus(path), 0)
     require(files.nonEmpty,
       s"$pathStr: no *.parquet data files found — refusing to report 0 rows or pass a " +
         "schema for an unreadable or unexpectedly-laid-out table")

@@ -1,7 +1,7 @@
 package graft.diversity
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.{forAll, forAllNoShrink}
+import org.scalacheck.Prop.forAllNoShrink
 
 /** The lane scans ([[KernelSet.nearest]], [[PointBlock.sqDistsTo]]) and
   * what is built on them against [[Reference]], the scalar loops they
@@ -84,6 +84,20 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
         }
     }
 
+  property("a block built from bulk slices equals the block built point by point") =
+    forAllNoShrink(for {
+      pts <- genBlock
+      cuts <- Gen.listOf(Gen.choose(0, pts.size))
+    } yield (pts, (0 +: cuts.sorted :+ pts.size).distinct)) { case (pts, bounds) =>
+      val bulk = new PointBlock.Builder
+      bounds.zip(bounds.tail).foreach { case (from, until) =>
+        val slice = pts.slice(from, until)
+        bulk.add(slice.map(_.id).toArray, slice.flatMap(_.vec).toArray)
+      }
+      val (b, one) = (bulk.result(), PointBlock(pts))
+      b.ids.toSeq == one.ids.toSeq && pts.indices.forall(i => b.vec(i).sameElements(one.vec(i)))
+    }
+
   property("lane scan from any kernel returns the reference index and r12 distance") =
     forAllNoShrink(for {
       nk <- Gen.choose(0, 2 * L + 1)
@@ -118,13 +132,13 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
   }
 
   property("four-kernel scan returns the reference index and r12 distance") =
-    forAll(genScan) { case (x, ks, from) =>
+    forAllNoShrink(genScan) { case (x, ks, from) =>
       val (i, d) = KernelSet(ks).nearest(x, from)
       val (ri, rd) = Reference.nearest(x, ks.drop(from))
       i == (if (ri < 0) -1 else ri + from) && bits(d) == bits(rd)
     }
 
-  property("weighted fold equals the reference fold") = forAll(genFold) { case (pts, m, _) =>
+  property("weighted fold equals the reference fold") = forAllNoShrink(genFold) { case (pts, m, _) =>
     val sc = fold(pts, m)
     val ref = new Reference.StreamingCoreset(m)
     pts.foreach { case (p, w) => ref.updateWeighted(p, w) }
@@ -134,7 +148,7 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
   }
 
   property("a fold split through snapshot/fromState equals the unsplit fold") =
-    forAll(genFold) { case (pts, m, split) =>
+    forAllNoShrink(genFold) { case (pts, m, split) =>
       val whole = fold(pts, m)
       val resumed = StreamingCoreset.fromState(m, fold(pts.take(split), m).snapshot)
       pts.drop(split).foreach { case (p, w) => resumed.updateWeighted(p, w) }

@@ -39,8 +39,30 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
       .toSeq
   }
 
-  private def kernels(child: DataFrame, p: Int): DataFrame =
-    GraftPlanBridge.ofRows(spark, CoresetPlan(child.queryExecution.analyzed, DiversityOps.KPrime, p))
+  /** The kernel rows of `points (id, embedding)`: packed into residue
+    * blocks, moved by `exchange`, then folded.
+    */
+  private def kernels(points: DataFrame, p: Int)(exchange: DataFrame => DataFrame): DataFrame = {
+    val blocks = exchange(GraftPlanBridge.ofRows(spark, CoresetPack(points.queryExecution.analyzed, p)))
+    GraftPlanBridge.ofRows(spark, CoresetPlan(blocks.queryExecution.analyzed, DiversityOps.KPrime, p))
+  }
+
+  private val sf01 = s"${new java.io.File(sf0001).getParent}/sf0.1"
+  private def view(ws: Seq[WeightedPt]) = ws.map(w => (w.id, w.weight, w.vec.toSeq))
+  /** The replica's coreset of sf0.1 at p = 1, 8 and 32. */
+  private lazy val expectedSf01: Map[Int, Seq[(Long, Long, Seq[Float])]] =
+    Seq(1, 8, 32).map(p => p -> view(replica(sf01, p))).toMap
+
+  /** Runs `body` with the SQL settings `kvs`, restoring the old values after. */
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** The messages along a failure's cause chain: a task's exception reaches
     * the driver wrapped in a SparkException.
@@ -56,6 +78,15 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
     // A range exchange would sample the kernels in a job of its own and so
     // run every local GMM(k') twice; the rows are sorted on one partition.
     assert(!p.contains("rangepartitioning") && p.contains("SinglePartition"), p)
+    // In the final plan the pack reads the scan's column batches directly,
+    // and only its blocks turn into rows for the residue exchange.
+    df.collect()
+    val lines = df.queryExecution.executedPlan.toString.linesIterator
+      .map(_.replaceAll("^[\\s:+-]*(\\*\\(\\d+\\) )?", "")).toSeq
+    val pack = lines.indexWhere(_.startsWith("CoresetPack"))
+    assert(pack > 1 && lines(pack + 1).startsWith("FileScan parquet") &&
+      lines(pack - 1).startsWith("ColumnarToRow") &&
+      lines(pack - 2).startsWith("Exchange shufflepartitionidpassthrough"), lines.mkString("\n"))
   }
 
   test("plan-node coreset ≡ mapPartitions coreset (same kernel, same partitioning)") {
@@ -69,20 +100,43 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("coresetAt equals the mod-partitioner replica for every p, AQE setting and shuffle-partition count") {
-    val sf01 = s"${new java.io.File(sf0001).getParent}/sf0.1"
-    def view(ws: Seq[WeightedPt]) = ws.map(w => (w.id, w.weight, w.vec.toSeq))
-    for (p <- Seq(1, 8, 32)) {
-      val expected = view(replica(sf01, p))
-      for (aqe <- Seq("true", "false"); shufflePartitions <- Seq("1", "200")) {
-        val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-          .map(k => k -> spark.conf.get(k))
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-        try {
-          assert(view(DiversityOps.coresetAt(spark, sf01, p)) == expected,
-            s"p=$p aqe=$aqe shuffle.partitions=$shufflePartitions")
-        } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    for (p <- Seq(1, 8, 32); aqe <- Seq("true", "false"); shufflePartitions <- Seq("1", "200")) {
+      withConf("spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> shufflePartitions) {
+        assert(view(DiversityOps.coresetAt(spark, sf01, p)) == expectedSf01(p),
+          s"p=$p aqe=$aqe shuffle.partitions=$shufflePartitions")
       }
+    }
+  }
+
+  test("residue classes that straddle many reader batches fold to the replica's coreset") {
+    withConf("spark.sql.parquet.columnarReaderBatchSize" -> "37") {
+      for (p <- Seq(1, 8, 32))
+        assert(view(DiversityOps.coresetAt(spark, sf01, p)) == expectedSf01(p), s"p=$p")
+    }
+  }
+
+  test("blocks of one class from several map tasks fold to the replica's coreset") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-multifile").toString
+    try {
+      spark.read.parquet(s"$sf01/embeddings.parquet").repartition(6)
+        .write.parquet(s"$dir/embeddings.parquet")
+      // Small splits, so each file is read by a map task of its own.
+      withConf("spark.sql.files.maxPartitionBytes" -> "128k") {
+        assert(graft.sources.Tables.embeddings(spark, dir).rdd.getNumPartitions > 1)
+        for (p <- Seq(1, 8, 32))
+          assert(view(DiversityOps.coresetAt(spark, dir, p)) == expectedSf01(p), s"p=$p")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("with whole-stage codegen off, a row scan reaches the pack through RowToColumnar") {
+    withConf("spark.sql.codegen.wholeStage" -> "false") {
+      for (p <- Seq(1, 8, 32))
+        assert(view(DiversityOps.coresetAt(spark, sf01, p)) == expectedSf01(p), s"p=$p")
+      val df = DiversityOps.coresetExecK64(spark, sf01)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("RowToColumnar") && plan.contains("CoresetPack"), plan)
     }
   }
 
@@ -96,9 +150,8 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
   test("CoresetExec fails loudly on a null or ragged embedding, naming the vec_id") {
     import spark.implicits._
     def run(rows: Seq[(Long, Array[Float])]) = {
-      val child = rows.toDF("id", "embedding")
-        .repartitionById(2, pmod(col("id"), lit(2L)).cast("int"))
-      messages(intercept[Exception](kernels(child, 2).collect()))
+      val points = rows.toDF("id", "embedding")
+      messages(intercept[Exception](kernels(points, 2)(_.repartitionById(2, col("r"))).collect()))
     }
     val ok = Seq((1L, Array(0f, 1f)), (3L, Array(1f, 0f)))
     val nul = run(ok :+ ((5L, null)))
@@ -107,11 +160,18 @@ class CoresetPlanSpec extends AnyFunSuite with SparkTestBase {
     assert(ragged.contains("vec_id 5 has an embedding of length 3, but vec_id 1 has length 2"), ragged)
   }
 
+  test("a null coordinate folds as 0, as it read from a row") {
+    def centers(coordinate: String) = kernels(spark.sql(
+      s"SELECT id, array($coordinate, CAST(id AS FLOAT)) AS embedding FROM range(6)"), 2)(
+      _.repartitionById(2, col("r"))).collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    assert(centers("CAST(NULL AS FLOAT)") == centers("0F"))
+  }
+
   test("CoresetExec fails when a partition holds more than its id % p class") {
     import spark.implicits._
-    val child = (0L until 40L).map(i => (i, Array(i.toFloat, 0f))).toDF("id", "embedding")
-      .repartition(4) // round-robin: residue classes mixed across partitions
-    val msg = messages(intercept[Exception](kernels(child, 4).collect()))
+    val points = (0L until 40L).map(i => (i, Array(i.toFloat, 0f))).toDF("id", "embedding")
+    // round-robin: residue classes mixed across partitions
+    val msg = messages(intercept[Exception](kernels(points, 4)(_.repartition(4)).collect()))
     assert(msg.contains("not in its id % 4 class"), msg)
   }
 }

@@ -787,4 +787,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(winLine.contains("epoch") && winLine.contains("shard"), winLine)
     assert(!p.contains("CartesianProduct"), p)
   }
+
+  test("cms_token_counts: the top-20 branch reuses the token-count exchange in the final plan") {
+    val df = graft.operators.TextAnalysisOps.cmsTokenCounts(spark, sf0001)
+    df.collect() // AQE reuses a stage only while it runs the query
+    val p = plan(df)
+    assert(p.contains("ReusedExchange"), p)
+  }
 }

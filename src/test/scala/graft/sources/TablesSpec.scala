@@ -31,4 +31,25 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
         missing.contains("column label is missing"), missing)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
+
+  test("a symlink cycle or a runaway depth under a table fails the listing, naming the path") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-listing").toString
+    val loop = java.nio.file.Paths.get(s"$dir/cycle/embeddings.parquet/loop")
+    try {
+      def failure(sub: String)(layout: java.nio.file.Path => Unit): String = {
+        val table = s"$dir/$sub/embeddings.parquet"
+        Seq((1L, Array(1f, 2f), 1)).toDF("vec_id", "embedding", "label").write.parquet(table)
+        layout(java.nio.file.Paths.get(table))
+        intercept[IllegalArgumentException](Tables.rowCount(spark, s"$dir/$sub", "embeddings")).getMessage
+      }
+      val cycle = failure("cycle")(table => Files.createSymbolicLink(loop, table))
+      assert(cycle.contains(s"$dir/cycle/embeddings.parquet") && cycle.contains("twice"), cycle)
+      val deep = failure("deep")(table => Files.createDirectories(table.resolve("d/" * 40)))
+      assert(deep.contains(s"$dir/deep/embeddings.parquet") && deep.contains("passes depth 32"), deep)
+    } finally {
+      Files.deleteIfExists(loop)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }
