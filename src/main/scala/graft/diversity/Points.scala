@@ -1,6 +1,7 @@
 package graft.diversity
 
 import jdk.incubator.vector.{DoubleVector, FloatVector, VectorOperators}
+import org.apache.spark.unsafe.Platform
 
 /** A point in the metric space: the reference's sole data abstraction
   * (SURVEY.md §1.1 — dense vector + id). `id` is the determinism anchor:
@@ -248,20 +249,25 @@ object PointBlock {
       n += 1
     }
 
-    /** Adds a block of points with two bulk copies: `vecs` holds their
-      * coordinates row-major, `vecs.length / ids.length` floats per point.
-      * A block of another dimension fails naming its first vec_id.
+    /** Adds a block of points with one bulk copy of its ids and one of its
+      * coordinates, from memory as [[Platform]] addresses it (an
+      * `UnsafeRow`'s binary fields): `idBytes` bytes of 8-byte ids at
+      * `idsAt` and `vecBytes` bytes of float32 coordinates, row-major, at
+      * `vecsAt`, both in `base`. A block of another dimension fails naming
+      * its first vec_id.
       */
-    def add(ids: Array[Long], vecs: Array[Float]): Unit = if (ids.nonEmpty) {
-      val d = vecs.length / ids.length
-      require(d * ids.length == vecs.length,
-        s"a block of ${ids.length} points from vec_id ${ids(0)} holds ${vecs.length} floats")
-      checkDim(ids(0), d)
-      reserve(ids.length)
-      System.arraycopy(ids, 0, this.ids, n, ids.length)
-      System.arraycopy(vecs, 0, data, n * dim, vecs.length)
-      n += ids.length
-    }
+    def add(base: AnyRef, idsAt: Long, idBytes: Int, vecsAt: Long, vecBytes: Int): Unit =
+      if (idBytes > 0) {
+        val m = idBytes / 8
+        require(8 * m == idBytes && vecBytes % (4 * m) == 0,
+          s"a block of $idBytes id bytes holds $vecBytes coordinate bytes")
+        val (first, d) = (Platform.getLong(base, idsAt), vecBytes / 4 / m)
+        checkDim(first, d)
+        reserve(m)
+        Platform.copyMemory(base, idsAt, ids, Platform.LONG_ARRAY_OFFSET + 8L * n, idBytes)
+        Platform.copyMemory(base, vecsAt, data, Platform.FLOAT_ARRAY_OFFSET + 4L * n * dim, vecBytes)
+        n += m
+      }
 
     private def checkDim(id: Long, d: Int): Unit = {
       if (dim < 0) {
@@ -283,10 +289,7 @@ object PointBlock {
     def result(): PointBlock = {
       val L = VectorLanes.width
       val d = math.max(dim, 0)
-      // Blocks from a scan in id order arrive sorted: skip the boxed sort.
-      val order =
-        if ((1 until n).forall(i => ids(i - 1) <= ids(i))) Array.range(0, n)
-        else (0 until n).sortBy(i => ids(i)).toArray
+      val order = (0 until n).sortBy(i => ids(i)).toArray
       val tiled = new Array[Float]((n + L - 1) / L * L * d)
       var i = 0
       while (i < n) {

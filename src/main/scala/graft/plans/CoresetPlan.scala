@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -81,18 +81,6 @@ object CoresetPack {
       AttributeReference("r", IntegerType, nullable = false)(),
       AttributeReference("ids", BinaryType, nullable = false)(),
       AttributeReference("vecs", BinaryType, nullable = false)()))
-
-  def longs(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bytes.length / 8)
-    Platform.copyMemory(bytes, Platform.BYTE_ARRAY_OFFSET, out, Platform.LONG_ARRAY_OFFSET, 8L * out.length)
-    out
-  }
-
-  def floats(bytes: Array[Byte]): Array[Float] = {
-    val out = new Array[Float](bytes.length / 4)
-    Platform.copyMemory(bytes, Platform.BYTE_ARRAY_OFFSET, out, Platform.FLOAT_ARRAY_OFFSET, 4L * out.length)
-    out
-  }
 }
 
 /** Planner rule: each logical coreset node → its physical exec node. */
@@ -186,7 +174,10 @@ object CoresetPackExec {
   }
 }
 
-/** A binary column over the given arrays, which it hands out uncopied. */
+/** A binary column over the given arrays, which it hands out uncopied
+  * (`OnHeapColumnVector.putByteArray` copies each block in, and its
+  * `getBinary` copies it out again).
+  */
 private final class BytesColumn(values: Array[Array[Byte]]) extends ColumnVector(BinaryType) {
   override def getBinary(i: Int): Array[Byte] = values(i)
   override def isNullAt(i: Int): Boolean = false
@@ -234,16 +225,20 @@ case class CoresetExec(child: SparkPlan, kPrime: Int, p: Int, output: Seq[Attrib
     child.execute().mapPartitionsWithIndex { (part, rows) =>
       val block = new PointBlock.Builder
       while (rows.hasNext) {
-        val r = rows.next()
-        val ids = CoresetPack.longs(r.getBinary(1))
+        // Exchange rows are UnsafeRows: a binary field's slot holds its
+        // offset << 32 | size, so the block is read where it lies.
+        val r = rows.next().asInstanceOf[UnsafeRow]
+        val (base, idSlot, vecSlot) = (r.getBaseObject, r.getLong(1), r.getLong(2))
+        val idsAt = r.getBaseOffset + (idSlot >>> 32)
         var i = 0
-        while (i < ids.length) {
+        while (i < idSlot.toInt / 8) {
+          val id = Platform.getLong(base, idsAt + 8L * i)
           // A coalesced or split exchange would silently mix residue classes.
-          require(Math.floorMod(ids(i), parts.toLong) == part,
-            s"CoresetExec: vec_id ${ids(i)} is in partition $part, not in its id % $parts class")
+          require(Math.floorMod(id, parts.toLong) == part,
+            s"CoresetExec: vec_id $id is in partition $part, not in its id % $parts class")
           i += 1
         }
-        block.add(ids, CoresetPack.floats(r.getBinary(2)))
+        block.add(base, idsAt, idSlot.toInt, r.getBaseOffset + (vecSlot >>> 32), vecSlot.toInt)
       }
       // Emit UNSAFE rows — the inter-operator row contract (exchanges and
       // several consumers cast to UnsafeRow).

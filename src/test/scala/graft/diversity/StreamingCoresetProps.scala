@@ -1,5 +1,6 @@
 package graft.diversity
 
+import org.apache.spark.unsafe.Platform
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAllNoShrink
 
@@ -91,8 +92,13 @@ object StreamingCoresetProps extends Properties("StreamingCoreset") {
     } yield (pts, (0 +: cuts.sorted :+ pts.size).distinct)) { case (pts, bounds) =>
       val bulk = new PointBlock.Builder
       bounds.zip(bounds.tail).foreach { case (from, until) =>
-        val slice = pts.slice(from, until)
-        bulk.add(slice.map(_.id).toArray, slice.flatMap(_.vec).toArray)
+        // The slice as one byte array: its ids, then its coordinates.
+        val (ids, vecs) = (pts.slice(from, until).map(_.id), pts.slice(from, until).flatMap(_.vec))
+        val bytes = new Array[Byte](8 * ids.size + 4 * vecs.size)
+        val at = Platform.BYTE_ARRAY_OFFSET
+        ids.indices.foreach(i => Platform.putLong(bytes, at + 8L * i, ids(i)))
+        vecs.indices.foreach(i => Platform.putFloat(bytes, at + 8L * ids.size + 4L * i, vecs(i)))
+        bulk.add(bytes, at, 8 * ids.size, at + 8L * ids.size, 4 * vecs.size)
       }
       val (b, one) = (bulk.result(), PointBlock(pts))
       b.ids.toSeq == one.ids.toSeq && pts.indices.forall(i => b.vec(i).sameElements(one.vec(i)))
