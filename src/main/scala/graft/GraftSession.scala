@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is configured. Every session the library
-  * builds (Verify, Bench, Plans, BandRun, GenData, Experiments and the
+  * builds (Verify, Bench, Plans, BandRun, GenData and the
   * test harness) starts from [[builder]], so all of them plan and execute
   * with the same settings; callers add only their app name, scratch dirs
   * and log level.

@@ -15,7 +15,8 @@ package graft
   */
 object ScratchDirs {
 
-  private def wipe(f: java.io.File): Unit = {
+  /** Delete `f` and, for a directory, everything under it. */
+  private[graft] def wipe(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
     f.delete(): Unit
   }

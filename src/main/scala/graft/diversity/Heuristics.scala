@@ -18,93 +18,87 @@ import scala.collection.mutable.ArrayBuffer
   *    exists, so weights only matter in the degenerate k > #distinct case.
   *  - remote-clique local search (R2): weights DO matter — a second copy of
   *    a far point adds its full distance to the rest of the set, which can
-  *    beat adding a distinct middling point ([[localSearchWeighted]]; the
-  *    skewed-multiplicity case is spec-pinned in HeuristicsWeightSpec).
+  *    beat adding a distinct middling point (the skewed-multiplicity case is
+  *    spec-pinned in HeuristicsWeightSpec). R2 is one capped search,
+  *    [[localSearchWeighted]]: each point may fill at most its weight of
+  *    the k slots, and with every weight 1 it is the set search
+  *    [[localSearch]].
   */
 object Heuristics {
 
-  /** Weight-aware local search (R2 on a weighted coreset): selects a
-    * multiset of k copies, each point capped at its delegate weight, to
-    * maximize remote-clique (copies of the same point contribute 0 to each
-    * other). Start = GMM over the distinct points (optimal never duplicates
-    * before k exceeds the distinct count — see object doc), greedily filled
-    * with best-marginal-gain copies if k > #distinct; then deterministic
-    * first-improvement swaps (ascending-id scans, strict improvement > eps)
-    * where a move replaces one chosen copy with one copy of any point below
-    * its cap. With all weights = 1 this degenerates to [[localSearch]]
-    * (spec-pinned). Returns the multiset as a sorted Seq with repeats, so
-    * [[Diversity.remoteClique]] evaluates it directly.
+  private val Eps = 1e-9 // a swap must gain more than this
+  private val MaxIter = 100 // improving passes before the search stops
+
+  /** Local search (R2) over a weighted coreset: k slots, each point capped
+    * at its weight, maximizing remote-clique (copies of a point add 0 to
+    * each other). Start: GMM over the distinct points; if k exceeds them,
+    * fill slot by slot with the point below its cap whose distances to the
+    * filled slots sum highest (lowest id on ties), up to the total mass.
+    * Then first-improvement swaps: for each slot, scan the points in
+    * ascending id and move the slot to the first one below its cap (an
+    * extra copy of a chosen point included) whose sum over the other slots
+    * beats the slot's own by more than `Eps`. Sums run in slot order over
+    * one distance matrix. Returns the multiset sorted by id, with repeats.
     */
-  def localSearchWeighted(points: Seq[WeightedPt], k: Int, eps: Double = 1e-9,
-      maxIter: Int = 100): IndexedSeq[Pt] = {
-    val pts = points.toArray.sortBy(_.id)
+  def localSearchWeighted(points: Seq[WeightedPt], k: Int): IndexedSeq[Pt] = {
+    val sorted = points.toArray.sortBy(_.id)
+    val pts = sorted.map(w => Pt(w.id, w.vec))
+    val cap = sorted.map(_.weight)
     val n = pts.length
     if (n == 0 || k <= 0) return Vector.empty
-    val totalMass = pts.map(_.weight).sum
-    val kk = math.min(k.toLong, totalMass).toInt
+    val kk = math.min(k.toLong, cap.sum).toInt
+    val block = PointBlock(pts) // already sorted: block index i is pts(i)
     val dist = distMatrix(pts.map(_.vec))
-    val count = Array.fill(n)(0L)
-    // seed: GMM over distinct points; `slots` holds the chosen copies in
-    // SELECTION order — the same slot-replacement scan [[localSearch]] uses,
-    // so weight-1 inputs walk an identical first-improvement trajectory.
-    val idxOf = pts.iterator.zipWithIndex.map { case (w, i) => w.id -> i }.toMap
-    val seed = Gmm.select(pts.map(w => Pt(w.id, w.vec)).toIndexedSeq, math.min(kk, n))
-    val slots = scala.collection.mutable.ArrayBuffer[Int]()
-    seed.foreach { p => val i = idxOf(p.id); count(i) += 1; slots += i }
-    // fill beyond the distinct count: repeatedly add the capacity-feasible
-    // copy with the best marginal gain Σ d(x, ·)·count (lowest id on ties)
-    while (slots.length < kk) {
+    val slots = new Array[Int](kk)
+    val count = new Array[Long](n)
+    var filled = 0
+    def take(i: Int): Unit = { slots(filled) = i; count(i) += 1; filled += 1 }
+    // Σ over the filled slots other than s of dist(i, ·), in slot order
+    def sumToOthers(i: Int, s: Int): Double = {
+      var sum = 0.0
+      var j = 0
+      while (j < filled) {
+        if (j != s) sum += dist(i)(slots(j))
+        j += 1
+      }
+      sum
+    }
+    Gmm.traverse(n, kk)(block.sqDistsTo).centers.foreach(take)
+    while (filled < kk) {
       var best = -1; var bestGain = -1.0
       var i = 0
       while (i < n) {
-        if (count(i) < pts(i).weight) {
-          var g = 0.0
-          var j = 0
-          while (j < n) { g += dist(i)(j) * count(j); j += 1 }
+        if (count(i) < cap(i)) {
+          val g = sumToOthers(i, -1)
           if (g > bestGain) { bestGain = g; best = i }
         }
         i += 1
       }
-      count(best) += 1
-      slots += best
+      take(best)
     }
-    // first-improvement swaps: replace the copy in slot s with one copy of
-    // any point below its cap (a point already in the multiset is a valid
-    // candidate for an EXTRA copy — that's the multiplicity move)
     var improved = true
     var iter = 0
-    while (improved && iter < maxIter) {
+    while (improved && iter < MaxIter) {
       improved = false
       iter += 1
       var s = 0
-      while (!improved && s < slots.length) {
+      while (!improved && s < kk) {
         val ci = slots(s)
-        // contribution of this copy: distances to the rest of the multiset
-        // (other copies of the same point contribute 0)
-        var contrib = 0.0
-        var j = 0
-        while (j < n) { contrib += dist(ci)(j) * count(j); j += 1 }
+        val contrib = sumToOthers(ci, s)
         var pi = 0
         while (!improved && pi < n) {
-          if (pi != ci && count(pi) < pts(pi).weight) {
-            // candidate copy's contribution to (multiset − this slot's copy)
-            var cand = 0.0
-            var j2 = 0
-            while (j2 < n) { cand += dist(pi)(j2) * count(j2); j2 += 1 }
-            cand -= dist(pi)(ci) // the removed copy
-            if (cand > contrib + eps) {
-              count(ci) -= 1
-              count(pi) += 1
-              slots(s) = pi
-              improved = true
-            }
+          if (pi != ci && count(pi) < cap(pi) && sumToOthers(pi, s) > contrib + Eps) {
+            count(ci) -= 1
+            count(pi) += 1
+            slots(s) = pi
+            improved = true
           }
           pi += 1
         }
         s += 1
       }
     }
-    slots.toIndexedSeq.map(i => Pt(pts(i).id, pts(i).vec)).sortBy(_.id)
+    slots.toIndexedSeq.map(pts(_)).sortBy(_.id)
   }
 
   /** Matching heuristic (R3): greedily add the farthest remaining *pair*
@@ -166,52 +160,11 @@ object Heuristics {
     out.toIndexedSeq
   }
 
-  /** Local search (R2): start from GMM's k-set, repeatedly swap a chosen
-    * point for an unchosen one if it improves remote-clique by more than
-    * eps; deterministic scan order (ascending ids), first-improvement. A
-    * slot's contribution is summed over the other slots in slot order from
-    * one pairwise distance matrix, computed once.
+  /** Local search (R2) over a set: [[localSearchWeighted]] with every
+    * weight 1, so no point is selected twice.
     */
-  def localSearch(points: Seq[Pt], k: Int, eps: Double = 1e-9, maxIter: Int = 100): IndexedSeq[Pt] = {
-    val pts = points.toArray.sortBy(_.id)
-    if (pts.isEmpty || k <= 0) return Vector.empty
-    val block = PointBlock(pts) // already sorted: block index i is pts(i)
-    val slots = Gmm.traverse(block.size, k)(block.sqDistsTo).centers.toArray
-    val dist = distMatrix(pts.map(_.vec))
-    val chosenIds = scala.collection.mutable.Set(slots.map(pts(_).id): _*)
-    // Σ over the slots other than s of dist(i, ·), in slot order
-    def sumToOthers(i: Int, s: Int): Double = {
-      var sum = 0.0
-      var j = 0
-      while (j < slots.length) {
-        if (j != s) sum += dist(i)(slots(j))
-        j += 1
-      }
-      sum
-    }
-    var improved = true
-    var iter = 0
-    while (improved && iter < maxIter) {
-      improved = false
-      iter += 1
-      var s = 0
-      while (!improved && s < slots.length) {
-        val contrib = sumToOthers(slots(s), s)
-        var pi = 0
-        while (!improved && pi < pts.length) {
-          if (!chosenIds.contains(pts(pi).id) && sumToOthers(pi, s) > contrib + eps) {
-            chosenIds -= pts(slots(s)).id
-            chosenIds += pts(pi).id
-            slots(s) = pi
-            improved = true
-          }
-          pi += 1
-        }
-        s += 1
-      }
-    }
-    slots.toIndexedSeq.map(pts(_)).sortBy(_.id)
-  }
+  def localSearch(points: Seq[Pt], k: Int): IndexedSeq[Pt] =
+    localSearchWeighted(points.map(p => WeightedPt(p.id, p.vec, 1L)), k)
 
   /** Pairwise [[Metric.dist]] of `vecs`, 0 on the diagonal. Computed for
     * i < j and mirrored: `Metric.sqDist` is exactly symmetric.

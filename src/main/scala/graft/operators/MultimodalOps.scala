@@ -6,6 +6,7 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ScratchDirs
 import graft.sources.Tables
 
 /** Per-media features from a REAL decode (JDK codecs — see below). */
@@ -481,23 +482,18 @@ object MultimodalOps {
                 // Marker-less final dir can only be a crash remnant from a
                 // publisher that died mid-way (published dirs ALWAYS carry
                 // the marker — it rides inside the atomic move).
-                if (dir.exists()) deleteRecursively(dir)
+                if (dir.exists()) ScratchDirs.wipe(dir)
                 java.nio.file.Files.move(tmp.toPath, dir.toPath,
                   java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
               }
             } finally lock.release()
           } finally ch.close()
           // Lost a benign race (winner published while we staged): sweep.
-          if (tmp.exists() && marker.exists()) deleteRecursively(tmp)
+          if (tmp.exists() && marker.exists()) ScratchDirs.wipe(tmp)
           require(marker.exists(), s"binaryFile staging failed to publish $dir")
         }
         dir.getAbsolutePath
       })
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** V+: the binaryFile INGESTION path — `spark.read.format("binaryFile")`

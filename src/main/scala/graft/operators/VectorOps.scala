@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.diversity.Gmm
+import graft.diversity.{Gmm, Metric}
 import graft.sources.Tables
 
 /** Similarity search over the embedding column (SURVEY.md §2.2 group V).
@@ -555,11 +555,6 @@ object VectorOps {
     val sub = dims / m
     val k = 16
 
-    def l2sq(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-      s
-    }
     val train = emb.filter(col("vec_id") % 4 === 0)
       .select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id")).limit(4096)
@@ -568,7 +563,7 @@ object VectorOps {
     // sampled sub-vectors — deterministic per the Gmm protocol.
     val books: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
       Gmm.selectBy(
-        train.toSeq.map { case (id, v) => (id, v.slice(j * sub, j * sub + sub)) }, k)(l2sq)
+        train.toSeq.map { case (id, v) => (id, v.slice(j * sub, j * sub + sub)) }, k)(Metric.sqDist)
         .map(_._2).toArray
     }
     val bBooks = spark.sparkContext.broadcast(books)
@@ -578,7 +573,7 @@ object VectorOps {
       var best = 0; var bestD = Double.MaxValue
       var c = 0
       while (c < k) {
-        val d = l2sq(s, bBooks.value(j)(c))
+        val d = Metric.sqDist(s, bBooks.value(j)(c))
         if (d < bestD) { bestD = d; best = c }
         c += 1
       }

@@ -32,8 +32,8 @@ object Generators {
     * distinct keys: key = floor(keys · u^alpha) for hash-uniform u, so the
     * mass concentrates on low keys as alpha grows — at alpha=4, keys=1000,
     * key 0 alone draws (1/1000)^(1/4) ≈ 17.8% of ALL rows. Deterministic
-    * (same n/keys/alpha/seed → same dataset at any parallelism); used by
-    * [[graft.SkewExperiment]] to measure skew mitigation empirically.
+    * (same n/keys/alpha/seed → same dataset at any parallelism); the
+    * skewed input of the salting specs.
     * Columns: (id, key, value).
     */
   def zipfKeyed(spark: SparkSession, n: Long, keys: Int, alpha: Double, seed: Long = 42L): DataFrame =

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ScratchDirs
 
 /** Materialized intermediates: write a derived table to parquet ONCE per
   * (session, key, input-content) and hand every consumer a plain scan of
@@ -97,12 +98,7 @@ object Materialize {
 
   private def deleteTagged(tag: String): Unit = {
     val files = Option(baseDir.listFiles()).getOrElse(Array.empty)
-    files.filter(_.getName.contains(s"-$tag")).foreach(deleteRecursively)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
+    files.filter(_.getName.contains(s"-$tag")).foreach(ScratchDirs.wipe)
   }
 
   /** Content token of an input directory: changes whenever any file under

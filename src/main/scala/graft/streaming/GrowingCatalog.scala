@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ScratchDirs
 
 /** The admitted rows of [[GrowingCatalog.readFor]], split by asset. */
 private[graft] case class CatalogView(
@@ -206,22 +207,17 @@ private[graft] object GrowingCatalog {
     //    relation (the pinned invariant, see GrowingCatalogSpec).
     if (!base.exists() && old.exists())
       require(old.renameTo(base), s"heal rename failed: $old")
-    else wipe(old)
+    else ScratchDirs.wipe(old)
     val ds = deltas(root, asset)
     val parts = (if (base.exists()) Seq(base) else Seq.empty) ++ ds.map(_._2)
     readParts(spark, parts).foreach { all =>
       val tmp = dir(root, asset, "base_tmp")
-      wipe(tmp)
+      ScratchDirs.wipe(tmp)
       writer(all.distinct()).mode("overwrite").parquet(tmp.getPath)
       if (base.exists()) require(base.renameTo(old), s"swap aside failed: $base")
       require(tmp.renameTo(base), s"swap in failed: $tmp")
-      wipe(old)
-      ds.foreach { case (_, f) => wipe(f) }
+      ScratchDirs.wipe(old)
+      ds.foreach { case (_, f) => ScratchDirs.wipe(f) }
     }
-  }
-
-  private def wipe(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-    f.delete(): Unit
   }
 }

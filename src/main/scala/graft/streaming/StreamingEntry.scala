@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode, ValueState}
+import graft.ScratchDirs
 import graft.sources.Tables
 
 /** Row shape fed through the driver-visible streaming entry. */
@@ -73,11 +74,6 @@ object StreamingEntry {
       stream.addData(chunk)
       q.processAllAvailable()
     }
-
-  private def wipeDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(wipeDir)
-    f.delete(): Unit
-  }
 
   /** The `b<batchId>` directories a foreachBatch body wrote under `dir`,
     * read as one DataFrame. Naming them instead of reading a `b*` glob
@@ -395,7 +391,7 @@ object StreamingEntry {
   def streamFileSinkEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-sink").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val outDir = new java.io.File(base, "out").getPath
     val ckDir = new java.io.File(base, "ck").getPath
@@ -438,7 +434,7 @@ object StreamingEntry {
   def streamUpsertForeachBatch(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-upsert").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val slice = eventSlice(spark, sfDir)
     val stream = MemoryStream[StreamEvent](spark)
@@ -502,7 +498,7 @@ object StreamingEntry {
   def streamDedupMinhash(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-dedup").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val slice = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 5 === 4)
@@ -563,7 +559,7 @@ object StreamingEntry {
   def streamDedupGrowing(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-dedup-growing").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val slice = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 5 === 4)
@@ -605,7 +601,7 @@ object StreamingEntry {
   def streamAnnTopk(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-ann").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val slice = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < 50)
@@ -647,7 +643,7 @@ object StreamingEntry {
   def streamQualityGate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = new java.io.File("target/graft-stream-quality").getAbsoluteFile
-    wipeDir(base)
+    ScratchDirs.wipe(base)
     base.mkdirs()
     val slice = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 5 === 4)
@@ -1665,7 +1661,7 @@ object StreamingEntry {
     val stream = MemoryStream[StreamEvent](spark)
     val ckpt = new java.io.File(
       sys.props("java.io.tmpdir"), "graft_state_reader_ckpt")
-    wipeDir(ckpt)
+    ScratchDirs.wipe(ckpt)
     withStatePartitions(spark) {
       val q = StreamingQueries.tumblingStream(withTs(stream.toDF()))
         .writeStream.format("noop").outputMode("append")

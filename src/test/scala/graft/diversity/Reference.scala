@@ -8,7 +8,8 @@ import scala.collection.mutable.ArrayBuffer
   * ([[select]]/[[selectBy]]), a separate nearest-center weighting pass
   * ([[weighted]]), and a local search that recomputes every distance
   * ([[localSearch]], whose GMM start calls this object's [[select]]).
-  * Below them, the kernel-by-kernel [[nearest]] and [[StreamingCoreset]]
+  * Next, the multiset [[localSearchWeighted]] is the reference for the
+  * capped search that replaced both local searches. Below them, the kernel-by-kernel [[nearest]] and [[StreamingCoreset]]
   * are the reference for [[KernelSet]].
   * Only the tie-rule comments of [[weighted]] are corrected: its centers
   * arrive in selection order, so a tie goes to the earliest-selected
@@ -120,6 +121,109 @@ object Reference {
       }
     }
     current.toIndexedSeq.sortBy(_.id)
+  }
+
+  // The multiset local search as it was before [[Heuristics.localSearch]]
+  // and [[Heuristics.localSearchWeighted]] became one capped search,
+  // verbatim, with the pairwise matrix it reads copied from [[Heuristics]].
+  // It sums each candidate over all n points times their counts, where the
+  // capped search sums over the slots.
+
+  /** Weight-aware local search (R2 on a weighted coreset): selects a
+    * multiset of k copies, each point capped at its delegate weight, to
+    * maximize remote-clique (copies of the same point contribute 0 to each
+    * other). Start = GMM over the distinct points (optimal never duplicates
+    * before k exceeds the distinct count — see object doc), greedily filled
+    * with best-marginal-gain copies if k > #distinct; then deterministic
+    * first-improvement swaps (ascending-id scans, strict improvement > eps)
+    * where a move replaces one chosen copy with one copy of any point below
+    * its cap. With all weights = 1 this degenerates to [[localSearch]]
+    * (spec-pinned). Returns the multiset as a sorted Seq with repeats, so
+    * [[Diversity.remoteClique]] evaluates it directly.
+    */
+  def localSearchWeighted(points: Seq[WeightedPt], k: Int, eps: Double = 1e-9,
+      maxIter: Int = 100): IndexedSeq[Pt] = {
+    val pts = points.toArray.sortBy(_.id)
+    val n = pts.length
+    if (n == 0 || k <= 0) return Vector.empty
+    val totalMass = pts.map(_.weight).sum
+    val kk = math.min(k.toLong, totalMass).toInt
+    val dist = distMatrix(pts.map(_.vec))
+    val count = Array.fill(n)(0L)
+    // seed: GMM over distinct points; `slots` holds the chosen copies in
+    // SELECTION order — the same slot-replacement scan [[localSearch]] uses,
+    // so weight-1 inputs walk an identical first-improvement trajectory.
+    val idxOf = pts.iterator.zipWithIndex.map { case (w, i) => w.id -> i }.toMap
+    val seed = Gmm.select(pts.map(w => Pt(w.id, w.vec)).toIndexedSeq, math.min(kk, n))
+    val slots = scala.collection.mutable.ArrayBuffer[Int]()
+    seed.foreach { p => val i = idxOf(p.id); count(i) += 1; slots += i }
+    // fill beyond the distinct count: repeatedly add the capacity-feasible
+    // copy with the best marginal gain Σ d(x, ·)·count (lowest id on ties)
+    while (slots.length < kk) {
+      var best = -1; var bestGain = -1.0
+      var i = 0
+      while (i < n) {
+        if (count(i) < pts(i).weight) {
+          var g = 0.0
+          var j = 0
+          while (j < n) { g += dist(i)(j) * count(j); j += 1 }
+          if (g > bestGain) { bestGain = g; best = i }
+        }
+        i += 1
+      }
+      count(best) += 1
+      slots += best
+    }
+    // first-improvement swaps: replace the copy in slot s with one copy of
+    // any point below its cap (a point already in the multiset is a valid
+    // candidate for an EXTRA copy — that's the multiplicity move)
+    var improved = true
+    var iter = 0
+    while (improved && iter < maxIter) {
+      improved = false
+      iter += 1
+      var s = 0
+      while (!improved && s < slots.length) {
+        val ci = slots(s)
+        // contribution of this copy: distances to the rest of the multiset
+        // (other copies of the same point contribute 0)
+        var contrib = 0.0
+        var j = 0
+        while (j < n) { contrib += dist(ci)(j) * count(j); j += 1 }
+        var pi = 0
+        while (!improved && pi < n) {
+          if (pi != ci && count(pi) < pts(pi).weight) {
+            // candidate copy's contribution to (multiset − this slot's copy)
+            var cand = 0.0
+            var j2 = 0
+            while (j2 < n) { cand += dist(pi)(j2) * count(j2); j2 += 1 }
+            cand -= dist(pi)(ci) // the removed copy
+            if (cand > contrib + eps) {
+              count(ci) -= 1
+              count(pi) += 1
+              slots(s) = pi
+              improved = true
+            }
+          }
+          pi += 1
+        }
+        s += 1
+      }
+    }
+    slots.toIndexedSeq.map(i => Pt(pts(i).id, pts(i).vec)).sortBy(_.id)
+  }
+
+  /** Pairwise [[Metric.dist]] of `vecs`, 0 on the diagonal. Computed for
+    * i < j and mirrored: `Metric.sqDist` is exactly symmetric.
+    */
+  private def distMatrix(vecs: Array[Array[Float]]): Array[Array[Double]] = {
+    val n = vecs.length
+    val d = Array.ofDim[Double](n, n)
+    for (i <- 0 until n; j <- i + 1 until n) {
+      d(i)(j) = Metric.dist(vecs(i), vecs(j))
+      d(j)(i) = d(i)(j)
+    }
+    d
   }
 
   // The nearest-kernel loop and the streaming coreset as they were before

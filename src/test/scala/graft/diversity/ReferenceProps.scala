@@ -1,11 +1,11 @@
 package graft.diversity
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
-/** The fused farthest-first loop and the matrix local search against
-  * [[Reference]], the separate-pass kernels they replaced: same centers in
-  * the same order, same delegate weights, same swaps.
+/** The fused farthest-first loop and the local search against
+  * [[Reference]], the kernels they replaced: same centers in the same
+  * order, same delegate weights, same swaps.
   */
 object ReferenceProps extends Properties("Reference") {
 
@@ -37,5 +37,30 @@ object ReferenceProps extends Properties("Reference") {
 
   property("matrix local search equals the recomputing one") = forAll(genCase) { case (pts, k) =>
     Heuristics.localSearch(pts, k).map(_.id) == Reference.localSearch(pts, k).map(_.id)
+  }
+
+  /** Weighted pools of random unit vectors, in three shapes:
+    *  - n 1–40, k 1–60, caps 1–5: k above the distinct count runs the fill
+    *    phase;
+    *  - n 1–6, k 1–30, caps 1–3: k is mostly above the total mass;
+    *  - the declared pool, 256 64-d points at k = 32, caps 1–30.
+    * The fill phase sums its gains in another order than the reference, so
+    * vectors with exactly tied sums (as on an integer grid) could break a
+    * tie the other way; random unit vectors have none.
+    */
+  private val genWeighted: Gen[(Vector[WeightedPt], Int)] = for {
+    (n, dim, k, maxCap) <- Gen.frequency(
+      3 -> Gen.zip(Gen.choose(1, 40), Gen.const(6), Gen.choose(1, 60), Gen.choose(1L, 5L)),
+      1 -> Gen.zip(Gen.choose(1, 6), Gen.const(6), Gen.choose(1, 30), Gen.choose(1L, 3L)),
+      1 -> Gen.zip(Gen.const(256), Gen.const(64), Gen.const(32), Gen.const(30L)))
+    seed <- Gen.choose(0L, 10000L)
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((0L until 4L * n).toVector).take(n)
+    (Vector.tabulate(n)(i => WeightedPt(ids(i), TestPoints.unitVec(dim, seed * 7919 + i), 1L + rnd.nextLong(maxCap))), k)
+  }
+
+  property("capped local search equals the multiset reference") = forAllNoShrink(genWeighted) { case (pts, k) =>
+    Heuristics.localSearchWeighted(pts, k).map(_.id) == Reference.localSearchWeighted(pts, k).map(_.id)
   }
 }
