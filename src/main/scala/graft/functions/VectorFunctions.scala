@@ -23,11 +23,4 @@ object VectorFunctions {
   /** Squared L2 norm in double. */
   def normSqD(a: String): Column =
     expr(s"aggregate($a, 0D, (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-  /** Cosine similarity ≡ dot product for unit-norm inputs (the fixture
-    * embeddings are unit-normalized — FIXTURES.md); kept separate so
-    * non-normalized inputs can divide by norms.
-    */
-  def cosineD(a: String, b: String): Column =
-    dotD(a, b) / sqrt(normSqD(a)) / sqrt(normSqD(b))
 }

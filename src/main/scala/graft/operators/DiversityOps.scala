@@ -147,9 +147,7 @@ object DiversityOps {
     kernelRows(spark, sfDir, coresetParallelism(spark))
       .select(
         col("id"), col("weight"),
-        round(sqrt(expr(
-          "aggregate(center, 0D, (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")), 6)
-          .as("c_norm"))
+        round(sqrt(graft.functions.VectorFunctions.normSqD("center")), 6).as("c_norm"))
       .repartition(1)
       .sortWithinPartitions(col("id"))
 

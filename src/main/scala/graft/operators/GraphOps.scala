@@ -13,6 +13,29 @@ import graft.sources.Tables
   */
 object GraphOps {
 
+  /** The closed-form doc graph's directed links `(src, dst)`: each doc
+    * links to `n_chars % n` and to `(n_chars·31 + doc_id) % n`, with n the
+    * footer-metadata row count ([[Tables.rowCount]], no Spark job).
+    * Self-loops and repeated links stay in.
+    */
+  private[operators] def docLinks(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
+    val n = Tables.rowCount(spark, sfDir, "documents")
+    docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
+      .unionByName(docs.select(
+        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
+  }
+
+  /** [[docLinks]] as a simple undirected graph: self-loops dropped (they
+    * close no triangle and add no neighbor), each edge once as `(a, b)`
+    * with a < b.
+    */
+  private[operators] def docEdges(spark: SparkSession, sfDir: String): DataFrame =
+    docLinks(spark, sfDir)
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
   /** V+/graph: PAGERANK in exact fixed-point integer arithmetic — 10
     * power iterations of `rank' = 0.15 + 0.85 · Σ rank/outdeg` with ranks
     * in BIGINT micro-units and every step integer (`DIV`), so partial-sum
@@ -70,15 +93,7 @@ object GraphOps {
     * in), so id-orientation is already the right plan here.
     */
   def triangleCountDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    val edges = directed
-      .filter(col("src") =!= col("dst")) // self-loops close no triangle
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val edges = docEdges(spark, sfDir)
     val wedges = edges.as("e1")
       .join(edges.as("e2"), col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
       .select(col("e1.b").as("a"), col("e2.b").as("b"))
@@ -86,7 +101,7 @@ object GraphOps {
     // one declarative row: 1-row aggregates cross-joined (intentional
     // 1×1 BNLJs, the setop_all_parts checksum pattern) so the whole
     // computation stays inside the timed/audited plan
-    docs.agg(count(lit(1)).as("n_nodes"))
+    Tables.documents(spark, sfDir).agg(count(lit(1)).as("n_nodes"))
       .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
       .crossJoin(wedges.agg(count(lit(1)).as("n_wedges")))
       .crossJoin(triangles.agg(count(lit(1)).as("n_triangles")))
@@ -112,15 +127,7 @@ object GraphOps {
     * with this plan as one extra filter on a degree join.
     */
   def linkPredictCn(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    val edges = directed
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val edges = docEdges(spark, sfDir)
     val und = edges.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nbr")))
     val deg = und.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -157,15 +164,7 @@ object GraphOps {
     * scale, DECIMAL(38,0) beyond.
     */
   def graphAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    val edges = directed
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val edges = docEdges(spark, sfDir)
     val und = edges.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nbr")))
     val deg = und.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -196,17 +195,11 @@ object GraphOps {
     * equal to the declarative recursion cross-engine.
     */
   def docHopDistance(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    // footer-metadata row count (cached, no Spark job) — same value as
-    // docs.count(), minus one full job dispatch (r15)
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val fwd = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
+    val fwd = docLinks(spark, sfDir)
     val und = fwd
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    var dist = docs.select(col("doc_id").as("node"))
+    var dist = Tables.documents(spark, sfDir).select(col("doc_id").as("node"))
       .filter(col("node") === 0)
       .withColumn("depth", lit(0L))
     for (d <- 1 to 6) {
@@ -228,15 +221,8 @@ object GraphOps {
   private def pagerankPlan(
       spark: SparkSession, sfDir: String,
       truncate: DataFrame => DataFrame): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    // 1-row scalar (node count) — the same driver-side bound pattern as
-    // the z-order box; needed as a literal in the closed-form edge map.
-    // Footer-metadata count (cached, no Spark job) since r15.
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val nodes = docs.select(col("doc_id").as("node"))
-    val edges = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
+    val nodes = Tables.documents(spark, sfDir).select(col("doc_id").as("node"))
+    val edges = docLinks(spark, sfDir)
     var pr = nodes.withColumn("rank", lit(1000000L))
     for (i <- 1 to 10) {
       val contrib = pr.join(edges, col("node") === col("src"))
@@ -275,18 +261,8 @@ object GraphOps {
     * fixed-iteration graph algorithm plannable at depth.
     */
   def kcoreDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
     val k = 3L
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    var cur = directed
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+    var cur = docEdges(spark, sfDir).localCheckpoint(true)
     val rounds = (1 to 6).map { r =>
       val keep = cur.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -324,20 +300,12 @@ object GraphOps {
     * oracle unrolls the same four rounds as materialized CTEs.
     */
   def labelPropCommunities(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    val und = directed
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = docEdges(spark, sfDir)
     val both = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    var lbl = docs.select(col("doc_id").as("node"), col("doc_id").as("lbl"))
+    var lbl = Tables.documents(spark, sfDir)
+      .select(col("doc_id").as("node"), col("doc_id").as("lbl"))
     for (i <- 1 to 4) {
       val nb = both.join(lbl, col("src") === col("node"))
         .select(col("dst").as("node"), col("lbl"))

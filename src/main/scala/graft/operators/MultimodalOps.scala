@@ -243,12 +243,15 @@ object MultimodalOps {
       .as[(Long, String, Array[Byte])]
   }
 
-  /** Frames table: one row per sampled PCM window of each audio doc, with
-    * a per-frame hash — the shape a frame-level feature extractor
-    * consumes. Binary payloads stay inside the partition; only
-    * (doc_id, frame_no, n bytes, hash) leave it.
+  /** PCM windows [[frameFeatures]] samples from each audio doc. */
+  private val FramesPerDoc = 4
+
+  /** Frames table: one row per sampled PCM window of each audio doc
+    * ([[FramesPerDoc]] per doc), with a per-frame hash — the shape a
+    * frame-level feature extractor consumes. Binary payloads stay inside
+    * the partition; only (doc_id, frame_no, n bytes, hash) leave it.
     */
-  def frameFeatures(spark: SparkSession, sfDir: String, nFrames: Int = 4): DataFrame = {
+  def frameFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // WAV-only generator pass (r15): mime is a pure function of doc_id
     // (% 3 = 1 → audio), so the audio filter belongs BEFORE [[rawMedia]]'s
@@ -262,7 +265,7 @@ object MultimodalOps {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { id =>
           val bytes = encodeWav(wavFrames(id), id)
-          sampleAudioFrames(bytes, nFrames).zipWithIndex.map { case (frame, i) =>
+          sampleAudioFrames(bytes, FramesPerDoc).zipWithIndex.map { case (frame, i) =>
             (id, "audio/wav", i.toLong, frame.length.toLong,
               toHex(md.digest(frame)))
           }

@@ -454,16 +454,7 @@ object SeqStatOps {
     * by degree instead of id (see triangleCountDocs note).
     */
   def localClusteringDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    val n = Tables.rowCount(spark, sfDir, "documents")
-    val directed = docs.select(col("doc_id").as("src"), (col("n_chars") % n).as("dst"))
-      .unionByName(docs.select(
-        col("doc_id").as("src"), ((col("n_chars") * 31 + col("doc_id")) % n).as("dst")))
-    val edges = directed
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val edges = GraphOps.docEdges(spark, sfDir)
     val tri = edges.as("e1")
       .join(edges.as("e2"), col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
       .select(col("e1.a").as("ta"), col("e1.b").as("tb"), col("e2.b").as("tc"))

@@ -215,10 +215,10 @@ object TextOps {
       bpeTrainRun(spark, sfDir)
     }.orderBy(col("rank"))
 
-  /** The (count, symbol-sequence) vocabulary table every BPE round
-    * iterates over — the corpus collapsed ONCE to distinct [a-z0-9]+
-    * words. Shared by [[bpeTrainRun]] and BpeFloorExperiment (the
-    * stage_bpe cost-attribution probe).
+  /** The (count, symbol-sequence) vocabulary table every BPE round of
+    * [[bpeTrainRun]] iterates over — the corpus collapsed ONCE to distinct
+    * [a-z0-9]+ words. EXPERIMENTS.md "r13: stage_bpe floor" attributes its
+    * cost; that probe's main is listed under "Retired one-shot mains".
     */
   private[graft] def bpeVocab(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)

@@ -18,58 +18,72 @@ import graft.sources.Tables
   */
 object VectorOps {
 
-  /** Broadcast-joined (query × target) pairs with exact double dot-product
-    * similarity, rounded to 6 dp for the cross-engine protocol. The dot
-    * product is the native codegen expression
-    * [[graft.functions.DotProductF32]] — identical semantics to
+  /** Every search here answers the same query set: the vectors with
+    * `vec_id` below this bound.
+    */
+  private val NQueries = 50
+
+  /** Each search below generates (query, target) candidate pairs — columns
+    * `q_id`, `q_emb`, `t_id`, `t_emb` — and ends in the two steps that
+    * follow: [[exactSim]] scores every candidate, [[topK]] keeps the best
+    * k per query. Those two steps are the only place the ranking rule of
+    * SURVEY.md §7.4 is written, which the DuckDB oracles of `cos_topk`,
+    * `stream_ann_topk`, `cos_topk_ivf`, `knn_label_vote` and
+    * `ann_recall_ivf` hash.
+    *
+    * The score is the exact double dot product rounded to 6 dp for the
+    * cross-engine protocol. The dot product is the native codegen
+    * expression [[graft.functions.DotProductF32]] — identical semantics to
     * [[graft.functions.VectorFunctions.dotD]] (the pure-built-in fallback)
     * but without the per-row intermediate array of `zip_with`.
     */
-  private def simPairs(spark: SparkSession, sfDir: String, nQueries: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val t = emb.select(
-      col("vec_id").as("t_id"), col("embedding").as("t_emb"), col("label").as("t_label"))
-    t.crossJoin(broadcast(q))
-      .filter(col("t_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
+  private def exactSim(pairs: DataFrame): DataFrame =
+    pairs.withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
+
+  /** The top `k` of scored pairs per `q_id`, ranked on the **rounded**
+    * similarity descending with ascending `t_id` breaking ties, so both
+    * engines rank identically: `(q_id, rank bigint, t_id, sim)` plus the
+    * `carry` columns. Output is UNORDERED; callers order.
+    */
+  private def topK(scored: DataFrame, k: Int, carry: String*): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim")) ++
+        carry.map(col): _*)
   }
 
-  /** V: top-5 most-similar vectors for each of the first 50 query vectors.
-    * Rank on the **rounded** similarity with vec_id tie-break so both
-    * engines rank identically (SURVEY.md §7.4).
+  /** Every (query, target) pair of `queries` (`vec_id`, `embedding`)
+    * against the whole corpus but itself: the query side is broadcast, the
+    * corpus is scanned once and never shuffled.
     */
-  def cosTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
-    simPairs(spark, sfDir, 50)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+  private def allPairs(spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame =
+    Tables.embeddings(spark, sfDir)
+      .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"), col("label").as("t_label"))
+      .crossJoin(broadcast(
+        queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
+      .filter(col("t_id") =!= col("q_id"))
+
+  /** The query set's (`vec_id`, `embedding`) rows. */
+  private def queryVectors(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir).filter(col("vec_id") < NQueries)
+      .select(col("vec_id"), col("embedding"))
+
+  /** V: exact top-5 most-similar vectors for each query vector. */
+  def cosTopk(spark: SparkSession, sfDir: String): DataFrame =
+    topkForQueries(spark, sfDir, queryVectors(spark, sfDir)).orderBy(col("q_id"), col("rank"))
 
   /** Exact top-5 for an ARBITRARY batch of query vectors against the
     * corpus — the per-micro-batch kernel of the streaming ANN ingest entry
     * (`stream_ann_topk`): broadcast the (small) arriving batch, one corpus
     * scan per batch, codegen dot products, per-query rank. Identical
-    * ranking protocol to [[cosTopk]] (rounded sim desc, t_id tie-break),
-    * so a query's answer is independent of which batch carried it.
-    * Output is UNORDERED; callers order.
+    * ranking protocol to [[cosTopk]], so a query's answer is independent
+    * of which batch carried it. Output is UNORDERED; callers order.
     */
   private[graft] def topkForQueries(
-      spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
-    val t = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
-    t.crossJoin(broadcast(
-        queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
-      .filter(col("t_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
-  }
+      spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame =
+    topK(exactSim(allPairs(spark, sfDir, queries)), 5)
 
   /** Sign-LSH coarse bucket: 4 sign bits of the first 4 dimensions →
     * 16 buckets. Exact float-vs-zero comparisons are engine-portable.
@@ -245,18 +259,13 @@ object VectorOps {
     * exact-integer or 6-dp-rounded.
     */
   def cosTopkIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") < 50)
+    val q = queryVectors(spark, sfDir)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), expr(bucketSql).as("qb"))
       .withColumn("probe", explode(expr("array(qb, qb ^ 1, qb ^ 2, qb ^ 4, qb ^ 8)")))
-    val t = emb.select(
+    val t = Tables.embeddings(spark, sfDir).select(
       col("vec_id").as("t_id"), col("embedding").as("t_emb"), expr(bucketSql).as("tb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
-    t.join(broadcast(q), col("tb") === col("probe") && col("t_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
+    topK(exactSim(
+      t.join(broadcast(q), col("tb") === col("probe") && col("t_id") =!= col("q_id"))), 5)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -302,7 +311,6 @@ object VectorOps {
       .zipWithIndex
       .map { case (p, i) => (i, p.vec) }
       .toDF("cell", "c_emb")
-    val emb = Tables.embeddings(spark, sfDir)
     // nearest cell = argmax dot (unit-norm vectors): max over a (dot, -cell)
     // struct gives the highest-dot cell with ties to the lowest index
     def assign(df: DataFrame, idCol: String, keep: Int): DataFrame = {
@@ -318,19 +326,23 @@ object VectorOps {
           .select(col(idCol), col("embedding"), col("cell"))
       }
     }
-    val t = assign(emb.select(col("vec_id"), col("embedding")), "vec_id", 1)
+    val t = assign(
+      Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")), "vec_id", 1)
       .select(col("vec_id").as("t_id"), col("embedding").as("t_emb"), col("cell"))
-    val q = assign(
-      emb.filter(col("vec_id") < 50).select(col("vec_id"), col("embedding")), "vec_id", 4)
+    val q = assign(queryVectors(spark, sfDir), "vec_id", 4)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
-    t.join(broadcast(q), Seq("cell")).filter(col("t_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
+    topK(exactSim(t.join(broadcast(q), Seq("cell")).filter(col("t_id") =!= col("q_id"))), 5)
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** The RP-LSH sizing point the r12 multiprobe grid chose (EXPERIMENTS.md):
+    * [[cosTopkRplsh]] hashes with RplshTables tables of RplshBits sign bits
+    * each and probes the pair flips of each table's RplshPairBits
+    * lowest-margin bits.
+    */
+  private val RplshTables = 6
+  private val RplshBits = 9
+  private val RplshPairBits = 7
 
   /** V+: RANDOM-HYPERPLANE (sign) LSH ANN — the DATA-INDEPENDENT
     * complement of the IVF variants: L=6 hash tables of B=9 sign bits each
@@ -375,20 +387,7 @@ object VectorOps {
     * batches, or when its higher recall (0.96 vs 0.68 untrained-probe
     * IVF) is worth the corpus pass.
     */
-  def cosTopkRplsh(spark: SparkSession, sfDir: String): DataFrame =
-    cosTopkRplshTuned(spark, sfDir, L = 6, B = 9, probeBits = 9, pairBits = 7)
-
-  /** Parametrized RP-LSH kernel — public form above pins the shipped
-    * (L, B, probeBits) point; specs sweep the grid to measure the recall
-    * curve (EXPERIMENTS.md r12). `probeBits` = 0 probes only the query's
-    * own signature; k > 0 additionally probes the k QUERY-DIRECTED 1-bit
-    * flips per table — the bits whose hyperplane margin |dot| is smallest,
-    * i.e. where a true neighbor most plausibly landed on the other side.
-    */
-  private[graft] def cosTopkRplshTuned(
-      spark: SparkSession, sfDir: String,
-      L: Int, B: Int, probeBits: Int, pairBits: Int = 0,
-      nQueries: Int = 50): DataFrame = {
+  def cosTopkRplsh(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val dims = emb.select(size(col("embedding")).as("d")).first().getInt(0)
     // Hyperplane component in (-1, 1): fixed across sessions/partitions.
@@ -403,71 +402,54 @@ object VectorOps {
     // blew Janino's 64 KB limit, so EVERY bench pass paid a doomed
     // multi-second compile and then ran interpreted. The kernels compute
     // the identical double-accumulated dots (bit-identical signatures,
-    // margins, probes — oracle + grid specs re-verified) from one
+    // margins and probes; checked against the inline form in r15) from one
     // reference object, and whole-stage codegen compiles again.
     val planesLit = typedLit(
-      for (l <- 0 until L; j <- 0 until B) yield (0 until dims).map(d => comp(l, j, d)))
-    val sigs = call_function("rplsh_sigs", col("embedding"), planesLit, lit(B))
-    def signed(df: DataFrame, idAs: String, embAs: String): DataFrame =
-      df.select(col("vec_id").as(idAs), col("embedding").as(embAs),
-        posexplode(sigs).as(Seq("tbl", "sig")))
-    val t = signed(emb, "t_id", "t_emb")
+      for (l <- 0 until RplshTables; j <- 0 until RplshBits)
+        yield (0 until dims).map(d => comp(l, j, d)))
+    val t = emb.select(col("vec_id").as("t_id"), col("embedding").as("t_emb"),
+      posexplode(call_function("rplsh_sigs", col("embedding"), planesLit, lit(RplshBits)))
+        .as(Seq("tbl", "sig")))
     // query side: per (query, table) keep the raw per-bit dots so the
     // probe set can be QUERY-DIRECTED — broadcast-side rows only, the
     // corpus side computes exactly L signatures and never shuffles
-    val q =
-      if (probeBits == 0) signed(emb.filter(col("vec_id") < nQueries), "q_id", "q_emb")
-      else {
-        val allDots = call_function("rplsh_dots", col("q_emb"), planesLit)
-        val perTbl = array((0 until L).map { l =>
-          val dots = slice(allDots, l * B + 1, B)
-          struct(
-            (0 until B).map(j =>
-              when(element_at(dots, j + 1) > 0, lit(1 << j)).otherwise(lit(0)))
-              .reduce(_ + _).as("sig"),
-            dots.as("dots"))
-        }: _*)
-        // probes = own signature + flips of the probeBits lowest-|margin|
-        // bits (struct sort orders by (|dot|, bit), so ties are
-        // deterministic)
-        // hamming-2 extension: pair flips over the pairBits lowest-margin
-        // bits (all C(pairBits, 2) combinations) — the directed slice of
-        // the hamming-2 shell, still broadcast-side-only rows
-        val pairExpr =
-          if (pairBits < 2) "CAST(array() AS ARRAY<INT>)"
-          else {
-            val combos = for {
-              i <- 1 to pairBits; j <- (i + 1) to pairBits
-            } yield s"CAST(sd.sig ^ shiftleft(1, element_at(low, $i))" +
-              s" ^ shiftleft(1, element_at(low, $j)) AS INT)"
-            s"array(${combos.mkString(", ")})"
-          }
-        emb.filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-          .select(col("q_id"), col("q_emb"), posexplode(perTbl).as(Seq("tbl", "sd")))
-          // bit indexes ranked by |margin| ascending (ties -> lower bit)
-          .withColumn("low", expr(
-            "transform(array_sort(transform(sd.dots, (d, j) -> struct(abs(d) AS a, j AS j))), s -> s.j)"))
-          .withColumn("probes", expr(
-            s"""concat(array(sd.sig),
-               |  transform(slice(low, 1, $probeBits),
-               |    jj -> CAST(sd.sig ^ shiftleft(1, jj) AS INT)),
-               |  $pairExpr)""".stripMargin))
-          .select(col("q_id"), col("q_emb"), col("tbl"), explode(col("probes")).as("sig"))
-      }
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
+    val allDots = call_function("rplsh_dots", col("q_emb"), planesLit)
+    val perTbl = array((0 until RplshTables).map { l =>
+      val dots = slice(allDots, l * RplshBits + 1, RplshBits)
+      struct(
+        (0 until RplshBits).map(j =>
+          when(element_at(dots, j + 1) > 0, lit(1 << j)).otherwise(lit(0)))
+          .reduce(_ + _).as("sig"),
+        dots.as("dots"))
+    }: _*)
+    // probes = own signature + every single-bit flip + the pair flips of
+    // the RplshPairBits lowest-|margin| bits (all C(RplshPairBits, 2)
+    // combinations: the directed slice of the hamming-2 shell). The struct
+    // sort orders by (|dot|, bit), so ties are deterministic.
+    val pairFlips = for {
+      i <- 1 to RplshPairBits; j <- (i + 1) to RplshPairBits
+    } yield s"CAST(sd.sig ^ shiftleft(1, element_at(low, $i))" +
+      s" ^ shiftleft(1, element_at(low, $j)) AS INT)"
+    val q = queryVectors(spark, sfDir)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      .select(col("q_id"), col("q_emb"), posexplode(perTbl).as(Seq("tbl", "sd")))
+      // bit indexes ranked by |margin| ascending (ties -> lower bit)
+      .withColumn("low", expr(
+        "transform(array_sort(transform(sd.dots, (d, j) -> struct(abs(d) AS a, j AS j))), s -> s.j)"))
+      .withColumn("probes", expr(
+        s"""concat(array(sd.sig),
+           |  transform(low, jj -> CAST(sd.sig ^ shiftleft(1, jj) AS INT)),
+           |  array(${pairFlips.mkString(", ")}))""".stripMargin))
+      .select(col("q_id"), col("q_emb"), col("tbl"), explode(col("probes")).as("sig"))
     // Score BEFORE the cross-table dedup: sim is deterministic per pair, so
     // duplicates carry equal values and dropDuplicates exchanges only
     // (q_id, t_id, sim) — 24 bytes — instead of both 64-float embeddings
     // (the r9 shape shipped ~520 B/candidate through the exchange). The
     // re-scored table-collision duplicates are a few codegen dots map-side.
-    t.join(broadcast(q), Seq("tbl", "sig")).filter(col("t_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
+    topK(exactSim(
+      t.join(broadcast(q), Seq("tbl", "sig")).filter(col("t_id") =!= col("q_id")))
       .select(col("q_id"), col("t_id"), col("sim"))
-      .dropDuplicates("q_id", "t_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
+      .dropDuplicates("q_id", "t_id"), 5)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -514,11 +496,8 @@ object VectorOps {
 
   /** V: 10-NN majority label vote per query vector (ties → smallest label). */
   def knnLabelVote(spark: SparkSession, sfDir: String): DataFrame = {
-    val wNn = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
     val wVote = Window.partitionBy(col("q_id")).orderBy(col("n_votes").desc, col("t_label"))
-    simPairs(spark, sfDir, 50)
-      .withColumn("nn_rank", row_number().over(wNn))
-      .filter(col("nn_rank") <= 10)
+    topK(exactSim(allPairs(spark, sfDir, queryVectors(spark, sfDir))), 10, "t_label")
       .groupBy(col("q_id"), col("t_label"))
       .agg(count(lit(1)).as("n_votes"))
       .withColumn("vote_rank", row_number().over(wVote))
@@ -600,8 +579,7 @@ object VectorOps {
       .as[(Long, Array[Float])]
       .map { case (id, v) => (id, encode(v)) }
       .toDF("t_id", "codes")
-    val qLut = emb.filter(col("vec_id") < 50)
-      .select(col("vec_id"), col("embedding"))
+    val qLut = queryVectors(spark, sfDir)
       .as[(Long, Array[Float])]
       .map { case (id, v) => (id, lut(v)) }
       .toDF("q_id", "lut")
@@ -627,15 +605,10 @@ object VectorOps {
       .select(col("q_id"), col("t_id"))
 
     // Asymmetric re-rank: only the surviving candidates fetch raw vectors.
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("t_id"))
-    cand
+    topK(exactSim(cand
       .join(emb.select(col("vec_id").as("t_id"), col("embedding").as("t_emb")), "t_id")
-      .join(broadcast(emb.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")
-      .withColumn("sim", round(expr("dot_f32(q_emb, t_emb)"), 6))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("t_id"), col("sim"))
+      .join(broadcast(queryVectors(spark, sfDir)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")), 5)
       .orderBy(col("q_id"), col("rank"))
   }
 

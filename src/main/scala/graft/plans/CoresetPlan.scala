@@ -18,8 +18,12 @@ import graft.diversity.{MapReduceCoreset, PointBlock}
   * order (c)): the composable-coreset map task (reference operator R5) as
   * a first-class plan node — custom `LogicalPlan` → planner `Strategy` →
   * physical `SparkPlan` — instead of an opaque `mapPartitions` lambda. It
-  * is the one coreset path: [[graft.operators.DiversityOps.coreset]]
-  * collects its rows and `coreset_exec_k64` summarizes them. The operator
+  * is the coreset path of the embedding operators:
+  * [[graft.operators.DiversityOps.coreset]] collects its rows and
+  * `coreset_exec_k64` summarizes them. The document path
+  * (`DiversityOps.diverseDocs`, behind `diverse_docs_k16` and
+  * `curate_corpus_k16`) does not use it: it runs its own residue-class
+  * GMM(32) under generalized Jaccard in a `mapPartitions`. The operator
   * prints in `explain` as `CoresetExec k'=…`, Catalyst can prune/push below
   * it (the child is an ordinary resolved plan), and EXPLAIN-based tooling
   * (graft.Plans, PlanAuditSpec) can audit it like any built-in operator.

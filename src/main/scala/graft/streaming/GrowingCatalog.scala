@@ -36,7 +36,8 @@ private[graft] case class CatalogView(
   * deltas whose rows already reached the base). Steady state: file count
   * is O(buckets + compactEvery), per-trigger read cost is O(pruned base
   * partitions + ≤compactEvery deltas) — flat in trigger count, measured
-  * in [[graft.IngestLoadExperiment]]'s 24-trigger run.
+  * in a 24-trigger run (EXPERIMENTS.md "r13: streaming-ingest load
+  * scaling"; its main is listed under "Retired one-shot mains").
   *
   * Retry correctness is carried by the `src_b` column, not caller
   * discipline: every catalog row records the trigger that admitted it,

@@ -553,8 +553,9 @@ object StreamingEntry {
     * plus one |admitted|-row delta append per trigger and an
     * O(catalog)/K amortized compaction fold (the local-parquet stand-in
     * for a table format's size-tiered rewrite). Per-trigger cost is flat
-    * in trigger COUNT — measured over 24 triggers in
-    * [[graft.IngestLoadExperiment]].
+    * in trigger COUNT — measured over 24 triggers (EXPERIMENTS.md "r13:
+    * streaming-ingest load scaling"; its main is listed under "Retired
+    * one-shot mains").
     */
   def streamDedupGrowing(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
