@@ -126,13 +126,24 @@ object StreamingEntry {
     * jobs run under the default (true): a live stream WANTS windows to
     * finalize during input lulls; a bounded harness feed has no lull to
     * cover.
+    *
+    * Every offset, commit and metadata file, HDFS-backed state delta and
+    * RocksDB snapshot file that a query writes through its checkpoint
+    * manager goes through [[LocalCheckpointFileManager]]. On a JVM without
+    * `libhadoop`, Spark's default manager starts a `chmod` process per file
+    * or directory created and a `readlink` process per rename: ~340 process
+    * starts for one three-micro-batch stateful entry, and tens of ms of
+    * each micro-batch's offset-log write. The pinned manager writes the
+    * same checksummed files with none; checkpoints on any other scheme
+    * (HDFS, S3) get Spark's default manager unchanged.
     */
   private def withStatePartitions[A](spark: SparkSession)(body: => A): A =
     withConf(spark, StatePins: _*)(body)
 
   private val StatePins = Seq(
     "spark.sql.shuffle.partitions" -> "4",
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+    LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName)
 
   /** The RocksDB state store, which `transformWithState` requires. */
   private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
@@ -698,7 +709,9 @@ object StreamingEntry {
 
   /** The stateful-coreset harness both coreset entries share: the first
     * 1024 embeddings by vec_id, keyed by vec_id % 4, fed to `operator` in
-    * three micro-batches; each key's final kernels.
+    * three micro-batches; each key's final kernels, sorted on one partition
+    * (at most 4 × 16 rows: a range `orderBy` would sample them in a job of
+    * its own).
     */
   private def streamCoreset(spark: SparkSession, sfDir: String, name: String, rocksDb: Boolean)(
       operator: Dataset[StatefulCoreset.VecEvent] => Dataset[StatefulCoreset.KernelOut])
@@ -714,7 +727,7 @@ object StreamingEntry {
     memorySink(spark, name, "update", rocksDb)(operator(stream.toDS()))(feedChunks(stream, _, pts))
       .transform(latestPerKey("key", "consumed"))
       .select(col("key"), col("vec_id"), col("weight"))
-      .orderBy(col("key"), col("vec_id"))
+      .repartition(1).sortWithinPartitions(col("key"), col("vec_id"))
   }
 
   /** DECLARED timer-driven sessionization entry: [[SessionProcessor]] on
